@@ -13,7 +13,7 @@ import graft.sources.StageRunner
   *
   * Design (fresh, not a translation):
   *  - The De Bruijn graph is an edge table of oriented k-mers. Fork filters
-  *    (J2) are Catalyst window functions: per (k-1)-prefix keep the
+  *    (J2) are Catalyst hash aggregations: per (k-1)-prefix keep the
   *    max-coverage edge, then per (k-1)-suffix — after which every node has
   *    in/out degree <= 1, so the graph is disjoint paths/cycles.
   *  - Contigs are built by randomized path contraction: each fragment flips
@@ -29,10 +29,24 @@ import graft.sources.StageRunner
   *    count-stability heuristic, so termination is never a false stop;
   *    `localCheckpoint` + unpersist keeps the lineage truncated so the
   *    loop scales to ~100s of rounds.
+  *  - Single-task gate, checked twice. First on the solid (`count >=
+  *    minCov`) canonical k-mer table, before any fork filter: n solid
+  *    k-mers mirror to at most 2n edges, seed at most 2n fragments and 2n·k
+  *    bases, so when those bounds fit `localThreshold`/`localMaxBases` the
+  *    whole rest of the assembly (mirror, both fork sides, chain walk) runs
+  *    in ONE task over primitive arrays ([[assembleLocal]]) — no fork-filter
+  *    shuffles, no seed checkpoint, no stats job. Above it, the distributed
+  *    seed and contraction rounds run and the same gate is re-checked on
+  *    the shrinking fragment set, so the last rounds still finish in one
+  *    chain walk.
   *
-  * Scale notes: fragment rows shrink geometrically, AQE coalesces the
-  * shrinking shuffles; the contraction never materializes anything on the
-  * driver except the convergence count.
+  * Scale notes: up to ~2M solid canonical k-mers (the default gate) —
+  * bacterial-size genomes, `reassemble`, `stitch`, the example reads —
+  * take the single-task path after one count (which also materializes
+  * the k-mer checkpoint).
+  * Above that, fragment rows shrink geometrically, AQE coalesces the
+  * shrinking shuffles, and the contraction never materializes anything on
+  * the driver except the convergence count.
   */
 object Assembler {
 
@@ -101,7 +115,7 @@ object Assembler {
   }
 
   /** RC-mirrored oriented edge table `(kmer, count, prefix, suffix)`. */
-  private def mirroredEdges(counts: DataFrame, k: Int): DataFrame = {
+  private[operators] def mirroredEdges(counts: DataFrame, k: Int): DataFrame = {
     val s = counts.sparkSession
     import s.implicits._
     val mirrored = counts.as[(Long, Long)].flatMap { case (kv, c) =>
@@ -113,14 +127,6 @@ object Assembler {
       .withColumn("prefix", shiftright(col("kmer"), 2))
       .withColumn("suffix", col("kmer").bitwiseAND(lit(mask)))
   }
-
-  /** P6 + J2: RC-mirror the canonical counts, then fork-filter so every
-    * (k-1)-mer node keeps at most one out- and one in-edge (see
-    * [[resolveForks]] for the popBubbles / minError semantics). */
-  def forkFilteredEdges(counts: DataFrame, k: Int,
-                        popBubbles: Boolean = true,
-                        minError: Int = 0): DataFrame =
-    resolveForks(mirroredEdges(counts, k), popBubbles, minError)
 
   /** The `-scramble` (repeat-aware) fork treatment — the reference's
     * DSMain64 two-branch path (`ReflexivDSMain64.java:686-756`: sorted
@@ -267,6 +273,12 @@ object Assembler {
       if (used(i)) false
       else { used(i) = true; keys(i) = key; vals(i) = v; true }
     }
+    /** The key's value, after storing `v` under it if it was absent. */
+    def getOrPut(key: Long, v: Int): Int = {
+      val i = slot(key)
+      if (!used(i)) { used(i) = true; keys(i) = key; vals(i) = v }
+      vals(i)
+    }
     /** Index for the key, or -1. */
     def get(key: Long): Int = {
       val i = slot(key)
@@ -327,6 +339,134 @@ object Assembler {
     emitted.iterator
   }
 
+  /** RC-mirrored oriented edges as parallel (kmer, count) arrays — the
+    * single-task form of [[mirroredEdges]], row for row. */
+  private[operators] def mirrorLocal(canon: Iterator[(Long, Long)],
+                                     k: Int): (Array[Long], Array[Long]) = {
+    val km = Array.newBuilder[Long]
+    val cn = Array.newBuilder[Long]
+    canon.foreach { case (kv, c) =>
+      km += kv; cn += c
+      val rc = KmerCodec.rcLong(kv, k)
+      if (rc != kv) { km += rc; cn += c }
+    }
+    (km.result(), cn.result())
+  }
+
+  /** One fork side over the edges `es` (indices into `km`/`cn`), grouped by
+    * `key`. Per group: the winner — the first element of the Catalyst
+    * side's `(count desc, kmer asc)`-sorted array; equal (count, kmer) rows
+    * are identical rows, so which copy wins does not change any result —
+    * and the number of arms that survive the J3 rule: the winner plus every
+    * loser that is not a sequencing error (coverage above `minError`, or
+    * more than half the winner's). Returns (winners, surviving arms per
+    * group, surviving edges). */
+  private def forkSide(es: Array[Int], km: Array[Long], cn: Array[Long],
+                       key: Long => Long,
+                       minError: Int): (Array[Int], Array[Int], Array[Int]) = {
+    val ids = new LongIntMap(es.length)
+    val group = new Array[Int](es.length)
+    val winner = new Array[Int](es.length)
+    var ng = 0
+    var p = 0
+    while (p < es.length) {
+      val e = es(p)
+      val g = ids.getOrPut(key(km(e)), ng)
+      if (g == ng) { winner(g) = e; ng += 1 }
+      else {
+        val w = winner(g)
+        if (cn(e) > cn(w) || (cn(e) == cn(w) && km(e) < km(w))) winner(g) = e
+      }
+      group(p) = g
+      p += 1
+    }
+    val arms = new Array[Int](ng)
+    val kept = Array.newBuilder[Int]
+    p = 0
+    while (p < es.length) {
+      val e = es(p); val w = winner(group(p))
+      if (e == w || !(cn(e) <= minError && cn(w) >= cn(e) * 2)) {
+        kept += e; arms(group(p)) += 1
+      }
+      p += 1
+    }
+    (java.util.Arrays.copyOf(winner, ng), arms, kept.result())
+  }
+
+  /** [[resolveForks]] over mirrored edge arrays: the indices of the
+    * surviving edges. Same prefix-then-suffix order, winner, `minError`
+    * rule and `popBubbles = false` degree filter. */
+  private[operators] def resolveForksLocal(km: Array[Long], cn: Array[Long], k: Int,
+                                           popBubbles: Boolean,
+                                           minError: Int): Array[Int] = {
+    val mask = (1L << (2 * (k - 1))) - 1
+    val all = Array.range(0, km.length)
+    if (popBubbles) {
+      // with the rule on, a group keeps its winner only when every loser
+      // is an error arm
+      def side(es: Array[Int], key: Long => Long): Array[Int] = {
+        val (winner, arms, _) = forkSide(es, km, cn, key, minError)
+        if (minError <= 0) winner else winner.indices.filter(arms(_) == 1).map(winner).toArray
+      }
+      side(side(all, _ >> 2), _ & mask)
+    } else {
+      // an edge survives iff it is alone in both of its groups (with
+      // minError = Int.MinValue no arm is an error: arms = group size)
+      def alone(key: Long => Long): Array[Boolean] = {
+        val (winner, arms, _) = forkSide(all, km, cn, key, Int.MinValue)
+        val a = new Array[Boolean](km.length)
+        winner.indices.foreach(g => if (arms(g) == 1) a(winner(g)) = true)
+        a
+      }
+      val (out, in) = (alone(_ >> 2), alone(_ & mask))
+      all.filter(e => out(e) && in(e))
+    }
+  }
+
+  /** [[resolveForksUnitig]] over mirrored edge arrays: (surviving edge
+    * indices, barrier node keys — possibly repeated). */
+  private[operators] def resolveForksUnitigLocal(km: Array[Long], cn: Array[Long], k: Int,
+                                                 minError: Int): (Array[Int], Array[Long]) = {
+    val mask = (1L << (2 * (k - 1))) - 1
+    val barriers = Array.newBuilder[Long]
+    def side(es: Array[Int], key: Long => Long): Array[Int] = {
+      val (winner, arms, kept) = forkSide(es, km, cn, key, minError)
+      winner.indices.foreach(g => if (arms(g) >= 2) barriers += key(km(winner(g))))
+      kept
+    }
+    val kept = side(side(Array.range(0, km.length), _ >> 2), _ & mask)
+    (kept, barriers.result())
+  }
+
+  /** The whole assembly below the k-mer gate, in one task: mirror the solid
+    * canonical `(kv, count)` rows, fork-filter them exactly as the
+    * distributed seed does ([[resolveForks]], or [[resolveForksUnitig]] plus
+    * the [[scrambleSeed]] barrier salting), seed one fragment per surviving
+    * edge and walk the chains ([[contractChainsLong]]). */
+  private[operators] def assembleLocal(canon: Iterator[(Long, Long)], k: Int,
+                                       popBubbles: Boolean, minError: Int,
+                                       scramble: Boolean): Iterator[Frag] = {
+    val mask = (1L << (2 * (k - 1))) - 1
+    val (km, cn) = mirrorLocal(canon, k)
+    val seeds =
+      if (scramble) {
+        val (kept, barriers) = resolveForksUnitigLocal(km, cn, k, minError)
+        val isBarrier = new LongIntMap(barriers.length)
+        barriers.foreach(b => isBarrier.putIfAbsent(b, 0))
+        kept.map { e =>
+          val kv = km(e)
+          val h = if (isBarrier.contains(kv >> 2)) kv | Long.MinValue else kv >> 2
+          val t = if (isBarrier.contains(kv & mask)) kv | Long.MinValue | (1L << 62)
+            else kv & mask
+          Frag(h, t, KmerCodec.longToBlocks(kv, k))
+        }
+      } else resolveForksLocal(km, cn, k, popBubbles, minError).map { e =>
+        val kv = km(e)
+        Frag(kv >>> 2, kv & mask, KmerCodec.longToBlocks(kv, k))
+      }
+    contractChainsLong(seeds, k)
+  }
+
   /** (fragment count, total bases) in one cached-scan job. Both sides of
     * the last-mile gate come from the same pass: the row count drives the
     * convergence probe, the base total keeps the single-task endgame from
@@ -375,25 +515,32 @@ object Assembler {
     * round 50 recomputes from the last durable round, and a restarted
     * driver RESUMES the contraction at the latest completed round (the
     * per-round coins are hashes of (endpoints, round), so a resumed run is
-    * bit-identical to an uninterrupted one). `None` keeps the cheap
+    * bit-identical to an uninterrupted one). A run below the k-mer gate
+    * stores its walked fragments as round 0; resuming from them re-walks
+    * finished chains, which changes nothing. `None` keeps the cheap
     * memory-local truncation for short interactive runs.
     *
-    * `localThreshold`: fragment count below which the contraction finishes
-    * in a single-task chain-following pass ([[contractChains]]) instead of
-    * further shuffle rounds. Distributed rounds shrink the fragment count
-    * geometrically, so at any input scale the endgame drops under this
-    * bound after O(log L) rounds and the remaining rounds (each a full
-    * cluster-wide shuffle barrier over a tiny dataset) are replaced by one
-    * task. Set 0 to force the fully distributed path.
+    * `localThreshold`: the single-task gate on rows. It is checked first on
+    * the solid k-mer table — n solid k-mers can seed at most 2n fragments,
+    * so `2n <= localThreshold` sends the whole assembly (mirror, fork
+    * filter, chain walk) to one task ([[assembleLocal]]); the default 4M
+    * admits ~2M solid canonical k-mers. Otherwise the distributed seed and
+    * rounds run, and the same bound is re-checked on the fragment count:
+    * rounds shrink it geometrically, so at any input scale the endgame
+    * drops under it after O(log L) rounds and the remaining rounds (each a
+    * full cluster-wide shuffle barrier over a tiny dataset) are replaced by
+    * one chain walk ([[contractChainsLong]]). Set 0 to force the fully
+    * distributed path.
     *
-    * `localMaxBases`: the BYTE side of the same gate. Contraction shrinks
-    * the row count geometrically but total sequence only by k-1 per merge,
-    * so a small fragment count can still carry the whole assembly's
-    * sequence — a count-only switch would funnel it all into one task and
-    * OOM an executor at the 100 TB design point. The local path fires only
-    * when rows AND bases both fit one task (500 Mbases ≈ 125 MB packed,
-    * well under one executor); otherwise the distributed rounds simply
-    * continue to convergence. */
+    * `localMaxBases`: the BYTE side of the same gate — `2n·k` at the k-mer
+    * check, the fragments' total bases at the fragment check. Contraction
+    * shrinks the row count geometrically but total sequence only by k-1
+    * per merge, so a small fragment count can still carry the whole
+    * assembly's sequence — a count-only switch would funnel it all into one
+    * task and OOM an executor at the 100 TB design point. The local path
+    * fires only when rows AND bases both fit one task (500 Mbases ≈ 125 MB
+    * packed, well under one executor); otherwise the distributed rounds
+    * simply continue to convergence. */
   def assemble(counts: DataFrame, k: Int, minCov: Int = 1, maxIter: Int = 60,
                probeEvery: Int = 3, minContig: Int = 0,
                ckptDir: Option[String] = None,
@@ -408,75 +555,93 @@ object Assembler {
     val runner = ckptDir.map(new StageRunner(s, _))
     val resumeIter = runner.toSeq.flatMap(_.completed("frags_i"))
       .map(_.stripPrefix("frags_i").toInt).maxOption
-    // checkpoint the seed fragments: without this, every round before the
-    // first probe re-executes the whole count+fork-filter lineage. (On
-    // resume the seed lineage is never built, let alone executed.)
-    def seed(): Dataset[Frag] =
-      if (scramble) scrambleSeed(counts.filter(col("count") >= minCov), k, minError)
-      else {
-        val edges = forkFilteredEdges(counts.filter(col("count") >= minCov), k,
-          popBubbles, minError)
-        edges.select("kmer").as[Long]
-          .map(kv => Frag(kv >>> 2, kv & mask, KmerCodec.longToBlocks(kv, k)))
-      }
+    // P6 + J2: RC-mirror the solid k-mers, then fork-filter so every
+    // (k-1)-mer node keeps at most one out- and one in-edge
+    def seed(solid: DataFrame): Dataset[Frag] =
+      if (scramble) scrambleSeed(solid, k, minError)
+      else resolveForks(mirroredEdges(solid, k), popBubbles, minError)
+        .select("kmer").as[Long]
+        .map(kv => Frag(kv >>> 2, kv & mask, KmerCodec.longToBlocks(kv, k)))
     def durable(name: String, ds: => Dataset[Frag]): Dataset[Frag] =
       runner.get.stage(name)(ds.toDF()).as[Frag]
-    var frags: Dataset[Frag] = (runner, resumeIter) match {
-      case (Some(_), Some(i)) => durable(s"frags_i$i", sys.error("resume never recomputes"))
-      case (Some(_), None)    => durable("frags_i0", seed())
-      case _                  => seed().localCheckpoint()
-    }
-    var lastCkpt: Dataset[Frag] = frags
-    var lastCount = -1L
-    var iter = resumeIter.getOrElse(0)
-    var done = false
-    // seed/resume state is already materialized, so this stats pass is one
-    // cheap cached-scan job — it decides distributed-vs-local entry
-    var (n, bases) = fragStats(frags)
-    graft.core.Counters.add("assembler.seed_rows", n)
-    while (iter < maxIter && !done) {
-      if (n <= localThreshold && bases <= localMaxBases) {
-        // last-mile: the fragments fit one task — finish the contraction
-        // in a single chain-following pass instead of more rounds.
-        // coalesce, not repartition: narrow read of the cached partitions.
-        graft.core.Counters.add("assembler.endgame_rows", n)
-        graft.core.Counters.add("assembler.endgame_bases", bases)
-        frags = frags.coalesce(1).mapPartitions(it => contractChainsLong(it.toArray, k))
-        done = true
-      } else {
-        frags = mergeRound(frags, k, iter)
-        iter += 1
-        if (iter % probeEvery == 0) {
-          val ckpt = runner match {
-            case Some(r) =>
-              val name = s"frags_i$iter"
-              val df = durable(name, frags)
-              r.completed("frags_i").filterNot(_ == name).foreach(r.clean)
-              df
-            case None =>
-              val c = frags.localCheckpoint()
-              if (lastCkpt != null) lastCkpt.unpersist()
-              lastCkpt = c
-              c
+    /** Distributed contraction from materialized fragments at round `from`. */
+    def contract(start: Dataset[Frag], from: Int): Dataset[Frag] = {
+      var frags = start
+      var lastCkpt: Dataset[Frag] = frags
+      var lastCount = -1L
+      var iter = from
+      var done = false
+      // the start state is already materialized, so this stats pass is one
+      // cheap cached-scan job — it decides distributed-vs-local entry
+      var (n, bases) = fragStats(frags)
+      graft.core.Counters.add("assembler.seed_rows", n)
+      while (iter < maxIter && !done) {
+        if (n <= localThreshold && bases <= localMaxBases) {
+          // last-mile: the fragments fit one task — finish the contraction
+          // in a single chain-following pass instead of more rounds.
+          graft.core.Counters.add("assembler.endgame_rows", n)
+          graft.core.Counters.add("assembler.endgame_bases", bases)
+          frags = frags.coalesce(1).mapPartitions(it => contractChainsLong(it.toArray, k))
+          done = true
+        } else {
+          frags = mergeRound(frags, k, iter)
+          iter += 1
+          if (iter % probeEvery == 0) {
+            val ckpt = runner match {
+              case Some(r) =>
+                val name = s"frags_i$iter"
+                val df = durable(name, frags)
+                r.completed("frags_i").filterNot(_ == name).foreach(r.clean)
+                df
+              case None =>
+                val c = frags.localCheckpoint()
+                if (lastCkpt != null) lastCkpt.unpersist()
+                lastCkpt = c
+                c
+            }
+            frags = ckpt
+            // Two-tier convergence probe (A4, made exact): merges strictly
+            // shrink the count, so a changed count means "not done" without
+            // any further work; only when the count stalls run the exact
+            // test — a merge is still possible iff some junction is both a
+            // tail and a head of open (non-cycle) fragments. Never a false
+            // stop, and the intersect runs O(1) times in the common case.
+            locally { val st = fragStats(ckpt); n = st._1; bases = st._2 }
+            if (n == lastCount) {
+              val open = ckpt.filter(f => f.head != f.tail).toDF()
+              done = open.select(col("tail")).intersect(open.select(col("head")))
+                .isEmpty
+            }
+            lastCount = n
           }
-          frags = ckpt
-          // Two-tier convergence probe (A4, made exact): merges strictly
-          // shrink the count, so a changed count means "not done" without
-          // any further work; only when the count stalls run the exact
-          // test — a merge is still possible iff some junction is both a
-          // tail and a head of open (non-cycle) fragments. Never a false
-          // stop, and the intersect runs O(1) times in the common case.
-          locally { val st = fragStats(ckpt); n = st._1; bases = st._2 }
-          if (n == lastCount) {
-            val open = ckpt.filter(f => f.head != f.tail).toDF()
-            done = open.select(col("tail")).intersect(open.select(col("head")))
-              .isEmpty
-          }
-          lastCount = n
         }
       }
+      graft.core.Counters.add("assembler.rounds", (iter - from).toLong)
+      frags
     }
-    graft.core.Counters.add("assembler.rounds", (iter - resumeIter.getOrElse(0)).toLong)
+
+    val frags = resumeIter match {
+      // on resume the seed lineage is never built, let alone executed
+      case Some(i) => contract(durable(s"frags_i$i", sys.error("resume never recomputes")), i)
+      case None =>
+        // one count of the solid k-mers decides the path; the same job
+        // materializes their checkpoint, which the seed or the single task
+        // then reads instead of re-running the k-mer count
+        val solid = counts.filter(col("count") >= minCov).localCheckpoint(eager = false)
+        val n = solid.count()
+        if (maxIter > 0 && 2 * n <= localThreshold && 2 * n * k <= localMaxBases) {
+          graft.core.Counters.add("assembler.local_kmers", n)
+          // coalesce, not repartition: narrow read of the cached partitions
+          val walked = solid.as[(Long, Long)].coalesce(1)
+            .mapPartitions(it => assembleLocal(it, k, popBubbles, minError, scramble))
+          if (runner.isEmpty) walked else durable("frags_i0", walked)
+        } else contract(
+          // checkpoint the seed fragments: without this, every round before
+          // the first probe re-executes the fork-filter lineage
+          if (runner.isEmpty) seed(solid).localCheckpoint() else durable("frags_i0", seed(solid)),
+          0)
+    }
+
     frags
       .map { f =>
         normalizeContig(KmerCodec.decodeBlocks(f.seq),

@@ -903,69 +903,21 @@ object Dedup {
     // 80k docs) but a DEGENERATE corpus (many identical dHash/audio sigs)
     // funnels a huge fraction of the corpus into one bucket and
     // serializes quadratic work on one straggler. The guard is folded
-    // into the bucket pass itself: a bucket of size <= cap emits its
-    // pairs directly (tagged t=0); an oversized bucket re-emits each
-    // member into its deterministic BLOCK-PAIR groups (t=1; m =
-    // ceil(size/cap) blocks, member of block c goes to every (i,c)/(c,j)
-    // group), and a second grouped pass enumerates cross/within-block
-    // pairs with <= (2·cap)² work and O(cap) memory per task. No size
-    // pre-pass, no persist, no driver round-trip: the signature subtree
-    // is evaluated exactly once either way (the r13 win holds), and the
-    // benign-case cost is one extra exchange of the (small) pair set.
+    // into the bucket pass itself ([[simhashStaged]]), and a second
+    // grouped pass enumerates cross/within-block pairs with <= (2·cap)²
+    // work and O(cap) memory per task. No size pre-pass, no persist, no
+    // driver round-trip: the signature subtree is evaluated exactly once
+    // either way (the r13 win holds), and the benign-case cost is one
+    // extra exchange of the (small) pair set.
     // cap <= 0 disables the guard (the exact r13 two-exchange plan).
     val cap = spark.conf.get("spark.graft.simhash.bucketCap", "4096").toInt
-    val bandRows0 = sig.select(col("doc_id"), col("sig"),
-        explode(array((0 until 4).map(b => struct(lit(b).as("bnd"),
-          shiftrightunsigned(col("sig"), 15 * b).bitwiseAND(lit(32767L))
-            .as("bv"))): _*)).as("e"))
-      .select(col("e.bnd").as("bnd"), col("e.bv").as("bv"),
-        col("doc_id"), col("sig"))
-      .as[(Int, Long, Long, Long)]
-      .groupByKey { case (bnd, bv, _, _) => (bnd, bv) }
-    def pairsOf(docs: Array[(Long, Long)]): Iterator[(Long, Long, Long)] =
-      for {
-        i <- docs.indices.iterator
-        j <- (i + 1 until docs.length).iterator
-        (ia, sa) = docs(i)
-        (ib, sb) = docs(j)
-        if ia != ib
-        h = java.lang.Long.bitCount(sa ^ sb).toLong
-        if h <= 3L
-      } yield if (ia < ib) (ia, ib, h) else (ib, ia, h)
     if (cap <= 0)
-      return bandRows0
+      return simhashBuckets(sig)
         .flatMapGroups { (_: (Int, Long), it: Iterator[(Int, Long, Long, Long)]) =>
-          pairsOf(it.map { case (_, _, id, s) => (id, s) }.toArray)
+          nearPairs(it.map { case (_, _, id, s) => (id, s) }.toArray)
         }
         .toDF("doc_a", "doc_b", "hamming").distinct()
-    // block index of a doc within an oversized bucket: deterministic,
-    // uniform (byteswap64 is a bijective mixer)
-    def blockOf(id: Long, m: Int): Int =
-      (((scala.util.hashing.byteswap64(id) % m) + m) % m).toInt
-    // stage-1 rows: (t, x, y, id, sg) — t=0 pair (x=doc_a, y=doc_b,
-    // id=hamming); t=1 block member (x = bnd·2^42 | i·2^21 | j, y = m,
-    // id/sg = the member). Grouping stage 2 by (t, x, y) makes t=0 rows
-    // pass through untouched and lands each block-pair group in one task.
-    val staged = bandRows0.flatMapGroups {
-      (key: (Int, Long), it: Iterator[(Int, Long, Long, Long)]) =>
-        val docs = it.map { case (_, _, id, s) => (id, s) }.toArray
-        if (docs.length <= cap)
-          pairsOf(docs).map { case (a, b, h) => (0, a, b, h, 0L) }
-        else {
-          val m = ((docs.length + cap - 1) / cap)
-          val bnd = key._1.toLong
-          def pack(i: Int, j: Int): Long =
-            (bnd << 42) | (i.toLong << 21) | j.toLong
-          docs.iterator.flatMap { case (id, sg) =>
-            val c = blockOf(id, m)
-            (0 until m).iterator.map { o =>
-              val (i, j) = if (o < c) (o, c) else (c, o)
-              (1, pack(i, j), m.toLong, id, sg)
-            }
-          }
-        }
-    }
-    staged
+    simhashStaged(sig, cap)
       .groupByKey { case (t, x, y, _, _) => (t, x, y) }
       .flatMapGroups { (key: (Int, Long, Long), it: Iterator[(Int, Long, Long, Long, Long)]) =>
         key match {
@@ -978,10 +930,10 @@ object Dedup {
             val i = ((packed >> 21) & ((1L << 21) - 1)).toInt
             val j = (packed & ((1L << 21) - 1)).toInt
             val members = it.map { case (_, _, _, id, sg) => (id, sg) }.toArray
-            if (i == j) pairsOf(members)
+            if (i == j) nearPairs(members)
             else {
               val (li, lj) = members.partition { case (id, _) =>
-                blockOf(id, m.toInt) == i }
+                simhashBlockOf(id, m.toInt) == i }
               for {
                 (ia, sa) <- li.iterator
                 (ib, sb) <- lj.iterator
@@ -994,6 +946,69 @@ object Dedup {
       }
       .toDF("doc_a", "doc_b", "hamming")
       .distinct()
+  }
+
+  /** The (band, value) buckets of a `(doc_id, sig)` table, as
+    * `(bnd, bv, doc_id, sig)` rows grouped by `(bnd, bv)`. */
+  private def simhashBuckets(sig: DataFrame) = {
+    import sig.sparkSession.implicits._
+    sig.select(col("doc_id"), col("sig"),
+        explode(array((0 until 4).map(b => struct(lit(b).as("bnd"),
+          shiftrightunsigned(col("sig"), 15 * b).bitwiseAND(lit(32767L))
+            .as("bv"))): _*)).as("e"))
+      .select(col("e.bnd").as("bnd"), col("e.bv").as("bv"),
+        col("doc_id"), col("sig"))
+      .as[(Int, Long, Long, Long)]
+      .groupByKey { case (bnd, bv, _, _) => (bnd, bv) }
+  }
+
+  /** Every hamming <= 3 pair among `(doc_id, sig)` members, as
+    * `(doc_a < doc_b, hamming)`. */
+  private def nearPairs(docs: Array[(Long, Long)]): Iterator[(Long, Long, Long)] =
+    for {
+      i <- docs.indices.iterator
+      j <- (i + 1 until docs.length).iterator
+      (ia, sa) = docs(i)
+      (ib, sb) = docs(j)
+      if ia != ib
+      h = java.lang.Long.bitCount(sa ^ sb).toLong
+      if h <= 3L
+    } yield if (ia < ib) (ia, ib, h) else (ib, ia, h)
+
+  /** Block index of a doc within an oversized bucket: deterministic and
+    * uniform (byteswap64 is a bijective mixer). */
+  private def simhashBlockOf(id: Long, m: Int): Int =
+    (((scala.util.hashing.byteswap64(id) % m) + m) % m).toInt
+
+  /** Stage 1 of the guarded pairing, as `(t, x, y, id, sg)` rows. A bucket
+    * of size <= cap emits its pairs directly (t=0: x=doc_a, y=doc_b,
+    * id=hamming). An oversized bucket re-emits each member into its
+    * deterministic BLOCK-PAIR groups (t=1; m = ceil(size/cap) blocks, a
+    * member of block c goes to every (i,c)/(c,j) group; x = bnd·2^57 |
+    * bv·2^42 | i·2^21 | j, y = m, id/sg = the member). Grouping stage 2 by
+    * (t, x, y) passes t=0 rows through and lands each block-pair group in
+    * one task. The bucket value is part of the key, so two hot buckets of
+    * one band never share a group and each group holds <= 2·cap members. */
+  private[operators] def simhashStaged(sig: DataFrame, cap: Int) = {
+    import sig.sparkSession.implicits._
+    simhashBuckets(sig).flatMapGroups {
+      (key: (Int, Long), it: Iterator[(Int, Long, Long, Long)]) =>
+        val docs = it.map { case (_, _, id, s) => (id, s) }.toArray
+        if (docs.length <= cap)
+          nearPairs(docs).map { case (a, b, h) => (0, a, b, h, 0L) }
+        else {
+          val m = ((docs.length + cap - 1) / cap)
+          val bucket = (key._1.toLong << 57) | (key._2 << 42)
+          def pack(i: Int, j: Int): Long = bucket | (i.toLong << 21) | j.toLong
+          docs.iterator.flatMap { case (id, sg) =>
+            val c = simhashBlockOf(id, m)
+            (0 until m).iterator.map { o =>
+              val (i, j) = if (o < c) (o, c) else (c, o)
+              (1, pack(i, j), m.toLong, id, sg)
+            }
+          }
+        }
+    }
   }
 
   // ----------------------------------------------------------- oracle SQL

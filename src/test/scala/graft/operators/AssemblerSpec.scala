@@ -1,8 +1,12 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, StageInfo}
+import org.apache.spark.sql.DataFrame
 import graft.TestSpark
-import graft.core.{KmerCodec, KmerIter}
+import graft.core.{Counters, KmerCodec, KmerIter}
 
 class AssemblerSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -182,5 +186,108 @@ class AssemblerSpec extends AnyFunSuite {
     val counts = Genomics.countCanonical(all.toDS(), 31)
     val contigs = Assembler.assemble(counts, 31, minCov = 2, maxIter = 40).collect().toSeq
     assert(contigs == Seq(canonStr(genome)))
+  }
+
+  test("single-task fork sides == Catalyst resolveForks / resolveForksUnitig, row for row") {
+    import spark.implicits._
+    // a small k packs the edges onto few (k-1)-mer nodes, so most nodes
+    // fork; a short count ladder forces ties, count == minError and winners
+    // exactly 2x their loser. Rows are not canonicalized, so a k-mer and
+    // its reverse complement can both occur (identical mirrored rows), and
+    // the even k has palindromes (mirrored once).
+    val ladder = Array(1L, 2L, 3L, 4L, 8L, 16L)
+    for (seed <- 1 to 3; k <- Seq(5, 6)) {
+      val rnd = new scala.util.Random(seed * 31L + k)
+      // even k: plant palindromes, half + reverse complement of the half
+      val pal = if (k % 2 == 1) Nil else Seq.fill(3) {
+        val h = rnd.nextLong() & ((1L << k) - 1)
+        (h << k) | KmerCodec.rcLong(h, k / 2)
+      }
+      val kmers = (Seq.fill(40 * k)(rnd.nextLong() & ((1L << (2 * k)) - 1)) ++ pal).distinct
+      val counts = kmers.map(kv => (kv, ladder(rnd.nextInt(ladder.length))))
+      val edges = Assembler.mirroredEdges(counts.toDF("kv", "count"), k).cache()
+      val (km, cn) = Assembler.mirrorLocal(counts.iterator, k)
+      val mask = (1L << (2 * (k - 1))) - 1
+      def local(es: Array[Int]) =
+        es.toSeq.map(e => (km(e), cn(e), km(e) >> 2, km(e) & mask)).sorted
+      def catalyst(df: DataFrame) = df.select("kmer", "count", "prefix", "suffix")
+        .as[(Long, Long, Long, Long)].collect().toSeq.sorted
+      val ctx = s"seed=$seed k=$k"
+      assert(local(km.indices.toArray) == catalyst(edges), s"$ctx mirror")
+      if (k % 2 == 0) assert(km.length < 2 * counts.length, s"$ctx palindromes mirror once")
+      // the fixture reaches the edge cases: a tied top pair, a winner at
+      // exactly 2x the runner-up, a runner-up at a tested minError
+      val tops = km.indices.groupBy(e => km(e) >> 2).values
+        .map(_.map(cn).sorted(Ordering[Long].reverse)).filter(_.length > 1)
+      assert(tops.exists(c => c(0) == c(1)), s"$ctx tie")
+      assert(tops.exists(c => c(0) == 2 * c(1)), s"$ctx 2x")
+      assert(tops.exists(c => Set(2L, 4L, 8L)(c(1))), s"$ctx count == minError")
+      for (minError <- Seq(0, 2, 4, 8)) {
+        assert(local(Assembler.resolveForksLocal(km, cn, k, popBubbles = true, minError)) ==
+          catalyst(Assembler.resolveForks(edges, popBubbles = true, minError)),
+          s"$ctx minError=$minError")
+        val (kept, barriers) = Assembler.resolveForksUnitigLocal(km, cn, k, minError)
+        val (e, b) = Assembler.resolveForksUnitig(edges, minError)
+        assert(local(kept) == catalyst(e), s"$ctx unitig minError=$minError")
+        assert(barriers.toSet == b.as[Long].collect().toSet, s"$ctx barriers minError=$minError")
+      }
+      assert(local(Assembler.resolveForksLocal(km, cn, k, popBubbles = false, 0)) ==
+        catalyst(Assembler.resolveForks(edges, popBubbles = false, 0)), s"$ctx -bubble")
+      edges.unpersist()
+    }
+  }
+
+  /** Stages that complete while `body` runs. A marker job submitted after
+    * `body` flushes the asynchronous listener bus: its start event is
+    * delivered after every event `body` posted. */
+  private def stagesOf[T](body: => T): (T, Seq[StageInfo]) = {
+    val sc = spark.sparkContext
+    val marker = "assembler-spec-flush"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[StageInfo]()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (flushed.getCount > 0) { seen.add(e.stageInfo); () }
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
+          flushed.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (r, seen.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("below the k-mer gate: one single-task stage after the count checkpoint, no fork-filter shuffle") {
+    import spark.implicits._
+    val genome = randGenome(3000, seed = 61)
+    val counts = Genomics.countCanonical(reads(genome, 80, 9).toDS(), 31).localCheckpoint()
+    val nKmers = counts.count()
+    def shuffled(st: Seq[StageInfo]) = st.map(_.taskMetrics.shuffleWriteMetrics.recordsWritten).sum
+    val before = Counters.snapshot
+    val (ds, eager) = stagesOf(Assembler.assemble(counts, 31))
+    val counted = Counters.diff(before, Counters.snapshot)
+    // assemble() itself only checkpoints and counts the solid k-mers: no
+    // stage writes more than the count's one partial row per task
+    assert(eager.nonEmpty)
+    eager.foreach(st => assert(st.taskMetrics.shuffleWriteMetrics.recordsWritten <= st.numTasks,
+      s"stage ${st.stageId} (${st.name}) shuffled per-k-mer rows"))
+    assert(counted.get("assembler.local_kmers").contains(nKmers))
+    assert(counted.get("assembler.seed_rows").isEmpty)
+    // the result: exactly one stage reads the checkpoint, in ONE task, and
+    // shuffles only the distinct contigs
+    val (out, lazyStages) = stagesOf(ds.collect())
+    assert(out.toSeq == Seq(canonStr(genome)))
+    val sources = lazyStages.filter(_.parentIds.isEmpty)
+    assert(sources.map(_.numTasks) == Seq(1), s"source stages: $sources")
+    assert(shuffled(lazyStages) <= out.length)
+    // the fully distributed path on the same table shuffles every edge
+    // before assemble() returns — the pin above would catch a fall-back
+    val (_, dist) = stagesOf(Assembler.assemble(counts, 31, localThreshold = 0))
+    assert(shuffled(dist) >= nKmers)
   }
 }

@@ -74,6 +74,47 @@ class DedupSpec extends AnyFunSuite {
     }
   }
 
+  test("simhashPairs skew guard: two hot buckets of one band never share a block-pair group") {
+    import spark.implicits._
+    val mask60 = (1L << 60) - 1
+    val rnd = new scala.util.Random(137L)
+    // two 40-doc buckets in band 0 (low 15 bits 0x0ABC and 0x1234): at cap 8
+    // both split into m = 5 blocks, so only the bucket value keeps their
+    // (i, j) groups apart; identical high bits in runs of 10 give near
+    // pairs inside each bucket
+    val high = Array.fill(8)((rnd.nextLong() & mask60) & ~((1L << 30) - 1))
+    val hot = for {
+      (bv, b) <- Seq(0x0ABCL, 0x1234L).zipWithIndex
+      i <- 0 until 40
+    } yield (1000L + 100 * b + i, high(4 * b + i / 10) | ((i % 3).toLong << 15) | bv)
+    val bg = (0 until 60).map(i => (3000L + i, rnd.nextLong() & mask60))
+    val sigs = hot ++ bg
+    val groups = Dedup.simhashStaged(sigs.toDF("doc_id", "sig"), 8)
+      .filter(_._1 == 1).collect().groupBy(r => (r._2, r._3))
+    assert(groups.size >= 2 * 15) // m(m+1)/2 groups per band-0 bucket
+    groups.foreach { case (g, rows) =>
+      val members = rows.map(_._5)
+      assert((0 until 4).exists(b => members.map(x => (x >>> (15 * b)) & 32767L).distinct.length == 1),
+        s"block-pair group $g holds members of more than one bucket")
+    }
+    val brute = (for {
+      (ia, sa) <- sigs
+      (ib, sb) <- sigs if ia < ib
+      h = java.lang.Long.bitCount(sa ^ sb) if h <= 3
+    } yield (ia, ib, h.toLong)).toSet
+    assert(brute.nonEmpty)
+    val key = "spark.graft.simhash.bucketCap"
+    val prev = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, "8")
+      assert(Dedup.simhashPairs(sigs.toDF("doc_id", "sig"))
+        .as[(Long, Long, Long)].collect().toSet == brute)
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("bandRows (per-row, shuffle-free) == bands(signatures(shingled)) exactly") {
     import org.apache.spark.sql.functions._
     import spark.implicits._

@@ -147,6 +147,40 @@ class GenericOpsSpec extends AnyFunSuite {
     assert(local == dist)
   }
 
+  test("single-task assembly == distributed at Main's defaults on repeats and read errors") {
+    import spark.implicits._
+    val k = 31
+    for (seed <- Seq(7, 19)) {
+      val rnd = new scala.util.Random(seed)
+      // four unique 1 kbp stretches joined by three copies of one repeat
+      val rep = randGenome(120, seed * 10L)
+      val g = (1 to 4).map(i => randGenome(1000, seed * 10L + i)).mkString(rep)
+      def sub(c: Char) = "ACGT".filter(_ != c)(rnd.nextInt(3))
+      // 20x of 100 bp reads, half reverse-complemented, 0.5% substitutions
+      val noisy = (0 until g.length / 5).map { _ =>
+        val i = rnd.nextInt(g.length - 99)
+        g.substring(i, i + 100).map(c => if (rnd.nextInt(200) == 0) sub(c) else c)
+      }
+      // recurrent errors: three reads share each substitution, so the error
+      // arm passes minCov = 2 and only the minError rule can drop it
+      val recurrent = (0 until 8).flatMap { _ =>
+        val i = rnd.nextInt(g.length - 99)
+        val w = g.substring(i, i + 100)
+        Seq.fill(3)(w.updated(50, sub(w(50))))
+      }
+      val rds = (noisy ++ recurrent).map(w => if (rnd.nextBoolean()) w else rcStr(w))
+      val counts = Genomics.countCanonical(rds.toDS(), k).localCheckpoint()
+      for (scramble <- Seq(false, true)) {
+        def run(localThreshold: Long) =
+          Assembler.assemble(counts, k, minCov = 2, maxIter = 150, minError = 8,
+            scramble = scramble, localThreshold = localThreshold).collect().toSet
+        val local = run(4000000L)
+        assert(local.size > 1, s"seed=$seed scramble=$scramble")
+        assert(local == run(0L), s"seed=$seed scramble=$scramble")
+      }
+    }
+  }
+
   test("wide-k local contraction matches distributed contraction") {
     import spark.implicits._
     val k = 40
