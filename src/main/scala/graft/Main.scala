@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.{Assembler, AssemblerWide, Dynamic, Genomics, Patching, Pipelines, Rescue}
+import graft.operators.{Assembler, Dynamic, Genomics, Patching, Pipelines, Rescue}
 import graft.sources.Fastq
 
 /** CLI surface mirroring the reference's subcommands and option set
@@ -172,45 +172,33 @@ object Main {
       if (partitions > 0) limited.repartition(partitions) else limited
     }
 
-    /** Counting + assembly dispatch on k (packed-Long vs wide-block),
-      * honoring `-kmerc` (pre-counted table skips the counting stage). */
+    /** Counting + assembly, honoring `-kmerc` (pre-counted table skips
+      * the counting stage). Counts are packed `(kv, count)` for k <= 31,
+      * 2-bit block `(kb, count)` above. */
     def assembleReads(kk: Int): Dataset[String] = {
       val kmerc = opt(args, "-kmerc", "")
-      if (kk <= 31) {
-        graft.functions.GraftFunctions.register(spark)
-        val raw =
-          if (kmerc.nonEmpty)
-            spark.read.schema("kmer STRING, count BIGINT").csv(kmerc)
-              .selectExpr("kmer_pack(kmer) AS kv", "count")
-          else Genomics.countCanonical(reads, kk)
-        // -mercy (reference's mercy stage): lift gap-bridging kmers over
-        // the coverage gate so low-coverage regions assemble through
-        val counts =
-          if (args.contains("-mercy") && kmerc.isEmpty)
-            Rescue.applyMercy(raw, reads, kk, minCov)
-          else raw
-        Assembler.assemble(counts.filter(col("count") <= maxCov), kk,
-          minCov = minCov, maxIter = maxIter, minContig = minContig,
-          popBubbles = popBubbles, minError = minError,
-          scramble = args.contains("-scramble"))
-      } else {
-        val counts =
-          if (kmerc.nonEmpty)
-            spark.read.schema("kmer STRING, count BIGINT").csv(kmerc)
-              .as[(String, Long)]
-              .map { case (km, c) => (graft.core.KmerCodec.encodeBlocks(km), c) }
-              .toDF("kb", "count")
-          else reads.flatMap(r => graft.core.KmerIter.canonicalBlocks(r, kk))
-            .toDF("kb").groupBy("kb").count()
-        val mercied =
-          if (args.contains("-mercy") && kmerc.isEmpty)
-            Rescue.applyMercyWide(counts, reads, kk, minCov)
-          else counts
-        AssemblerWide.assemble(mercied.filter(col("count") <= maxCov), kk,
-          minCov = minCov, maxIter = maxIter, minContig = minContig,
-          popBubbles = popBubbles, minError = minError,
-          scramble = args.contains("-scramble"))
-      }
+      graft.functions.GraftFunctions.register(spark)
+      val raw =
+        if (kmerc.nonEmpty) {
+          val csv = spark.read.schema("kmer STRING, count BIGINT").csv(kmerc)
+          if (kk <= 31) csv.selectExpr("kmer_pack(kmer) AS kv", "count")
+          else csv.as[(String, Long)]
+            .map { case (km, c) => (graft.core.KmerCodec.encodeBlocks(km), c) }
+            .toDF("kb", "count")
+        }
+        else if (kk <= 31) Genomics.countCanonical(reads, kk)
+        else reads.flatMap(r => graft.core.KmerIter.canonicalBlocks(r, kk))
+          .toDF("kb").groupBy("kb").count()
+      // -mercy (reference's mercy stage): lift gap-bridging kmers over
+      // the coverage gate so low-coverage regions assemble through
+      val counts =
+        if (args.contains("-mercy") && kmerc.isEmpty)
+          Rescue.applyMercy(raw, reads, kk, minCov)
+        else raw
+      Assembler.assemble(counts.filter(col("count") <= maxCov), kk,
+        minCov = minCov, maxIter = maxIter, minContig = minContig,
+        popBubbles = popBubbles, minError = minError,
+        scramble = args.contains("-scramble"))
     }
 
     def contigInput(): Dataset[String] = {

@@ -19,7 +19,7 @@ object SparkEntry {
   /** One entry per implemented operator from SURVEY.md §2 (+ the
     * LLM-data-pipeline layer). */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Relational.queries ++ Genomics.queries ++ Assembler.queries ++ AssemblerWide.queries ++
+    Relational.queries ++ Genomics.queries ++ Assembler.queries ++
       Dedup.queries ++ Similarity.queries ++ TextOps.queries ++ Sketches.queries ++
       Events.queries ++ Multimodal.queries ++ GenomicsIO.queries ++ Dynamic.queries ++ Rescue.queries ++ Patching.queries ++ GraphOps.queries ++ SamConsensus.queries ++ Pipelines.queries ++ Curation.queries ++ ErrorCorrect.queries ++ Lakehouse.queries ++ Zorder.queries ++ DataQuality.queries ++ Sampling.queries
 
@@ -34,7 +34,7 @@ object SparkEntry {
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys get a rows-only check. */
   def oracleSql: Map[String, String] =
-    Relational.oracles ++ Genomics.oracles ++ Assembler.oracles ++ AssemblerWide.oracles ++
+    Relational.oracles ++ Genomics.oracles ++ Assembler.oracles ++
       Dedup.oracles ++ Similarity.oracles ++ TextOps.oracles ++ Sketches.oracles ++
       Events.oracles ++ Multimodal.oracles ++ GenomicsIO.oracles ++ Dynamic.oracles ++ Rescue.oracles ++ Patching.oracles ++ GraphOps.oracles ++ SamConsensus.oracles ++ Pipelines.oracles ++ Curation.oracles ++ ErrorCorrect.oracles ++ Lakehouse.oracles ++ Zorder.oracles ++ DataQuality.oracles ++ Sampling.oracles
 }

@@ -1,10 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
+import scala.reflect.runtime.universe.TypeTag
 import org.apache.spark.sql.expressions.Window
 import graft.Tables._
-import graft.core.KmerCodec
+import graft.core.{Counters, KmerCodec, KmerIter}
 import graft.sources.StageRunner
 
 /** The assembly core: the reference's "Reflexible Distributed K-mer" loop
@@ -32,13 +34,22 @@ import graft.sources.StageRunner
   *  - Single-task gate, checked twice. First on the solid (`count >=
   *    minCov`) canonical k-mer table, before any fork filter: n solid
   *    k-mers mirror to at most 2n edges, seed at most 2n fragments and 2n·k
-  *    bases, so when those bounds fit `localThreshold`/`localMaxBases` the
+  *    bases, so when those bounds fit the row gate and [[MaxLocalBases]] the
   *    whole rest of the assembly (mirror, both fork sides, chain walk) runs
   *    in ONE task over primitive arrays ([[assembleLocal]]) — no fork-filter
   *    shuffles, no seed checkpoint, no stats job. Above it, the distributed
   *    seed and contraction rounds run and the same gate is re-checked on
   *    the shrinking fragment set, so the last rounds still finish in one
   *    chain walk.
+  *
+  * Key regimes. One driver ([[drive]]) runs over two key formats picked
+  * from k, where the reference keeps a 64-bit twin of every assembler
+  * (`ReflexivDSMain64.java`, to k=95): [[LongKeys]] packs each k-mer and
+  * endpoint into one `Long` (k <= 31), [[BlockKeys]] keeps 2-bit block
+  * `Array[Long]`s (k > 31; 24 B at k=95 vs 94 B as a string). A regime
+  * holds only the fragment row and its endpoint hash, equality and pairing
+  * order, the seed's edge domain, the scramble salting and the endgame walk
+  * with its row cap; only packed keys have the k-mer half of the gate.
   *
   * Scale notes: up to ~2M solid canonical k-mers (the default gate) —
   * bacterial-size genomes, `reassemble`, `stitch`, the example reads —
@@ -50,19 +61,39 @@ import graft.sources.StageRunner
   */
 object Assembler {
 
-  /** A path fragment: packed (k-1)-mer endpoints + 2-bit block sequence. */
-  case class Frag(head: Long, tail: Long, seq: Array[Long])
+  /** A path fragment in either key regime: a 2-bit block sequence between
+    * two (k-1)-mer endpoint keys; closed (head == tail) for a cycle. */
+  sealed trait Fragment extends Product { def seq: Array[Long]; def closed: Boolean }
 
-  /** Deterministic per-round coin: splittable-hash of the endpoints. */
-  private def coin(f: Frag, iter: Int): Boolean = {
-    var h = f.head * 0x9E3779B97F4A7C15L + f.tail * 0xC2B2AE3D27D4EB4FL +
+  /** Packed (k-1)-mer endpoints (the k <= 31 regime). */
+  case class Frag(head: Long, tail: Long, seq: Array[Long]) extends Fragment {
+    def closed: Boolean = head == tail
+  }
+
+  /** 2-bit block endpoints (the k > 31 regime). */
+  case class FragW(head: Array[Long], tail: Array[Long], seq: Array[Long]) extends Fragment {
+    def closed: Boolean = java.util.Arrays.equals(head, tail)
+  }
+
+  /** The BYTE side of the single-task gate: `2n·k` at the k-mer check, the
+    * fragments' total bases at the fragment check. Contraction shrinks the
+    * row count geometrically but total sequence only by k-1 per merge, so a
+    * small fragment count can still carry the whole assembly's sequence — a
+    * count-only switch would funnel it all into one task and OOM an
+    * executor at the 100 TB design point. 500 Mbases ≈ 125 MB packed, well
+    * under one executor. */
+  private val MaxLocalBases = 500000000L
+
+  /** Deterministic per-round coin: splittable-hash of the endpoint hashes. */
+  private def coin(headHash: Long, tailHash: Long, iter: Int): Boolean = {
+    var h = headHash * 0x9E3779B97F4A7C15L + tailHash * 0xC2B2AE3D27D4EB4FL +
       iter.toLong * 0x165667B19E3779F9L
     h ^= h >>> 31; h *= 0xFF51AFD7ED558CCDL; h ^= h >>> 29
     (h & 1L) == 0L
   }
 
   /** Shared fork resolution over an edge table with `kmer, count, prefix,
-    * suffix` columns (key type is Long for k <= 32, String in the wide
+    * suffix` columns (key type is Long for k <= 31, String in the block
     * regime — the plan is identical).
     *
     * `popBubbles = true, minError = 0` (default): every fork resolves to
@@ -114,20 +145,6 @@ object Assembler {
     resolved.select("kmer", "count", "prefix", "suffix")
   }
 
-  /** RC-mirrored oriented edge table `(kmer, count, prefix, suffix)`. */
-  private[operators] def mirroredEdges(counts: DataFrame, k: Int): DataFrame = {
-    val s = counts.sparkSession
-    import s.implicits._
-    val mirrored = counts.as[(Long, Long)].flatMap { case (kv, c) =>
-      val rc = KmerCodec.rcLong(kv, k)
-      if (rc == kv) Iterator((kv, c)) else Iterator((kv, c), (rc, c))
-    }.toDF("kmer", "count")
-    val mask = (1L << (2 * (k - 1))) - 1
-    mirrored
-      .withColumn("prefix", shiftright(col("kmer"), 2))
-      .withColumn("suffix", col("kmer").bitwiseAND(lit(mask)))
-  }
-
   /** The `-scramble` (repeat-aware) fork treatment — the reference's
     * DSMain64 two-branch path (`ReflexivDSMain64.java:686-756`: sorted
     * groups are classified extendable/unextendable and the unextendable
@@ -169,32 +186,159 @@ object Assembler {
     (e2, b1.union(b2).distinct())
   }
 
-  /** Scramble-mode seed fragments: one per surviving edge, with any
-    * endpoint that touches a barrier junction replaced by a per-edge
-    * UNIQUE key so no contraction round can merge across the junction.
-    * Real node keys are packed (k-1)-mers (< 2^60 for k <= 31, always
-    * non-negative); salted keys set the sign bit (head) or sign+62 bits
-    * (tail) over the edge's own k-mer — injective per oriented edge,
-    * disjoint from every real key and from each other. */
-  private def scrambleSeed(counts: DataFrame, k: Int, minError: Int): Dataset[Frag] = {
-    val s = counts.sparkSession
-    import s.implicits._
-    val (edges, barriers) = resolveForksUnitig(mirroredEdges(counts, k), minError)
-    edges
-      .join(barriers.select(col("gk").as("bp")), col("prefix") === col("bp"), "left")
-      .join(barriers.select(col("gk").as("bs")), col("suffix") === col("bs"), "left")
-      .select(col("kmer"),
-        when(col("bp").isNotNull,
-          col("kmer").bitwiseOR(lit(Long.MinValue))).otherwise(col("prefix")).as("h"),
-        when(col("bs").isNotNull,
-          col("kmer").bitwiseOR(lit(Long.MinValue)).bitwiseOR(lit(1L << 62)))
-          .otherwise(col("suffix")).as("t"))
-      .as[(Long, Long, Long)]
-      .map { case (kv, h, t) => Frag(h, t, KmerCodec.longToBlocks(kv, k)) }
+  /** What differs between the two key widths: `F` is the fragment row, `K`
+    * the endpoint key a merge round shuffles on. */
+  private[operators] sealed abstract class KeyRegime[F <: Fragment : TypeTag, K : TypeTag]
+      extends Serializable {
+    @transient lazy val fragEnc: Encoder[F] = Encoders.product[F]
+    @transient lazy val keyEnc: Encoder[K] = ExpressionEncoder[K]()
+    /** Row cap of the single-task endgame walk (its cost per row sets it). */
+    val rowCap: Long
+    def coin(f: F, iter: Int): Boolean
+    /** The key `f` offers in a merge round: its tail if it is the head. */
+    def offer(f: F, isHead: Boolean): K
+    /** Deterministic pairing order inside a merge group. */
+    def pairOrder: Ordering[F]
+    /** `a` followed by `b`, carrying their joined sequence. */
+    def merged(a: F, b: F, seq: Array[Long]): F
+    /** RC-mirrored oriented edge table `(kmer, count, prefix, suffix)` over
+      * canonical counts — the domain the fork filter sorts in. */
+    def mirroredEdges(counts: DataFrame, k: Int): DataFrame
+    /** One seed fragment per surviving `(kmer, sh, st)` edge; a set flag
+      * salts that endpoint with a key unique to the edge, so no round can
+      * merge across a scramble barrier. */
+    def seedFrags(edges: DataFrame, k: Int): Dataset[F]
+    def walk(frags: Iterator[F], k: Int): Iterator[F]
+    /** The k-mer half of the single-task gate, over the solid table:
+      * `Right(walked fragments)` when the whole assembly fits `rows`,
+      * else `Left(the table to seed from)`. */
+    def kmerGate(solid: DataFrame, k: Int, rows: Long, popBubbles: Boolean,
+                 minError: Int, scramble: Boolean): Either[DataFrame, Dataset[F]] =
+      Left(solid)
   }
 
-  /** Last-mile local contraction: once the fragment count falls below
-    * `localThreshold`, the remaining path/cycle structure fits in one task,
+  /** Packed-Long keys, k <= 31: the primitive single-task path and the
+    * Catalyst fork filter over packed k-mers. */
+  private[operators] object LongKeys extends KeyRegime[Frag, Long] {
+    val rowCap = 4000000L
+    def coin(f: Frag, iter: Int): Boolean = Assembler.coin(f.head, f.tail, iter)
+    def offer(f: Frag, isHead: Boolean): Long = if (isHead) f.tail else f.head
+    val pairOrder: Ordering[Frag] = Ordering.by(f => (f.head, f.tail))
+    def merged(a: Frag, b: Frag, seq: Array[Long]): Frag = Frag(a.head, b.tail, seq)
+
+    def mirroredEdges(counts: DataFrame, k: Int): DataFrame = {
+      val s = counts.sparkSession
+      import s.implicits._
+      val mirrored = counts.as[(Long, Long)].flatMap { case (kv, c) =>
+        val rc = KmerCodec.rcLong(kv, k)
+        if (rc == kv) Iterator((kv, c)) else Iterator((kv, c), (rc, c))
+      }.toDF("kmer", "count")
+      val mask = (1L << (2 * (k - 1))) - 1
+      mirrored
+        .withColumn("prefix", shiftright(col("kmer"), 2))
+        .withColumn("suffix", col("kmer").bitwiseAND(lit(mask)))
+    }
+
+    /** The seed fragment of edge `kv`. Real node keys are packed (k-1)-mers
+      * (< 2^60, always non-negative); salted keys set the sign bit (head)
+      * or sign+62 bits (tail) over the edge's own k-mer — injective per
+      * oriented edge, disjoint from every real key and from each other. */
+    def frag(kv: Long, sh: Boolean, st: Boolean, k: Int): Frag = {
+      val mask = (1L << (2 * (k - 1))) - 1
+      Frag(if (sh) kv | Long.MinValue else kv >>> 2,
+        if (st) kv | Long.MinValue | (1L << 62) else kv & mask,
+        KmerCodec.longToBlocks(kv, k))
+    }
+
+    def seedFrags(edges: DataFrame, k: Int): Dataset[Frag] = {
+      val s = edges.sparkSession
+      import s.implicits._
+      edges.as[(Long, Boolean, Boolean)].map { case (kv, sh, st) => frag(kv, sh, st, k) }
+    }
+
+    def walk(frags: Iterator[Frag], k: Int): Iterator[Frag] =
+      contractChainsLong(frags.toArray, k)
+
+    override def kmerGate(solid: DataFrame, k: Int, rows: Long, popBubbles: Boolean,
+                          minError: Int, scramble: Boolean): Either[DataFrame, Dataset[Frag]] = {
+      val s = solid.sparkSession
+      import s.implicits._
+      // one count of the solid k-mers decides the path; the same job
+      // materializes their checkpoint, which the seed or the single task
+      // then reads instead of re-running the k-mer count
+      val table = solid.localCheckpoint(eager = false)
+      val n = table.count()
+      if (2 * n <= rows && 2 * n * k <= MaxLocalBases) {
+        Counters.add("assembler.local_kmers", n)
+        // coalesce, not repartition: narrow read of the cached partitions
+        Right(table.as[(Long, Long)].coalesce(1)
+          .mapPartitions(it => assembleLocal(it, k, popBubbles, minError, scramble)))
+      } else Left(table)
+    }
+  }
+
+  /** 2-bit block keys, k > 31. Arrays have reference equality on the JVM,
+    * so endpoint comparisons go through `java.util.Arrays.equals` /
+    * `KmerCodec.compareBlocks`, and a merge round's group key is the
+    * endpoint wrapped `.toSeq` (content hash/equality). */
+  private[operators] object BlockKeys extends KeyRegime[FragW, Seq[Long]] {
+    val rowCap = 2000000L // the boxed walk costs ~7x the primitive one per row
+    def coin(f: FragW, iter: Int): Boolean =
+      Assembler.coin(hashBlocks(f.head), hashBlocks(f.tail), iter)
+    def offer(f: FragW, isHead: Boolean): Seq[Long] = (if (isHead) f.tail else f.head).toSeq
+    val pairOrder: Ordering[FragW] = (a, b) => {
+      val c = KmerCodec.compareBlocks(a.head, b.head)
+      if (c != 0) c else KmerCodec.compareBlocks(a.tail, b.tail)
+    }
+    def merged(a: FragW, b: FragW, seq: Array[Long]): FragW = FragW(a.head, b.tail, seq)
+
+    private def hashBlocks(b: Array[Long]): Long = {
+      var h = 0x165667B19E3779F9L
+      var i = 0
+      while (i < b.length) { h = (h + b(i)) * 0x9E3779B97F4A7C15L; i += 1 }
+      h
+    }
+
+    /** String domain on purpose: as `array<bigint>`, Catalyst would sort
+      * block keys as signed longs — bit 63 carries the first base of each
+      * block — and the `(count desc, kmer asc)` tie-break would stop being
+      * base order. */
+    def mirroredEdges(counts: DataFrame, k: Int): DataFrame = {
+      val s = counts.sparkSession
+      import s.implicits._
+      counts.as[(Array[Long], Long)]
+        .flatMap { case (kb, c) =>
+          val rc = KmerCodec.rcBlocks(kb)
+          val fwd = KmerCodec.decodeBlocks(kb)
+          if (KmerCodec.compareBlocks(kb, rc) == 0) Iterator((fwd, c))
+          else Iterator((fwd, c), (KmerCodec.decodeBlocks(rc), c))
+        }
+        .map { case (km, c) => (km, km.substring(0, k - 1), km.substring(1), c) }
+        .toDF("kmer", "prefix", "suffix", "count")
+    }
+
+    /** Block-domain salting: the salted key is the edge's own k-mer blocks
+      * with one flag long appended (0 = head, 1 = tail). Real endpoint keys
+      * have `blocksFor(k-1)` longs and salted keys `blocksFor(k) + 1` —
+      * strictly longer, so never equal to a real key (the sign-bit trick
+      * has no block analogue: bit 63 carries base data here). */
+    def seedFrags(edges: DataFrame, k: Int): Dataset[FragW] = {
+      val s = edges.sparkSession
+      import s.implicits._
+      edges.as[(String, Boolean, Boolean)].map { case (km, sh, st) =>
+        val blocks = KmerCodec.encodeBlocks(km)
+        FragW(if (sh) blocks :+ 0L else KmerCodec.sliceBlocks(blocks, 0, k - 1),
+          if (st) blocks :+ 1L else KmerCodec.sliceBlocks(blocks, 1, k), blocks)
+      }
+    }
+
+    def walk(frags: Iterator[FragW], k: Int): Iterator[FragW] =
+      contractChains(frags.map(f => (f.head.toSeq, f.tail.toSeq, f.seq)).toArray, k)
+        .map { case (h, t, sq) => FragW(h.toArray, t.toArray, sq) }
+  }
+
+  /** Last-mile local contraction: once the fragment count falls below the
+    * single-task gate, the remaining path/cycle structure fits in one task,
     * so the remaining O(log L) shuffle rounds are replaced by one
     * chain-following pass over all fragments in a single partition. After
     * the fork filter every node has in/out degree <= 1, so fragment heads
@@ -203,8 +347,8 @@ object Assembler {
     * a quadratic re-copy. A closed cycle contracts at a rotation that
     * differs from the distributed merge order, but cycles are normalized
     * to their minimal rotation downstream, so final contigs are identical
-    * either way. Generic over the endpoint key type (packed `Long` for
-    * k <= 32, `String` for the wide regime). */
+    * either way. Generic over the endpoint key type (`Seq[Long]` blocks in
+    * the block regime; packed keys take [[contractChainsLong]]). */
   private[operators] def contractChains[K](frags: Array[(K, K, Array[Long])],
                                            k: Int): Iterator[(K, K, Array[Long])] = {
     import scala.collection.mutable
@@ -288,7 +432,7 @@ object Assembler {
   }
 
   /** [[contractChains]] specialized to the packed-Long key regime (k <=
-    * 32 — every single-k assembly in the engine): same walk, same output
+    * 31 — every single-k assembly in the engine): same walk, same output
     * order, but primitive parallel arrays + [[LongIntMap]] instead of
     * boxed hash structures. ~7x on the measured 4.5M-row endgame
     * (2.3 µs/row -> 0.33 µs/row), which matters because the endgame is a
@@ -438,11 +582,12 @@ object Assembler {
     (kept, barriers.result())
   }
 
+
   /** The whole assembly below the k-mer gate, in one task: mirror the solid
     * canonical `(kv, count)` rows, fork-filter them exactly as the
     * distributed seed does ([[resolveForks]], or [[resolveForksUnitig]] plus
-    * the [[scrambleSeed]] barrier salting), seed one fragment per surviving
-    * edge and walk the chains ([[contractChainsLong]]). */
+    * the barrier salting of [[LongKeys.frag]]), seed one fragment per
+    * surviving edge and walk the chains ([[contractChainsLong]]). */
   private[operators] def assembleLocal(canon: Iterator[(Long, Long)], k: Int,
                                        popBubbles: Boolean, minError: Int,
                                        scramble: Boolean): Iterator[Frag] = {
@@ -455,15 +600,10 @@ object Assembler {
         barriers.foreach(b => isBarrier.putIfAbsent(b, 0))
         kept.map { e =>
           val kv = km(e)
-          val h = if (isBarrier.contains(kv >> 2)) kv | Long.MinValue else kv >> 2
-          val t = if (isBarrier.contains(kv & mask)) kv | Long.MinValue | (1L << 62)
-            else kv & mask
-          Frag(h, t, KmerCodec.longToBlocks(kv, k))
+          LongKeys.frag(kv, isBarrier.contains(kv >> 2), isBarrier.contains(kv & mask), k)
         }
-      } else resolveForksLocal(km, cn, k, popBubbles, minError).map { e =>
-        val kv = km(e)
-        Frag(kv >>> 2, kv & mask, KmerCodec.longToBlocks(kv, k))
-      }
+      } else resolveForksLocal(km, cn, k, popBubbles, minError)
+        .map(e => LongKeys.frag(km(e), sh = false, st = false, k))
     contractChainsLong(seeds, k)
   }
 
@@ -471,7 +611,7 @@ object Assembler {
     * the last-mile gate come from the same pass: the row count drives the
     * convergence probe, the base total keeps the single-task endgame from
     * swallowing more sequence than one executor holds. */
-  private[operators] def fragStats(frags: Dataset[Frag]): (Long, Long) = {
+  private[operators] def fragStats[F <: Fragment](frags: Dataset[F]): (Long, Long) = {
     import frags.sparkSession.implicits._
     frags.mapPartitions { it =>
       var n = 0L; var b = 0L
@@ -483,31 +623,45 @@ object Assembler {
   /** One contraction round (J1 + P9): merge adjacent fragments whose coins
     * line up. Exactly one offer per fragment => each key group holds at
     * most one head-offer and one tail-offer. */
-  private[operators] def mergeRound(frags: Dataset[Frag], k: Int, iter: Int): Dataset[Frag] = {
-    import frags.sparkSession.implicits._
+  private[operators] def mergeRound[F <: Fragment, K](r: KeyRegime[F, K], frags: Dataset[F],
+                                                      k: Int, iter: Int): Dataset[F] =
     frags
-      .map { f =>
-        val h = coin(f, iter)
-        (if (h) f.tail else f.head, h, f)
-      }
-      .groupByKey(_._1)
+      .groupByKey(f => r.offer(f, r.coin(f, iter)))(r.keyEnc)
       .flatMapGroups { (_, it) =>
-        val (hs, ts) = it.toSeq.partition(_._2)
-        val heads = hs.map(_._3).sortBy(f => (f.head, f.tail))
-        val tails = ts.map(_._3).sortBy(f => (f.head, f.tail))
+        val (hs, ts) = it.toSeq.partition(r.coin(_, iter))
+        val heads = hs.sorted(r.pairOrder)
+        val tails = ts.sorted(r.pairOrder)
         val merged = heads.zip(tails).map { case (a, b) =>
           val lenB = KmerCodec.lengthOf(b.seq)
-          Frag(a.head, b.tail,
-            KmerCodec.concatBlocks(a.seq, KmerCodec.sliceBlocks(b.seq, k - 1, lenB)))
+          r.merged(a, b, KmerCodec.concatBlocks(a.seq, KmerCodec.sliceBlocks(b.seq, k - 1, lenB)))
         }
         val rest = heads.drop(tails.length) ++ tails.drop(heads.length)
         (merged ++ rest).iterator
-      }
+      }(r.fragEnc)
+
+  /** P6 + J2: RC-mirror the solid k-mers, then fork-filter so every
+    * (k-1)-mer node keeps at most one out- and one in-edge. In scramble
+    * mode the barrier junctions are left-joined onto both endpoints. */
+  private def seed[F <: Fragment](r: KeyRegime[F, _], solid: DataFrame, k: Int,
+                                  popBubbles: Boolean, minError: Int,
+                                  scramble: Boolean): Dataset[F] = {
+    val edges = r.mirroredEdges(solid, k)
+    r.seedFrags(
+      if (scramble) {
+        val (kept, barriers) = resolveForksUnitig(edges, minError)
+        kept
+          .join(barriers.select(col("gk").as("bp")), col("prefix") === col("bp"), "left")
+          .join(barriers.select(col("gk").as("bs")), col("suffix") === col("bs"), "left")
+          .select(col("kmer"), col("bp").isNotNull.as("sh"), col("bs").isNotNull.as("st"))
+      } else resolveForks(edges, popBubbles, minError)
+        .select(col("kmer"), lit(false).as("sh"), lit(false).as("st")),
+      k)
   }
 
-  /** Full single-k assembly from canonical k-mer counts `(kv: Long, count)`.
-    * Returns canonical contig strings (each unitig assembles on both
-    * strands; keep min(contig, rc) once).
+  /** Full single-k assembly from canonical k-mer counts: `(kv: Long, count)`
+    * for k <= 31, `(kb: Array[Long], count)` in 2-bit blocks above (see Key
+    * regimes). Returns canonical contig strings (each unitig assembles on
+    * both strands; keep min(contig, rc) once).
     *
     * `ckptDir`: when set, probe-point fragment snapshots are written to
     * reliable storage (round-tagged Parquet via [[graft.sources.StageRunner]])
@@ -520,78 +674,66 @@ object Assembler {
     * finished chains, which changes nothing. `None` keeps the cheap
     * memory-local truncation for short interactive runs.
     *
-    * `localThreshold`: the single-task gate on rows. It is checked first on
-    * the solid k-mer table — n solid k-mers can seed at most 2n fragments,
-    * so `2n <= localThreshold` sends the whole assembly (mirror, fork
-    * filter, chain walk) to one task ([[assembleLocal]]); the default 4M
-    * admits ~2M solid canonical k-mers. Otherwise the distributed seed and
-    * rounds run, and the same bound is re-checked on the fragment count:
-    * rounds shrink it geometrically, so at any input scale the endgame
-    * drops under it after O(log L) rounds and the remaining rounds (each a
-    * full cluster-wide shuffle barrier over a tiny dataset) are replaced by
-    * one chain walk ([[contractChainsLong]]). Set 0 to force the fully
-    * distributed path.
-    *
-    * `localMaxBases`: the BYTE side of the same gate — `2n·k` at the k-mer
-    * check, the fragments' total bases at the fragment check. Contraction
-    * shrinks the row count geometrically but total sequence only by k-1
-    * per merge, so a small fragment count can still carry the whole
-    * assembly's sequence — a count-only switch would funnel it all into one
-    * task and OOM an executor at the 100 TB design point. The local path
-    * fires only when rows AND bases both fit one task (500 Mbases ≈ 125 MB
-    * packed, well under one executor); otherwise the distributed rounds
-    * simply continue to convergence. */
+    * `localThreshold`: the single-task gate on rows (see the object doc),
+    * capped at the key regime's own bound (4M packed, 2M block: the
+    * default). Packed keys check it first on the solid k-mer table (`2n <=
+    * gate` for n solid k-mers sends the whole assembly to [[assembleLocal]]);
+    * every regime re-checks it on the fragment count, which the rounds
+    * shrink geometrically until one chain walk replaces the remaining
+    * shuffle barriers. [[MaxLocalBases]] bounds the bases at both checks.
+    * Set 0 to force the fully distributed path. */
   def assemble(counts: DataFrame, k: Int, minCov: Int = 1, maxIter: Int = 60,
                probeEvery: Int = 3, minContig: Int = 0,
                ckptDir: Option[String] = None,
                popBubbles: Boolean = true,
-               localThreshold: Long = 4000000L,
-               localMaxBases: Long = 500000000L,
+               localThreshold: Long = Long.MaxValue,
                minError: Int = 0,
-               scramble: Boolean = false): Dataset[String] = {
+               scramble: Boolean = false): Dataset[String] =
+    drive(if (k <= 31) LongKeys else BlockKeys, counts, k, minCov, maxIter, probeEvery,
+      minContig, ckptDir, popBubbles, localThreshold, minError, scramble)
+
+  /** [[assemble]] in an explicit key regime. */
+  private[operators] def drive[F <: Fragment, K](
+      r: KeyRegime[F, K], counts: DataFrame, k: Int, minCov: Int, maxIter: Int,
+      probeEvery: Int, minContig: Int, ckptDir: Option[String], popBubbles: Boolean,
+      localThreshold: Long, minError: Int, scramble: Boolean): Dataset[String] = {
     val s = counts.sparkSession
     import s.implicits._
-    val mask = (1L << (2 * (k - 1))) - 1
+    implicit val fragEnc: Encoder[F] = r.fragEnc
+    val rows = math.min(localThreshold, r.rowCap)
     val runner = ckptDir.map(new StageRunner(s, _))
     val resumeIter = runner.toSeq.flatMap(_.completed("frags_i"))
       .map(_.stripPrefix("frags_i").toInt).maxOption
-    // P6 + J2: RC-mirror the solid k-mers, then fork-filter so every
-    // (k-1)-mer node keeps at most one out- and one in-edge
-    def seed(solid: DataFrame): Dataset[Frag] =
-      if (scramble) scrambleSeed(solid, k, minError)
-      else resolveForks(mirroredEdges(solid, k), popBubbles, minError)
-        .select("kmer").as[Long]
-        .map(kv => Frag(kv >>> 2, kv & mask, KmerCodec.longToBlocks(kv, k)))
-    def durable(name: String, ds: => Dataset[Frag]): Dataset[Frag] =
-      runner.get.stage(name)(ds.toDF()).as[Frag]
+    def durable(name: String, ds: => Dataset[F]): Dataset[F] =
+      runner.get.stage(name)(ds.toDF()).as[F]
     /** Distributed contraction from materialized fragments at round `from`. */
-    def contract(start: Dataset[Frag], from: Int): Dataset[Frag] = {
+    def contract(start: Dataset[F], from: Int): Dataset[F] = {
       var frags = start
-      var lastCkpt: Dataset[Frag] = frags
+      var lastCkpt: Dataset[F] = frags
       var lastCount = -1L
       var iter = from
       var done = false
       // the start state is already materialized, so this stats pass is one
       // cheap cached-scan job — it decides distributed-vs-local entry
       var (n, bases) = fragStats(frags)
-      graft.core.Counters.add("assembler.seed_rows", n)
+      Counters.add("assembler.seed_rows", n)
       while (iter < maxIter && !done) {
-        if (n <= localThreshold && bases <= localMaxBases) {
+        if (n <= rows && bases <= MaxLocalBases) {
           // last-mile: the fragments fit one task — finish the contraction
           // in a single chain-following pass instead of more rounds.
-          graft.core.Counters.add("assembler.endgame_rows", n)
-          graft.core.Counters.add("assembler.endgame_bases", bases)
-          frags = frags.coalesce(1).mapPartitions(it => contractChainsLong(it.toArray, k))
+          Counters.add("assembler.endgame_rows", n)
+          Counters.add("assembler.endgame_bases", bases)
+          frags = frags.coalesce(1).mapPartitions(it => r.walk(it, k))
           done = true
         } else {
-          frags = mergeRound(frags, k, iter)
+          frags = mergeRound(r, frags, k, iter)
           iter += 1
           if (iter % probeEvery == 0) {
             val ckpt = runner match {
-              case Some(r) =>
+              case Some(rn) =>
                 val name = s"frags_i$iter"
                 val df = durable(name, frags)
-                r.completed("frags_i").filterNot(_ == name).foreach(r.clean)
+                rn.completed("frags_i").filterNot(_ == name).foreach(rn.clean)
                 df
               case None =>
                 val c = frags.localCheckpoint()
@@ -608,7 +750,7 @@ object Assembler {
             // stop, and the intersect runs O(1) times in the common case.
             locally { val st = fragStats(ckpt); n = st._1; bases = st._2 }
             if (n == lastCount) {
-              val open = ckpt.filter(f => f.head != f.tail).toDF()
+              val open = ckpt.filter(f => !f.closed).toDF()
               done = open.select(col("tail")).intersect(open.select(col("head")))
                 .isEmpty
             }
@@ -616,7 +758,7 @@ object Assembler {
           }
         }
       }
-      graft.core.Counters.add("assembler.rounds", (iter - from).toLong)
+      Counters.add("assembler.rounds", (iter - from).toLong)
       frags
     }
 
@@ -624,29 +766,25 @@ object Assembler {
       // on resume the seed lineage is never built, let alone executed
       case Some(i) => contract(durable(s"frags_i$i", sys.error("resume never recomputes")), i)
       case None =>
-        // one count of the solid k-mers decides the path; the same job
-        // materializes their checkpoint, which the seed or the single task
-        // then reads instead of re-running the k-mer count
-        val solid = counts.filter(col("count") >= minCov).localCheckpoint(eager = false)
-        val n = solid.count()
-        if (maxIter > 0 && 2 * n <= localThreshold && 2 * n * k <= localMaxBases) {
-          graft.core.Counters.add("assembler.local_kmers", n)
-          // coalesce, not repartition: narrow read of the cached partitions
-          val walked = solid.as[(Long, Long)].coalesce(1)
-            .mapPartitions(it => assembleLocal(it, k, popBubbles, minError, scramble))
-          if (runner.isEmpty) walked else durable("frags_i0", walked)
-        } else contract(
-          // checkpoint the seed fragments: without this, every round before
-          // the first probe re-executes the fork-filter lineage
-          if (runner.isEmpty) seed(solid).localCheckpoint() else durable("frags_i0", seed(solid)),
-          0)
+        val solid = counts.filter(col("count") >= minCov)
+        val gated =
+          if (maxIter > 0) r.kmerGate(solid, k, rows, popBubbles, minError, scramble)
+          else Left(solid)
+        gated match {
+          case Right(walked) => if (runner.isEmpty) walked else durable("frags_i0", walked)
+          case Left(table) =>
+            def seeded = seed(r, table, k, popBubbles, minError, scramble)
+            // checkpoint the seed fragments: without this, every round
+            // before the first probe re-executes the fork-filter lineage
+            contract(
+              if (runner.isEmpty) seeded.localCheckpoint() else durable("frags_i0", seeded), 0)
+        }
     }
 
     frags
       .map { f =>
         normalizeContig(KmerCodec.decodeBlocks(f.seq),
-          KmerCodec.decodeBlocks(KmerCodec.rcBlocks(f.seq)),
-          closed = f.head == f.tail, k)
+          KmerCodec.decodeBlocks(KmerCodec.rcBlocks(f.seq)), closed = f.closed, k)
       }
       .distinct()
       .filter(c => c.length >= minContig)
@@ -711,6 +849,19 @@ object Assembler {
       assemble(counts, 21, minCov = 1, maxIter = 120).toDF("contig")
     }),
 
+    // a2: the a1 pipeline in the block key regime (k=40 over 64-base docs,
+    // reads = sliding windows len 48 step 8). Same closed-form oracle.
+    "a2_assembly_wide" -> ((s, d) => {
+      import s.implicits._
+      val reads = documents(s, d)
+        .select(Genomics.dna64(col("doc_id")).as("g"))
+        .select(explode(expr("transform(sequence(1, 17, 8), i -> substring(g, i, 48))")).as("read"))
+        .as[String]
+      val counts = reads.flatMap(r => KmerIter.canonicalBlocks(r, 40))
+        .toDF("kb").groupBy("kb").count()
+      assemble(counts, 40, minCov = 1, maxIter = 120).toDF("contig")
+    }),
+
     // -- assembly report: contig count, total/max bp, N50 ------------------
     // the number every assembler prints; all-integer arithmetic (N50 via
     // 2*cumulative >= total avoids any fraction). The ranking window runs
@@ -761,12 +912,16 @@ object Assembler {
           length(col("contig")).cast("long").as("len"))
     }))
 
+  /** a1/a2: each document's 64-base sequence, canonicalized. */
+  private val docContigsSql =
+    """WITH g AS (SELECT translate(md5(CAST(doc_id AS VARCHAR)), '0123456789abcdef', 'ACGTACGTACGTACGT')
+      |  || translate(md5(CAST(doc_id AS VARCHAR) || 'x'), '0123456789abcdef', 'ACGTACGTACGTACGT') AS s
+      |  FROM documents)
+      |SELECT DISTINCT least(s, reverse(translate(s, 'ACGT', 'TGCA'))) AS contig FROM g""".stripMargin
+
   def oracles: Map[String, String] = Map(
-    "a1_assembly" ->
-      """WITH g AS (SELECT translate(md5(CAST(doc_id AS VARCHAR)), '0123456789abcdef', 'ACGTACGTACGTACGT')
-        |  || translate(md5(CAST(doc_id AS VARCHAR) || 'x'), '0123456789abcdef', 'ACGTACGTACGTACGT') AS s
-        |  FROM documents)
-        |SELECT DISTINCT least(s, reverse(translate(s, 'ACGT', 'TGCA'))) AS contig FROM g""".stripMargin,
+    "a1_assembly" -> docContigsSql,
+    "a2_assembly_wide" -> docContigsSql,
     "a4_assembly_stats" ->
       """WITH g AS (SELECT translate(md5(CAST(doc_id AS VARCHAR)), '0123456789abcdef', 'ACGTACGTACGTACGT')
         |  || translate(md5(CAST(doc_id AS VARCHAR) || 'x'), '0123456789abcdef', 'ACGTACGTACGTACGT') AS s

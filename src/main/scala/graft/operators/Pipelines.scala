@@ -28,9 +28,9 @@ import graft.sources.StageRunner
   *    (an anti-join — J4 semantics). Contigs are tiny next to the reads,
   *    so the per-round work after the first scan is proportional to the
   *    assembly, not the corpus.
-  *  - Each k dispatches to the packed-Long assembler (k <= 31) or the
-  *    wide block assembler (k > 31); the interchange is block-form so the
-  *    ladder can cross 31 (the reference's k=95 regime).
+  *  - The interchange is block-form so the ladder can cross 31 (the
+  *    reference's k=95 regime); each k assembles in its own key regime
+  *    (packed Long for k <= 31, 2-bit blocks above).
   */
 object Pipelines {
 
@@ -80,21 +80,19 @@ object Pipelines {
     contigs.filter((c: String) => c.length >= minContig)
   }
 
-  /** Dispatch block-form canonical counts `(kb: Array[Long], count)` to the
-    * packed-Long assembler (k <= 31) or the wide-block assembler. */
+  /** Assemble block-form canonical counts `(kb: Array[Long], count)`,
+    * packed to `(kv, count)` first when k <= 31 (the packed key regime). */
   private def assembleBlocks(counts: DataFrame, k: Int,
                              ckptDir: Option[String],
                              minError: Int = 0): Dataset[String] = {
     val s = counts.sparkSession
     import s.implicits._
-    if (k <= 31) {
-      val longCounts = counts.as[(Array[Long], Long)]
+    val keyed =
+      if (k > 31) counts
+      else counts.as[(Array[Long], Long)]
         .map { case (kb, c) => (KmerCodec.blocksPrefixLong(kb, k), c) }
         .toDF("kv", "count")
-      Assembler.assemble(longCounts, k, minCov = 1, ckptDir = ckptDir,
-        minError = minError)
-    } else AssemblerWide.assemble(counts, k, minCov = 1, ckptDir = ckptDir,
-      minError = minError)
+    Assembler.assemble(keyed, k, minCov = 1, ckptDir = ckptDir, minError = minError)
   }
 
   /** Reassembler (the reference's `ReflexivDSReAssembler.java:112,350`

@@ -56,35 +56,22 @@ object Rescue {
     * k-mers — non-solid but bridging two solid anchors within a read —
     * get their count lifted to `minCov`, so the downstream coverage gate
     * keeps them and low-coverage gaps assemble through. One anti-join-free
-    * left join against the (small) rescued set. Counts are packed-Long
-    * keyed (k <= 31). */
+    * left join against the (small) rescued set, keyed like the count
+    * table: packed `kv` for k <= 31, 2-bit block `kb` above. The rescue
+    * scan itself is string-domain (any k); string-canonical ==
+    * block-canonical, because 2-bit codes order A<C<G<T exactly as ASCII
+    * does, so `encodeBlocks(canonical str)` IS the block counter's key. */
   def applyMercy(counts: DataFrame, reads: Dataset[String], k: Int,
                  minCov: Int): DataFrame = {
     val s = counts.sparkSession
-    graft.functions.GraftFunctions.register(s)
-    val rescued = mercyKmers(reads, k, solidCov = minCov)
-      .selectExpr("kmer_pack(kmer) AS kv").withColumn("mercy", lit(1))
-    counts.join(rescued, Seq("kv"), "left")
-      .select(col("kv"),
-        when(col("mercy") === 1, greatest(col("count"), lit(minCov.toLong)))
-          .otherwise(col("count")).as("count"))
-  }
-
-  /** [[applyMercy]] for the wide-k regime: the rescue scan itself is
-    * string-domain (any k), only the count-table join key differs — block
-    * arrays instead of packed longs. String-canonical == block-canonical
-    * here: 2-bit codes order A<C<G<T exactly as ASCII does, so the
-    * lexicographic strand choice agrees and `encodeBlocks(canonical str)`
-    * IS the canonical block key the wide counter groups by. */
-  def applyMercyWide(counts: DataFrame, reads: Dataset[String], k: Int,
-                     minCov: Int): DataFrame = {
-    val s = counts.sparkSession
     import s.implicits._
-    val rescued = mercyKmers(reads, k, solidCov = minCov)
-      .as[String].map(graft.core.KmerCodec.encodeBlocks(_))
-      .toDF("kbm").withColumn("mercy", lit(1))
-    counts.join(rescued, col("kb") === col("kbm"), "left")
-      .select(col("kb"),
+    graft.functions.GraftFunctions.register(s)
+    val found = mercyKmers(reads, k, solidCov = minCov)
+    val (key, rescued) =
+      if (k <= 31) ("kv", found.selectExpr("kmer_pack(kmer) AS kv"))
+      else ("kb", found.as[String].map(graft.core.KmerCodec.encodeBlocks(_)).toDF("kb"))
+    counts.join(rescued.withColumn("mercy", lit(1)), Seq(key), "left")
+      .select(col(key),
         when(col("mercy") === 1, greatest(col("count"), lit(minCov.toLong)))
           .otherwise(col("count")).as("count"))
   }

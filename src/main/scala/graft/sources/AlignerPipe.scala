@@ -26,7 +26,7 @@ object AlignerPipe {
     * aligner command (whitespace-split; `{ref}` -> shipped contig FASTA).
     * Returns parsed mapped SAM rows `(contig, pos, cigar, seq)`. */
   /** Driver-side guard on the collected reference size (same pattern as
-    * Assembler's `localMaxBases` byte gate): the contig set is output-sized
+    * Assembler's `MaxLocalBases` byte gate): the contig set is output-sized
     * and ≪ reads, but it is the one unbounded collect in the engine — fail
     * fast with a clear message instead of OOMing the driver on a 100× run.
     * Tunable via env `GRAFT_ALIGNER_MAX_REF_BASES`. */

@@ -159,7 +159,7 @@ class AssemblerSpec extends AnyFunSuite {
     val rds = Seq("ACGT" * 16) // period 4, read len 64, k = 40
     val counts = rds.toDS().flatMap(r => graft.core.KmerIter.canonicalBlocks(r, 40))
       .toDF("kb").groupBy("kb").count()
-    val contigs = AssemblerWide.assemble(counts, 40, minCov = 1, maxIter = 60)
+    val contigs = Assembler.assemble(counts, 40, minCov = 1, maxIter = 60)
       .collect().toSeq
     assert(contigs == Seq(expectedCycle("ACGT", 40)))
   }
@@ -170,7 +170,7 @@ class AssemblerSpec extends AnyFunSuite {
     val rds = reads(genome, 100, 9)
     val counts = rds.toDS().flatMap(r => graft.core.KmerIter.canonicalBlocks(r, 45))
       .toDF("kb").groupBy("kb").count()
-    val contigs = AssemblerWide.assemble(counts, 45, minCov = 1, maxIter = 60)
+    val contigs = Assembler.assemble(counts, 45, minCov = 1, maxIter = 60)
       .collect().toSeq
     assert(contigs == Seq(canonStr(genome)))
   }
@@ -205,7 +205,7 @@ class AssemblerSpec extends AnyFunSuite {
       }
       val kmers = (Seq.fill(40 * k)(rnd.nextLong() & ((1L << (2 * k)) - 1)) ++ pal).distinct
       val counts = kmers.map(kv => (kv, ladder(rnd.nextInt(ladder.length))))
-      val edges = Assembler.mirroredEdges(counts.toDF("kv", "count"), k).cache()
+      val edges = Assembler.LongKeys.mirroredEdges(counts.toDF("kv", "count"), k).cache()
       val (km, cn) = Assembler.mirrorLocal(counts.iterator, k)
       val mask = (1L << (2 * (k - 1))) - 1
       def local(es: Array[Int]) =

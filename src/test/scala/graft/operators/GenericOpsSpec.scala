@@ -56,7 +56,7 @@ class GenericOpsSpec extends AnyFunSuite {
     assert(withM == Seq(canonStr(g)))
   }
 
-  test("applyMercyWide lifts gap-bridging kmers over the gate (k=40 block regime)") {
+  test("applyMercy lifts gap-bridging kmers over the gate in the block regime (k=40)") {
     import spark.implicits._
     val k = 40
     val g = randGenome(160, seed = 149)
@@ -65,11 +65,11 @@ class GenericOpsSpec extends AnyFunSuite {
       g.substring(35, 125)).toDS()
     val counts = rds.flatMap(r => graft.core.KmerIter.canonicalBlocks(r, k))
       .toDF("kb").groupBy("kb").count()
-    val without = AssemblerWide.assemble(counts.filter(col("count") >= 2), k,
+    val without = Assembler.assemble(counts.filter(col("count") >= 2), k,
       minCov = 2, maxIter = 60).collect().toSeq
     assert(!without.contains(canonStr(g)))
-    val mercied = Rescue.applyMercyWide(counts, rds, k, minCov = 2)
-    val withM = AssemblerWide.assemble(mercied, k, minCov = 2, maxIter = 60)
+    val mercied = Rescue.applyMercy(counts, rds, k, minCov = 2)
+    val withM = Assembler.assemble(mercied, k, minCov = 2, maxIter = 60)
       .collect().toSeq
     assert(withM == Seq(canonStr(g)))
   }
@@ -189,9 +189,9 @@ class GenericOpsSpec extends AnyFunSuite {
       .map(i => g.substring(i, i + 80))
     val counts = rds.toDS().flatMap(r => KmerIter.canonicalBlocks(r, k))
       .toDF("kb").groupBy("kb").count().localCheckpoint()
-    val local = AssemblerWide.assemble(counts, k, minCov = 1, maxIter = 80)
+    val local = Assembler.assemble(counts, k, minCov = 1, maxIter = 80)
       .collect().toSet
-    val dist = AssemblerWide.assemble(counts, k, minCov = 1, maxIter = 80,
+    val dist = Assembler.assemble(counts, k, minCov = 1, maxIter = 80,
       localThreshold = 0).collect().toSet
     assert(local == Set(canonStr(g)))
     assert(local == dist)
@@ -267,20 +267,14 @@ class GenericOpsSpec extends AnyFunSuite {
           val w = g.substring(i, i + 70); if (rnd.nextBoolean()) w else rcStr(w)
         }
       }
-      if (k <= 31) {
-        val counts = Genomics.countCanonical(rds.toDS(), k).localCheckpoint()
-        val local = Assembler.assemble(counts, k, minCov = 1, maxIter = 80).collect().toSet
-        val dist = Assembler.assemble(counts, k, minCov = 1, maxIter = 80,
-          localThreshold = 0).collect().toSet
-        assert(local == dist, s"seed=$seed k=$k")
-      } else {
-        val counts = rds.toDS().flatMap(r => KmerIter.canonicalBlocks(r, k))
-          .toDF("kb").groupBy("kb").count().localCheckpoint()
-        val local = AssemblerWide.assemble(counts, k, minCov = 1, maxIter = 80).collect().toSet
-        val dist = AssemblerWide.assemble(counts, k, minCov = 1, maxIter = 80,
-          localThreshold = 0).collect().toSet
-        assert(local == dist, s"seed=$seed k=$k")
-      }
+      val counts = (
+        if (k <= 31) Genomics.countCanonical(rds.toDS(), k)
+        else rds.toDS().flatMap(r => KmerIter.canonicalBlocks(r, k))
+          .toDF("kb").groupBy("kb").count()).localCheckpoint()
+      val local = Assembler.assemble(counts, k, minCov = 1, maxIter = 80).collect().toSet
+      val dist = Assembler.assemble(counts, k, minCov = 1, maxIter = 80,
+        localThreshold = 0).collect().toSet
+      assert(local == dist, s"seed=$seed k=$k")
     }
   }
 

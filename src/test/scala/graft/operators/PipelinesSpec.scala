@@ -2,6 +2,7 @@ package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
+import graft.core.KmerIter
 import graft.sources.StageRunner
 import java.nio.file.Files
 
@@ -100,25 +101,31 @@ class PipelinesSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.{col, udf}
     val genome = randGenome(600, seed = 7)
     val reads = ((0 to 540 by 6) :+ 540).distinct.map(i => genome.substring(i, i + 60))
-    val counts = Genomics.countCanonical(reads.toDS(), 21)
-    val full = Assembler.assemble(counts, 21, maxIter = 120).collect().toSet
-    assert(full.contains(canonStr(genome)))
+    // both key regimes: k=21 packed, k=41 2-bit blocks; the block run is
+    // kept off the endgame walk so that it crashes between rounds
+    for ((k, crashGate) <- Seq((21, Long.MaxValue), (41, 0L))) {
+      val counts =
+        if (k <= 31) Genomics.countCanonical(reads.toDS(), k)
+        else reads.toDS().flatMap(r => KmerIter.canonicalBlocks(r, k))
+          .toDF("kb").groupBy("kb").count()
+      val full = Assembler.assemble(counts, k, maxIter = 120).collect().toSet
+      assert(full.contains(canonStr(genome)), s"k=$k")
 
-    // "crash" after two contraction rounds: durable snapshots exist, the
-    // contraction is incomplete
-    val ckpt = Files.createTempDirectory("graft_ackpt").toString
-    Assembler.assemble(counts, 21, maxIter = 2, probeEvery = 1,
-      ckptDir = Some(ckpt)).collect()
-    assert(new StageRunner(spark, ckpt).completed("frags_i").nonEmpty)
+      // "crash" after two contraction rounds: durable snapshots exist, the
+      // contraction is incomplete
+      val ckpt = Files.createTempDirectory("graft_ackpt").toString
+      Assembler.assemble(counts, k, maxIter = 2, probeEvery = 1,
+        ckptDir = Some(ckpt), localThreshold = crashGate).collect()
+      assert(new StageRunner(spark, ckpt).completed("frags_i").nonEmpty, s"k=$k")
 
-    // resume with a POISONED counts table: if the restart ever re-derived
-    // the seed fragments (instead of reading the durable round), this blows
-    // up — proving the resume recomputes nothing upstream
-    val boom = udf((x: Long) => { sys.error("seed recomputed on resume"); x })
-    val poisoned = counts.select(boom(col(counts.columns.head)).as(counts.columns.head),
-      col(counts.columns.last))
-    val resumed = Assembler.assemble(poisoned, 21, maxIter = 120,
-      ckptDir = Some(ckpt)).collect().toSet
-    assert(resumed == full)
+      // resume with a POISONED counts table: if the restart ever re-derived
+      // the seed fragments (instead of reading the durable round), this
+      // blows up — proving the resume recomputes nothing upstream
+      val boom = udf((x: Long) => { sys.error("seed recomputed on resume"); x })
+      val poisoned = counts.withColumn("count", boom(col("count")))
+      val resumed = Assembler.assemble(poisoned, k, maxIter = 120,
+        ckptDir = Some(ckpt)).collect().toSet
+      assert(resumed == full, s"k=$k")
+    }
   }
 }

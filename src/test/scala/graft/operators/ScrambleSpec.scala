@@ -95,7 +95,7 @@ class ScrambleSpec extends AnyFunSuite {
     val counts = rds.toDS()
       .flatMap(r => graft.core.KmerIter.canonicalBlocks(r, k))
       .toDF("kb").groupBy("kb").count()
-    AssemblerWide.assemble(counts, k, minCov = 1, maxIter = 60,
+    Assembler.assemble(counts, k, minCov = 1, maxIter = 60,
       minError = minError, scramble = scramble).collect().toSeq
   }
 
