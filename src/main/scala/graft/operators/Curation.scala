@@ -36,6 +36,10 @@ import graft.Tables._
   *     qualifying word. Column-gated (absent when disabled) so the
   *     pre-round-12 c1–c6 outputs stay byte-stable.
   *  `keep` = all of the above.
+  *  9. `split`       — OPTIONAL leakage-free train/val/test assignment
+  *     (the d17 bucket rule) keyed by the near-dup cluster's canonical
+  *     id, computed from the component the nd votes carry into the one
+  *     vote aggregation. Constant 'train' when disabled.
   *
   * Exposed three ways: this function (library), the `c1_curate` oracle
   * query (correctness gate; semantic core oracle-proven separately by
@@ -46,6 +50,10 @@ object Curation {
   private val stopwords = Seq("the", "a", "of", "and", "in", "to")
 
   /** Flags per doc in `docs`; `test` is the held-out benchmark corpus.
+    * `doc_id` must be unique and non-null in `docs`: the verdicts are
+    * keyed by it, and near-dup banding ([[Dedup.nearDupPairs]]) bands
+    * each row on its own. A duplicated id fails the vote aggregation
+    * with an error naming the id; a null id fails the shingle kernels.
     * `semCentroidSet`: explicit `(cid, cv)` centroids for the semantic
     * stage (deterministic / oracle-checkable); default trains
     * [[KMeans.lloyd]] on the corpus vectors. */
@@ -111,11 +119,12 @@ object Curation {
       }
 
     // 2. near-dup clusters — sparse: only docs in some candidate pair
-    //    (the CC table) vote; everyone else defaults to keep (fi 1)
+    //    (the CC table) vote; everyone else defaults to keep (fi 1). The
+    //    votes carry the component, which the split (9) is keyed by.
     val comp = GraphOps.connectedComponents(
       Dedup.nearDupPairs(base).select(col("a").as("x"), col("b").as("y")))
     val ndV = comp.select(col("node").as("doc_id"),
-      (col("node") === col("component")).cast("int").as("v"))
+      (col("node") === col("component")).cast("int").as("v"), col("component").as("c"))
 
     // 3. quality gates — dense votes (fi 2)
     val nt = size(ws)
@@ -123,12 +132,12 @@ object Curation {
     val qualityV = base.select(col("doc_id"),
       when(nt.between(10, 2000) && sw >= 1, 1).otherwise(0).as("v"))
 
-    // 4. decontamination — sparse: only dirty docs vote 0 (fi 3)
+    // 4. decontamination — sparse: only dirty docs vote 0 (fi 3), one row
+    //    per shared 5-gram; the aggregation's max absorbs the repeats
     val testSh = Shingles.wordNGrams(test.select(col("doc_id"), col("text")), 5)
       .select("sh").distinct()
     val cleanV = Shingles.wordNGrams(base, 5)
       .join(broadcast(testSh), "sh")
-      .select("doc_id").distinct()
       .select(col("doc_id"), lit(0).as("v"))
 
     // 5. optional semantic dedup — sparse: only embedded docs vote; a doc
@@ -204,30 +213,6 @@ object Curation {
               .otherwise(0).as("v"))
     }
 
-    // 9. optional leakage-free split assignment (the d17 engine): the
-    //    md5 bucket is keyed by the near-dup CLUSTER's canonical id —
-    //    reusing the CC table the nd verdict already computed — so a
-    //    whole duplicate cluster lands in one split atomically.
-    //    Constant 'train' when disabled (schemas never fork).
-    val spl =
-      if (!clusterSplit) base.select(col("doc_id"), lit("train").as("split"))
-      else {
-        val cl = base.select(col("doc_id"))
-          .join(comp.select(col("node").as("doc_id"), col("component")),
-            Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            coalesce(col("component"), col("doc_id")).as("cluster"))
-        val h = md5(col("cluster").cast("string").cast("binary"))
-        def hv(i: Int): Column = {
-          val a = ascii(substring(h, i, 1))
-          a - when(a >= 97, 87).otherwise(48)
-        }
-        val bucket = hv(1) * 16 + hv(2)
-        cl.select(col("doc_id"),
-          when(bucket < 13, "test").when(bucket < 26, "val")
-            .otherwise("train").as("split"))
-      }
-
     // ---- one-shuffle verdict assembly -----------------------------------
     // (fi, votes, default, flag name) — disabled optional stages appear as
     // constant-1 columns after the aggregation (schemas never fork);
@@ -240,17 +225,27 @@ object Curation {
         (2, qualityV, 0, "quality_ok"), (3, cleanV, 1, "clean")) ++
         semV.map((4, _, 1, "sem_keep")) ++ clsV.map((5, _, 1, "cls_keep")) ++
         dsirV.map((6, _, 1, "dsir_keep")) ++ fert.map((7, _, 1, "fert_keep"))
+    // the nd votes carry their component as `c`; every other vote leaves
+    // it null
     val unioned = voteTables
       .map { case (i, df, _, _) =>
-        df.select(col("doc_id"), lit(i).as("fi"), col("v").cast("int").as("v")) }
+        df.select(col("doc_id"), lit(i).as("fi"), col("v").cast("int").as("v"),
+          (if (i == 1) col("c") else lit(null).cast("long")).as("c")) }
       .reduce(_.unionByName(_))
-    val aggd = unioned.groupBy("doc_id").agg(
-      voteTables.map { case (i, _, dflt, name) =>
-        coalesce(max(when(col("fi") === i, col("v"))), lit(dflt)).as(name)
-      }.head,
-      voteTables.map { case (i, _, dflt, name) =>
-        coalesce(max(when(col("fi") === i, col("v"))), lit(dflt)).as(name)
-      }.tail: _*)
+    // doc_id contract: quality votes are dense (one per input row), so a
+    // count above 1 is a duplicated id — fail the aggregation rather than
+    // merge the copies' verdicts (near-dup banding has already treated
+    // the copies as separate documents). exact_keep carries the check, so
+    // it costs no extra job.
+    val nRows = count(when(col("fi") === 2, 1))
+    val dupId = raise_error(concat(lit("Curation.curate: doc_id "),
+      coalesce(col("doc_id").cast("string"), lit("null")), lit(" appears "),
+      nRows.cast("string"), lit(" times; doc_id must be unique per document")))
+    val aggs = voteTables.map { case (i, _, dflt, name) =>
+      val v = max(when(col("fi") === i, col("v")))
+      coalesce(if (i == 0) when(nRows > 1, dupId).otherwise(v) else v, lit(dflt)).as(name)
+    } :+ min(col("c")).as("component")
+    val aggd = unioned.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
     val withConsts = Seq(("sem_keep", semV), ("cls_keep", clsV), ("dsir_keep", dsirV))
       .foldLeft(aggd) { case (df, (name, opt)) =>
         if (opt.isDefined) df else df.withColumn(name, lit(1))
@@ -258,12 +253,27 @@ object Curation {
     val flags = Seq(col("exact_keep"), col("nd_keep"), col("quality_ok"),
       col("clean"), col("sem_keep"), col("cls_keep"), col("dsir_keep")) ++
       (if (fert.isDefined) Seq(col("fert_keep")) else Nil)
-    // split: one extra join only when the cluster-keyed assignment is on
-    val out0 =
-      if (!clusterSplit) withConsts.withColumn("split", lit("train"))
-      else withConsts.join(spl, "doc_id")
-    out0.select(col("doc_id") +: flags :+
-      flags.reduce(_ * _).as("keep") :+ col("split"): _*)
+
+    // 9. optional leakage-free split assignment (the d17 engine): the md5
+    //    bucket is keyed by the near-dup CLUSTER's canonical id — the
+    //    component the nd votes brought into the aggregation, or the doc's
+    //    own id when it is in no candidate pair — so a whole duplicate
+    //    cluster lands in one split atomically. A projection: no join, no
+    //    second read of the CC table. Constant 'train' when disabled
+    //    (schemas never fork).
+    val splitCol =
+      if (!clusterSplit) lit("train")
+      else {
+        val h = md5(coalesce(col("component"), col("doc_id")).cast("string").cast("binary"))
+        def hv(i: Int): Column = {
+          val a = ascii(substring(h, i, 1))
+          a - when(a >= 97, 87).otherwise(48)
+        }
+        val bucket = hv(1) * 16 + hv(2)
+        when(bucket < 13, "test").when(bucket < 26, "val").otherwise("train")
+      }
+    withConsts.select(col("doc_id") +: flags :+
+      flags.reduce(_ * _).as("keep") :+ splitCol.as("split"): _*)
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

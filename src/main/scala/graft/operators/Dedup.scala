@@ -187,20 +187,27 @@ object Dedup {
       .select(col("a"), col("b")).distinct()
   }
 
+  /** d3/d7/d17's candidate pairs over [[corpus]], banded per row by
+    * [[bandRows]]: corpus ids are unique by construction (the truncated
+    * copies are offset past max(doc_id)). */
   private def candidatePairs(s: SparkSession, d: String): DataFrame =
-    candidatePairsFrom(bands(signatures(shingled(corpus(s, d)))))
+    candidatePairsFrom(bandRows(corpus(s, d)))
 
   /** Library surface: MinHash-LSH near-dup candidate pairs `(a, b)`,
     * a < b, over an arbitrary `(doc_id, text)` frame — the banded
     * plan the d2/d3 queries demonstrate, callable on real data
-    * (used by [[Curation.curate]] and the `curate` CLI).
+    * (used by [[Curation.curate]] and the `curate` CLI). The md5 family
+    * bands each row in one task with [[bandRows]] (no shingle rows, no
+    * signature shuffle; byte-identical to `bands(signatures(...))`), so
+    * `doc_id` MUST be unique in `docs`: rows sharing an id are banded
+    * separately instead of merged into one signature.
     * `fastHash = true` selects the at-scale xxhash64 family
     * ([[signaturesFast]]) — the default stays md5 so existing callers
     * remain byte-compatible with the oracle-gated queries. */
   def nearDupPairs(docs: DataFrame, fastHash: Boolean = false): DataFrame = {
-    val sh = shingled(docs.select(col("doc_id"), col("text")))
+    val dt = docs.select(col("doc_id"), col("text"))
     candidatePairsFrom(
-      if (fastHash) bandsFast(signaturesFast(sh)) else bands(signatures(sh)))
+      if (fastHash) bandsFast(signaturesFast(shingled(dt))) else bandRows(dt))
   }
 
   /** The LSH band table `(doc_id, bid, bh)` computed PER ROW in one typed
@@ -220,9 +227,11 @@ object Dedup {
     * signature, while this per-row kernel bands each input row
     * independently — duplicate ids would yield duplicate (or, for
     * differing texts, conflicting) band rows and silently diverge from
-    * the batch result. Current callers (es16's stream, whose replay ids
-    * are unique by construction; batch frames keyed by doc_id) satisfy
-    * this; a caller that might replay an id must dedupe by id first. */
+    * the batch result. Current callers satisfy this: es16's stream and
+    * d3/d7/d17's corpus (ids unique by construction), and
+    * [[nearDupPairs]], whose contract passes it on ([[Curation.curate]]
+    * fails loudly on a duplicated id). A caller that might replay an id
+    * must dedupe by id first. */
   def bandRows(docs: DataFrame): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._

@@ -14,6 +14,10 @@ import graft.Tables._
 object GraphOps {
   private val K = 7
 
+  /** The union-find task's only row when it overflows: component > node,
+    * which no real row has (a component is its members' minimum id). */
+  private val Overflow = (Long.MinValue, Long.MaxValue)
+
   /** Distributed connected components via hash-to-min (Rastogi et al.,
     * "Finding Connected Components in Map-Reduce in Logarithmic Rounds"):
     * each round every node rewires its whole neighborhood onto its
@@ -29,44 +33,69 @@ object GraphOps {
     * that are giant AND chain-shaped, the further refinement is
     * large-star/small-star (bounds intermediate edge growth); near-dup
     * graphs are tiny dense clusters, where hash-to-min's intermediate
-    * size is within a constant of the input. */
+    * size is within a constant of the input.
+    *
+    * Self-gated last mile (same pattern as Assembler's single-task gate):
+    * after LSH/candidate generation the edge set is orders of magnitude
+    * smaller than the corpus, so ONE `coalesce(1)` task first streams the
+    * raw edges into a union-find (min root wins, so each root is its
+    * component's minimum id). With n distinct nodes held and r rows
+    * unioned, r' of them not self-loops, the task gives up as soon as the
+    * next row would take `n + 2r'` or `r` past `localThreshold`, and then
+    * emits only the [[Overflow]] row. `n + 2r'` is never below the size
+    * of the symmetrized, self-looped, distinct edge set of those rows (the
+    * count the gate is defined on) and equals it on duplicate-free a < b
+    * input such as LSH pairs; so the task holds at most `localThreshold`
+    * nodes (about `localThreshold / 3` on tree-like clusters), unions at
+    * most `localThreshold` rows and reads at most one more. Its output is
+    * localCheckpointed once, so every consumer reads one union-find run,
+    * and `head(1)` of that checkpoint (the job that fills it) tells an
+    * overflow apart. On overflow the hash-to-min rounds run from the
+    * input edges; `localThreshold = 0` forces them. */
   def connectedComponents(edges0: DataFrame, maxRounds: Int = 50,
                           localThreshold: Long = 5000000L): DataFrame = {
     val s = edges0.sparkSession
     import s.implicits._
-    var e = edges0.select(col("x"), col("y"))
-      .union(edges0.select(col("y").as("x"), col("x").as("y")))
-      .union(edges0.select(col("x"), col("x").as("y"))) // self loop keeps isolated mins
-      .distinct().localCheckpoint()
-    def fingerprint(df: DataFrame) =
-      df.agg(count(lit(1)), bit_xor(xxhash64(col("x"), col("y")))).first()
-    // last-mile gate (same pattern as Assembler's single-task endgame):
-    // after LSH/candidate generation the edge set is orders of magnitude
-    // smaller than the corpus — when it fits one task, a single
-    // union-find pass replaces O(log n) full shuffle rounds, each of
-    // which costs a groupBy + join + distinct + checkpoint barrier.
-    // Output is identical: component = min node id.
-    if (fingerprint(e).getLong(0) <= localThreshold) {
-      return e.select(col("x").cast("long"), col("y").cast("long"))
-        .as[(Long, Long)].coalesce(1).mapPartitions { it =>
-          val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-          def find(a: Long): Long = {
-            var r = a
-            while (parent.getOrElse(r, r) != r) r = parent(r)
-            var c = a
-            while (parent.getOrElse(c, c) != c) { val nx = parent(c); parent(c) = r; c = nx }
-            r
-          }
-          it.foreach { case (x, y) =>
+    val local = edges0.select(col("x").cast("long"), col("y").cast("long"))
+      .as[(Long, Long)].coalesce(1).mapPartitions { it =>
+        val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+        def find(a: Long): Long = {
+          var r = a
+          while (parent(r) != r) r = parent(r)
+          var c = a
+          while (parent(c) != c) { val nx = parent(c); parent(c) = r; c = nx }
+          r
+        }
+        var load = 0L // n + 2r'
+        var rows = 0L
+        var over = false
+        while (!over && it.hasNext) {
+          val (x, y) = it.next()
+          val grown = load + (if (parent.contains(x)) 0 else 1) +
+            (if (x == y || parent.contains(y)) 0 else 1) + (if (x == y) 0 else 2)
+          if (grown > localThreshold || rows >= localThreshold) over = true
+          else {
+            load = grown
+            rows += 1
             parent.getOrElseUpdate(x, x)
             parent.getOrElseUpdate(y, y)
             val (rx, ry) = (find(x), find(y))
             // min root wins => each component's final root is its min id
             if (rx != ry) { if (rx < ry) parent(ry) = rx else parent(rx) = ry }
           }
-          parent.keysIterator.toArray.iterator.map(n => (n, find(n)))
-        }.toDF("node", "component")
-    }
+        }
+        if (over) Iterator(Overflow)
+        else parent.keysIterator.toArray.iterator.map(n => (n, find(n)))
+      }.toDF("node", "component").localCheckpoint(eager = false)
+    val first = local.head(1)
+    if (first.isEmpty || first(0).getLong(1) <= first(0).getLong(0)) return local
+
+    var e = edges0.select(col("x"), col("y"))
+      .union(edges0.select(col("y").as("x"), col("x").as("y")))
+      .union(edges0.select(col("x"), col("x").as("y"))) // self loop keeps isolated mins
+      .distinct().localCheckpoint()
+    def fingerprint(df: DataFrame) =
+      df.agg(count(lit(1)), bit_xor(xxhash64(col("x"), col("y")))).first()
     var fp = fingerprint(e)
     var round = 0
     var stable = false

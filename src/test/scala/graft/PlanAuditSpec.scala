@@ -247,6 +247,39 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(!p.contains("CartesianProduct"), "d17 has a cartesian")
   }
 
+  test("c6 verdict: one doc_id exchange, no shuffled join, no shingle aggregate") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    // every SQL execution c6 runs while it builds its flags (the band
+    // table, the union-find, its checkpoints) or collects them;
+    // stagesOf is only the listener-bus flush here
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => started.add(s.physicalPlanDescription); ()
+        case _ => ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val p = try TestSpark.stagesOf {
+      val flags = SparkEntry.queries("c6_curate_split")(spark, sf)
+      val static = flags.queryExecution.explainString(ExplainMode.fromString("formatted"))
+      flags.collect()
+      static
+    }._1 finally spark.sparkContext.removeSparkListener(listener)
+    // the split is a projection over the vote aggregation: no join back
+    // onto the docs, and the aggregation is the only doc_id shuffle
+    assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin"), p.take(4000))
+    val keyed = "hashpartitioning\\(doc_id".r.findAllIn(p).size
+    assert(keyed == 1, s"expected 1 doc_id exchange, got $keyed\n" + p.take(4000))
+    // MinHash bands come from the per-row kernel: no query aggregates
+    // per-shingle digest windows into signatures
+    val plans = started.asScala.toSeq :+ p
+    assert(plans.size > 2)
+    plans.foreach(q => assert(!q.contains("min(substring("), q.take(4000)))
+  }
+
   test("q31 exceptAll plans as hash joins, never sort or cartesian") {
     val p = plan("q31_setops_all")
     assert(!p.contains("CartesianProduct"), "q31 has a cartesian")

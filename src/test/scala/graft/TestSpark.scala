@@ -1,5 +1,8 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, StageInfo}
 import org.apache.spark.sql.SparkSession
 
 /** Shared local SparkSession for specs. */
@@ -14,5 +17,30 @@ object TestSpark {
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
+  }
+
+  /** Stages that complete while `body` runs. A marker job submitted after
+    * `body` flushes the asynchronous listener bus: its start event is
+    * delivered after every event `body` posted. */
+  def stagesOf[T](body: => T): (T, Seq[StageInfo]) = {
+    val sc = spark.sparkContext
+    val marker = "test-spark-flush"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[StageInfo]()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (flushed.getCount > 0) { seen.add(e.stageInfo); () }
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
+          flushed.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (r, seen.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
   }
 }

@@ -1,11 +1,10 @@
 package graft.operators
 
-import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerStageCompleted, StageInfo}
+import org.apache.spark.scheduler.StageInfo
 import org.apache.spark.sql.DataFrame
 import graft.TestSpark
+import graft.TestSpark.stagesOf
 import graft.core.{Counters, KmerCodec, KmerIter}
 
 class AssemblerSpec extends AnyFunSuite {
@@ -235,31 +234,6 @@ class AssemblerSpec extends AnyFunSuite {
         catalyst(Assembler.resolveForks(edges, popBubbles = false, 0)), s"$ctx -bubble")
       edges.unpersist()
     }
-  }
-
-  /** Stages that complete while `body` runs. A marker job submitted after
-    * `body` flushes the asynchronous listener bus: its start event is
-    * delivered after every event `body` posted. */
-  private def stagesOf[T](body: => T): (T, Seq[StageInfo]) = {
-    val sc = spark.sparkContext
-    val marker = "assembler-spec-flush"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[StageInfo]()
-    val flushed = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-        if (flushed.getCount > 0) { seen.add(e.stageInfo); () }
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
-          flushed.countDown()
-    }
-    sc.addSparkListener(listener)
-    try {
-      val r = body
-      sc.setJobDescription(marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      (r, seen.asScala.toSeq)
-    } finally sc.removeSparkListener(listener)
   }
 
   test("below the k-mer gate: one single-task stage after the count checkpoint, no fork-filter shuffle") {

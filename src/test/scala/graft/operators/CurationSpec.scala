@@ -16,10 +16,11 @@ class CurationSpec extends AnyFunSuite {
       .map(r => r._1 -> ((r._2, r._3, r._4, r._5, r._9))).toMap
   }
 
+  private val nearA = "alpha beta gamma delta epsilon zeta eta theta iota kappa " +
+    "lambda the mu nu xi omicron pi rho sigma tau"
+
   test("exact dup, near dup, low quality, and contaminated docs are each flagged") {
     val good = "the quick brown fox jumps over a lazy dog of the north in winter time"
-    val nearA = "alpha beta gamma delta epsilon zeta eta theta iota kappa " +
-      "lambda the mu nu xi omicron pi rho sigma tau"
     val nearB = nearA.split(" ").dropRight(1).mkString(" ") // near-dup of nearA
     val benchGram = "held out benchmark five gram"
     val docs = Seq(
@@ -37,6 +38,70 @@ class CurationSpec extends AnyFunSuite {
     assert(f(4L)._2 == 0 && f(4L)._5 == 0, f(4L))             // near-dup dropped
     assert(f(5L)._3 == 0 && f(5L)._5 == 0, f(5L))             // quality fail
     assert(f(6L)._4 == 0 && f(6L)._5 == 0, f(6L))             // contaminated
+  }
+
+  /** The d17 bucket rule over a cluster canon id: the first two hex
+    * digits of md5(id) are its first digest byte. */
+  private def d17Split(id: Long): String = {
+    val b = java.security.MessageDigest.getInstance("MD5")
+      .digest(id.toString.getBytes("UTF-8"))(0) & 0xff
+    if (b < 13) "test" else if (b < 26) "val" else "train"
+  }
+
+  test("cluster split: a near-dup cluster takes its minimum's bucket, a singleton its own") {
+    import spark.implicits._
+    // ids picked so a per-document bucket would split the cluster: the
+    // minimum lands in test/val on its own, the other members in train
+    val ids = 1L to 5000L
+    val canon = ids.find(d17Split(_) != "train").get
+    val members = ids.filter(i => i > canon && d17Split(i) == "train").take(2)
+    val single = ids.find(i => i > members.last && d17Split(i) != "train").get
+    val ws = nearA.split(" ")
+    val docs = Seq(canon -> nearA, members(0) -> ws.dropRight(1).mkString(" "),
+      members(1) -> ws.dropRight(2).mkString(" "),
+      single -> "the quick brown fox jumps over a lazy dog of the north in winter time")
+      .toDF("doc_id", "text")
+    val test = Seq(100000L -> "held out benchmark totally different words here")
+      .toDF("doc_id", "text")
+    val rows = Curation.curate(docs, test, clusterSplit = true)
+      .select("doc_id", "nd_keep", "split").as[(Long, Int, String)].collect()
+    val nd = rows.map(r => r._1 -> r._2).toMap
+    val split = rows.map(r => r._1 -> r._3).toMap
+    assert(nd(canon) == 1 && members.forall(nd(_) == 0), nd) // the cluster formed
+    (canon +: members).foreach(i => assert(split(i) == d17Split(canon), (i, split)))
+    assert(split(single) == d17Split(single), split)
+  }
+
+  test("clusterSplit changes the split column and nothing else") {
+    import spark.implicits._
+    val ws = nearA.split(" ")
+    val docs = ((1L to 30L).map(i => i -> s"the doc $i of a corpus with its own words w$i x$i y$i z$i") ++
+      Seq(40L -> nearA, 41L -> ws.dropRight(1).mkString(" "), 42L -> nearA, 43L -> "too short"))
+      .toDF("doc_id", "text")
+    val test = Seq(100L -> "some benchmark text with doc 7 of a corpus and more words")
+      .toDF("doc_id", "text")
+    val on = Curation.curate(docs, test, clusterSplit = true)
+    val off = Curation.curate(docs, test)
+    assert(on.schema == off.schema)
+    assert(off.select("split").distinct().as[String].collect().toSeq == Seq("train"))
+    assert(on.drop("split").collect().toSet == off.drop("split").collect().toSet)
+    val split = on.select("doc_id", "split").as[(Long, String)].collect().toMap
+    assert(split.size == 34 && split.values.toSet.size > 1, split)
+  }
+
+  test("a duplicated doc_id fails the vote aggregation, naming the id") {
+    import spark.implicits._
+    val docs = Seq(1L -> "the quick brown fox jumps over a lazy dog of the north in winter",
+      2L -> "a steel bridge spans the wide river carrying trains of coal at dawn",
+      2L -> "bright comets streak across a silent sky while the observatory dome turns")
+      .toDF("doc_id", "text")
+    val test = Seq(100L -> "held out benchmark totally different words here")
+      .toDF("doc_id", "text")
+    val e = intercept[Exception](Curation.curate(docs, test).collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(msgs.exists(m => m.contains("doc_id 2 appears 2 times") &&
+      m.contains("doc_id must be unique")), msgs.mkString("\n"))
   }
 
   test("semantic stage drops embedding-identical docs, spares unembedded ones") {

@@ -9,17 +9,25 @@ import graft.TestSpark
 class GraphOpsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  /** Runs BOTH execution paths (single-task union-find last mile and the
-    * distributed hash-to-min rounds) and asserts they agree before
-    * returning the labels. */
-  private def cc(edges: Seq[(Long, Long)], maxRounds: Int = 50): Map[Long, Long] = {
+  /** Runs BOTH execution paths (the self-gated single-task union-find
+    * and the distributed hash-to-min rounds, forced by a zero gate) plus,
+    * when `gate` is given, a union-find task that overflows at that
+    * threshold and falls back; asserts they all agree before returning
+    * the labels. */
+  private def cc(edges: Seq[(Long, Long)], maxRounds: Int = 50,
+                 gate: Option[Long] = None): Map[Long, Long] = {
     import spark.implicits._
-    val local = GraphOps.connectedComponents(edges.toDF("x", "y"), maxRounds)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val dist = GraphOps.connectedComponents(edges.toDF("x", "y"), maxRounds,
-        localThreshold = 0L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def run(t: Long) = {
+      val rows = GraphOps.connectedComponents(edges.toDF("x", "y"), maxRounds,
+          localThreshold = t)
+        .collect().map(r => r.getLong(0) -> r.getLong(1))
+      assert(rows.length == rows.toMap.size, s"duplicate node rows at gate $t")
+      rows.toMap
+    }
+    val local = run(5000000L)
+    val dist = run(0L)
     assert(local == dist, "local union-find and distributed hash-to-min disagree")
+    gate.foreach(t => assert(run(t) == local, s"overflow at gate $t disagrees"))
     local
   }
 
@@ -43,8 +51,62 @@ class GraphOpsSpec extends AnyFunSuite {
   }
 
   test("edge direction does not matter and duplicate edges are harmless") {
-    val labels = cc(Seq((5L, 3L), (3L, 5L), (5L, 3L), (7L, 5L)))
-    assert(labels == Map(3L -> 3L, 5L -> 3L, 7L -> 3L))
+    // gate 5 overflows on the reversed second row
+    val labels = cc(Seq((5L, 3L), (3L, 5L), (5L, 3L), (3L, 3L), (7L, 5L), (30L, 31L),
+      (31L, 30L)), gate = Some(5L))
+    assert(labels == Map(3L -> 3L, 5L -> 3L, 7L -> 3L, 30L -> 30L, 31L -> 30L))
+  }
+
+  test("union-find overflowing mid-stream falls back to the same labels") {
+    // 12-node chain: n + 2r' reaches 34 at its end, so a gate of 10 trips
+    // a few rows in, after the task has already merged some nodes
+    val chain = (0L until 11L).map(i => (i, i + 1))
+    val labels = cc(chain ++ Seq((50L, 51L), (52L, 51L)), gate = Some(10L))
+    (0L to 11L).foreach(i => assert(labels(i) == 0L))
+    assert(labels(51L) == 50L && labels(52L) == 50L)
+    // the gate is inclusive: a path of 3 nodes has n + 2r' = 3 + 2*2 = 7,
+    // so 7 runs the task alone and 6 falls back to the rounds
+    import spark.implicits._
+    val path = Seq((1L, 2L), (2L, 3L)).toDF("x", "y")
+    def stages(t: Long) = TestSpark.stagesOf(
+      GraphOps.connectedComponents(path, localThreshold = t))._2.size
+    assert(stages(7L) == 1)
+    assert(stages(6L) > 1)
+    assert(cc(Seq((1L, 2L), (2L, 3L)), gate = Some(6L)) ==
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
+  }
+
+  test("empty and self-loop-only edge sets") {
+    assert(cc(Nil, gate = Some(1L)).isEmpty)
+    // repeated self-loops: one node each, its own component
+    assert(cc(Seq((5L, 5L), (7L, 7L), (5L, 5L)), gate = Some(1L)) ==
+      Map(5L -> 5L, 7L -> 7L))
+  }
+
+  test("ids at the ends of the Long range, including an edge between them") {
+    // the overflow marker is (Long.MinValue, Long.MaxValue); a real row
+    // always has component <= node, so the extreme edge cannot mimic it
+    val lo = Long.MinValue; val hi = Long.MaxValue
+    val edges = Seq((lo + 1, lo), (hi, hi - 1), (hi - 2, hi - 1), (lo, hi), (0L, -1L))
+    assert(cc(edges, gate = Some(4L)) == Map(lo -> lo, lo + 1 -> lo, hi -> lo,
+      hi - 1 -> lo, hi - 2 -> lo, 0L -> -1L, -1L -> -1L))
+  }
+
+  test("default gate: one single-task stage runs the union-find, no fingerprint job") {
+    import spark.implicits._
+    val edges = ((0L until 40L).map(i => (i, i + 1)) :+ ((100L, 101L))).toDF("x", "y")
+    // the gate's head(1) is the only job: one stage, one task, so no
+    // symmetrize/distinct checkpoint and no fingerprint aggregate runs
+    val (comp, stages) = TestSpark.stagesOf(GraphOps.connectedComponents(edges))
+    assert(stages.map(_.numTasks) == Seq(1), stages.map(s => (s.name, s.numTasks)))
+    // every consumer reads the checkpoint: the union-find never re-runs
+    val plan = comp.queryExecution.executedPlan.toString
+    assert(!plan.contains("MapPartitions"), plan)
+    assert(comp.count() == 43L && comp.filter("component = 0").count() == 41L)
+    // the forced distributed path checkpoints and fingerprints first
+    val (_, dist) = TestSpark.stagesOf(GraphOps.connectedComponents(edges,
+      localThreshold = 0L))
+    assert(dist.size > 3, dist.map(_.name))
   }
 
   private def tri(edges: Seq[(Long, Long)]): Map[Long, Long] = {
