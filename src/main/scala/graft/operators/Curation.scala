@@ -9,7 +9,8 @@ import graft.Tables._
   *
   * Per input document, four independent keep/drop verdicts:
   *  1. `exact_keep`  — exact dedup: min doc_id per md5(text) survives
-  *     (one hash agg + one hash join; 16-byte keys at any scale).
+  *     (one partial hash agg on the 16-byte digest; the keepers vote 1,
+  *     everyone else defaults to 0; NULL texts are one group).
   *  2. `nd_keep`     — MinHash-LSH near-dup clustering
   *     ([[Dedup.nearDupPairs]] → [[GraphOps.connectedComponents]]): the
   *     cluster's min doc_id survives; docs in no candidate pair survive
@@ -78,12 +79,10 @@ object Curation {
       docs.select(col("doc_id"), col("text")), col("doc_id")).localCheckpoint()
     val ws = split(col("text"), " ")
 
-    // MEMBERSHIP NOTE (ADVICE r13): a doc with NULL text gets no exact
-    // vote (md5(null) joins nothing) but still gets a quality vote, so it
-    // appears in the output with exact_keep = 0; the pre-r13 join chain
-    // dropped such docs entirely. Current corpora have no null texts
-    // (oracle-pinned either way); a caller feeding dirtier input should
-    // filter nulls first if it wants the old membership.
+    // MEMBERSHIP NOTE: every input row gets a quality vote, so every doc
+    // appears in the output. A doc with NULL text is an exact-dedup
+    // candidate like any other: all NULL texts form one md5 group, whose
+    // minimum doc_id gets exact_keep = 1 and the others 0.
     // Verdict branches emit VOTES — (doc_id, fi, v) rows, sparse where a
     // branch only has evidence for some docs — and ONE hash aggregation
     // assembles every flag (r13, guide §2.4 "share one exchange"): the
@@ -92,31 +91,16 @@ object Curation {
     // sparse branches (nd/clean/sem/fert) each paid an extra base-sized
     // densify join first. Per-flag defaults are applied in the
     // aggregation's coalesce, so the sparse branches ship only their
-    // evidence rows. exact/quality vote for EVERY doc, so the groupBy
-    // covers the full corpus and row membership is unchanged.
+    // evidence rows. quality votes for EVERY doc, so the groupBy covers
+    // the full corpus and row membership is unchanged.
 
-    // 1. exact dedup — dense votes (fi 0). min-per-hash as a WINDOW over
-    //    md5(text): ONE shuffle of base + a sort, where the former
-    //    groupBy(h).agg(min) + join(base, h) shuffled base AND the keeper
-    //    table and paid a sort-merge join on top (r14, guide §2.4 "share
-    //    one exchange"). Same verdict: doc_id == min(doc_id) over equal
-    //    texts. spark.graft.exactWin is the in-JVM A/B lever.
-    val exactV =
-      if (docs.sparkSession.conf.get("spark.graft.exactWin", "true").toBoolean) {
-        val wh = org.apache.spark.sql.expressions.Window
-          .partitionBy(md5(col("text").cast("binary")))
-        base.select(col("doc_id"),
-          (col("doc_id") === min(col("doc_id")).over(wh)).cast("int").as("v"))
-      } else {
-        val keepers = base
-          .groupBy(md5(col("text").cast("binary")).as("h"))
-          .agg(min(col("doc_id")).as("keeper"))
-        base
-          .withColumn("h", md5(col("text").cast("binary")))
-          .join(keepers, "h")
-          .select(col("doc_id"),
-            (col("doc_id") === col("keeper")).cast("int").as("v"))
-      }
+    // 1. exact dedup — sparse keeper votes (fi 0): the min doc_id of each
+    //    md5(text) group votes 1 and every other doc defaults to 0. Partial
+    //    aggregation takes the min map-side, so a text copied a million
+    //    times ships one row per map task, not every copy to one task.
+    val exactV = base.groupBy(md5(col("text").cast("binary")))
+      .agg(min(col("doc_id")).as("doc_id"))
+      .select(col("doc_id"), lit(1).as("v"))
 
     // 2. near-dup clusters — sparse: only docs in some candidate pair
     //    (the CC table) vote; everyone else defaults to keep (fi 1). The

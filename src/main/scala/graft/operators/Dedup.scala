@@ -31,7 +31,7 @@ object Dedup {
   private def words: Column = split(col("text"), " ")
 
   /** documents + truncated near-dup copies, copies offset PAST the live
-    * doc_id range: max(doc_id)+1 computed in-plan (1-row broadcast),
+    * doc_id range: max(doc_id)+1 computed in-plan (a scalar subquery),
     * floored at the historical 100000 so current corpora keep their ids.
     * A fixed offset alone collides with real doc_ids once the corpus
     * outgrows it, silently binding two different texts to one id while
@@ -50,14 +50,13 @@ object Dedup {
     // moot: pre-split input passes through spread() untouched either way.
     val sel = documents(s, d).select(col("doc_id"), col("text"))
     val doc = if (spread) graft.Tables.spread(sel, col("doc_id")) else sel
-    val off = broadcast(doc.agg(
-      greatest(max(col("doc_id")) + 1, lit(100000L)).as("aug_off")))
+    // the offset is a scalar subquery, not a 1-row cross join: d3's plan
+    // holds this subtree and stays free of nested-loop joins
+    val off = doc.agg(greatest(max(col("doc_id")) + 1, lit(100000L))).scalar()
     val truncated =
       concat_ws(" ", slice(words, lit(1), greatest(size(words) - 3, lit(1))))
     doc.select(col("doc_id"), col("text"))
-      .union(doc.crossJoin(off)
-        .select((col("doc_id") + col("aug_off")).as("doc_id"),
-          truncated.as("text")))
+      .union(doc.select((col("doc_id") + off).as("doc_id"), truncated.as("text")))
   }
 
   /** Word 3-shingles, one row each: (doc_id, sh) — via the JIT-compiled
@@ -175,17 +174,12 @@ object Dedup {
       .select(col("doc_id"), col("band.bid").as("bid"), col("band.bh").as("bh"))
   }
 
-  /** LSH candidate pairs (a < b), distinct: bucket-equality self-join.
-    * The band table is materialized once (localCheckpoint) — it feeds both
-    * sides of the self-join, and without the checkpoint Spark recomputes
-    * the whole corpus->shingle->minhash chain per side. */
-  private def candidatePairsFrom(bd0: DataFrame): DataFrame = {
-    val bd = bd0.localCheckpoint()
-    val l = bd.select(col("bid"), col("bh"), col("doc_id").as("a"))
-    val r = bd.select(col("bid").as("bid2"), col("bh").as("bh2"), col("doc_id").as("b"))
-    l.join(r, col("bid") === col("bid2") && col("bh") === col("bh2") && col("a") < col("b"))
-      .select(col("a"), col("b")).distinct()
-  }
+  /** LSH candidate pairs (a < b), distinct: the doc pairs sharing a
+    * (bid, bh) bucket of the band table, through [[Skew.bucketPairs]]. */
+  private[operators] def candidatePairsFrom(bd: DataFrame,
+                                            cap: Int = Skew.BucketCap): DataFrame =
+    Skew.bucketPairs(bd, struct(col("bid"), col("bh")), col("doc_id"), lit(0L), cap)(
+      (_, _) => true).select(col("a"), col("b"))
 
   /** d3/d7/d17's candidate pairs over [[corpus]], banded per row by
     * [[bandRows]]: corpus ids are unique by construction (the truncated
@@ -194,13 +188,17 @@ object Dedup {
     candidatePairsFrom(bandRows(corpus(s, d)))
 
   /** Library surface: MinHash-LSH near-dup candidate pairs `(a, b)`,
-    * a < b, over an arbitrary `(doc_id, text)` frame — the banded
-    * plan the d2/d3 queries demonstrate, callable on real data
-    * (used by [[Curation.curate]] and the `curate` CLI). The md5 family
-    * bands each row in one task with [[bandRows]] (no shingle rows, no
-    * signature shuffle; byte-identical to `bands(signatures(...))`), so
-    * `doc_id` MUST be unique in `docs`: rows sharing an id are banded
-    * separately instead of merged into one signature.
+    * a < b, distinct, over an arbitrary `(doc_id, text)` frame — the
+    * banded plan the d2/d3 queries demonstrate, callable on real data
+    * (used by [[Curation.curate]] and the `curate` CLI). A pair is every
+    * two docs sharing one of the 4 (band, hash) buckets, enumerated by
+    * [[Skew.bucketPairs]], so a hot bucket (thousands of copies of one
+    * text) splits into block-pair groups instead of one quadratic task.
+    * The md5 family bands each row in one task with [[bandRows]] (no
+    * shingle rows, no signature shuffle; byte-identical to
+    * `bands(signatures(...))`), so `doc_id` MUST be unique in `docs`:
+    * rows sharing an id are banded separately instead of merged into one
+    * signature.
     * `fastHash = true` selects the at-scale xxhash64 family
     * ([[signaturesFast]]) — the default stays md5 so existing callers
     * remain byte-compatible with the oracle-gated queries. */
@@ -476,7 +474,7 @@ object Dedup {
     // signature (60 md5-parity bits — 60, not 64, so the sign bit never
     // enters shift/xor arithmetic in either engine), banded into 4x15-bit
     // keys. By pigeonhole, hamming <= 3 forces one identical band, so the
-    // candidate join is an EQUALITY join on (band, value) — never
+    // candidates are the pairs within a (band, value) bucket — never
     // all-pairs — and the exact popcount(xor) verify touches candidates
     // only. Like s2's sign-LSH, band width is the scale knob: 15 bits
     // suits ~10^5 docs; at 10^9 grow the signature and band to keep
@@ -791,13 +789,9 @@ object Dedup {
     // materialized once (the substringDedup idiom): the gram relation
     // feeds BOTH the duplicate-gram aggregate and the hit semi-join, and
     // without the checkpoint the generator pass runs end to end twice
-    // (spark.graft.gramCkpt is the in-JVM A/B lever)
-    val grams0 = Shingles.wordNGramsPos(docs, n)
+    val grams = Shingles.wordNGramsPos(docs, n)
       .select(col("doc_id"), col("pos"), xxhash64(col("sh")).as("h"))
-    val grams =
-      if (docs.sparkSession.conf.get("spark.graft.gramCkpt", "true").toBoolean)
-        grams0.localCheckpoint()
-      else grams0
+      .localCheckpoint()
     // "occurs in >= 2 distinct docs" as min(doc_id) != max(doc_id): the
     // d19 form — plain min/max partial-aggregates map-side (one pass, 16 B
     // of agg state per gram), where countDistinct planned an Expand +
@@ -862,11 +856,7 @@ object Dedup {
     * all-pairs and no window spans more than one document. */
   def stripBoilerplate(docs: DataFrame, n: Int, minDf: Int): DataFrame = {
     // materialized once: feeds the boilerplate aggregate AND the hit join
-    val grams0 = Shingles.wordNGramsPosKeyed(docs, n)
-    val grams =
-      if (docs.sparkSession.conf.get("spark.graft.gramCkpt", "true").toBoolean)
-        grams0.localCheckpoint()
-      else grams0
+    val grams = Shingles.wordNGramsPosKeyed(docs, n).localCheckpoint()
     val bp = grams.groupBy("source", "sh")
       .agg(countDistinct(col("doc_id")).as("df"))
       .filter(col("df") >= minDf)
@@ -886,139 +876,44 @@ object Dedup {
   }
 
   /** Banded hamming pairing over a `(doc_id, sig)` 60-bit signature
-    * table: pairs with popcount(xor) <= 3, found via 4x15-bit band
-    * equality (pigeonhole-COMPLETE for that radius — spec-proven equal to
-    * brute force on random signatures).
-    *
-    * Bucket-group form (r13, guide §2.4/§2.3): the earlier band
-    * SELF-JOIN planned the `sig` subtree TWICE — for m6/m10/m11 that
-    * subtree is the full media decode pipeline, so every image/audio
-    * payload was decoded twice per run — and cost three exchanges (one
-    * per join side + distinct). Grouping each (band, value) bucket and
-    * emitting intra-bucket pairs computes signatures ONCE and shuffles
-    * twice (bucket exchange + distinct), with the hamming filter applied
-    * BEFORE the distinct so only true near-pairs (not raw band
-    * candidates) hit the second shuffle. Same pair set: both forms
-    * enumerate exactly the doc pairs sharing >= 1 of 4 band values
-    * (DedupSpec pins brute-force equality; every caller feeds unique
-    * doc_ids so the (doc_a, doc_b, hamming) distinct is the same
-    * dedup-across-bands the old (doc_a, doc_b, sa, sb) distinct did). */
-  def simhashPairs(sig: DataFrame): DataFrame = {
-    val spark = sig.sparkSession
-    import spark.implicits._
-    // Skew guard (r14, ADVICE r13 / guide §2.5): the bucket-group form
-    // enumerates O(|bucket|²) pairs inside ONE task per (band, value)
-    // bucket — fine for hash-like signatures (16x audit: max bucket 76 of
-    // 80k docs) but a DEGENERATE corpus (many identical dHash/audio sigs)
-    // funnels a huge fraction of the corpus into one bucket and
-    // serializes quadratic work on one straggler. The guard is folded
-    // into the bucket pass itself ([[simhashStaged]]), and a second
-    // grouped pass enumerates cross/within-block pairs with <= (2·cap)²
-    // work and O(cap) memory per task. No size pre-pass, no persist, no
-    // driver round-trip: the signature subtree is evaluated exactly once
-    // either way (the r13 win holds), and the benign-case cost is one
-    // extra exchange of the (small) pair set.
-    // cap <= 0 disables the guard (the exact r13 two-exchange plan).
-    val cap = spark.conf.get("spark.graft.simhash.bucketCap", "4096").toInt
-    if (cap <= 0)
-      return simhashBuckets(sig)
-        .flatMapGroups { (_: (Int, Long), it: Iterator[(Int, Long, Long, Long)]) =>
-          nearPairs(it.map { case (_, _, id, s) => (id, s) }.toArray)
-        }
-        .toDF("doc_a", "doc_b", "hamming").distinct()
-    simhashStaged(sig, cap)
-      .groupByKey { case (t, x, y, _, _) => (t, x, y) }
-      .flatMapGroups { (key: (Int, Long, Long), it: Iterator[(Int, Long, Long, Long, Long)]) =>
-        key match {
-          case (0, a, b) =>
-            // pass-through pair rows; hamming rides in the 4th field (all
-            // duplicates of one (a, b) carry the identical hamming)
-            val h = it.next()._4
-            Iterator.single((a, b, h))
-          case (_, packed, m) =>
-            val i = ((packed >> 21) & ((1L << 21) - 1)).toInt
-            val j = (packed & ((1L << 21) - 1)).toInt
-            val members = it.map { case (_, _, _, id, sg) => (id, sg) }.toArray
-            if (i == j) nearPairs(members)
-            else {
-              val (li, lj) = members.partition { case (id, _) =>
-                simhashBlockOf(id, m.toInt) == i }
-              for {
-                (ia, sa) <- li.iterator
-                (ib, sb) <- lj.iterator
-                if ia != ib
-                h = java.lang.Long.bitCount(sa ^ sb).toLong
-                if h <= 3L
-              } yield if (ia < ib) (ia, ib, h) else (ib, ia, h)
-            }
-        }
-      }
+    * table: `(doc_a < doc_b, hamming)` for every pair with
+    * popcount(xor) <= 3, distinct, found via 4x15-bit band equality
+    * ([[hammingPairs]]; pigeonhole-COMPLETE for that radius —
+    * spec-proven equal to brute force on random signatures). The
+    * signature subtree is evaluated once (for m6/m10/m11 it is the full
+    * media decode pipeline), and only pairs within the radius reach the
+    * distinct. A degenerate corpus (many identical dHash/audio
+    * signatures) funnels most docs into one band bucket;
+    * [[Skew.bucketPairs]] splits such a bucket into block-pair groups of
+    * at most 2·4096 members. `doc_id` must be unique in `sig`. */
+  def simhashPairs(sig: DataFrame): DataFrame = simhashPairs(sig, Skew.BucketCap)
+
+  private[operators] def simhashPairs(sig: DataFrame, cap: Int): DataFrame =
+    hammingPairs(sig.select(col("doc_id").as("id"), col("sig").as("code")), 15, cap)
       .toDF("doc_a", "doc_b", "hamming")
-      .distinct()
-  }
 
-  /** The (band, value) buckets of a `(doc_id, sig)` table, as
-    * `(bnd, bv, doc_id, sig)` rows grouped by `(bnd, bv)`. */
-  private def simhashBuckets(sig: DataFrame) = {
-    import sig.sparkSession.implicits._
-    sig.select(col("doc_id"), col("sig"),
-        explode(array((0 until 4).map(b => struct(lit(b).as("bnd"),
-          shiftrightunsigned(col("sig"), 15 * b).bitwiseAND(lit(32767L))
-            .as("bv"))): _*)).as("e"))
-      .select(col("e.bnd").as("bnd"), col("e.bv").as("bv"),
-        col("doc_id"), col("sig"))
-      .as[(Int, Long, Long, Long)]
-      .groupByKey { case (bnd, bv, _, _) => (bnd, bv) }
-  }
+  /** Multi-index hamming pairing over packed `(id, code)` longs: the
+    * distinct `(a < b, hamming)` pairs with popcount(a xor b) <= 3. The
+    * low `4·width` bits of a code are cut into 4 bands of `width` bits;
+    * by pigeonhole, 3 differing bits leave at least one band identical
+    * when every differing bit lies in the banded bits (d11's 60-bit
+    * signatures at width 15, s15's 64-bit sign codes at width 16), so
+    * the (band, value) buckets of [[Skew.bucketPairs]] hold every pair
+    * within the radius, and its pair test keeps exactly those. */
+  private[operators] def hammingPairs(codes: DataFrame, width: Int,
+                                      cap: Int = Skew.BucketCap): DataFrame =
+    Skew.bucketPairs(hammingBands(codes, width), col("e"), col("id"), col("code"), cap)(
+        (x, y) => java.lang.Long.bitCount(x ^ y) <= 3)
+      .select(col("a"), col("b"),
+        bit_count(col("pa").bitwiseXOR(col("pb"))).cast("long").as("hamming"))
 
-  /** Every hamming <= 3 pair among `(doc_id, sig)` members, as
-    * `(doc_a < doc_b, hamming)`. */
-  private def nearPairs(docs: Array[(Long, Long)]): Iterator[(Long, Long, Long)] =
-    for {
-      i <- docs.indices.iterator
-      j <- (i + 1 until docs.length).iterator
-      (ia, sa) = docs(i)
-      (ib, sb) = docs(j)
-      if ia != ib
-      h = java.lang.Long.bitCount(sa ^ sb).toLong
-      if h <= 3L
-    } yield if (ia < ib) (ia, ib, h) else (ib, ia, h)
-
-  /** Block index of a doc within an oversized bucket: deterministic and
-    * uniform (byteswap64 is a bijective mixer). */
-  private def simhashBlockOf(id: Long, m: Int): Int =
-    (((scala.util.hashing.byteswap64(id) % m) + m) % m).toInt
-
-  /** Stage 1 of the guarded pairing, as `(t, x, y, id, sg)` rows. A bucket
-    * of size <= cap emits its pairs directly (t=0: x=doc_a, y=doc_b,
-    * id=hamming). An oversized bucket re-emits each member into its
-    * deterministic BLOCK-PAIR groups (t=1; m = ceil(size/cap) blocks, a
-    * member of block c goes to every (i,c)/(c,j) group; x = bnd·2^57 |
-    * bv·2^42 | i·2^21 | j, y = m, id/sg = the member). Grouping stage 2 by
-    * (t, x, y) passes t=0 rows through and lands each block-pair group in
-    * one task. The bucket value is part of the key, so two hot buckets of
-    * one band never share a group and each group holds <= 2·cap members. */
-  private[operators] def simhashStaged(sig: DataFrame, cap: Int) = {
-    import sig.sparkSession.implicits._
-    simhashBuckets(sig).flatMapGroups {
-      (key: (Int, Long), it: Iterator[(Int, Long, Long, Long)]) =>
-        val docs = it.map { case (_, _, id, s) => (id, s) }.toArray
-        if (docs.length <= cap)
-          nearPairs(docs).map { case (a, b, h) => (0, a, b, h, 0L) }
-        else {
-          val m = ((docs.length + cap - 1) / cap)
-          val bucket = (key._1.toLong << 57) | (key._2 << 42)
-          def pack(i: Int, j: Int): Long = bucket | (i.toLong << 21) | j.toLong
-          docs.iterator.flatMap { case (id, sg) =>
-            val c = simhashBlockOf(id, m)
-            (0 until m).iterator.map { o =>
-              val (i, j) = if (o < c) (o, c) else (c, o)
-              (1, pack(i, j), m.toLong, id, sg)
-            }
-          }
-        }
-    }
-  }
+  /** One `(id, code, e)` row per band of each code: `e = (band, v)`, v the
+    * band's `width` bits. */
+  private[operators] def hammingBands(codes: DataFrame, width: Int): DataFrame =
+    codes.select(col("id"), col("code"),
+      explode(array((0 until 4).map(b => struct(lit(b).as("band"),
+        shiftrightunsigned(col("code"), width * b).bitwiseAND(lit((1L << width) - 1))
+          .as("v"))): _*)).as("e"))
 
   // ----------------------------------------------------------- oracle SQL
 

@@ -551,11 +551,13 @@ object Similarity {
     // ([[graft.functions.SignPack]], codegen'd — 32x smaller than the
     // float array) split into 4 disjoint 16-bit banks; by pigeonhole, any
     // pair within Hamming radius 3 (= banks-1) agrees EXACTLY on at least
-    // one bank, so the bank equi-join is a COMPLETE candidate generator
-    // for r <= 3 — bucketed, never all-pairs (SimilaritySpec proves
-    // completeness against brute force). Distance is bit_count(XOR) on
-    // the packed words — one ALU op per 64 dims, the cheap first-pass
-    // filter a 100 TB ANN deployment runs before exact re-ranking.
+    // one bank, so the (bank, value) buckets are a COMPLETE candidate
+    // generator for r <= 3 — bucketed, never all-pairs, and the same
+    // pairing as d11 ([[Dedup.hammingPairs]] at 16-bit banks; SemanticSpec
+    // proves completeness against brute force). Distance is
+    // bit_count(XOR) on the packed words — one ALU op per 64 dims, the
+    // cheap first-pass filter a 100 TB ANN deployment runs before exact
+    // re-ranking.
     // Corpus augmented with planted radius-<=3 near-dups (first 3
     // components negated, past-end id offset) so the flagged class is
     // live at every SF.
@@ -569,22 +571,9 @@ object Similarity {
         concat(transform(slice(col("embedding"), 1, 3), x => -x),
           slice(col("embedding"), 4, 61)).as("embedding"))
       val coded = emb.unionByName(flipped)
-        .select(col("vec_id"),
+        .select(col("vec_id").as("id"),
           call_function("sign_pack", col("embedding")).as("code"))
-        .localCheckpoint()
-      val banks = coded.select(col("vec_id"), col("code"),
-        explode(array((0 until 4).map(b => struct(lit(b).as("bank"),
-          shiftright(col("code"), 16 * b).bitwiseAND(lit(0xFFFFL)).as("bh"))): _*)).as("bb"))
-        .select(col("vec_id"), col("code"),
-          col("bb.bank").as("bank"), col("bb.bh").as("bh"))
-      val r = banks.select(col("bank").as("bank2"), col("bh").as("bh2"),
-        col("vec_id").as("b"), col("code").as("code2"))
-      banks.join(r, col("bank") === col("bank2") && col("bh") === col("bh2") &&
-          col("vec_id") < col("b"))
-        .select(col("vec_id").as("a"), col("b"),
-          bit_count(col("code").bitwiseXOR(col("code2"))).cast("long").as("ham"))
-        .filter(col("ham") <= 3)
-        .distinct()
+      Dedup.hammingPairs(coded, 16).toDF("a", "b", "ham")
     }),
 
     // -- s16: IVF + PQ composed — the production ANN index shape -----------

@@ -43,8 +43,9 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(gs.isEmpty, s"t38 gained a global sort:\n${gs.mkString("\n")}")
     val m = SparkEntry.localQueries("m11_audio_neardup")(spark, sf)
       .queryExecution.explainString(ExplainMode.fromString("formatted"))
-    // candidate generation must stay the d11 banded EQUI-join (bucket
-    // equality), never all-pairs: only 8-byte signatures shuffle
+    // candidate generation must stay the d11 banded pairing (bucket
+    // equality, Skew.bucketPairs), never all-pairs: only 8-byte
+    // signatures shuffle
     assert(!m.contains("CartesianProduct"), "m11 has a cartesian")
     assert(!m.contains("BroadcastNestedLoopJoin"), "m11 has a nested loop")
   }
@@ -278,6 +279,18 @@ class PlanAuditSpec extends AnyFunSuite {
     val plans = started.asScala.toSeq :+ p
     assert(plans.size > 2)
     plans.foreach(q => assert(!q.contains("min(substring("), q.take(4000)))
+  }
+
+  test("c1 exact vote: a partial min aggregate on the md5 key, no Window") {
+    // the keeper votes take min(doc_id) map-side per md5(text), so a hot
+    // text never sends every copy to one task (a window would)
+    val p = plan("c1_curate")
+    assert(!p.contains("Window"), p.take(4000))
+    val key = "md5\\(cast\\(text#\\d+ as binary\\)\\) AS (_groupingexpression#\\d+)".r
+      .findFirstMatchIn(p).map(_.group(1))
+    assert(key.isDefined, s"no md5(text) grouping key\n${p.take(4000)}")
+    assert(s"Keys \\[1\\]: \\[${key.get}\\]\\s+Functions \\[1\\]: \\[partial_min\\(doc_id".r
+      .findFirstIn(p).isDefined, p.take(4000))
   }
 
   test("q31 exceptAll plans as hash joins, never sort or cartesian") {

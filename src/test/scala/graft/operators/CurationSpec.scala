@@ -89,6 +89,35 @@ class CurationSpec extends AnyFunSuite {
     assert(split.size == 34 && split.values.toSet.size > 1, split)
   }
 
+  test("NULL texts are one exact-dedup group: its minimum doc_id keeps, the rest drop") {
+    import spark.implicits._
+    val good = "the quick brown fox jumps over a lazy dog of the north in winter time"
+    val docs = Seq[(Long, String)](7L -> null, 3L -> null, 5L -> good).toDF("doc_id", "text")
+    val test = Seq(100L -> "held out benchmark totally different words here")
+      .toDF("doc_id", "text")
+    val exact = Curation.curate(docs, test).select("doc_id", "exact_keep")
+      .as[(Long, Int)].collect().toMap
+    assert(exact == Map(3L -> 1, 7L -> 0, 5L -> 1), exact)
+  }
+
+  test("a text copied 500 times: exact_keep == brute force (min doc_id per text keeps)") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(151L)
+    val hot = "the hot text of the corpus copied many times over by a scraper"
+    val warm = "a warm text of the corpus that a few mirrors also carry here"
+    val texts = Seq.fill(500)(hot) ++ Seq.fill(40)(warm) ++
+      (0 until 60).map(n => s"the doc $n of a corpus with its own words w$n x$n y$n z$n")
+    val ids = rnd.shuffle((1L to 5000L).toVector).take(texts.length)
+    val docs = ids.zip(texts)
+    val test = Seq(100000L -> "held out benchmark totally different words here")
+      .toDF("doc_id", "text")
+    val brute = docs.groupBy(_._2).values
+      .flatMap(g => g.map { case (id, _) => id -> (if (id == g.map(_._1).min) 1 else 0) }).toMap
+    val exact = Curation.curate(docs.toDF("doc_id", "text"), test)
+      .select("doc_id", "exact_keep").as[(Long, Int)].collect().toMap
+    assert(exact == brute)
+  }
+
   test("a duplicated doc_id fails the vote aggregation, naming the id") {
     import spark.implicits._
     val docs = Seq(1L -> "the quick brown fox jumps over a lazy dog of the north in winter",

@@ -1,9 +1,10 @@
 package graft.operators
 
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
-/** Banded SimHash pairing (d11's core): the 4x15-bit band join must find
+/** Banded SimHash pairing (d11's core): the 4x15-bit band buckets must find
   * EXACTLY the hamming<=3 pairs — complete by pigeonhole (4 bands can
   * absorb at most 3 differing bits without one band matching), and the
   * popcount verify makes it exact. Checked against brute force on random
@@ -52,8 +53,8 @@ class DedupSpec extends AnyFunSuite {
     }
     val bg = (0 until 60).map(i => (2000L + i, rnd.nextLong() & mask60))
     val sigs = (hot ++ bg).toSeq
-    def run(): Set[(Long, Long, Long)] =
-      Dedup.simhashPairs(sigs.toDF("doc_id", "sig"))
+    def run(cap: Int): Set[(Long, Long, Long)] =
+      Dedup.simhashPairs(sigs.toDF("doc_id", "sig"), cap)
         .as[(Long, Long, Long)].collect().toSet
     val brute = (for {
       (ia, sa) <- sigs
@@ -61,17 +62,9 @@ class DedupSpec extends AnyFunSuite {
       h = java.lang.Long.bitCount(sa ^ sb) if h <= 3
     } yield (ia, ib, h.toLong)).toSet
     assert(brute.nonEmpty)
-    val key = "spark.graft.simhash.bucketCap"
-    val prev = spark.conf.getOption(key)
-    try {
-      spark.conf.set(key, "8") // force the 40-doc bucket over the cap
-      assert(run() == brute, "capped (join-path) pair set != brute force")
-      spark.conf.set(key, "4096")
-      assert(run() == brute, "uncapped (group-path) pair set != brute force")
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+    // cap 8 forces the 40-doc bucket over the cap
+    assert(run(8) == brute, "capped (block-pair) pair set != brute force")
+    assert(run(4096) == brute, "uncapped (in-place) pair set != brute force")
   }
 
   test("simhashPairs skew guard: two hot buckets of one band never share a block-pair group") {
@@ -89,11 +82,13 @@ class DedupSpec extends AnyFunSuite {
     } yield (1000L + 100 * b + i, high(4 * b + i / 10) | ((i % 3).toLong << 15) | bv)
     val bg = (0 until 60).map(i => (3000L + i, rnd.nextLong() & mask60))
     val sigs = hot ++ bg
-    val groups = Dedup.simhashStaged(sigs.toDF("doc_id", "sig"), 8)
-      .filter(_._1 == 1).collect().groupBy(r => (r._2, r._3))
+    val groups = Skew.bucketGroups(Dedup.hammingBands(
+        sigs.toDF("id", "code"), 15), col("e"), col("id"), col("code"), 8)
+      .select(col("k"), col("i"), col("j"), col("p"))
+      .collect().groupBy(r => (r.get(0), r.getInt(1), r.getInt(2)))
     assert(groups.size >= 2 * 15) // m(m+1)/2 groups per band-0 bucket
     groups.foreach { case (g, rows) =>
-      val members = rows.map(_._5)
+      val members = rows.map(_.getLong(3))
       assert((0 until 4).exists(b => members.map(x => (x >>> (15 * b)) & 32767L).distinct.length == 1),
         s"block-pair group $g holds members of more than one bucket")
     }
@@ -103,16 +98,30 @@ class DedupSpec extends AnyFunSuite {
       h = java.lang.Long.bitCount(sa ^ sb) if h <= 3
     } yield (ia, ib, h.toLong)).toSet
     assert(brute.nonEmpty)
-    val key = "spark.graft.simhash.bucketCap"
-    val prev = spark.conf.getOption(key)
-    try {
-      spark.conf.set(key, "8")
-      assert(Dedup.simhashPairs(sigs.toDF("doc_id", "sig"))
-        .as[(Long, Long, Long)].collect().toSet == brute)
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+    assert(Dedup.simhashPairs(sigs.toDF("doc_id", "sig"), 8)
+      .as[(Long, Long, Long)].collect().toSet == brute)
+  }
+
+  test("candidatePairsFrom: hot band buckets split at cap 8, pair set == brute force") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(139L)
+    def words(n: Int) = Seq.fill(n)(s"w${rnd.nextInt(400)}").mkString(" ")
+    // 40 copies of one text fill the same 4 band buckets; 12 truncated
+    // copies share some of them; 60 background docs
+    val hotText = words(20)
+    val docs = (0 until 40).map(n => (500L + 3 * n, hotText)) ++
+      (0 until 12).map(n => (900L + n, hotText.split(" ").dropRight(1 + n % 3).mkString(" "))) ++
+      (0 until 60).map(n => (2000L + n, words(15)))
+    val bd = Dedup.bandRows(docs.toDF("doc_id", "text")).localCheckpoint()
+    val rows = bd.as[(Long, Int, String)].collect()
+    assert(rows.groupBy(r => (r._2, r._3)).values.exists(_.length > 8))
+    val brute = (for {
+      (a, ba, ha) <- rows
+      (b, bb, hb) <- rows if a < b && ba == bb && ha == hb
+    } yield (a, b)).toSet
+    val got = Dedup.candidatePairsFrom(bd, 8).as[(Long, Long)].collect()
+    assert(got.length == got.distinct.length)
+    assert(got.toSet == brute)
   }
 
   test("bandRows (per-row, shuffle-free) == bands(signatures(shingled)) exactly") {

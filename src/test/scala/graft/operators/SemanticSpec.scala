@@ -122,6 +122,28 @@ class SemanticSpec extends AnyFunSuite {
       "planted sign-flip near-dups did not survive to the flagged set")
   }
 
+  test("s15 pairing: a hot 16-bit bank split at cap 8 == brute force") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(149L)
+    // 40 codes share bank 0 (low 16 bits 0x8ABC, the bank's top bit set);
+    // their high 48 bits come in runs of 10 with 0..2 bits flipped, so
+    // the bucket holds near pairs and far ones; plus 60 random codes
+    val high = Array.fill(4)(rnd.nextLong() & ~0xFFFFL)
+    val hot = (0 until 40).map(n => (1000L + n, high(n / 10) ^ ((n % 3).toLong << 20) | 0x8ABCL))
+    val bg = (0 until 60).map(n => (2000L + n, rnd.nextLong()))
+    val codes = hot ++ bg
+    val brute = (for {
+      (a, x) <- codes
+      (b, y) <- codes if a < b
+      h = java.lang.Long.bitCount(x ^ y) if h <= 3
+    } yield (a, b, h.toLong)).toSet
+    assert(brute.size > 40)
+    val got = Dedup.hammingPairs(codes.toDF("id", "code"), 16, 8)
+      .as[(Long, Long, Long)].collect()
+    assert(got.length == got.distinct.length)
+    assert(got.toSet == brute)
+  }
+
   test("s17 MIPS reduction invariants: constant augmented norm, IP order kept") {
     // the Bachrach et al. transform's two load-bearing properties, on the
     // real corpus: (1) every augmented data vector has norm M (so any
