@@ -8,7 +8,7 @@ package graft.core
   * Scala-first, and shared by every operator — the reference re-inlines this
   * bit algebra across ~20 classes.
   *
-  * Two physical forms:
+  * Three physical forms:
   *  - `Long` packed k-mer for k <= 31: base 0 in the most-significant used
   *    2-bit slot, so numeric order == lexicographic order for equal k.
   *    No length marker (k is carried alongside).
@@ -18,6 +18,8 @@ package graft.core
   *    ("C marker"). Length is self-encoded and recovered from the trailing
   *    zero count of the final block; an exactly-full block pushes the
   *    sentinel into a fresh block (`1L << 62`).
+  *  - word keys: a fixed-k key of any k as a right-aligned integer in
+  *    `wordsFor(k)` longs of a flat store (the packed Long at k <= 31).
   */
 object KmerCodec {
 
@@ -130,11 +132,6 @@ object KmerCodec {
       while (i < len) { append(baseAt(b, i)); i += 1 }
       this
     }
-    def appendLong(v: Long, k: Int): this.type = {
-      var i = 0
-      while (i < k) { append(((v >>> (2 * (k - 1 - i))) & 3L).toInt); i += 1 }
-      this
-    }
     def result(): Array[Long] = {
       if (finished) throw new IllegalStateException("Builder already finished")
       finished = true
@@ -168,10 +165,6 @@ object KmerCodec {
     while (i < len) { out(i) = base(baseAt(b, i)); i += 1 }
     new String(out)
   }
-
-  /** Single-Long kmer -> block form. */
-  def longToBlocks(v: Long, k: Int): Array[Long] =
-    new Builder(k).appendLong(v, k).result()
 
   /** First k bases of a block array as a packed Long (k <= 31). */
   def blocksPrefixLong(b: Array[Long], k: Int): Long = {
@@ -230,6 +223,58 @@ object KmerCodec {
   def canonicalBlocks(b: Array[Long]): Array[Long] = {
     val rc = rcBlocks(b)
     if (compareBlocks(b, rc) <= 0) b else rc
+  }
+
+  // -------------------------------------------------------------- word keys
+  // A fixed-k key as a right-aligned 2k-bit integer in `wordsFor(k)` longs
+  // at an offset of a flat store, high word first: base i of a k-mer sits
+  // in bits [2(k-1-i), 2(k-1-i)+1]. The top two bits of the top word stay
+  // clear (w = ceil((2k+2)/64)), so at k <= 31 this is the packed Long, and
+  // unsigned order, top word first, is lexicographic order for equal k.
+
+  @inline def wordsFor(k: Int): Int = k / 32 + 1
+
+  /** Word index and bit shift of base i of the k-mer at `s[off, off + w)`. */
+  @inline private def wordOf(off: Int, k: Int, i: Int): Int = off + k / 32 - ((k - 1 - i) >>> 5)
+  @inline private def shiftOf(k: Int, i: Int): Int = 2 * ((k - 1 - i) & 31)
+
+  /** The first k bases of block array `b` into `dst[off, off + w)`. */
+  def blocksToWords(b: Array[Long], k: Int, dst: Array[Long], off: Int): Unit = {
+    java.util.Arrays.fill(dst, off, off + wordsFor(k), 0L)
+    var i = 0
+    while (i < k) { dst(wordOf(off, k, i)) |= baseAt(b, i).toLong << shiftOf(k, i); i += 1 }
+  }
+
+  /** The k-mer at `s[off, off + w)` in block form. */
+  def wordsToBlocks(s: Array[Long], off: Int, k: Int): Array[Long] = {
+    val bld = new Builder(k)
+    var i = 0
+    while (i < k) { bld.append(((s(wordOf(off, k, i)) >>> shiftOf(k, i)) & 3L).toInt); i += 1 }
+    bld.result()
+  }
+
+  /** Reverse complement of the k-mer at `s[off, off + w)` into
+    * `dst[doff, doff + w)`, a word at a time: complement, reverse the 2-bit
+    * groups of the whole key, then shift right past the clear top bits. */
+  def rcWords(s: Array[Long], off: Int, k: Int, dst: Array[Long], doff: Int): Unit = {
+    val w = wordsFor(k)
+    val sh = 64 - 2 * (k & 31) // clear top bits, 2 to 64
+    var hi = 0L
+    var j = 0
+    while (j < w) { // lo: word j of the reversed, complemented key
+      val r = java.lang.Long.reverse(~s(off + w - 1 - j))
+      val lo = ((r >>> 1) & 0x5555555555555555L) | ((r & 0x5555555555555555L) << 1)
+      dst(doff + j) = if (sh == 64) hi else (lo >>> sh) | (hi << (64 - sh))
+      hi = lo
+      j += 1
+    }
+  }
+
+  /** Unsigned compare of two w-word keys, top word first. */
+  def compareWords(a: Array[Long], ao: Int, b: Array[Long], bo: Int, w: Int): Int = {
+    var j = 0
+    while (j < w && a(ao + j) == b(bo + j)) j += 1
+    if (j == w) 0 else java.lang.Long.compareUnsigned(a(ao + j), b(bo + j))
   }
 
   // ------------------------------------------------------ attribute word

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 import scala.reflect.runtime.universe.TypeTag
@@ -31,48 +31,40 @@ import graft.sources.StageRunner
   *    count-stability heuristic, so termination is never a false stop;
   *    `localCheckpoint` + unpersist keeps the lineage truncated so the
   *    loop scales to ~100s of rounds.
-  *  - Single-task gate, checked twice. First on the solid (`count >=
-  *    minCov`) canonical k-mer table, before any fork filter: n solid
-  *    k-mers mirror to at most 2n edges, seed at most 2n fragments and 2n·k
-  *    bases, so when those bounds fit the row gate and [[MaxLocalBases]] the
-  *    whole rest of the assembly (mirror, both fork sides, chain walk) runs
-  *    in ONE task over primitive arrays ([[assembleLocal]]) — no fork-filter
-  *    shuffles, no seed checkpoint, no stats job. Above it, the distributed
-  *    seed and contraction rounds run and the same gate is re-checked on
-  *    the shrinking fragment set, so the last rounds still finish in one
-  *    chain walk.
+  *  - Single-task gate, checked twice at every k. First on the solid
+  *    (`count >= minCov`) k-mer table: n solid k-mers mirror to at most 2n
+  *    edges and seed at most 2n·k bases, so when that fits [[RowCap]] (or a
+  *    lower `localThreshold`) and [[MaxLocalBases]], mirror, both fork
+  *    sides and the chain walk run in ONE task ([[assembleLocal]]) — no
+  *    fork-filter shuffle, seed checkpoint or stats job. Above it the
+  *    distributed rounds run and the gate is re-checked on the shrinking
+  *    fragment set, so they finish in the same walk ([[walkChains]]).
   *
-  * Key regimes. One driver ([[drive]]) runs over two key formats picked
-  * from k, where the reference keeps a 64-bit twin of every assembler
-  * (`ReflexivDSMain64.java`, to k=95): [[LongKeys]] packs each k-mer and
-  * endpoint into one `Long` (k <= 31), [[BlockKeys]] keeps 2-bit block
-  * `Array[Long]`s (k > 31; 24 B at k=95 vs 94 B as a string). A regime
-  * holds only the fragment row and its endpoint hash, equality and pairing
-  * order, the seed's edge domain, the scramble salting and the endgame walk
-  * with its row cap; only packed keys have the k-mer half of the gate.
+  * Key regimes. The reference keeps a 64-bit twin of every assembler
+  * (`ReflexivDSMain64.java`, to k=95); here the single-task kernel is
+  * written once, over word keys: a k-mer or (k-1)-mer endpoint is a
+  * right-aligned 2k-bit integer in w = ceil((2k+2)/64) longs, high word
+  * first, at offset i·w of one flat `Array[Long]` store. The top two bits
+  * of the top word carry the scramble salt ([[endKey]]); at w = 1 (k <= 31)
+  * a key is the packed `Long`. The distributed path ([[drive]]) runs over
+  * [[LongKeys]] (`Long` endpoints, `kv` counts, packed Catalyst fork
+  * filter) or [[BlockKeys]] (w-word endpoints, `kb` block counts converted
+  * to words at the boundary, string-domain fork filter).
   *
-  * Scale notes: up to ~2M solid canonical k-mers (the default gate) —
-  * bacterial-size genomes, `reassemble`, `stitch`, the example reads —
-  * take the single-task path after one count (which also materializes
-  * the k-mer checkpoint).
-  * Above that, fragment rows shrink geometrically, AQE coalesces the
-  * shrinking shuffles, and the contraction never materializes anything on
-  * the driver except the convergence count.
+  * Scale notes: up to ~2M solid canonical k-mers at any k (the default
+  * gate) — bacterial-size genomes, `reassemble`, `stitch`, each rung of a
+  * `meta` ladder — take the single-task path after one count (which also
+  * materializes the k-mer checkpoint). Above that, fragment rows shrink
+  * geometrically, AQE coalesces the shrinking shuffles, and nothing but
+  * the convergence count reaches the driver.
   */
 object Assembler {
 
-  /** A path fragment in either key regime: a 2-bit block sequence between
-    * two (k-1)-mer endpoint keys; closed (head == tail) for a cycle. */
-  sealed trait Fragment extends Product { def seq: Array[Long]; def closed: Boolean }
-
-  /** Packed (k-1)-mer endpoints (the k <= 31 regime). */
-  case class Frag(head: Long, tail: Long, seq: Array[Long]) extends Fragment {
-    def closed: Boolean = head == tail
-  }
-
-  /** 2-bit block endpoints (the k > 31 regime). */
-  case class FragW(head: Array[Long], tail: Array[Long], seq: Array[Long]) extends Fragment {
-    def closed: Boolean = java.util.Arrays.equals(head, tail)
+  /** A path fragment: a 2-bit block sequence between two (k-1)-mer endpoint
+    * keys — `Long` (k <= 31) or w-word `Array[Long]` (see Key regimes);
+    * closed (head == tail) for a cycle. */
+  case class Frag[K](head: K, tail: K, seq: Array[Long]) {
+    def closed: Boolean = java.util.Objects.deepEquals(head, tail)
   }
 
   /** The BYTE side of the single-task gate: `2n·k` at the k-mer check, the
@@ -83,6 +75,9 @@ object Assembler {
     * executor at the 100 TB design point. 500 Mbases ≈ 125 MB packed, well
     * under one executor. */
   private val MaxLocalBases = 500000000L
+
+  /** The ROW side of the single-task gate, at every k. */
+  private val RowCap = 4000000L
 
   /** Deterministic per-round coin: splittable-hash of the endpoint hashes. */
   private def coin(headHash: Long, tailHash: Long, iter: Int): Boolean = {
@@ -186,45 +181,58 @@ object Assembler {
     (e2, b1.union(b2).distinct())
   }
 
-  /** What differs between the two key widths: `F` is the fragment row, `K`
-    * the endpoint key a merge round shuffles on. */
-  private[operators] sealed abstract class KeyRegime[F <: Fragment : TypeTag, K : TypeTag]
-      extends Serializable {
-    @transient lazy val fragEnc: Encoder[F] = Encoders.product[F]
+  /** What differs between the two key widths: the endpoint key `K` of the
+    * fragment row (also the key column of the canonical counts), its
+    * conversion to and from word keys, and the seed's edge domain. */
+  private[operators] sealed abstract class KeyRegime[K : TypeTag] extends Serializable {
+    @transient lazy val fragEnc: Encoder[Frag[K]] = ExpressionEncoder[Frag[K]]()
     @transient lazy val keyEnc: Encoder[K] = ExpressionEncoder[K]()
-    /** Row cap of the single-task endgame walk (its cost per row sets it). */
-    val rowCap: Long
-    def coin(f: F, iter: Int): Boolean
-    /** The key `f` offers in a merge round: its tail if it is the head. */
-    def offer(f: F, isHead: Boolean): K
-    /** Deterministic pairing order inside a merge group. */
-    def pairOrder: Ordering[F]
-    /** `a` followed by `b`, carrying their joined sequence. */
-    def merged(a: F, b: F, seq: Array[Long]): F
+    @transient lazy val countEnc: Encoder[(K, Long)] = ExpressionEncoder[(K, Long)]()
+    /** Endpoint hash; the per-round coin mixes the two of a fragment. */
+    def hash(key: K): Long
+    /** Endpoint order; a merge group pairs its heads and tails in it. */
+    def keyOrder: Ordering[K]
+    /** The endpoint key at `s[off, off + w)`, and back. */
+    def key(s: Array[Long], off: Int, w: Int): K
+    def put(key: K, dst: Array[Long], off: Int): Unit
+    /** A canonical count's k-mer as a word key in `dst[0, w)`. */
+    def load(kmer: K, dst: Array[Long], k: Int): Unit = put(kmer, dst, 0)
     /** RC-mirrored oriented edge table `(kmer, count, prefix, suffix)` over
       * canonical counts — the domain the fork filter sorts in. */
     def mirroredEdges(counts: DataFrame, k: Int): DataFrame
-    /** One seed fragment per surviving `(kmer, sh, st)` edge; a set flag
-      * salts that endpoint with a key unique to the edge, so no round can
-      * merge across a scramble barrier. */
-    def seedFrags(edges: DataFrame, k: Int): Dataset[F]
-    def walk(frags: Iterator[F], k: Int): Iterator[F]
-    /** The k-mer half of the single-task gate, over the solid table:
-      * `Right(walked fragments)` when the whole assembly fits `rows`,
-      * else `Left(the table to seed from)`. */
-    def kmerGate(solid: DataFrame, k: Int, rows: Long, popBubbles: Boolean,
-                 minError: Int, scramble: Boolean): Either[DataFrame, Dataset[F]] =
-      Left(solid)
+    /** The seed's surviving `(kmer, sh, st)` edges, k-mers as count keys. */
+    def edgeKmers(edges: DataFrame): Dataset[(K, Boolean, Boolean)]
+
+    def coin(f: Frag[K], iter: Int): Boolean = Assembler.coin(hash(f.head), hash(f.tail), iter)
+    /** The key `f` offers in a merge round: its tail if it is the head. */
+    def offer(f: Frag[K], isHead: Boolean): K = if (isHead) f.tail else f.head
+    def pairOrder: Ordering[Frag[K]] =
+      Ordering.by[Frag[K], K](_.head)(keyOrder).orElseBy(_.tail)(keyOrder)
+    /** The fragment with endpoints `heads[ho, ho + w)` and `tails[to, to + w)`. */
+    def frag(heads: Array[Long], ho: Int, tails: Array[Long], to: Int, w: Int,
+             seq: Array[Long]): Frag[K] = Frag(key(heads, ho, w), key(tails, to, w), seq)
+
+    /** One seed fragment per surviving edge; a set flag salts that end
+      * ([[endKey]]). */
+    def seedFrags(edges: DataFrame, k: Int): Dataset[Frag[K]] = {
+      val w = KmerCodec.wordsFor(k)
+      edgeKmers(edges).map { case (km, sh, st) =>
+        val e = new Array[Long](3 * w)
+        load(km, e, k)
+        endKey(e, 0, k, head = true, salted = sh, e, w)
+        endKey(e, 0, k, head = false, salted = st, e, 2 * w)
+        frag(e, w, e, 2 * w, w, KmerCodec.wordsToBlocks(e, 0, k))
+      }(fragEnc)
+    }
   }
 
-  /** Packed-Long keys, k <= 31: the primitive single-task path and the
-    * Catalyst fork filter over packed k-mers. */
-  private[operators] object LongKeys extends KeyRegime[Frag, Long] {
-    val rowCap = 4000000L
-    def coin(f: Frag, iter: Int): Boolean = Assembler.coin(f.head, f.tail, iter)
-    def offer(f: Frag, isHead: Boolean): Long = if (isHead) f.tail else f.head
-    val pairOrder: Ordering[Frag] = Ordering.by(f => (f.head, f.tail))
-    def merged(a: Frag, b: Frag, seq: Array[Long]): Frag = Frag(a.head, b.tail, seq)
+  /** Packed-Long keys, k <= 31 (the w = 1 word key): the Catalyst fork
+    * filter runs over packed k-mers. */
+  private[operators] object LongKeys extends KeyRegime[Long] {
+    def hash(key: Long): Long = key
+    val keyOrder: Ordering[Long] = Ordering.Long
+    def key(s: Array[Long], off: Int, w: Int): Long = s(off)
+    def put(key: Long, dst: Array[Long], off: Int): Unit = dst(off) = key
 
     def mirroredEdges(counts: DataFrame, k: Int): DataFrame = {
       val s = counts.sparkSession
@@ -239,65 +247,22 @@ object Assembler {
         .withColumn("suffix", col("kmer").bitwiseAND(lit(mask)))
     }
 
-    /** The seed fragment of edge `kv`. Real node keys are packed (k-1)-mers
-      * (< 2^60, always non-negative); salted keys set the sign bit (head)
-      * or sign+62 bits (tail) over the edge's own k-mer — injective per
-      * oriented edge, disjoint from every real key and from each other. */
-    def frag(kv: Long, sh: Boolean, st: Boolean, k: Int): Frag = {
-      val mask = (1L << (2 * (k - 1))) - 1
-      Frag(if (sh) kv | Long.MinValue else kv >>> 2,
-        if (st) kv | Long.MinValue | (1L << 62) else kv & mask,
-        KmerCodec.longToBlocks(kv, k))
-    }
-
-    def seedFrags(edges: DataFrame, k: Int): Dataset[Frag] = {
-      val s = edges.sparkSession
-      import s.implicits._
-      edges.as[(Long, Boolean, Boolean)].map { case (kv, sh, st) => frag(kv, sh, st, k) }
-    }
-
-    def walk(frags: Iterator[Frag], k: Int): Iterator[Frag] =
-      contractChainsLong(frags.toArray, k)
-
-    override def kmerGate(solid: DataFrame, k: Int, rows: Long, popBubbles: Boolean,
-                          minError: Int, scramble: Boolean): Either[DataFrame, Dataset[Frag]] = {
-      val s = solid.sparkSession
-      import s.implicits._
-      // one count of the solid k-mers decides the path; the same job
-      // materializes their checkpoint, which the seed or the single task
-      // then reads instead of re-running the k-mer count
-      val table = solid.localCheckpoint(eager = false)
-      val n = table.count()
-      if (2 * n <= rows && 2 * n * k <= MaxLocalBases) {
-        Counters.add("assembler.local_kmers", n)
-        // coalesce, not repartition: narrow read of the cached partitions
-        Right(table.as[(Long, Long)].coalesce(1)
-          .mapPartitions(it => assembleLocal(it, k, popBubbles, minError, scramble)))
-      } else Left(table)
-    }
+    def edgeKmers(edges: DataFrame): Dataset[(Long, Boolean, Boolean)] =
+      edges.as(ExpressionEncoder[(Long, Boolean, Boolean)]())
   }
 
-  /** 2-bit block keys, k > 31. Arrays have reference equality on the JVM,
-    * so endpoint comparisons go through `java.util.Arrays.equals` /
-    * `KmerCodec.compareBlocks`, and a merge round's group key is the
-    * endpoint wrapped `.toSeq` (content hash/equality). */
-  private[operators] object BlockKeys extends KeyRegime[FragW, Seq[Long]] {
-    val rowCap = 2000000L // the boxed walk costs ~7x the primitive one per row
-    def coin(f: FragW, iter: Int): Boolean =
-      Assembler.coin(hashBlocks(f.head), hashBlocks(f.tail), iter)
-    def offer(f: FragW, isHead: Boolean): Seq[Long] = (if (isHead) f.tail else f.head).toSeq
-    val pairOrder: Ordering[FragW] = (a, b) => {
-      val c = KmerCodec.compareBlocks(a.head, b.head)
-      if (c != 0) c else KmerCodec.compareBlocks(a.tail, b.tail)
-    }
-    def merged(a: FragW, b: FragW, seq: Array[Long]): FragW = FragW(a.head, b.tail, seq)
-
-    private def hashBlocks(b: Array[Long]): Long = {
-      var h = 0x165667B19E3779F9L
-      var i = 0
-      while (i < b.length) { h = (h + b(i)) * 0x9E3779B97F4A7C15L; i += 1 }
-      h
-    }
+  /** Word-array keys, k > 31 (w >= 2; counts in 2-bit block `kb` form).
+    * Arrays have reference equality on the JVM, so endpoints compare
+    * through `KmerCodec.compareWords`; as a merge round's `array<bigint>`
+    * group key they compare by content. */
+  private[operators] object BlockKeys extends KeyRegime[Array[Long]] {
+    def hash(key: Array[Long]): Long = java.util.Arrays.hashCode(key)
+    val keyOrder: Ordering[Array[Long]] = (a, b) => KmerCodec.compareWords(a, 0, b, 0, a.length)
+    def key(s: Array[Long], off: Int, w: Int): Array[Long] = java.util.Arrays.copyOfRange(s, off, off + w)
+    def put(key: Array[Long], dst: Array[Long], off: Int): Unit =
+      System.arraycopy(key, 0, dst, off, key.length)
+    override def load(kmer: Array[Long], dst: Array[Long], k: Int): Unit =
+      KmerCodec.blocksToWords(kmer, k, dst, 0)
 
     /** String domain on purpose: as `array<bigint>`, Catalyst would sort
       * block keys as signed longs — bit 63 carries the first base of each
@@ -317,209 +282,184 @@ object Assembler {
         .toDF("kmer", "prefix", "suffix", "count")
     }
 
-    /** Block-domain salting: the salted key is the edge's own k-mer blocks
-      * with one flag long appended (0 = head, 1 = tail). Real endpoint keys
-      * have `blocksFor(k-1)` longs and salted keys `blocksFor(k) + 1` —
-      * strictly longer, so never equal to a real key (the sign-bit trick
-      * has no block analogue: bit 63 carries base data here). */
-    def seedFrags(edges: DataFrame, k: Int): Dataset[FragW] = {
-      val s = edges.sparkSession
-      import s.implicits._
-      edges.as[(String, Boolean, Boolean)].map { case (km, sh, st) =>
-        val blocks = KmerCodec.encodeBlocks(km)
-        FragW(if (sh) blocks :+ 0L else KmerCodec.sliceBlocks(blocks, 0, k - 1),
-          if (st) blocks :+ 1L else KmerCodec.sliceBlocks(blocks, 1, k), blocks)
-      }
-    }
-
-    def walk(frags: Iterator[FragW], k: Int): Iterator[FragW] =
-      contractChains(frags.map(f => (f.head.toSeq, f.tail.toSeq, f.seq)).toArray, k)
-        .map { case (h, t, sq) => FragW(h.toArray, t.toArray, sq) }
+    def edgeKmers(edges: DataFrame): Dataset[(Array[Long], Boolean, Boolean)] =
+      edges.as(ExpressionEncoder[(String, Boolean, Boolean)]())
+        .map { case (km, sh, st) => (KmerCodec.encodeBlocks(km), sh, st) }(ExpressionEncoder())
   }
 
-  /** Last-mile local contraction: once the fragment count falls below the
-    * single-task gate, the remaining path/cycle structure fits in one task,
-    * so the remaining O(log L) shuffle rounds are replaced by one
-    * chain-following pass over all fragments in a single partition. After
-    * the fork filter every node has in/out degree <= 1, so fragment heads
-    * are unique and the walk is deterministic. Concatenation goes through
-    * one growable 2-bit Builder per chain — linear in output length, never
-    * a quadratic re-copy. A closed cycle contracts at a rotation that
-    * differs from the distributed merge order, but cycles are normalized
-    * to their minimal rotation downstream, so final contigs are identical
-    * either way. Generic over the endpoint key type (`Seq[Long]` blocks in
-    * the block regime; packed keys take [[contractChainsLong]]). */
-  private[operators] def contractChains[K](frags: Array[(K, K, Array[Long])],
-                                           k: Int): Iterator[(K, K, Array[Long])] = {
-    import scala.collection.mutable
-    val byHead = new mutable.HashMap[K, (K, K, Array[Long])]()
-    frags.foreach { f =>
-      require(byHead.put(f._1, f).isEmpty,
-        "duplicate fragment head — fork-filter degree invariant broken")
+  /** Endpoint of the seed fragment of the k-mer at `km[off, off + w)` into
+    * `dst[doff, doff + w)`: its (k-1)-mer prefix (head) or suffix (tail) —
+    * the fork-filter node key — or, salted, the k-mer itself with bit
+    * `64w-1` set (head) or bits `64w-1` and `64w-2` (tail). Real keys leave
+    * both top bits clear, so a salted key is unique to its oriented edge
+    * and end and equals no real key: no round merges across a scramble
+    * barrier. */
+  private[operators] def endKey(km: Array[Long], off: Int, k: Int, head: Boolean,
+                                salted: Boolean, dst: Array[Long], doff: Int): Unit = {
+    val w = KmerCodec.wordsFor(k)
+    val first = w - 1 - ((k - 1) >>> 5) // the word holding base 0
+    var j = w - 1
+    while (j >= 0) {
+      val x = km(off + j)
+      dst(doff + j) =
+        if (salted) x
+        else if (head) (x >>> 2) | (if (j > 0) km(off + j - 1) << 62 else 0L)
+        else if (j == first) x & ~(3L << (2 * ((k - 1) & 31)))
+        else x
+      j -= 1
     }
-    val isTail = new mutable.HashSet[K]()
-    frags.foreach(f => isTail += f._2)
-    val visited = new mutable.HashSet[K]()
-    val emitted = mutable.ArrayBuffer.empty[(K, K, Array[Long])]
-    def walk(start: (K, K, Array[Long])): (K, K, Array[Long]) = {
-      val bld = new KmerCodec.Builder(KmerCodec.lengthOf(start._3))
-      bld.appendAll(start._3)
-      visited += start._1
-      var tail = start._2
-      var next = if (tail == start._1) None else byHead.get(tail)
-      while (next.isDefined && next.get._1 != start._1) {
-        val g = next.get
-        visited += g._1
-        val len = KmerCodec.lengthOf(g._3)
-        var i = k - 1
-        while (i < len) { bld.append(KmerCodec.baseAt(g._3, i)); i += 1 }
-        tail = g._2
-        next = byHead.get(tail)
-      }
-      (start._1, tail, bld.result())
-    }
-    frags.foreach { f => if (!isTail.contains(f._1)) emitted += walk(f) } // open paths
-    frags.foreach { f => if (!visited.contains(f._1)) emitted += walk(f) } // cycles
-    emitted.iterator
+    if (salted) dst(doff) |= (if (head) Long.MinValue else Long.MinValue | (1L << 62))
   }
 
-  /** Open-addressed Long→Int map (linear probing, power-of-2 capacity,
-    * presence flags so any Long key — including 0 — is storable). The
-    * endgame walk's hot structure: boxed `mutable.HashMap[Long, _]` cost
-    * ~2.3 µs/row on a 4.5M-row walk (measured, round 12), making the
-    * single-task endgame the j13 bottleneck the r11 verdict flagged;
-    * this keeps the walk allocation-free per probe. */
-  private final class LongIntMap(expected: Int) {
-    // capacity bound (ADVICE r12): expected*2-1 in Int arithmetic wraps
-    // negative past 2^30, max() picks 16, and a full table turns slot()'s
-    // linear probe into an infinite spin — a hang, not an error. The walk
-    // is a single-task endgame, so 2^29 entries (>= 4 GiB of parallel
-    // arrays) is far past any sane `localThreshold`; fail loudly instead.
-    require(expected <= (1 << 29),
-      s"LongIntMap: $expected entries exceeds the 2^29 single-task bound — " +
+  /** Open-addressed map from w-word keys to Int (linear probing,
+    * power-of-2 capacity, presence flags so any key — including 0 — is
+    * storable). Keys are copied in from `(store, offset)`: the hot,
+    * allocation-free structure of the single-task kernel (a boxed
+    * `mutable.HashMap` cost ~7x per row on a 4.5M-row walk). */
+  private final class WordMap(w: Int, expected: Int) {
+    // capacity bound: past 2^30, expected*2-1 wraps negative and a full
+    // table would spin forever in slot(); 2^29 key words (>= 4 GiB) is far
+    // past any sane `localThreshold`, so fail loudly instead.
+    require(expected.toLong * w <= (1L << 29),
+      s"WordMap: $expected keys of $w words exceed the 2^29 single-task bound — " +
         "lower Assembler's localThreshold")
     private val cap = Integer.highestOneBit(math.max(16, expected * 2 - 1)) << 1
     private val mask = cap - 1
-    private val keys = new Array[Long](cap)
+    private val keys = new Array[Long](cap * w)
     private val vals = new Array[Int](cap)
     private val used = new Array[Boolean](cap)
-    private def slot(key: Long): Int = {
+    private def slot(s: Array[Long], off: Int): Int = {
       // splittable-hash mix, then linear probe
-      var h = key * 0x9E3779B97F4A7C15L
+      var h = 0L
+      var j = 0
+      while (j < w) { h = (h + s(off + j)) * 0x9E3779B97F4A7C15L; j += 1 }
       h ^= h >>> 32
       var i = h.toInt & mask
-      while (used(i) && keys(i) != key) i = (i + 1) & mask
+      while (used(i) && !same(i, s, off)) i = (i + 1) & mask
       i
     }
-    /** Returns false if the key was already present (put refused). */
-    def putIfAbsent(key: Long, v: Int): Boolean = {
-      val i = slot(key)
-      if (used(i)) false
-      else { used(i) = true; keys(i) = key; vals(i) = v; true }
+    private def same(i: Int, s: Array[Long], off: Int): Boolean = {
+      var j = 0
+      while (j < w && keys(i * w + j) == s(off + j)) j += 1
+      j == w
+    }
+    private def put(i: Int, s: Array[Long], off: Int, v: Int): Unit = {
+      used(i) = true; vals(i) = v
+      var j = 0
+      while (j < w) { keys(i * w + j) = s(off + j); j += 1 }
     }
     /** The key's value, after storing `v` under it if it was absent. */
-    def getOrPut(key: Long, v: Int): Int = {
-      val i = slot(key)
-      if (!used(i)) { used(i) = true; keys(i) = key; vals(i) = v }
+    def getOrPut(s: Array[Long], off: Int, v: Int): Int = {
+      val i = slot(s, off)
+      if (!used(i)) put(i, s, off, v)
       vals(i)
     }
-    /** Index for the key, or -1. */
-    def get(key: Long): Int = {
-      val i = slot(key)
+    /** The key's value, or -1. */
+    def get(s: Array[Long], off: Int): Int = {
+      val i = slot(s, off)
       if (used(i)) vals(i) else -1
     }
-    def contains(key: Long): Boolean = used(slot(key))
   }
 
-  /** [[contractChains]] specialized to the packed-Long key regime (k <=
-    * 31 — every single-k assembly in the engine): same walk, same output
-    * order, but primitive parallel arrays + [[LongIntMap]] instead of
-    * boxed hash structures. ~7x on the measured 4.5M-row endgame
-    * (2.3 µs/row -> 0.33 µs/row), which matters because the endgame is a
-    * SINGLE task — the one part of the contraction that parallelism
-    * can't help (VERDICT r11 #1). Parity with the generic walk is
-    * property-pinned in AssemblerSpec. */
-  private[operators] def contractChainsLong(frags: Array[Frag], k: Int): Iterator[Frag] = {
-    val n = frags.length
-    val byHead = new LongIntMap(n)
-    val tailSet = new LongIntMap(n)
+  /** Last-mile contraction over word stores: fragment i has endpoints
+    * `heads`/`tails` at `i·w` and sequence `seqs(i)`. After the fork filter
+    * fragment heads are unique, so the walk is deterministic; one growable
+    * Builder per chain keeps concatenation linear. A cycle may open at
+    * another rotation than the distributed merge order, but cycles are
+    * normalized to their minimal rotation downstream. Returns one `(first
+    * fragment, last fragment, sequence)` per chain. */
+  private[operators] def walkChains(heads: Array[Long], tails: Array[Long],
+                                    seqs: Array[Array[Long]],
+                                    k: Int): Iterator[(Int, Int, Array[Long])] = {
+    val w = KmerCodec.wordsFor(k)
+    val n = seqs.length
+    val byHead = new WordMap(w, n)
+    val tailSet = new WordMap(w, n)
     var i = 0
     while (i < n) {
-      require(byHead.putIfAbsent(frags(i).head, i),
+      require(byHead.getOrPut(heads, i * w, i) == i,
         "duplicate fragment head — fork-filter degree invariant broken")
-      tailSet.putIfAbsent(frags(i).tail, i)
+      tailSet.getOrPut(tails, i * w, i)
       i += 1
     }
     val visited = new Array[Boolean](n)
-    val emitted = scala.collection.mutable.ArrayBuffer.empty[Frag]
-    def walk(si: Int): Frag = {
-      val start = frags(si)
-      val bld = new KmerCodec.Builder(KmerCodec.lengthOf(start.seq))
-      bld.appendAll(start.seq)
+    val emitted = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Array[Long])]
+    def walk(si: Int): Unit = {
+      val bld = new KmerCodec.Builder(KmerCodec.lengthOf(seqs(si)))
+      bld.appendAll(seqs(si))
       visited(si) = true
-      var tail = start.tail
-      var ni = if (tail == start.head) -1 else byHead.get(tail)
-      while (ni >= 0 && frags(ni).head != start.head) {
-        val g = frags(ni)
+      var last = si
+      var ni = byHead.get(tails, si * w)
+      while (ni >= 0 && ni != si) {
         visited(ni) = true
-        val len = KmerCodec.lengthOf(g.seq)
+        val g = seqs(ni)
+        val len = KmerCodec.lengthOf(g)
         var j = k - 1
-        while (j < len) { bld.append(KmerCodec.baseAt(g.seq, j)); j += 1 }
-        tail = g.tail
-        ni = byHead.get(tail)
+        while (j < len) { bld.append(KmerCodec.baseAt(g, j)); j += 1 }
+        last = ni
+        ni = byHead.get(tails, ni * w)
       }
-      Frag(start.head, tail, bld.result())
+      emitted += ((si, last, bld.result()))
     }
-    i = 0
-    while (i < n) { // open paths
-      if (!tailSet.contains(frags(i).head)) emitted += walk(i)
-      i += 1
-    }
-    i = 0
-    while (i < n) { // cycles
-      if (!visited(i)) emitted += walk(i)
-      i += 1
-    }
+    (0 until n).foreach(i => if (tailSet.get(heads, i * w) < 0) walk(i)) // open paths
+    (0 until n).foreach(i => if (!visited(i)) walk(i)) // cycles
     emitted.iterator
   }
 
-  /** RC-mirrored oriented edges as parallel (kmer, count) arrays — the
-    * single-task form of [[mirroredEdges]], row for row. */
-  private[operators] def mirrorLocal(canon: Iterator[(Long, Long)],
-                                     k: Int): (Array[Long], Array[Long]) = {
+  /** [[walkChains]] over fragment rows of a regime. */
+  private def walkFrags[K](r: KeyRegime[K], frags: Iterator[Frag[K]], k: Int): Iterator[Frag[K]] = {
+    val w = KmerCodec.wordsFor(k)
+    val fs = frags.toVector
+    val (heads, tails) = (new Array[Long](fs.length * w), new Array[Long](fs.length * w))
+    fs.indices.foreach { i => r.put(fs(i).head, heads, i * w); r.put(fs(i).tail, tails, i * w) }
+    walkChains(heads, tails, fs.map(_.seq).toArray, k)
+      .map { case (s, t, seq) => r.frag(heads, s * w, tails, t * w, w, seq) }
+  }
+
+  /** RC-mirrored oriented edges as a stride-w k-mer store and its counts —
+    * the single-task form of [[KeyRegime.mirroredEdges]], row for row. */
+  private[operators] def mirrorLocal[K](r: KeyRegime[K], canon: Iterator[(K, Long)],
+                                        k: Int): (Array[Long], Array[Long]) = {
+    val w = KmerCodec.wordsFor(k)
     val km = Array.newBuilder[Long]
     val cn = Array.newBuilder[Long]
-    canon.foreach { case (kv, c) =>
-      km += kv; cn += c
-      val rc = KmerCodec.rcLong(kv, k)
-      if (rc != kv) { km += rc; cn += c }
+    val (fw, rc) = (new Array[Long](w), new Array[Long](w))
+    canon.foreach { case (kmer, c) =>
+      r.load(kmer, fw, k)
+      KmerCodec.rcWords(fw, 0, k, rc, 0)
+      km ++= fw; cn += c
+      if (KmerCodec.compareWords(fw, 0, rc, 0, w) != 0) { km ++= rc; cn += c }
     }
     (km.result(), cn.result())
   }
 
-  /** One fork side over the edges `es` (indices into `km`/`cn`), grouped by
-    * `key`. Per group: the winner — the first element of the Catalyst
-    * side's `(count desc, kmer asc)`-sorted array; equal (count, kmer) rows
-    * are identical rows, so which copy wins does not change any result —
-    * and the number of arms that survive the J3 rule: the winner plus every
-    * loser that is not a sequencing error (coverage above `minError`, or
-    * more than half the winner's). Returns (winners, surviving arms per
-    * group, surviving edges). */
-  private def forkSide(es: Array[Int], km: Array[Long], cn: Array[Long],
-                       key: Long => Long,
-                       minError: Int): (Array[Int], Array[Int], Array[Int]) = {
-    val ids = new LongIntMap(es.length)
+  /** One fork side over the edges `es` (indices into the store `km` and
+    * `cn`), grouped by head (prefix) or tail (suffix) node key. Per group:
+    * the winner — the first element of the Catalyst side's `(count desc,
+    * kmer asc)`-sorted array, k-mers compared unsigned, top word first;
+    * equal (count, kmer) rows are identical rows, so which copy wins does
+    * not change any result — and the number of arms that survive the J3
+    * rule: the winner plus every loser that is not a sequencing error
+    * (coverage above `minError`, or more than half the winner's). Returns
+    * (winners, surviving arms per group, surviving edges). */
+  private def forkSide(es: Array[Int], km: Array[Long], cn: Array[Long], k: Int,
+                       head: Boolean, minError: Int): (Array[Int], Array[Int], Array[Int]) = {
+    val w = KmerCodec.wordsFor(k)
+    val ids = new WordMap(w, es.length)
+    val key = new Array[Long](w)
     val group = new Array[Int](es.length)
     val winner = new Array[Int](es.length)
     var ng = 0
     var p = 0
     while (p < es.length) {
       val e = es(p)
-      val g = ids.getOrPut(key(km(e)), ng)
+      endKey(km, e * w, k, head, salted = false, key, 0)
+      val g = ids.getOrPut(key, 0, ng)
       if (g == ng) { winner(g) = e; ng += 1 }
       else {
-        val w = winner(g)
-        if (cn(e) > cn(w) || (cn(e) == cn(w) && km(e) < km(w))) winner(g) = e
+        val x = winner(g)
+        if (cn(e) > cn(x) ||
+          (cn(e) == cn(x) && KmerCodec.compareWords(km, e * w, km, x * w, w) < 0)) winner(g) = e
       }
       group(p) = g
       p += 1
@@ -528,8 +468,8 @@ object Assembler {
     val kept = Array.newBuilder[Int]
     p = 0
     while (p < es.length) {
-      val e = es(p); val w = winner(group(p))
-      if (e == w || !(cn(e) <= minError && cn(w) >= cn(e) * 2)) {
+      val e = es(p); val x = winner(group(p))
+      if (e == x || !(cn(e) <= minError && cn(x) >= cn(e) * 2)) {
         kept += e; arms(group(p)) += 1
       }
       p += 1
@@ -537,81 +477,87 @@ object Assembler {
     (java.util.Arrays.copyOf(winner, ng), arms, kept.result())
   }
 
-  /** [[resolveForks]] over mirrored edge arrays: the indices of the
+  /** [[resolveForks]] over a mirrored edge store: the indices of the
     * surviving edges. Same prefix-then-suffix order, winner, `minError`
     * rule and `popBubbles = false` degree filter. */
   private[operators] def resolveForksLocal(km: Array[Long], cn: Array[Long], k: Int,
                                            popBubbles: Boolean,
                                            minError: Int): Array[Int] = {
-    val mask = (1L << (2 * (k - 1))) - 1
-    val all = Array.range(0, km.length)
+    val all = Array.range(0, cn.length)
     if (popBubbles) {
       // with the rule on, a group keeps its winner only when every loser
       // is an error arm
-      def side(es: Array[Int], key: Long => Long): Array[Int] = {
-        val (winner, arms, _) = forkSide(es, km, cn, key, minError)
+      def side(es: Array[Int], head: Boolean): Array[Int] = {
+        val (winner, arms, _) = forkSide(es, km, cn, k, head, minError)
         if (minError <= 0) winner else winner.indices.filter(arms(_) == 1).map(winner).toArray
       }
-      side(side(all, _ >> 2), _ & mask)
+      side(side(all, head = true), head = false)
     } else {
       // an edge survives iff it is alone in both of its groups (with
       // minError = Int.MinValue no arm is an error: arms = group size)
-      def alone(key: Long => Long): Array[Boolean] = {
-        val (winner, arms, _) = forkSide(all, km, cn, key, Int.MinValue)
-        val a = new Array[Boolean](km.length)
+      def alone(head: Boolean): Array[Boolean] = {
+        val (winner, arms, _) = forkSide(all, km, cn, k, head, Int.MinValue)
+        val a = new Array[Boolean](cn.length)
         winner.indices.foreach(g => if (arms(g) == 1) a(winner(g)) = true)
         a
       }
-      val (out, in) = (alone(_ >> 2), alone(_ & mask))
+      val (out, in) = (alone(head = true), alone(head = false))
       all.filter(e => out(e) && in(e))
     }
   }
 
-  /** [[resolveForksUnitig]] over mirrored edge arrays: (surviving edge
-    * indices, barrier node keys — possibly repeated). */
+  /** [[resolveForksUnitig]] over a mirrored edge store: (surviving edge
+    * indices, barrier node keys as a stride-w store — possibly repeated). */
   private[operators] def resolveForksUnitigLocal(km: Array[Long], cn: Array[Long], k: Int,
                                                  minError: Int): (Array[Int], Array[Long]) = {
-    val mask = (1L << (2 * (k - 1))) - 1
+    val w = KmerCodec.wordsFor(k)
     val barriers = Array.newBuilder[Long]
-    def side(es: Array[Int], key: Long => Long): Array[Int] = {
-      val (winner, arms, kept) = forkSide(es, km, cn, key, minError)
-      winner.indices.foreach(g => if (arms(g) >= 2) barriers += key(km(winner(g))))
+    val key = new Array[Long](w)
+    def side(es: Array[Int], head: Boolean): Array[Int] = {
+      val (winner, arms, kept) = forkSide(es, km, cn, k, head, minError)
+      winner.indices.foreach { g =>
+        if (arms(g) >= 2) { endKey(km, winner(g) * w, k, head, salted = false, key, 0); barriers ++= key }
+      }
       kept
     }
-    val kept = side(side(Array.range(0, km.length), _ >> 2), _ & mask)
+    val kept = side(side(Array.range(0, cn.length), head = true), head = false)
     (kept, barriers.result())
   }
 
-
   /** The whole assembly below the k-mer gate, in one task: mirror the solid
-    * canonical `(kv, count)` rows, fork-filter them exactly as the
-    * distributed seed does ([[resolveForks]], or [[resolveForksUnitig]] plus
-    * the barrier salting of [[LongKeys.frag]]), seed one fragment per
-    * surviving edge and walk the chains ([[contractChainsLong]]). */
-  private[operators] def assembleLocal(canon: Iterator[(Long, Long)], k: Int,
-                                       popBubbles: Boolean, minError: Int,
-                                       scramble: Boolean): Iterator[Frag] = {
-    val mask = (1L << (2 * (k - 1))) - 1
-    val (km, cn) = mirrorLocal(canon, k)
-    val seeds =
-      if (scramble) {
-        val (kept, barriers) = resolveForksUnitigLocal(km, cn, k, minError)
-        val isBarrier = new LongIntMap(barriers.length)
-        barriers.foreach(b => isBarrier.putIfAbsent(b, 0))
-        kept.map { e =>
-          val kv = km(e)
-          LongKeys.frag(kv, isBarrier.contains(kv >> 2), isBarrier.contains(kv & mask), k)
-        }
-      } else resolveForksLocal(km, cn, k, popBubbles, minError)
-        .map(e => LongKeys.frag(km(e), sh = false, st = false, k))
-    contractChainsLong(seeds, k)
+    * canonical count rows, fork-filter them exactly as the distributed seed
+    * does ([[resolveForks]], or [[resolveForksUnitig]] plus the barrier
+    * salting of [[endKey]]), seed one fragment per surviving edge and walk
+    * the chains ([[walkChains]]). */
+  private[operators] def assembleLocal[K](r: KeyRegime[K], canon: Iterator[(K, Long)], k: Int,
+                                          popBubbles: Boolean, minError: Int,
+                                          scramble: Boolean): Iterator[Frag[K]] = {
+    val w = KmerCodec.wordsFor(k)
+    val (km, cn) = mirrorLocal(r, canon, k)
+    val (kept, barriers) =
+      if (scramble) resolveForksUnitigLocal(km, cn, k, minError)
+      else (resolveForksLocal(km, cn, k, popBubbles, minError), Array.emptyLongArray)
+    val isBarrier = new WordMap(w, barriers.length / w)
+    (0 until barriers.length by w).foreach(o => isBarrier.getOrPut(barriers, o, 0))
+    val (heads, tails) = (new Array[Long](kept.length * w), new Array[Long](kept.length * w))
+    val seqs = new Array[Array[Long]](kept.length)
+    def end(e: Int, head: Boolean, dst: Array[Long], o: Int): Unit = {
+      endKey(km, e, k, head, salted = false, dst, o)
+      if (scramble && isBarrier.get(dst, o) >= 0) endKey(km, e, k, head, salted = true, dst, o)
+    }
+    kept.indices.foreach { p =>
+      end(kept(p) * w, head = true, heads, p * w); end(kept(p) * w, head = false, tails, p * w)
+      seqs(p) = KmerCodec.wordsToBlocks(km, kept(p) * w, k)
+    }
+    walkChains(heads, tails, seqs, k)
+      .map { case (s, t, seq) => r.frag(heads, s * w, tails, t * w, w, seq) }
   }
 
   /** (fragment count, total bases) in one cached-scan job. Both sides of
     * the last-mile gate come from the same pass: the row count drives the
     * convergence probe, the base total keeps the single-task endgame from
     * swallowing more sequence than one executor holds. */
-  private[operators] def fragStats[F <: Fragment](frags: Dataset[F]): (Long, Long) = {
+  private[operators] def fragStats[K](frags: Dataset[Frag[K]]): (Long, Long) = {
     import frags.sparkSession.implicits._
     frags.mapPartitions { it =>
       var n = 0L; var b = 0L
@@ -623,8 +569,8 @@ object Assembler {
   /** One contraction round (J1 + P9): merge adjacent fragments whose coins
     * line up. Exactly one offer per fragment => each key group holds at
     * most one head-offer and one tail-offer. */
-  private[operators] def mergeRound[F <: Fragment, K](r: KeyRegime[F, K], frags: Dataset[F],
-                                                      k: Int, iter: Int): Dataset[F] =
+  private[operators] def mergeRound[K](r: KeyRegime[K], frags: Dataset[Frag[K]],
+                                       k: Int, iter: Int): Dataset[Frag[K]] =
     frags
       .groupByKey(f => r.offer(f, r.coin(f, iter)))(r.keyEnc)
       .flatMapGroups { (_, it) =>
@@ -633,7 +579,7 @@ object Assembler {
         val tails = ts.sorted(r.pairOrder)
         val merged = heads.zip(tails).map { case (a, b) =>
           val lenB = KmerCodec.lengthOf(b.seq)
-          r.merged(a, b, KmerCodec.concatBlocks(a.seq, KmerCodec.sliceBlocks(b.seq, k - 1, lenB)))
+          Frag(a.head, b.tail, KmerCodec.concatBlocks(a.seq, KmerCodec.sliceBlocks(b.seq, k - 1, lenB)))
         }
         val rest = heads.drop(tails.length) ++ tails.drop(heads.length)
         (merged ++ rest).iterator
@@ -642,9 +588,8 @@ object Assembler {
   /** P6 + J2: RC-mirror the solid k-mers, then fork-filter so every
     * (k-1)-mer node keeps at most one out- and one in-edge. In scramble
     * mode the barrier junctions are left-joined onto both endpoints. */
-  private def seed[F <: Fragment](r: KeyRegime[F, _], solid: DataFrame, k: Int,
-                                  popBubbles: Boolean, minError: Int,
-                                  scramble: Boolean): Dataset[F] = {
+  private def seed[K](r: KeyRegime[K], solid: DataFrame, k: Int, popBubbles: Boolean,
+                      minError: Int, scramble: Boolean): Dataset[Frag[K]] = {
     val edges = r.mirroredEdges(solid, k)
     r.seedFrags(
       if (scramble) {
@@ -675,13 +620,12 @@ object Assembler {
     * memory-local truncation for short interactive runs.
     *
     * `localThreshold`: the single-task gate on rows (see the object doc),
-    * capped at the key regime's own bound (4M packed, 2M block: the
-    * default). Packed keys check it first on the solid k-mer table (`2n <=
-    * gate` for n solid k-mers sends the whole assembly to [[assembleLocal]]);
-    * every regime re-checks it on the fragment count, which the rounds
-    * shrink geometrically until one chain walk replaces the remaining
-    * shuffle barriers. [[MaxLocalBases]] bounds the bases at both checks.
-    * Set 0 to force the fully distributed path. */
+    * capped at [[RowCap]] (4M rows, the default, at every k). It is checked
+    * first on the solid k-mer table (`2n <= gate` for n solid k-mers sends
+    * the whole assembly to [[assembleLocal]]), then on the fragment count,
+    * which the rounds shrink geometrically until one chain walk replaces
+    * the remaining shuffle barriers. [[MaxLocalBases]] bounds the bases at
+    * both checks. Set 0 to force the fully distributed path. */
   def assemble(counts: DataFrame, k: Int, minCov: Int = 1, maxIter: Int = 60,
                probeEvery: Int = 3, minContig: Int = 0,
                ckptDir: Option[String] = None,
@@ -689,27 +633,27 @@ object Assembler {
                localThreshold: Long = Long.MaxValue,
                minError: Int = 0,
                scramble: Boolean = false): Dataset[String] =
-    drive(if (k <= 31) LongKeys else BlockKeys, counts, k, minCov, maxIter, probeEvery,
-      minContig, ckptDir, popBubbles, localThreshold, minError, scramble)
+    drive((if (k <= 31) LongKeys else BlockKeys): KeyRegime[_], counts, k, minCov, maxIter,
+      probeEvery, minContig, ckptDir, popBubbles, localThreshold, minError, scramble)
 
   /** [[assemble]] in an explicit key regime. */
-  private[operators] def drive[F <: Fragment, K](
-      r: KeyRegime[F, K], counts: DataFrame, k: Int, minCov: Int, maxIter: Int,
+  private[operators] def drive[K](
+      r: KeyRegime[K], counts: DataFrame, k: Int, minCov: Int, maxIter: Int,
       probeEvery: Int, minContig: Int, ckptDir: Option[String], popBubbles: Boolean,
       localThreshold: Long, minError: Int, scramble: Boolean): Dataset[String] = {
     val s = counts.sparkSession
     import s.implicits._
-    implicit val fragEnc: Encoder[F] = r.fragEnc
-    val rows = math.min(localThreshold, r.rowCap)
+    implicit val fragEnc: Encoder[Frag[K]] = r.fragEnc
+    val rows = math.min(localThreshold, RowCap)
     val runner = ckptDir.map(new StageRunner(s, _))
     val resumeIter = runner.toSeq.flatMap(_.completed("frags_i"))
       .map(_.stripPrefix("frags_i").toInt).maxOption
-    def durable(name: String, ds: => Dataset[F]): Dataset[F] =
-      runner.get.stage(name)(ds.toDF()).as[F]
+    def durable(name: String, ds: => Dataset[Frag[K]]): Dataset[Frag[K]] =
+      runner.get.stage(name)(ds.toDF()).as[Frag[K]]
     /** Distributed contraction from materialized fragments at round `from`. */
-    def contract(start: Dataset[F], from: Int): Dataset[F] = {
+    def contract(start: Dataset[Frag[K]], from: Int): Dataset[Frag[K]] = {
       var frags = start
-      var lastCkpt: Dataset[F] = frags
+      var lastCkpt: Dataset[Frag[K]] = frags
       var lastCount = -1L
       var iter = from
       var done = false
@@ -723,7 +667,7 @@ object Assembler {
           // in a single chain-following pass instead of more rounds.
           Counters.add("assembler.endgame_rows", n)
           Counters.add("assembler.endgame_bases", bases)
-          frags = frags.coalesce(1).mapPartitions(it => r.walk(it, k))
+          frags = frags.coalesce(1).mapPartitions(it => walkFrags(r, it, k))
           done = true
         } else {
           frags = mergeRound(r, frags, k, iter)
@@ -767,17 +711,23 @@ object Assembler {
       case Some(i) => contract(durable(s"frags_i$i", sys.error("resume never recomputes")), i)
       case None =>
         val solid = counts.filter(col("count") >= minCov)
-        val gated =
-          if (maxIter > 0) r.kmerGate(solid, k, rows, popBubbles, minError, scramble)
-          else Left(solid)
-        gated match {
-          case Right(walked) => if (runner.isEmpty) walked else durable("frags_i0", walked)
-          case Left(table) =>
-            def seeded = seed(r, table, k, popBubbles, minError, scramble)
-            // checkpoint the seed fragments: without this, every round
-            // before the first probe re-executes the fork-filter lineage
-            contract(
-              if (runner.isEmpty) seeded.localCheckpoint() else durable("frags_i0", seeded), 0)
+        // one count of the solid k-mers decides the path; the same job
+        // materializes their checkpoint, which the seed or the single task
+        // then reads instead of re-running the k-mer count
+        val table = if (maxIter > 0) solid.localCheckpoint(eager = false) else solid
+        val n = if (maxIter > 0) table.count() else -1L
+        if (n >= 0 && 2 * n <= rows && 2 * n * k <= MaxLocalBases) {
+          Counters.add("assembler.local_kmers", n)
+          // coalesce, not repartition: narrow read of the cached partitions
+          val walked = table.as[(K, Long)](r.countEnc).coalesce(1)
+            .mapPartitions(it => assembleLocal(r, it, k, popBubbles, minError, scramble))
+          if (runner.isEmpty) walked else durable("frags_i0", walked)
+        } else {
+          def seeded = seed(r, table, k, popBubbles, minError, scramble)
+          // checkpoint the seed fragments: without this, every round
+          // before the first probe re-executes the fork-filter lineage
+          contract(
+            if (runner.isEmpty) seeded.localCheckpoint() else durable("frags_i0", seeded), 0)
         }
     }
 

@@ -6,25 +6,10 @@ import org.apache.spark.sql.DataFrame
 import graft.TestSpark
 import graft.TestSpark.stagesOf
 import graft.core.{Counters, KmerCodec, KmerIter}
+import Dna._
 
 class AssemblerSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-
-  private def rcStr(s: String): String =
-    s.reverse.map { case 'A' => 'T'; case 'C' => 'G'; case 'G' => 'C'; case 'T' => 'A' }
-  private def canonStr(s: String): String = { val r = rcStr(s); if (s <= r) s else r }
-
-  private def randGenome(n: Int, seed: Long): String = {
-    val r = new scala.util.Random(seed)
-    Array.fill(n)("ACGT"(r.nextInt(4))).mkString
-  }
-
-  /** Simulated error-free shotgun reads: sliding windows, half RC'd. */
-  private def reads(genome: String, len: Int, step: Int): Seq[String] =
-    ((0 to genome.length - len by step) :+ (genome.length - len)).distinct.map { i =>
-      val w = genome.substring(i, i + len)
-      if (i % 2 == 0) w else rcStr(w)
-    }
 
   private def assembleFrom(rds: Seq[String], k: Int): Seq[String] = {
     import spark.implicits._
@@ -32,44 +17,67 @@ class AssemblerSpec extends AnyFunSuite {
     Assembler.assemble(counts, k, minCov = 1, maxIter = 40).collect().toSeq
   }
 
-  test("contractChainsLong (primitive endgame walk) == generic contractChains") {
+  test("walkChains == a brute-force string walk (w = 1 to 3, salted ends)") {
     // random disjoint path/cycle mixtures: fragment the k-mer chains of
     // several genomes (open paths) and circles (cycles) at random split
-    // points, shuffle, and demand the two walks emit the same fragment SET
-    // (order differs only by emit phase; both phases are compared sorted)
-    val k = 9
-    for (seed <- 1 to 10) {
+    // points, salt some fragment ends (a salted end joins nothing), shuffle,
+    // and demand the word-key walk emit what a walk over endpoint strings does
+    for (k <- Seq(9, 40, 64); seed <- 1 to 10) {
       val r = new scala.util.Random(seed)
-      val frags = scala.collection.mutable.ArrayBuffer.empty[Assembler.Frag]
-      def pack(s: String): Long =
-        s.foldLeft(0L)((a, c) => (a << 2) | "ACGT".indexOf(c).toLong)
-      def fragment(seq: String, circular: Boolean): Unit = {
+      val w = KmerCodec.wordsFor(k)
+      val parts = scala.collection.mutable.ArrayBuffer.empty[(String, Boolean, Boolean)]
+      def fragment(seq: String): Unit = {
         // cut the sequence into >= 1 overlapping-(k-1) fragments
-        var cuts = (1 until (seq.length - k + 1)).filter(_ => r.nextInt(4) == 0)
+        val cuts = (1 until (seq.length - k + 1)).filter(_ => r.nextInt(4) == 0)
         val bounds = (0 +: cuts :+ (seq.length - k + 1)).distinct.sorted
         bounds.zip(bounds.tail).foreach { case (a, b) =>
-          val sub = seq.substring(a, b + k - 1)
-          frags += Assembler.Frag(pack(sub.take(k - 1)), pack(sub.takeRight(k - 1)),
-            KmerCodec.encodeBlocks(sub))
+          parts += ((seq.substring(a, b + k - 1), r.nextInt(6) == 0, r.nextInt(6) == 0))
         }
       }
-      // open paths: distinct random genomes (collision-unlikely at len 60)
-      (0 until 3).foreach(i => fragment(randGenome(60, seed * 100 + i), circular = false))
-      // cycles: a genome wrapped by its own first k-1 bases
-      val g = randGenome(40, seed * 100 + 50)
-      fragment(g + g.take(k - 1), circular = true)
-      val shuffled = r.shuffle(frags.toSeq).toArray
-      // an 8-mer head collision across random genomes would trip the
-      // duplicate-head invariant in BOTH walks — not what's under test
-      if (shuffled.map(_.head).distinct.length != shuffled.length) {
-        info(s"seed=$seed skipped: head collision in the random fixture")
+      // open paths: distinct random genomes; cycles: a genome wrapped by
+      // its own first k-1 bases
+      (0 until 3).foreach(i => fragment(randGenome(k + 60, seed * 100 + i)))
+      val g = randGenome(k + 40, seed * 100 + 50)
+      fragment(g + g.take(k - 1))
+      // (head, tail, seq) with string ends: a (k-1)-mer, or a salted end's
+      // own k-mer tagged H/T
+      val parted = r.shuffle(parts.toVector)
+      val fs = parted.map { case (sub, sh, st) =>
+        (if (sh) "H" + sub.take(k) else sub.take(k - 1),
+          if (st) "T" + sub.takeRight(k) else sub.takeRight(k - 1), sub)
+      }
+      def words(head: Boolean) = parted.flatMap { case (sub, sh, st) =>
+        val (km, dst) = (new Array[Long](w), new Array[Long](w))
+        KmerCodec.blocksToWords(KmerCodec.encodeBlocks(if (head) sub else sub.takeRight(k)), k, km, 0)
+        Assembler.endKey(km, 0, k, head, if (head) sh else st, dst, 0)
+        dst
+      }.toArray
+      // a (k-1)-mer head collision across random genomes would trip the
+      // duplicate-head invariant — not what's under test
+      if (fs.map(_._1).distinct.length != fs.length) {
+        info(s"k=$k seed=$seed skipped: head collision in the random fixture")
       } else {
-      def key(f: Assembler.Frag) = (f.head, f.tail, KmerCodec.decodeBlocks(f.seq))
-      val generic = Assembler.contractChains(
-        shuffled.map(f => (f.head, f.tail, f.seq)), k)
-        .map { case (h, t, s) => (h, t, KmerCodec.decodeBlocks(s)) }.toSeq.sorted
-      val fast = Assembler.contractChainsLong(shuffled, k).map(key).toSeq.sorted
-      assert(fast == generic, s"seed=$seed")
+        val byHead = fs.zipWithIndex.map { case (f, i) => f._1 -> i }.toMap
+        val isTail = fs.map(_._2).toSet
+        val visited = new Array[Boolean](fs.length)
+        def walk(si: Int): (String, String, String) = {
+          var (last, seq) = (si, fs(si)._3)
+          visited(si) = true
+          var next = byHead.get(fs(si)._2)
+          while (next.exists(_ != si)) {
+            last = next.get; visited(last) = true
+            seq += fs(last)._3.drop(k - 1)
+            next = byHead.get(fs(last)._2)
+          }
+          (fs(si)._1, fs(last)._2, seq)
+        }
+        val expected = fs.indices.filterNot(i => isTail(fs(i)._1)).map(walk) ++ // open paths
+          fs.indices.flatMap(i => if (visited(i)) None else Some(walk(i))) // cycles
+        val got = Assembler.walkChains(words(head = true), words(head = false),
+          fs.map(f => KmerCodec.encodeBlocks(f._3)).toArray, k)
+          .map { case (s, t, seq) => (fs(s)._1, fs(t)._2, KmerCodec.decodeBlocks(seq)) }.toSeq
+        assert(got.sorted == expected.sorted, s"k=$k seed=$seed")
+        assert(parts.exists(p => p._2 || p._3), s"k=$k seed=$seed: nothing salted")
       }
     }
   }
@@ -205,7 +213,7 @@ class AssemblerSpec extends AnyFunSuite {
       val kmers = (Seq.fill(40 * k)(rnd.nextLong() & ((1L << (2 * k)) - 1)) ++ pal).distinct
       val counts = kmers.map(kv => (kv, ladder(rnd.nextInt(ladder.length))))
       val edges = Assembler.LongKeys.mirroredEdges(counts.toDF("kv", "count"), k).cache()
-      val (km, cn) = Assembler.mirrorLocal(counts.iterator, k)
+      val (km, cn) = Assembler.mirrorLocal(Assembler.LongKeys, counts.iterator, k)
       val mask = (1L << (2 * (k - 1))) - 1
       def local(es: Array[Int]) =
         es.toSeq.map(e => (km(e), cn(e), km(e) >> 2, km(e) & mask)).sorted
@@ -234,34 +242,74 @@ class AssemblerSpec extends AnyFunSuite {
         catalyst(Assembler.resolveForks(edges, popBubbles = false, 0)), s"$ctx -bubble")
       edges.unpersist()
     }
+    // w = 2 word keys against the block regime's string-domain edges: arms
+    // around random (k-1)-mer nodes, plus four-way ties (A/C/G/T + node) at
+    // the top count. At k = 32 the first base fills a lower word's bits
+    // 62-63, so A and G arms differ only in that word's bit 63: a signed
+    // word compare would crown G instead of A.
+    for (seed <- 1 to 2; k <- Seq(32, 37)) {
+      val rnd = new scala.util.Random(seed * 31L + k)
+      val w = KmerCodec.wordsFor(k)
+      val nodes = Seq.fill(20)(randGenome(k - 1, rnd.nextLong()))
+      val arms = nodes.flatMap(nd => "ACGT".filter(_ => rnd.nextBoolean()).flatMap(b => Seq(s"$nd$b", s"$b$nd")))
+      val counts = (arms.map(_ -> ladder(rnd.nextInt(ladder.length))).toMap ++
+        nodes.take(6).flatMap(nd => "ACGT".map(b => s"$b$nd" -> 32L))).toSeq
+        .map { case (km, c) => (KmerCodec.encodeBlocks(km), c) }
+      val edges = Assembler.BlockKeys.mirroredEdges(counts.toDF("kb", "count"), k).cache()
+      val (km, cn) = Assembler.mirrorLocal(Assembler.BlockKeys, counts.iterator, k)
+      // a (k-1)-mer key read as a k-mer has a leading A
+      def str(a: Array[Long], off: Int) = KmerCodec.decodeBlocks(KmerCodec.wordsToBlocks(a, off, k))
+      def local(es: Array[Int]) = es.toSeq.map(e => (str(km, e * w), cn(e))).sorted
+      def catalyst(df: DataFrame) = df.select("kmer", "count").as[(String, Long)].collect().toSeq.sorted
+      val ctx = s"seed=$seed k=$k"
+      assert(local(cn.indices.toArray) == catalyst(edges), s"$ctx mirror")
+      for (minError <- Seq(0, 2, 8)) {
+        assert(local(Assembler.resolveForksLocal(km, cn, k, popBubbles = true, minError)) ==
+          catalyst(Assembler.resolveForks(edges, popBubbles = true, minError)),
+          s"$ctx minError=$minError")
+        val (kept, barriers) = Assembler.resolveForksUnitigLocal(km, cn, k, minError)
+        val (e, b) = Assembler.resolveForksUnitig(edges, minError)
+        assert(local(kept) == catalyst(e), s"$ctx unitig minError=$minError")
+        assert((0 until barriers.length by w).map(o => str(barriers, o).tail).toSet ==
+          b.as[String].collect().toSet, s"$ctx barriers minError=$minError")
+      }
+      assert(local(Assembler.resolveForksLocal(km, cn, k, popBubbles = false, 0)) ==
+        catalyst(Assembler.resolveForks(edges, popBubbles = false, 0)), s"$ctx -bubble")
+      edges.unpersist()
+    }
   }
 
   test("below the k-mer gate: one single-task stage after the count checkpoint, no fork-filter shuffle") {
     import spark.implicits._
     val genome = randGenome(3000, seed = 61)
-    val counts = Genomics.countCanonical(reads(genome, 80, 9).toDS(), 31).localCheckpoint()
-    val nKmers = counts.count()
+    val rds = reads(genome, 80, 9).toDS()
     def shuffled(st: Seq[StageInfo]) = st.map(_.taskMetrics.shuffleWriteMetrics.recordsWritten).sum
-    val before = Counters.snapshot
-    val (ds, eager) = stagesOf(Assembler.assemble(counts, 31))
-    val counted = Counters.diff(before, Counters.snapshot)
-    // assemble() itself only checkpoints and counts the solid k-mers: no
-    // stage writes more than the count's one partial row per task
-    assert(eager.nonEmpty)
-    eager.foreach(st => assert(st.taskMetrics.shuffleWriteMetrics.recordsWritten <= st.numTasks,
-      s"stage ${st.stageId} (${st.name}) shuffled per-k-mer rows"))
-    assert(counted.get("assembler.local_kmers").contains(nKmers))
-    assert(counted.get("assembler.seed_rows").isEmpty)
-    // the result: exactly one stage reads the checkpoint, in ONE task, and
-    // shuffles only the distinct contigs
-    val (out, lazyStages) = stagesOf(ds.collect())
-    assert(out.toSeq == Seq(canonStr(genome)))
-    val sources = lazyStages.filter(_.parentIds.isEmpty)
-    assert(sources.map(_.numTasks) == Seq(1), s"source stages: $sources")
-    assert(shuffled(lazyStages) <= out.length)
-    // the fully distributed path on the same table shuffles every edge
-    // before assemble() returns — the pin above would catch a fall-back
-    val (_, dist) = stagesOf(Assembler.assemble(counts, 31, localThreshold = 0))
-    assert(shuffled(dist) >= nKmers)
+    for (k <- Seq(31, 41)) {
+      val counts = (if (k <= 31) Genomics.countCanonical(rds, k)
+        else rds.flatMap(r => KmerIter.canonicalBlocks(r, k)).toDF("kb").groupBy("kb").count())
+        .localCheckpoint()
+      val nKmers = counts.count()
+      val before = Counters.snapshot
+      val (ds, eager) = stagesOf(Assembler.assemble(counts, k))
+      val counted = Counters.diff(before, Counters.snapshot)
+      // assemble() itself only checkpoints and counts the solid k-mers: no
+      // stage writes more than the count's one partial row per task
+      assert(eager.nonEmpty)
+      eager.foreach(st => assert(st.taskMetrics.shuffleWriteMetrics.recordsWritten <= st.numTasks,
+        s"stage ${st.stageId} (${st.name}) shuffled per-k-mer rows"))
+      assert(counted.get("assembler.local_kmers").contains(nKmers))
+      assert(counted.get("assembler.seed_rows").isEmpty)
+      // the result: exactly one stage reads the checkpoint, in ONE task, and
+      // shuffles only the distinct contigs
+      val (out, lazyStages) = stagesOf(ds.collect())
+      assert(out.toSeq == Seq(canonStr(genome)), s"k=$k")
+      val sources = lazyStages.filter(_.parentIds.isEmpty)
+      assert(sources.map(_.numTasks) == Seq(1), s"k=$k source stages: $sources")
+      assert(shuffled(lazyStages) <= out.length)
+      // the fully distributed path on the same table shuffles every edge
+      // before assemble() returns — the pin above would catch a fall-back
+      val (_, dist) = stagesOf(Assembler.assemble(counts, k, localThreshold = 0))
+      assert(shuffled(dist) >= nKmers)
+    }
   }
 }

@@ -3,18 +3,10 @@ package graft.operators
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import org.apache.spark.sql.functions._
+import Dna._
 
 class ErrorCorrectSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-
-  private def rcStr(s: String): String =
-    s.reverse.map { case 'A' => 'T'; case 'C' => 'G'; case 'G' => 'C'; case 'T' => 'A' }
-  private def canonStr(s: String): String = { val r = rcStr(s); if (s <= r) s else r }
-
-  private def randGenome(n: Int, seed: Long): String = {
-    val r = new scala.util.Random(seed)
-    Array.fill(n)("ACGT"(r.nextInt(4))).mkString
-  }
 
   /** Error-free tiling reads (forward strand). */
   private def cleanReads(genome: String, len: Int, step: Int): Seq[String] =

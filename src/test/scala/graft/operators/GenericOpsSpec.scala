@@ -4,20 +4,13 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions.col
 import graft.TestSpark
 import graft.core.KmerIter
+import Dna._
 
 /** Specs for the generic (CLI-facing) forms of the round-3 operators:
   * mercy rescue, overlap merger, cross-k reduce, reassemble, and the
   * `-bubble` (popBubbles=false) fork mode. */
 class GenericOpsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-
-  private def rcStr(s: String): String =
-    s.reverse.map { case 'A' => 'T'; case 'C' => 'G'; case 'G' => 'C'; case 'T' => 'A' }
-  private def canonStr(s: String): String = { val r = rcStr(s); if (s <= r) s else r }
-  private def randGenome(n: Int, seed: Long): String = {
-    val r = new scala.util.Random(seed)
-    Array.fill(n)("ACGT"(r.nextInt(4))).mkString
-  }
 
   test("mercyKmers rescues exactly the non-solid kmers between solid anchors") {
     import spark.implicits._

@@ -5,17 +5,10 @@ import graft.TestSpark
 import graft.core.KmerIter
 import graft.sources.StageRunner
 import java.nio.file.Files
+import Dna._
 
 class PipelinesSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-
-  private def rcStr(s: String): String =
-    s.reverse.map { case 'A' => 'T'; case 'C' => 'G'; case 'G' => 'C'; case 'T' => 'A' }
-  private def canonStr(s: String): String = { val r = rcStr(s); if (s <= r) s else r }
-  private def randGenome(n: Int, seed: Long): String = {
-    val r = new scala.util.Random(seed)
-    Array.fill(n)("ACGT"(r.nextInt(4))).mkString
-  }
 
   test("staged dynamic-k assembly reconstructs the genome and resumes") {
     import spark.implicits._

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
+import Dna._
 
 /** `-scramble` (repeat-aware unitig) assembly: at genuine repeat junctions
   * the default mode deletes the contested node group and over-fragments;
@@ -9,21 +10,6 @@ import graft.TestSpark
   * emits the classic unitig set where adjacent unitigs overlap by k-1. */
 class ScrambleSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-
-  private def rcStr(s: String): String =
-    s.reverse.map { case 'A' => 'T'; case 'C' => 'G'; case 'G' => 'C'; case 'T' => 'A' }
-  private def canonStr(s: String): String = { val r = rcStr(s); if (s <= r) s else r }
-
-  private def randGenome(n: Int, seed: Long): String = {
-    val r = new scala.util.Random(seed)
-    Array.fill(n)("ACGT"(r.nextInt(4))).mkString
-  }
-
-  private def reads(genome: String, len: Int, step: Int): Seq[String] =
-    ((0 to genome.length - len by step) :+ (genome.length - len)).distinct.map { i =>
-      val w = genome.substring(i, i + len)
-      if (i % 2 == 0) w else rcStr(w)
-    }
 
   private def kmersOf(s: String, k: Int): Set[String] =
     (0 to s.length - k).map(i => canonStr(s.substring(i, i + k))).toSet
