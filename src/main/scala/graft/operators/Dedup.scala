@@ -194,19 +194,13 @@ object Dedup {
     * two docs sharing one of the 4 (band, hash) buckets, enumerated by
     * [[Skew.bucketPairs]], so a hot bucket (thousands of copies of one
     * text) splits into block-pair groups instead of one quadratic task.
-    * The md5 family bands each row in one task with [[bandRows]] (no
+    * It bands each row in one task with [[bandRows]] (md5 family, no
     * shingle rows, no signature shuffle; byte-identical to
     * `bands(signatures(...))`), so `doc_id` MUST be unique in `docs`:
     * rows sharing an id are banded separately instead of merged into one
-    * signature.
-    * `fastHash = true` selects the at-scale xxhash64 family
-    * ([[signaturesFast]]) — the default stays md5 so existing callers
-    * remain byte-compatible with the oracle-gated queries. */
-  def nearDupPairs(docs: DataFrame, fastHash: Boolean = false): DataFrame = {
-    val dt = docs.select(col("doc_id"), col("text"))
-    candidatePairsFrom(
-      if (fastHash) bandsFast(signaturesFast(shingled(dt))) else bandRows(dt))
-  }
+    * signature. */
+  def nearDupPairs(docs: DataFrame): DataFrame =
+    candidatePairsFrom(bandRows(docs.select(col("doc_id"), col("text"))))
 
   /** The LSH band table `(doc_id, bid, bh)` computed PER ROW in one typed
     * pass — byte-identical to `bands(signatures(shingled(docs)))` (spec:

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.scheduler.StageInfo
-import org.apache.spark.sql.DataFrame
 import graft.TestSpark
 import graft.TestSpark.stagesOf
 import graft.core.{Counters, KmerCodec, KmerIter}
@@ -195,8 +194,69 @@ class AssemblerSpec extends AnyFunSuite {
     assert(contigs == Seq(canonStr(genome)))
   }
 
-  test("single-task fork sides == Catalyst resolveForks / resolveForksUnitig, row for row") {
-    import spark.implicits._
+  /** The fork rule by brute force in the string domain, over mirrored
+    * `(k-mer, count)` rows (a k-mer may occur twice): per prefix, then per
+    * suffix group, sorted by `(-count, k-mer)`. Returns the kept rows as
+    * `(k-mer, head node is a barrier, tail node is a barrier)`, sorted. */
+  private def bruteFork(edges: Seq[(String, Long)], rule: Assembler.ForkRule): Seq[(String, Boolean, Boolean)] = {
+    val rows = edges.zipWithIndex
+    def side(rs: Seq[((String, Long), Int)], node: String => String): (Set[Int], Set[String]) = {
+      val judged = rs.groupBy(r => node(r._1._1)).toSeq.map { case (nd, g) =>
+        val sorted = g.sortBy { case ((km, c), _) => (-c, km) }
+        val ((_, top), win) = sorted.head
+        val surv = sorted.filter { case ((_, c), i) => i == win || !(c <= rule.minError && top >= 2 * c) }
+        val kept =
+          if (rule.scramble) surv.map(_._2)
+          else if (!rule.popBubbles) (if (g.size == 1) Seq(win) else Nil)
+          else if (rule.minError <= 0 || surv.size == 1) Seq(win) else Nil
+        (kept, if (rule.scramble && surv.size >= 2) Seq(nd) else Nil)
+      }
+      (judged.flatMap(_._1).toSet, judged.flatMap(_._2).toSet)
+    }
+    val (byHead, bh) = side(rows, _.dropRight(1))
+    val (byTail, bt) = side(
+      if (!rule.popBubbles && !rule.scramble) rows else rows.filter(r => byHead(r._2)), _.drop(1))
+    val barriers = bh ++ bt
+    rows.collect { case ((km, _), i) if byHead(i) && byTail(i) =>
+      (km, barriers(km.dropRight(1)), barriers(km.drop(1)))
+    }.sorted
+  }
+
+  /** Both fork drivers over the canonical `counts` in regime `r` against
+    * [[bruteFork]] — the default and scramble policies at each of
+    * `minErrors`, and `-bubble` — after both mirrors against a string
+    * mirror. Returns the mirrored edges. */
+  private def forkDriversAgree[K](r: Assembler.KeyRegime[K], counts: Seq[(K, Long)], k: Int,
+                                  minErrors: Seq[Int], ctx: String): Seq[(String, Long)] = {
+    val w = KmerCodec.wordsFor(k)
+    def str(a: Array[Long], off: Int) = KmerCodec.decodeBlocks(KmerCodec.wordsToBlocks(a, off, k))
+    def keyStr(km: K) = { val a = new Array[Long](w); r.put(km, a, 0); str(a, 0) }
+    val edges = counts.flatMap { case (kmer, c) =>
+      val a = new Array[Long](w)
+      r.load(kmer, a, k)
+      Seq(str(a, 0), rcStr(str(a, 0))).distinct.map(_ -> c)
+    }.sorted
+    val (km, cn) = Assembler.mirrorLocal(r, counts.iterator, k)
+    assert(cn.indices.map(e => (str(km, e * w), cn(e))).sorted == edges, s"$ctx single-task mirror")
+    val mirrored = Assembler.mirror(r, spark.createDataset(counts)(r.countEnc).toDF(), k).cache()
+    assert(mirrored.collect().toSeq.map { case (m, c) => (keyStr(m), c) }.sorted == edges, s"$ctx mirror")
+    val rules = minErrors.flatMap(me => Seq(false, true).map(Assembler.ForkRule(popBubbles = true, me, _))) :+
+      Assembler.ForkRule(popBubbles = false, 0, scramble = false)
+    for (rule <- rules) {
+      val want = bruteFork(edges, rule)
+      val (kept, barriers) = Assembler.forkLocal(km, cn, k, rule)
+      // a (k-1)-mer node key read as a k-mer has a leading A
+      val bs = (0 until barriers.length by w).map(o => str(barriers, o).tail).toSet
+      assert(kept.toSeq.map(e => str(km, e * w)).map(s => (s, bs(s.dropRight(1)), bs(s.drop(1)))).sorted ==
+        want, s"$ctx single task $rule")
+      assert(Assembler.forkEdges(r, mirrored, k, rule).collect().toSeq
+        .map { case (m, sh, st) => (keyStr(m), sh, st) }.sorted == want, s"$ctx distributed $rule")
+    }
+    mirrored.unpersist()
+    edges
+  }
+
+  test("both fork drivers == a brute-force fork rule in test code") {
     // a small k packs the edges onto few (k-1)-mer nodes, so most nodes
     // fork; a short count ladder forces ties, count == minError and winners
     // exactly 2x their loser. Rows are not canonicalized, so a k-mer and
@@ -212,71 +272,58 @@ class AssemblerSpec extends AnyFunSuite {
       }
       val kmers = (Seq.fill(40 * k)(rnd.nextLong() & ((1L << (2 * k)) - 1)) ++ pal).distinct
       val counts = kmers.map(kv => (kv, ladder(rnd.nextInt(ladder.length))))
-      val edges = Assembler.LongKeys.mirroredEdges(counts.toDF("kv", "count"), k).cache()
-      val (km, cn) = Assembler.mirrorLocal(Assembler.LongKeys, counts.iterator, k)
-      val mask = (1L << (2 * (k - 1))) - 1
-      def local(es: Array[Int]) =
-        es.toSeq.map(e => (km(e), cn(e), km(e) >> 2, km(e) & mask)).sorted
-      def catalyst(df: DataFrame) = df.select("kmer", "count", "prefix", "suffix")
-        .as[(Long, Long, Long, Long)].collect().toSeq.sorted
       val ctx = s"seed=$seed k=$k"
-      assert(local(km.indices.toArray) == catalyst(edges), s"$ctx mirror")
-      if (k % 2 == 0) assert(km.length < 2 * counts.length, s"$ctx palindromes mirror once")
+      val edges = forkDriversAgree(Assembler.LongKeys, counts, k, Seq(0, 2, 4, 8), ctx)
+      if (k % 2 == 0) assert(edges.length < 2 * counts.length, s"$ctx palindromes mirror once")
       // the fixture reaches the edge cases: a tied top pair, a winner at
       // exactly 2x the runner-up, a runner-up at a tested minError
-      val tops = km.indices.groupBy(e => km(e) >> 2).values
-        .map(_.map(cn).sorted(Ordering[Long].reverse)).filter(_.length > 1)
+      val tops = edges.groupBy(_._1.dropRight(1)).values
+        .map(_.map(_._2).sorted(Ordering[Long].reverse)).filter(_.length > 1)
       assert(tops.exists(c => c(0) == c(1)), s"$ctx tie")
       assert(tops.exists(c => c(0) == 2 * c(1)), s"$ctx 2x")
       assert(tops.exists(c => Set(2L, 4L, 8L)(c(1))), s"$ctx count == minError")
-      for (minError <- Seq(0, 2, 4, 8)) {
-        assert(local(Assembler.resolveForksLocal(km, cn, k, popBubbles = true, minError)) ==
-          catalyst(Assembler.resolveForks(edges, popBubbles = true, minError)),
-          s"$ctx minError=$minError")
-        val (kept, barriers) = Assembler.resolveForksUnitigLocal(km, cn, k, minError)
-        val (e, b) = Assembler.resolveForksUnitig(edges, minError)
-        assert(local(kept) == catalyst(e), s"$ctx unitig minError=$minError")
-        assert(barriers.toSet == b.as[Long].collect().toSet, s"$ctx barriers minError=$minError")
-      }
-      assert(local(Assembler.resolveForksLocal(km, cn, k, popBubbles = false, 0)) ==
-        catalyst(Assembler.resolveForks(edges, popBubbles = false, 0)), s"$ctx -bubble")
-      edges.unpersist()
     }
-    // w = 2 word keys against the block regime's string-domain edges: arms
-    // around random (k-1)-mer nodes, plus four-way ties (A/C/G/T + node) at
-    // the top count. At k = 32 the first base fills a lower word's bits
-    // 62-63, so A and G arms differ only in that word's bit 63: a signed
-    // word compare would crown G instead of A.
+    // w = 2 word keys in the block regime: arms around random (k-1)-mer
+    // nodes, plus four-way ties (A/C/G/T + node) at the top count. At k = 32
+    // the first base fills a lower word's bits 62-63, so A and G arms differ
+    // only in that word's bit 63: a signed word compare would crown G
+    // instead of A.
     for (seed <- 1 to 2; k <- Seq(32, 37)) {
       val rnd = new scala.util.Random(seed * 31L + k)
-      val w = KmerCodec.wordsFor(k)
       val nodes = Seq.fill(20)(randGenome(k - 1, rnd.nextLong()))
       val arms = nodes.flatMap(nd => "ACGT".filter(_ => rnd.nextBoolean()).flatMap(b => Seq(s"$nd$b", s"$b$nd")))
       val counts = (arms.map(_ -> ladder(rnd.nextInt(ladder.length))).toMap ++
         nodes.take(6).flatMap(nd => "ACGT".map(b => s"$b$nd" -> 32L))).toSeq
         .map { case (km, c) => (KmerCodec.encodeBlocks(km), c) }
-      val edges = Assembler.BlockKeys.mirroredEdges(counts.toDF("kb", "count"), k).cache()
-      val (km, cn) = Assembler.mirrorLocal(Assembler.BlockKeys, counts.iterator, k)
-      // a (k-1)-mer key read as a k-mer has a leading A
-      def str(a: Array[Long], off: Int) = KmerCodec.decodeBlocks(KmerCodec.wordsToBlocks(a, off, k))
-      def local(es: Array[Int]) = es.toSeq.map(e => (str(km, e * w), cn(e))).sorted
-      def catalyst(df: DataFrame) = df.select("kmer", "count").as[(String, Long)].collect().toSeq.sorted
-      val ctx = s"seed=$seed k=$k"
-      assert(local(cn.indices.toArray) == catalyst(edges), s"$ctx mirror")
-      for (minError <- Seq(0, 2, 8)) {
-        assert(local(Assembler.resolveForksLocal(km, cn, k, popBubbles = true, minError)) ==
-          catalyst(Assembler.resolveForks(edges, popBubbles = true, minError)),
-          s"$ctx minError=$minError")
-        val (kept, barriers) = Assembler.resolveForksUnitigLocal(km, cn, k, minError)
-        val (e, b) = Assembler.resolveForksUnitig(edges, minError)
-        assert(local(kept) == catalyst(e), s"$ctx unitig minError=$minError")
-        assert((0 until barriers.length by w).map(o => str(barriers, o).tail).toSet ==
-          b.as[String].collect().toSet, s"$ctx barriers minError=$minError")
-      }
-      assert(local(Assembler.resolveForksLocal(km, cn, k, popBubbles = false, 0)) ==
-        catalyst(Assembler.resolveForks(edges, popBubbles = false, 0)), s"$ctx -bubble")
-      edges.unpersist()
+      forkDriversAgree(Assembler.BlockKeys, counts, k, Seq(0, 2, 8), s"seed=$seed k=$k")
     }
+  }
+
+  test("forced distributed k = 41: no exchange carries a string column") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val genome = randGenome(2000, seed = 67)
+    val counts = reads(genome, 80, 9).toDS().flatMap(r => KmerIter.canonicalBlocks(r, 41))
+      .toDF("kb").groupBy("kb").count().localCheckpoint()
+    // the output types of every exchange the eager part of assemble() runs:
+    // the seed's fork filter and the contraction rounds
+    val exchanged = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val plans = new AdaptiveSparkPlanHelper {}
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.collect(qe.executedPlan) { case e: ShuffleExchangeLike => e }
+          .foreach(e => exchanged.add(e.output.map(_.dataType.simpleString).mkString(", ")))
+      def onFailure(f: String, qe: QueryExecution, ex: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val contigs = try stagesOf(Assembler.assemble(counts, 41, localThreshold = 0))._1
+      finally spark.listenerManager.unregister(listener)
+    assert(exchanged.size >= 2, "the fork filter's two sides shuffle")
+    exchanged.forEach(e => assert(!e.contains("string"), s"an exchange carries a string: $e"))
+    assert(contigs.collect().toSeq == Seq(canonStr(genome)))
   }
 
   test("below the k-mer gate: one single-task stage after the count checkpoint, no fork-filter shuffle") {
