@@ -44,13 +44,15 @@ object Scratch {
   private lazy val jvmRoot: java.io.File = {
     val dir = new java.io.File(root, s"jvm-${ProcessHandle.current().pid()}")
     dir.mkdirs()
-    Runtime.getRuntime.addShutdownHook(new Thread(() => delete(dir)))
+    Runtime.getRuntime.addShutdownHook(new Thread(() => delete(dir.getPath)))
     dir
   }
 
-  private def delete(f: java.io.File): Unit = {
+  /** Delete `path` and everything under it; a missing path is a no-op. */
+  def delete(path: String): Unit = {
+    val f = new java.io.File(path)
     val kids = f.listFiles()
-    if (kids != null) kids.foreach(delete)
+    if (kids != null) kids.foreach(k => delete(k.getPath))
     f.delete()
     ()
   }

@@ -77,11 +77,6 @@ object Tables {
   def spreadDS[T](df: org.apache.spark.sql.Dataset[T],
                   keys: org.apache.spark.sql.Column*): org.apache.spark.sql.Dataset[T] = {
     val s = df.sparkSession
-    // session kill-switch (deployment knob + in-JVM A/B lever): a
-    // pre-split production input never reaches the repartition anyway,
-    // but this lets one session compare both forms under identical JIT
-    // state, which on this phase-noisy host is the only trustworthy A/B
-    if (!s.conf.get("spark.graft.spread", "true").toBoolean) return df
     val n = s.conf.get("spark.sql.shuffle.partitions", "200") match {
       case "auto" => 200
       case v => v.toInt

@@ -2,7 +2,8 @@ package graft.core
 
 /** Driver-side counters for bench adjudication (VERDICT r11 #1/#2):
   * operator internals that explain a timing — contraction rounds taken,
-  * endgame (single-task chain-walk) input size — accumulate here and
+  * endgame (single-task chain-walk) input size, a stream run's batches
+  * and per-phase times (graft.streaming.ReplayRunner) — accumulate here and
   * Bench snapshots the per-query delta into BENCH_DETAIL. Driver-only by
   * design: the instrumented code (the assembler's contraction loop) runs
   * its control flow on the driver, so no executor-side plumbing is

@@ -60,7 +60,7 @@ import graft.sources.StageRunner
   * geometrically, AQE coalesces the shrinking shuffles, and nothing but
   * the convergence count reaches the driver.
   */
-object Assembler {
+object Assembler extends QueryFamily {
 
   /** A path fragment: a 2-bit block sequence between two (k-1)-mer endpoint
     * keys — `Long` (k <= 31) or w-word `Array[Long]` (see Key regimes);
@@ -776,7 +776,7 @@ object Assembler {
     * (`least(contig, revcomp)`) so the pin is independent of the
     * assembler's deterministic-but-arbitrary strand choice. Reference
     * run: `/root/reference/example/` (reads), defaults k=31 minCov=2. */
-  def localQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  override def localQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "a5_example_assembly" -> ((s, _) => {
       val reads = graft.sources.Fastq.guardReads(
         graft.sources.Fastq.fastqSequences(s, "/root/reference/example/*.fq.gz"),

@@ -46,7 +46,7 @@ import graft.Tables._
   * query (correctness gate; semantic core oracle-proven separately by
   * `s7_semdedup`), and `graft.Main curate` (CLI over parquet).
   */
-object Curation {
+object Curation extends QueryFamily {
 
   private val stopwords = Seq("the", "a", "of", "and", "in", "to")
 

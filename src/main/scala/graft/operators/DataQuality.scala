@@ -27,7 +27,7 @@ import graft.Tables._
   * Results are constraint-per-row reports, bounded by the number of
   * declared checks — nothing scales with table volume after the scan.
   */
-object DataQuality {
+object DataQuality extends QueryFamily {
 
   /** One-scan conditional-aggregate constraint report over lineitem plus a
     * keyed uniqueness check; one row per constraint. */

@@ -22,7 +22,7 @@ import graft.Tables._
   * pair is a true near-dup the LSH must find; both engines build the
   * same augmented corpus, so the oracle stays exact.
   */
-object Dedup {
+object Dedup extends QueryFamily {
   private val NumHashes = 8
   private val NumBands = 4 // 2 rows per band
 
@@ -207,7 +207,7 @@ object Dedup {
     * DedupSpec) but with ZERO shuffles: shingling, the two md5 digests,
     * the 8 window minima and the band hashes all happen inside one task
     * for each document. Two uses: (a) it is streaming-safe (a stateless
-    * projection, so a readStream of documents can band itself without a
+    * projection, so a stream of documents can band itself without a
     * state store — es16 builds its incremental dedup gate on it), and
     * (b) in batch it removes the shingle-explode shuffle when only the
     * bands are needed. Docs with fewer than 3 tokens emit nothing — the

@@ -22,7 +22,7 @@ import graft.core.{KmerCodec, KmerIter}
   * right-sizes post-shuffle partitions from runtime statistics at every k,
   * and `-partitionredu N` remains the manual override for a fixed width.
   */
-object Dynamic {
+object Dynamic extends QueryFamily {
   private val K1 = 11
   private val K2 = 15
 

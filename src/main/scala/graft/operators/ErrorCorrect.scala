@@ -52,7 +52,7 @@ import graft.Tables._
   * equality joins on the k-mer key; the candidate explosion is linear in
   * read length — no all-pairs anywhere.
   */
-object ErrorCorrect {
+object ErrorCorrect extends QueryFamily {
 
   private def rc(c: Column): Column = reverse(translate(c, "ACGT", "TGCA"))
   private def canon(c: Column): Column = least(c, rc(c))

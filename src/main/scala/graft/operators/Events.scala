@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables._
+import graft.streaming.{EventStreams, Replay, ReplayRunner}
 
 /** Event/time-series layer over the `events` table: time-bucketed
   * aggregation, gap-based sessionization, JSON prop extraction, and
@@ -16,7 +17,7 @@ import graft.Tables._
   * the batch analogue of `flatMapGroupsWithState` session windows (the
   * streaming variants live in graft.streaming).
   */
-object Events {
+object Events extends QueryFamily {
   private def fmt(c: org.apache.spark.sql.Column) =
     date_format(c, "yyyy-MM-dd HH:mm:ss")
 
@@ -28,54 +29,62 @@ object Events {
       |  CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DECIMAL(38,2)) AS DOUBLE) AS total
       |FROM events GROUP BY 1, 2""".stripMargin
 
-  /** Run a streaming query with an explicitly-sized state store.
-    *
-    * The number of state-store partitions is pinned from
-    * `spark.sql.shuffle.partitions` at stream start and then frozen into
-    * the checkpoint — AQE explicitly cannot coalesce stateful streaming
-    * exchanges, so unlike batch, this knob is part of the OPERATOR's
-    * deployment and must be sized to the stream's key space and
-    * throughput, not left at the session-wide batch default. The es*
-    * parity replays are bounded few-batch streams where per-task overhead
-    * (state-store open/commit per partition per microbatch) dominates, so
-    * they run at 4 (measured: the stream-stream joins drop 5.2 -> 3.9 s
-    * at sf0.1 vs 8 partitions, every other es* equal-or-faster, oracle
-    * hashes identical); a production deployment sizes it to sustained
-    * events/sec the same way. Restores the session default afterwards. */
-  /** Scratch-dir reset for the per-batch capture sinks (bounded: replay
-    * checkpoint + a handful of microbatch partitions). */
-  private[operators] def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(rmTree)
-    f.delete(); ()
+  /** The replayed events as typed [[EventStreams.Event]]s (es2, es2a, es3,
+    * es7, es7a). */
+  private def typedEvents(s: SparkSession, dir: String): Dataset[EventStreams.Event] = {
+    import s.implicits._
+    ReplayRunner.parquet(s, dir)
+      .select(col("ts"), col("user_id").as("userId"),
+        col("event_type").as("eventType"), col("value"))
+      .as[EventStreams.Event]
   }
 
-  private[operators] def withStreamPartitions[T](s: SparkSession, n: Int = 4)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val ckptKey = "spark.sql.streaming.checkpointLocation"
-    val prev = s.conf.get(key)
-    val prevCkpt = s.conf.getOption(ckptKey)
-    // Fresh per-call checkpoint ROOT on the fast scratch volume
-    // (graft.Scratch — tmpfs when available): without it every stream
-    // fsyncs its offset/commit logs and state-store deltas to the
-    // java.io.tmpdir disk each micro-batch — pure machinery latency in
-    // the measured ~550 ms/batch floor (guide §6). Fresh per call, so a
-    // stream can never RESUME an earlier invocation's checkpoint (batch
-    // counts stay exactly as before); named/unnamed streams inside one
-    // body get distinct subdirs (queryName / UUID) under the root.
-    // Queries that pass an explicit .option("checkpointLocation")
-    // override this conf, unchanged.
-    val ckptRoot = graft.Scratch.fresh("stream_ckpt")
-    s.conf.set(key, n.toString)
-    s.conf.set(ckptKey, ckptRoot.getAbsolutePath)
-    try body finally {
-      s.conf.set(key, prev)
-      prevCkpt match {
-        case Some(v) => s.conf.set(ckptKey, v)
-        case None => s.conf.unset(ckptKey)
-      }
-      rmTree(ckptRoot)
-    }
+  /** es9–es11's stream-stream join over the ordered replay: clicks and
+    * purchases are two independent sources, each watermarked 3 days —
+    * more than the 2-day join window, so in-window partners are never
+    * evicted before they can match (see [[EventStreams.clickAttribution]]).
+    * `user_id` falls back to the purchase's user for a full-outer
+    * unmatched purchase. */
+  private def clickPurchasePairs(s: SparkSession, d: String, how: String): DataFrame = {
+    val dir = Replay.eventsDir(s, d)
+    val clicks = ReplayRunner.parquet(s, dir).filter(col("event_type") === "click")
+      .select(col("event_id").as("click_id"), col("user_id"), col("ts").as("cts"))
+      .withWatermark("cts", "3 days")
+    val purchases = ReplayRunner.parquet(s, dir).filter(col("event_type") === "purchase")
+      .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
+        col("ts").as("pts"))
+      .withWatermark("pts", "3 days")
+    EventStreams.clickAttribution(clicks, purchases, 2L * 86400 * 1000, how)
+      .select(col("click_id"), col("purchase_id"),
+        coalesce(col("user_id"), col("p_user")).as("user_id"),
+        expr("(unix_micros(pts) - unix_micros(cts)) div 1000").as("gap_ms"))
   }
+
+  /** es1/es13's hourly totals in batch e1's shape. */
+  private def hourRows(t: DataFrame): DataFrame =
+    t.select(fmt(col("hour_ts")).as("hour"), col("event_type"), col("n"), col("total"))
+
+  /** es17/es17b/es18's session windows in batch e8's shape. */
+  private def sessionWindowRows(t: DataFrame): DataFrame =
+    t.select(col("user_id"),
+      unix_micros(col("sw.start")).as("start_us"),
+      unix_micros(col("sw.end")).as("end_us"),
+      col("n_events"), col("sum_dec").cast("double").as("sum_value"))
+
+  /** es2/es2a's emitted sessions in batch e2's shape. Emitted
+    * ClosedSessions carry no ordinal; sessions of one user are
+    * time-disjoint, so a row_number by startMs rebuilds e2's session_id
+    * (its running gap-flag sum) exactly. */
+  private def sessionRows(t: DataFrame): DataFrame = {
+    val byStart = Window.partitionBy(col("userId")).orderBy(col("startMs"))
+    t.withColumn("session_id", row_number().over(byStart).cast("long"))
+      .select(col("userId").as("user_id"), col("session_id"),
+        col("nEvents").as("n_events"),
+        (col("endMs") - col("startMs")).as("dur_ms"),
+        fmt(timestamp_millis(col("startMs"))).as("start_ts"))
+  }
+
+  private val SessionGapMs = 30L * 60 * 1000
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // -- hourly tumbling aggregation ---------------------------------------
@@ -88,32 +97,18 @@ object Events {
 
     // -- es1: batch-stream parity through the correctness gate -------------
     // the Structured Streaming hourly pipeline ([[EventStreams
-    // .hourlyTotals]]: readStream file source -> event-time window agg)
-    // run to completion with Trigger.AvailableNow in Complete mode lands
+    // .hourlyTotals]]: file stream source -> event-time window agg) run
+    // to completion ([[ReplayRunner]]) in Complete mode lands
     // exactly the batch e1 answer in a memory sink — so the STREAMING
     // operator is proven against the same DuckDB oracle as e1, not just
     // specs. The memory sink holds only the hour x event_type aggregate
-    // (tiny at any scale); a production run would writeStream to parquet.
+    // (tiny at any scale); a production run would stream to parquet.
     // The input is the cached time-bucketed [[graft.streaming.Replay]] dir
     // (4 event-time-ordered microbatches), so the windowed state is
     // genuinely built incrementally across batches.
     "es1_stream_hourly" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val streamDir = graft.streaming.Replay.eventsDir(s, d)
-      val sch = s.read.parquet(streamDir).schema
-      val ev = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", "1").parquet(streamDir)
-      val name = "es1_hourly_mem"
-      s.catalog.dropTempView(name)
-      withStreamPartitions(s) {
-        val q = graft.streaming.EventStreams.hourlyTotals(ev)
-          .writeStream.format("memory").queryName(name)
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      s.table(name)
-        .select(fmt(col("hour_ts")).as("hour"), col("event_type"),
-          col("n"), col("total"))
+      val ev = ReplayRunner.parquet(s, Replay.eventsDir(s, d))
+      hourRows(ReplayRunner.memory(EventStreams.hourlyTotals(ev), "es1_hourly_mem", "complete"))
     }),
 
     // -- es17: NATIVE session_window aggregation in streaming --------------
@@ -125,23 +120,9 @@ object Events {
     // exactly batch e8's answer (same oracle, same hash) after the
     // ordered replay runs to completion in Complete mode.
     "es17_stream_session_window" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val streamDir = graft.streaming.Replay.eventsDir(s, d)
-      val sch = s.read.parquet(streamDir).schema
-      val ev = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", "1").parquet(streamDir)
-      val name = "es17_sw_mem"
-      s.catalog.dropTempView(name)
-      withStreamPartitions(s) {
-        val q = graft.streaming.EventStreams.sessionWindowTotals(ev)
-          .writeStream.format("memory").queryName(name)
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      s.table(name).select(col("user_id"),
-        unix_micros(col("sw.start")).as("start_us"),
-        unix_micros(col("sw.end")).as("end_us"),
-        col("n_events"), col("sum_dec").cast("double").as("sum_value"))
+      val ev = ReplayRunner.parquet(s, Replay.eventsDir(s, d))
+      sessionWindowRows(ReplayRunner.memory(
+        EventStreams.sessionWindowTotals(ev), "es17_sw_mem", "complete"))
     }),
 
     // -- es17b: session-window store under OUT-OF-ORDER bridging arrival ---
@@ -155,23 +136,9 @@ object Events {
     // still hash-match the same batch session_window oracle as es17 —
     // merge correctness proven through the gate, not by argument.
     "es17b_stream_session_ooo" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val streamDir = graft.streaming.Replay.eventsDir(s, d, deferOutOfOrder = true)
-      val sch = s.read.parquet(streamDir).schema
-      val ev = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", "1").parquet(streamDir)
-      val name = "es17b_sw_mem"
-      s.catalog.dropTempView(name)
-      withStreamPartitions(s) {
-        val q = graft.streaming.EventStreams.sessionWindowTotals(ev)
-          .writeStream.format("memory").queryName(name)
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      s.table(name).select(col("user_id"),
-        unix_micros(col("sw.start")).as("start_us"),
-        unix_micros(col("sw.end")).as("end_us"),
-        col("n_events"), col("sum_dec").cast("double").as("sum_value"))
+      val ev = ReplayRunner.parquet(s, Replay.eventsDir(s, d, deferOutOfOrder = true))
+      sessionWindowRows(ReplayRunner.memory(
+        EventStreams.sessionWindowTotals(ev), "es17b_sw_mem", "complete"))
     }),
 
     // -- es18: native session_window FINALIZATION (append + watermark) -----
@@ -185,24 +152,9 @@ object Events {
     // replay finalizes them; the appended union must hash-match the same
     // batch session_window oracle as es17.
     "es18_session_window_append" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val gapMs = 30L * 60 * 1000
-      val streamDir = graft.streaming.Replay.eventsDir(s, d, sentinelGapMs = gapMs)
-      val sch = s.read.parquet(streamDir).schema
-      val ev = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", "1").parquet(streamDir)
-      val name = "es18_swa_mem"
-      s.catalog.dropTempView(name)
-      withStreamPartitions(s) {
-        val q = graft.streaming.EventStreams.sessionWindowTotalsAppend(ev)
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      s.table(name).select(col("user_id"),
-        unix_micros(col("sw.start")).as("start_us"),
-        unix_micros(col("sw.end")).as("end_us"),
-        col("n_events"), col("sum_dec").cast("double").as("sum_value"))
+      val ev = ReplayRunner.parquet(s, Replay.eventsDir(s, d, sentinelGapMs = SessionGapMs))
+      sessionWindowRows(ReplayRunner.memory(
+        EventStreams.sessionWindowTotalsAppend(ev), "es18_swa_mem", "append"))
     }),
 
     // -- es13: the SAME pipeline on the RocksDB state-store backend --------
@@ -210,35 +162,23 @@ object Events {
     // the deployment answer is Spark's RocksDB state store (state lives
     // off-heap/on-disk per partition, checkpointed incrementally). Swapping
     // the provider must be a pure deployment knob: es13 runs es1's exact
-    // readStream -> window-agg pipeline under
+    // file-stream -> window-agg pipeline under
     // RocksDBStateStoreProvider and must hash-match the SAME DuckDB oracle
     // — proving results are backend-invariant through the gate, not by
     // argument. (RocksDbStateSpec additionally proves a stateful
     // mapGroupsWithState pipeline and checkpoint restart on RocksDB.)
     "es13_stream_rocksdb" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val streamDir = graft.streaming.Replay.eventsDir(s, d)
-      val sch = s.read.parquet(streamDir).schema
-      val ev = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", "1").parquet(streamDir)
-      val name = "es13_rocksdb_mem"
-      s.catalog.dropTempView(name)
+      val ev = ReplayRunner.parquet(s, Replay.eventsDir(s, d))
       val key = "spark.sql.streaming.stateStore.providerClass"
       val prev = s.conf.getOption(key)
       s.conf.set(key,
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try withStreamPartitions(s) {
-        val q = graft.streaming.EventStreams.hourlyTotals(ev)
-          .writeStream.format("memory").queryName(name)
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      } finally prev match {
+      try hourRows(ReplayRunner.memory(
+        EventStreams.hourlyTotals(ev), "es13_rocksdb_mem", "complete"))
+      finally prev match {
         case Some(v) => s.conf.set(key, v)
         case None => s.conf.unset(key)
       }
-      s.table(name)
-        .select(fmt(col("hour_ts")).as("hour"), col("event_type"),
-          col("n"), col("total"))
     }),
 
     // -- e17: SCD-2 interval build (type-2 slowly-changing dimension) ------
@@ -283,31 +223,9 @@ object Events {
     // the SAME DuckDB oracle as batch e2. State crosses 4 real state-store
     // commits, which is the seam a single-batch replay would never test.
     "es2_stream_sessionize" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      import s.implicits._
-      val gapMs = 30L * 60 * 1000
-      val streamDir = graft.streaming.Replay.eventsDir(s, d, sentinelGapMs = gapMs)
-      val sch = s.read.parquet(streamDir).schema
-      val ev = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", "1").parquet(streamDir)
-        .select(col("ts"), col("user_id").as("userId"),
-          col("event_type").as("eventType"), col("value"))
-        .as[graft.streaming.EventStreams.Event]
-      val name = "es2_sessions_mem"
-      s.catalog.dropTempView(name)
-      withStreamPartitions(s) {
-        val q = graft.streaming.EventStreams.sessionize(ev, gapMs)
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      val byStart = Window.partitionBy(col("userId")).orderBy(col("startMs"))
-      s.table(name)
-        .withColumn("session_id", row_number().over(byStart).cast("long"))
-        .select(col("userId").as("user_id"), col("session_id"),
-          col("nEvents").as("n_events"),
-          (col("endMs") - col("startMs")).as("dur_ms"),
-          fmt(timestamp_millis(col("startMs"))).as("start_ts"))
+      val ev = typedEvents(s, Replay.eventsDir(s, d, sentinelGapMs = SessionGapMs))
+      sessionRows(ReplayRunner.memory(
+        EventStreams.sessionize(ev, SessionGapMs), "es2_sessions_mem", "append"))
     }),
 
     // -- es2a: APPEND-MODE EMISSION TIMING for the sessionizer -------------
@@ -322,39 +240,9 @@ object Events {
     // (not all at the end), and no session row was ever re-emitted —
     // Append mode's exactly-once emission contract, per batch, on disk.
     "es2a_sessionize_batches" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      import s.implicits._
-      val gapMs = 30L * 60 * 1000
-      val streamDir = graft.streaming.Replay.eventsDir(s, d, sentinelGapMs = gapMs)
-      val root = s"${graft.Scratch.dir(d)}/es2a"
-      rmTree(new java.io.File(root))
-      val sch = s.read.parquet(streamDir).schema
-      val ev = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", "1").parquet(streamDir)
-        .select(col("ts"), col("user_id").as("userId"),
-          col("event_type").as("eventType"), col("value"))
-        .as[graft.streaming.EventStreams.Event]
-      withStreamPartitions(s) {
-        val q = graft.streaming.EventStreams.sessionize(ev, gapMs)
-          .writeStream
-          .outputMode("append")
-          .option("checkpointLocation", s"$root/ckpt")
-          .foreachBatch {
-            (b: org.apache.spark.sql.Dataset[graft.streaming.EventStreams.ClosedSession],
-             id: Long) =>
-              b.write.mode("overwrite").parquet(f"$root/out/batch_id=$id%03d")
-              ()
-          }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      val byStart = Window.partitionBy(col("userId")).orderBy(col("startMs"))
-      s.read.parquet(s"$root/out").drop("batch_id")
-        .withColumn("session_id", row_number().over(byStart).cast("long"))
-        .select(col("userId").as("user_id"), col("session_id"),
-          col("nEvents").as("n_events"),
-          (col("endMs") - col("startMs")).as("dur_ms"),
-          fmt(timestamp_millis(col("startMs"))).as("start_ts"))
+      val ev = typedEvents(s, Replay.eventsDir(s, d, sentinelGapMs = SessionGapMs))
+      sessionRows(ReplayRunner.capture(EventStreams.sessionize(ev, SessionGapMs),
+        s"${graft.Scratch.dir(d)}/es2a/out", "append").drop("batch_id"))
     }),
 
     // -- es3: STATEFUL streaming funnel through the oracle gate ------------
@@ -365,24 +253,9 @@ object Events {
     // sentinel needed. Filtered to funnel entrants (first stage reached)
     // and shaped to batch e10's columns, it must hash-match e10's oracle.
     "es3_stream_funnel" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      import s.implicits._
-      val streamDir = graft.streaming.Replay.eventsDir(s, d)
-      val sch = s.read.parquet(streamDir).schema
-      val ev = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", "1").parquet(streamDir)
-        .select(col("ts"), col("user_id").as("userId"),
-          col("event_type").as("eventType"), col("value"))
-        .as[graft.streaming.EventStreams.Event]
-      val name = "es3_funnel_mem"
-      s.catalog.dropTempView(name)
-      withStreamPartitions(s) {
-        val q = graft.streaming.EventStreams.funnelStream(ev)
-          .writeStream.format("memory").queryName(name)
-          .outputMode("update").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      s.table(name).groupBy(col("userId"))
+      val ev = typedEvents(s, Replay.eventsDir(s, d))
+      ReplayRunner.memory(EventStreams.funnelStream(ev), "es3_funnel_mem", "update")
+        .groupBy(col("userId"))
         .agg(max("vUs").as("v"), max("cUs").as("c"), max("pUs").as("p"))
         .filter(col("v") >= 0)
         .select(col("userId").as("user_id"), col("v").as("v_us"),
@@ -404,21 +277,11 @@ object Events {
     // the EXACT dedup — the state-bound/completeness trade only starts
     // past the horizon.
     "es4_stream_dedup" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val streamDir = graft.streaming.Replay.documentsDir(s, d)
-      val sch = s.read.parquet(streamDir).schema
-      val docs = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", "1").parquet(streamDir)
-      val name = "es4_dedup_mem"
-      s.catalog.dropTempView(name)
-      withStreamPartitions(s) {
-        val q = graft.streaming.EventStreams
-          .dedupStream(docs, "ts", "text", watermark = "24 hours")
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      s.table(name).select(col("h"), col("doc_id").as("keeper"))
+      val docs = ReplayRunner.parquet(s, Replay.documentsDir(s, d))
+      ReplayRunner.memory(
+        EventStreams.dedupStream(docs, "ts", "text", watermark = "24 hours"),
+        "es4_dedup_mem", "append")
+        .select(col("h"), col("doc_id").as("keeper"))
     }),
 
     // -- es16: streaming LSH near-dup gate through the oracle gate ---------
@@ -431,24 +294,12 @@ object Events {
     // content hashes; this gate catches NEAR-dups a content hash never
     // sees. Complete-mode fixpoint must match the batch band left-join.
     "es16_stream_lsh_dedup" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val streamDir = graft.streaming.Replay.incrementalDocsDir(s, d)
-      val sch = s.read.parquet(streamDir).schema
-      val docs = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", "1").parquet(streamDir)
+      val docs = ReplayRunner.parquet(s, Replay.incrementalDocsDir(s, d))
       val idx = Dedup.bandRows(
           documents(s, d).filter(col("doc_id") % 2 === 0)
             .select("doc_id", "text"))
         .localCheckpoint() // static side: materialized once, probed per batch
-      val name = "es16_lsh_mem"
-      s.catalog.dropTempView(name)
-      withStreamPartitions(s) {
-        val q = graft.streaming.EventStreams.lshGateStream(docs, idx)
-          .writeStream.format("memory").queryName(name)
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      s.table(name)
+      ReplayRunner.memory(EventStreams.lshGateStream(docs, idx), "es16_lsh_mem", "complete")
     }),
 
     // -- es5: streaming ingest curation through the oracle gate ------------
@@ -458,21 +309,10 @@ object Events {
     // replay. The oracle re-states the gates in DuckDB and keeps min
     // doc_id per surviving content hash.
     "es5_stream_curate" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val streamDir = graft.streaming.Replay.documentsDir(s, d)
-      val sch = s.read.parquet(streamDir).schema
-      val docs = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", "1").parquet(streamDir)
-      val name = "es5_curate_mem"
-      s.catalog.dropTempView(name)
-      withStreamPartitions(s) {
-        val q = graft.streaming.EventStreams
-          .curateStream(docs, "ts", watermark = "24 hours")
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      s.table(name).select(col("h"), col("doc_id").as("keeper"))
+      val docs = ReplayRunner.parquet(s, Replay.documentsDir(s, d))
+      ReplayRunner.memory(EventStreams.curateStream(docs, "ts", watermark = "24 hours"),
+        "es5_curate_mem", "append")
+        .select(col("h"), col("doc_id").as("keeper"))
     }),
 
     // -- es6: streaming k-mer counter through the oracle gate --------------
@@ -484,22 +324,11 @@ object Events {
     // (KmerIter over packed longs) crosses real microbatch boundaries —
     // counts accumulate in the state store, not in one shuffle.
     "es6_stream_kmer_count" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
       import s.implicits._
-      val streamDir = graft.streaming.Replay.documentsDir(s, d, injectDups = false)
-      val sch = s.read.parquet(streamDir).schema
-      val reads = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", "1").parquet(streamDir)
+      val reads = ReplayRunner.parquet(s, Replay.documentsDir(s, d, injectDups = false))
         .select(Genomics.dna32(col("doc_id")).cast("string")).as[String]
-      val name = "es6_kmer_mem"
-      s.catalog.dropTempView(name)
-      withStreamPartitions(s) {
-        val q = graft.streaming.EventStreams.kmerCountStream(reads, 15)
-          .writeStream.format("memory").queryName(name)
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      Genomics.decodeCounts(s.table(name), 15)
+      Genomics.decodeCounts(ReplayRunner.memory(
+        EventStreams.kmerCountStream(reads, 15), "es6_kmer_mem", "complete"), 15)
     }),
 
     // -- es7: running per-user stats through the oracle gate ---------------
@@ -510,24 +339,9 @@ object Events {
     // e1's decimal(18,2) summing convention exactly, so the result must
     // hash-match a plain batch GROUP BY user_id in DuckDB.
     "es7_stream_user_stats" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      import s.implicits._
-      val streamDir = graft.streaming.Replay.eventsDir(s, d)
-      val sch = s.read.parquet(streamDir).schema
-      val ev = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", "1").parquet(streamDir)
-        .select(col("ts"), col("user_id").as("userId"),
-          col("event_type").as("eventType"), col("value"))
-        .as[graft.streaming.EventStreams.Event]
-      val name = "es7_ustats_mem"
-      s.catalog.dropTempView(name)
-      withStreamPartitions(s) {
-        val q = graft.streaming.EventStreams.runningUserStats(ev)
-          .writeStream.format("memory").queryName(name)
-          .outputMode("update").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      s.table(name).groupBy(col("userId"))
+      val ev = typedEvents(s, Replay.eventsDir(s, d))
+      ReplayRunner.memory(EventStreams.runningUserStats(ev), "es7_ustats_mem", "update")
+        .groupBy(col("userId"))
         .agg(max(struct(col("nEvents"), col("totalCents"))).as("m"))
         .select(col("userId").as("user_id"), col("m.nEvents").as("n_events"),
           (col("m.totalCents") / 100.0).as("total"))
@@ -547,36 +361,14 @@ object Events {
     // re-emitted across batches, intermediate emissions genuinely
     // superseded).
     "es7a_user_stats_batches" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      import s.implicits._
-      val streamDir = graft.streaming.Replay.eventsDir(s, d)
-      val root = s"${graft.Scratch.dir(d)}/es7a"
-      rmTree(new java.io.File(root))
-      val sch = s.read.parquet(streamDir).schema
-      val ev = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", "1").parquet(streamDir)
-        .select(col("ts"), col("user_id").as("userId"),
-          col("event_type").as("eventType"), col("value"))
-        .as[graft.streaming.EventStreams.Event]
-      withStreamPartitions(s) {
-        val q = graft.streaming.EventStreams.runningUserStats(ev)
-          .writeStream
-          .outputMode("update")
-          .option("checkpointLocation", s"$root/ckpt")
-          .foreachBatch {
-            (b: org.apache.spark.sql.Dataset[graft.streaming.EventStreams.UserStats],
-             id: Long) =>
-              b.write.mode("overwrite").parquet(f"$root/out/batch_id=$id%03d")
-              ()
-          }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+      val ev = typedEvents(s, Replay.eventsDir(s, d))
       // last-write-wins: batch_id leads the struct, so max == the row
       // from the latest batch that updated this user (one row per
       // (user, batch) — mapGroupsWithState emits each group at most once
       // per batch, so the ordering is total)
-      s.read.parquet(s"$root/out").groupBy(col("userId"))
+      ReplayRunner.capture(EventStreams.runningUserStats(ev),
+          s"${graft.Scratch.dir(d)}/es7a/out", "update")
+        .groupBy(col("userId"))
         .agg(max(struct(col("batch_id"), col("nEvents"), col("totalCents"))).as("m"))
         .select(col("userId").as("user_id"), col("m.nEvents").as("n_events"),
           (col("m.totalCents") / 100.0).as("total"))
@@ -589,27 +381,15 @@ object Events {
     // Complete-mode aggregation rolls the enriched stream up by market
     // segment. Must hash-match the same join+rollup in DuckDB.
     "es8_stream_enrich" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val streamDir = graft.streaming.Replay.eventsDir(s, d)
-      val sch = s.read.parquet(streamDir).schema
-      val ev = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", "1").parquet(streamDir)
+      val ev = ReplayRunner.parquet(s, Replay.eventsDir(s, d))
         .select(col("user_id").as("userId"), col("event_type"), col("value"))
       val dim = customer(s, d)
         .select(col("c_custkey").as("userId"), col("c_mktsegment"))
-      val name = "es8_enrich_mem"
-      s.catalog.dropTempView(name)
-      withStreamPartitions(s) {
-        val q = graft.streaming.EventStreams.enrich(ev, dim)
-          .groupBy(coalesce(col("c_mktsegment"), lit("<none>")).as("segment"))
-          .agg(count(lit(1)).as("n"),
-            sum(col("value").cast("decimal(18,2)")).cast("decimal(38,2)")
-              .cast("double").as("total"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      s.table(name)
+      ReplayRunner.memory(EventStreams.enrich(ev, dim)
+        .groupBy(coalesce(col("c_mktsegment"), lit("<none>")).as("segment"))
+        .agg(count(lit(1)).as("n"),
+          sum(col("value").cast("decimal(18,2)")).cast("decimal(38,2)")
+            .cast("double").as("total")), "es8_enrich_mem", "complete")
     }),
 
     // -- es15: streaming data-quality monitor through the oracle gate ------
@@ -620,28 +400,16 @@ object Events {
     // stated over the whole table in DuckDB (every metric is an
     // associative sum/min/max, so the microbatch split cannot show).
     "es15_stream_dq" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val streamDir = graft.streaming.Replay.eventsDir(s, d)
-      val sch = s.read.parquet(streamDir).schema
-      val ev = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", "1").parquet(streamDir)
+      val ev = ReplayRunner.parquet(s, Replay.eventsDir(s, d))
         .select(col("ts"), col("event_type"), col("user_id"), col("value"))
-      val name = "es15_dq_mem"
-      s.catalog.dropTempView(name)
-      withStreamPartitions(s) {
-        val q = graft.streaming.EventStreams.dqMonitor(ev)
-          .writeStream.format("memory").queryName(name)
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      s.table(name)
+      ReplayRunner.memory(EventStreams.dqMonitor(ev), "es15_dq_mem", "complete")
     }),
 
     // -- es9: STREAM-STREAM interval join through the oracle gate ----------
-    // [[EventStreams.clickAttribution]]: two independent readStream
+    // [[EventStreams.clickAttribution]]: two independent stream
     // sources over the same ordered replay (clicks / purchases slices),
     // watermarked on both sides, inner-joined on user with the purchase
-    // bounded to 30 min after the click. This is the one Structured
+    // bounded to 2 days after the click. This is the one Structured
     // Streaming join class es1-es8 didn't cover (stateful BUFFERED join:
     // both sides hold state, eviction is derived from the watermark +
     // range condition — where stream-stream join bugs actually live).
@@ -652,34 +420,8 @@ object Events {
     // sf0.01) — a 30-min window would make every match intra-batch and
     // leave the state path untested. The emitted set on the bounded
     // replay must hash-match the batch DuckDB interval join.
-    "es9_stream_stream_join" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val streamDir = graft.streaming.Replay.eventsDir(s, d)
-      val sch = s.read.parquet(streamDir).schema
-      def src() = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", "1").parquet(streamDir)
-      // watermark (3 d) > join window (2 d): in-window partners are
-      // never evicted before they can match (see clickAttribution's doc)
-      val clicks = src().filter(col("event_type") === "click")
-        .select(col("event_id").as("click_id"), col("user_id"), col("ts").as("cts"))
-        .withWatermark("cts", "3 days")
-      val purchases = src().filter(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
-          col("ts").as("pts"))
-        .withWatermark("pts", "3 days")
-      val name = "es9_ssjoin_mem"
-      s.catalog.dropTempView(name)
-      withStreamPartitions(s) {
-        val q = graft.streaming.EventStreams
-          .clickAttribution(clicks, purchases, 2L * 86400 * 1000)
-          .select(col("click_id"), col("purchase_id"), col("user_id"),
-            expr("(unix_micros(pts) - unix_micros(cts)) div 1000").as("gap_ms"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      s.table(name)
-    }),
+    "es9_stream_stream_join" -> ((s, d) =>
+      ReplayRunner.memory(clickPurchasePairs(s, d, "inner"), "es9_ssjoin_mem", "append")),
 
     // -- es9a: APPEND-MODE EMISSION TIMING for the stream-stream join ------
     // es9 proves the accumulated inner-join result; es9a additionally
@@ -692,38 +434,9 @@ object Events {
     // advancing watermark really discards buffered rows mid-replay, the
     // property that bounds join state at 100 TB/day). The union across
     // partitions hash-matches the same DuckDB interval-join oracle as es9.
-    "es9a_ssjoin_batches" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val streamDir = graft.streaming.Replay.eventsDir(s, d)
-      val root = s"${graft.Scratch.dir(d)}/es9a"
-      rmTree(new java.io.File(root))
-      val sch = s.read.parquet(streamDir).schema
-      def src() = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", "1").parquet(streamDir)
-      val clicks = src().filter(col("event_type") === "click")
-        .select(col("event_id").as("click_id"), col("user_id"), col("ts").as("cts"))
-        .withWatermark("cts", "3 days")
-      val purchases = src().filter(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
-          col("ts").as("pts"))
-        .withWatermark("pts", "3 days")
-      withStreamPartitions(s) {
-        val q = graft.streaming.EventStreams
-          .clickAttribution(clicks, purchases, 2L * 86400 * 1000)
-          .select(col("click_id"), col("purchase_id"), col("user_id"),
-            expr("(unix_micros(pts) - unix_micros(cts)) div 1000").as("gap_ms"))
-          .writeStream
-          .outputMode("append")
-          .option("checkpointLocation", s"$root/ckpt")
-          .foreachBatch { (b: DataFrame, id: Long) =>
-            b.write.mode("overwrite").parquet(f"$root/out/batch_id=$id%03d")
-            ()
-          }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      s.read.parquet(s"$root/out").drop("batch_id")
-    }),
+    "es9a_ssjoin_batches" -> ((s, d) =>
+      ReplayRunner.capture(clickPurchasePairs(s, d, "inner"),
+        s"${graft.Scratch.dir(d)}/es9a/out", "append").drop("batch_id")),
 
     // -- es10: stream-stream LEFT OUTER join -------------------------------
     // the null-emitting half of the es9 join class — where the HARD
@@ -738,32 +451,8 @@ object Events {
     // state at shutdown and emit nothing — precisely Spark's rule, and
     // precisely what a resumed run would later emit). Hash-matching this
     // proves the finalization boundary, not just the join.
-    "es10_stream_outer_join" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val streamDir = graft.streaming.Replay.eventsDir(s, d)
-      val sch = s.read.parquet(streamDir).schema
-      def src() = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", "1").parquet(streamDir)
-      val clicks = src().filter(col("event_type") === "click")
-        .select(col("event_id").as("click_id"), col("user_id"), col("ts").as("cts"))
-        .withWatermark("cts", "3 days")
-      val purchases = src().filter(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
-          col("ts").as("pts"))
-        .withWatermark("pts", "3 days")
-      val name = "es10_outer_mem"
-      s.catalog.dropTempView(name)
-      withStreamPartitions(s) {
-        val q = graft.streaming.EventStreams
-          .clickAttribution(clicks, purchases, 2L * 86400 * 1000, "left_outer")
-          .select(col("click_id"), col("purchase_id"), col("user_id"),
-            expr("(unix_micros(pts) - unix_micros(cts)) div 1000").as("gap_ms"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      s.table(name)
-    }),
+    "es10_stream_outer_join" -> ((s, d) =>
+      ReplayRunner.memory(clickPurchasePairs(s, d, "left_outer"), "es10_outer_mem", "append")),
 
     // -- es11: stream-stream FULL OUTER join -------------------------------
     // completes the stream-stream join family (inner es9, left es10):
@@ -775,33 +464,9 @@ object Events {
     // Both rules are stated verbatim in the oracle over the deterministic
     // end-of-replay watermark, so the hash match pins the finalization
     // boundary on BOTH state stores at once.
-    "es11_stream_full_outer" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val streamDir = graft.streaming.Replay.eventsDir(s, d)
-      val sch = s.read.parquet(streamDir).schema
-      def src() = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", "1").parquet(streamDir)
-      val clicks = src().filter(col("event_type") === "click")
-        .select(col("event_id").as("click_id"), col("user_id"), col("ts").as("cts"))
-        .withWatermark("cts", "3 days")
-      val purchases = src().filter(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
-          col("ts").as("pts"))
-        .withWatermark("pts", "3 days")
-      val name = "es11_full_outer_mem"
-      s.catalog.dropTempView(name)
-      withStreamPartitions(s) {
-        val q = graft.streaming.EventStreams
-          .clickAttribution(clicks, purchases, 2L * 86400 * 1000, "full_outer")
-          .select(col("click_id"), col("purchase_id"),
-            coalesce(col("user_id"), col("p_user")).as("user_id"),
-            expr("(unix_micros(pts) - unix_micros(cts)) div 1000").as("gap_ms"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      s.table(name)
-    }),
+    "es11_stream_full_outer" -> ((s, d) =>
+      ReplayRunner.memory(
+        clickPurchasePairs(s, d, "full_outer"), "es11_full_outer_mem", "append")),
 
     // -- 30-minute-gap sessionization (lag + running sum of gap flags) -----
     "e2_sessionize" -> ((s, d) => {

@@ -23,7 +23,7 @@ import graft.core.{KmerCodec, KmerIter}
   * k-byte string, and decode runs only on the post-agg (much smaller) side.
   * This mirrors `ReflexivDataFrameCounter.java:198-209` (count then decode).
   */
-object Genomics {
+object Genomics extends QueryFamily {
   private val HEX = "0123456789abcdef"
   private val ACGT = "ACGTACGTACGTACGT"
 

@@ -4,15 +4,26 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
 import graft.sources.Fastq
+import graft.streaming.{EventStreams, ReplayRunner}
 
 /** End-to-end IO round-trips, oracle-checked: the FASTQ fabricate -> write
   * -> read -> parse -> count path (P12+S1+P1+P14+A1) and the FASTA
   * sink -> source path (P11+S6+S4). Files land under the repo's target dir
   * (deterministic per scale factor, overwritten each run).
   */
-object GenomicsIO {
+object GenomicsIO extends QueryFamily {
   private def ioDir(d: String) =
     graft.Scratch.dir(d)
+
+  /** es12/es19: the k-mer state-store count over a dir of FASTQ shards,
+    * one shard per micro-batch, in batch g1's shape. */
+  private def streamedKmerCounts(s: SparkSession, dir: String, name: String): DataFrame = {
+    import s.implicits._
+    val reads = ReplayRunner.fastq(s, dir).select(col("seq")).as[String]
+    Genomics.decodeCounts(ReplayRunner.memory(
+      EventStreams.kmerCountStream(Fastq.guardReads(reads, minLen = 15), 15),
+      name, "complete"), 15)
+  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // -- P12 -> S1 -> P1 -> P14 -> A1: counts must equal the direct path ---
@@ -106,64 +117,38 @@ object GenomicsIO {
     // -- es12: the DSv2 connector's STREAMING path through the gate --------
     // sequencing-run ingestion: the machine drops FASTQ shards into a
     // directory and the pipeline tails it. Here the same 9000-read corpus
-    // lands as 4 shards, read back via readStream.format("fastq") with
-    // maxFilesPerTrigger=1 (admission control) — 4 real microbatches
+    // lands as 4 shards, tailed one shard per trigger through the
+    // `fastq` source ([[ReplayRunner.fastq]]) — 4 real microbatches
     // through the k-mer state-store aggregation — and the Complete-mode
     // fixpoint must hash-match the identical batch g1 oracle. Gates the
     // connector's offset log, per-batch file planning, AND the streaming
     // column-pruning path (only `seq` leaves the reader) at once.
     "es12_stream_fastq_dsv2" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      import s.implicits._
       val tmp = s"${ioDir(d)}/fastq_stream"
       val seqs = documents(s, d).select(Genomics.dna32(col("doc_id")).as("read"))
       // repartition BEFORE fabrication: each read's 4 lines stay together
       // inside its partition, so every part-file is a whole FASTQ shard
       Fastq.toFastqLines(seqs.repartition(4)).write.mode("overwrite").text(tmp)
-      val name = "es12_fastq_mem"
-      s.catalog.dropTempView(name)
-      val reads = s.readStream.format("fastq").option("maxFilesPerTrigger", "1")
-        .load(tmp).select(col("seq")).as[String]
-      Events.withStreamPartitions(s) {
-        val q = graft.streaming.EventStreams
-          .kmerCountStream(Fastq.guardReads(reads, minLen = 15), 15)
-          .writeStream.format("memory").queryName(name)
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      Genomics.decodeCounts(s.table(name), 15)
+      streamedKmerCounts(s, tmp, "es12_fastq_mem")
     }),
 
     // -- es19: STREAMING ingestion of compressed .gb4z shards --------------
     // es12's directory-tailing shape with the bytes on disk COMPRESSED:
     // four block-indexed LZ4 containers ([[graft.sources.BlockLz4
     // .writeDir]] — one shard per partition, records fabricated after the
-    // repartition so none straddles a shard), tailed via
-    // readStream.format("fastq") with maxFilesPerTrigger=1. Each
+    // repartition so none straddles a shard), tailed one shard per
+    // trigger through the `fastq` source ([[ReplayRunner.fastq]]). Each
     // whole-file streaming partition resolves its block range from the
     // container footer; 4 real microbatches cross the k-mer state store
     // and the Complete-mode fixpoint must hash-match the same batch g1
     // oracle — the container's batch path is f21, this gates its
     // STREAMING path end to end.
     "es19_stream_blz4" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      import s.implicits._
       val tmp = s"${ioDir(d)}/fastq_stream_blz4"
       val seqs = documents(s, d).select(Genomics.dna32(col("doc_id")).as("read"))
       graft.sources.BlockLz4.writeDir(
         Fastq.toFastqLines(seqs.repartition(4)), tmp, blockBytes = 16 * 1024)
-      val name = "es19_blz4_mem"
-      s.catalog.dropTempView(name)
-      val reads = s.readStream.format("fastq").option("maxFilesPerTrigger", "1")
-        .load(tmp).select(col("seq")).as[String]
-      Events.withStreamPartitions(s) {
-        val q = graft.streaming.EventStreams
-          .kmerCountStream(Fastq.guardReads(reads, minLen = 15), 15)
-          .writeStream.format("memory").queryName(name)
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      Genomics.decodeCounts(s.table(name), 15)
+      streamedKmerCounts(s, tmp, "es19_blz4_mem")
     }),
 
     // -- es20: STREAMING .gb4z SINK with exactly-once shard commit ---------
@@ -179,29 +164,21 @@ object GenomicsIO {
     // the re-ingested shards must hash-match the same batch g1 oracle.
     // Gb4zSinkSpec adds the kill-restart and orphan-exclusion halves.
     "es20_stream_blz4_sink" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
       import s.implicits._
       val root = s"${ioDir(d)}/blz4_sink"
-      Events.rmTree(new java.io.File(root))
+      graft.Scratch.delete(root)
       val srcDir = s"$root/src"
       val seqs = documents(s, d).select(Genomics.dna32(col("doc_id")).as("read"))
       graft.sources.BlockLz4.writeDir(
         Fastq.toFastqLines(seqs.repartition(4)), srcDir, blockBytes = 16 * 1024)
       val sinkDir = s"$root/out"
-      val q = s.readStream.format("fastq").option("maxFilesPerTrigger", "1")
-        .load(srcDir)
-        .writeStream
-        .option("checkpointLocation", s"$root/ckpt")
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          // records fabricated AFTER the repartition (the sink contract:
-          // a 4-line record never straddles shards)
-          graft.sources.BlockLz4.writeBatch(
-            Fastq.toFastqLines(b.select(col("seq").as("read")).repartition(2)),
-            sinkDir, id, blockBytes = 8 * 1024)
-          ()
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      ReplayRunner.commit(ReplayRunner.fastq(s, srcDir)) { (_, b, id) =>
+        // records fabricated AFTER the repartition (the sink contract:
+        // a 4-line record never straddles shards)
+        graft.sources.BlockLz4.writeBatch(
+          Fastq.toFastqLines(b.select(col("seq").as("read")).repartition(2)),
+          sinkDir, id, blockBytes = 8 * 1024)
+      }
       val glob = graft.sources.BlockLz4.committedShardsGlob(
         s.sessionState.newHadoopConf(), sinkDir)
         .getOrElse(sys.error(s"es20: no committed manifests under $sinkDir"))

@@ -11,7 +11,7 @@ import graft.Tables._
   * solid anchors and emit the bridging read fragment for re-union into the
   * assembly loop, `ReflexivDSMain.java:585-670`).
   */
-object GraphOps {
+object GraphOps extends QueryFamily {
   private val K = 7
 
   /** The union-find task's only row when it overflows: component > node,

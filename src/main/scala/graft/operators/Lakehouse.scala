@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.streaming.{Replay, ReplayRunner}
 
 /** Lakehouse-layout operators: the table-layout and summary-maintenance
   * moves a 100 TB deployment makes so that queries stop paying for the
@@ -16,7 +17,7 @@ import graft.Tables._
   * Exchange under the bucketed join, delta-only scan for the incremental
   * pass) are pinned by LakehouseSpec / PlanAuditSpec.
   */
-object Lakehouse {
+object Lakehouse extends QueryFamily {
   private val D2 = "decimal(18,2)"
 
   private def ioDir(d: String) =
@@ -29,55 +30,38 @@ object Lakehouse {
     * maintenance path being claimed. JVM-local (not a `_SUCCESS` probe)
     * so a code change can never be masked by a stale on-disk view. */
   private val viewWritten = scala.collection.mutable.Set[String]()
-  /** Land a Seq of micro-batch frames as ONE parquet file per batch with
-    * strictly increasing mtimes (the file-source replay contract), in a
-    * SINGLE write job: tag each batch, hash-partition by the tag so one
-    * task holds exactly one batch, `partitionBy` writes one file per tag
-    * (the tag column is a partition dir, so the DATA schema is exactly
-    * the input frame's), then move + stamp. Replaces the former
-    * one-`coalesce(1)`-job-PER-batch landing (4 sequential scans/writes
-    * per query — r13, guide §1.2/§2.6); file CONTENTS are unchanged up
-    * to row order, which no consumer observes (state aggregations +
-    * sorted oracle compare). */
-  private def landBatchFiles(batches: Seq[DataFrame], inDir: java.io.File): Unit = {
-    def del(p: java.io.File): Unit = {
-      if (p.isDirectory) p.listFiles().foreach(del)
-      p.delete(); ()
-    }
-    val tagged = batches.zipWithIndex
-      .map { case (b, i) => b.withColumn("__b", lit(i)) }
-      .reduce(_.unionByName(_))
-    val tmp = new java.io.File(inDir.getParentFile, "_tmp_batches")
-    tagged.repartition(batches.length, col("__b"))
-      .write.mode("overwrite").partitionBy("__b").parquet(tmp.getPath)
-    val t0 = System.currentTimeMillis()
-    batches.indices.foreach { i =>
-      // an EMPTY batch writes no __b=i partition dir (listFiles() would be
-      // null); land a schema-only file for it instead, matching the old
-      // per-batch coalesce(1) behavior (ADVICE r13) — a zero-row
-      // microbatch is a valid replay file, not a missing one
-      val part = Option(new java.io.File(tmp, s"__b=$i").listFiles())
-        .getOrElse(Array.empty[java.io.File])
-        .filter(f => f.getName.startsWith("part-") &&
-          f.getName.endsWith(".parquet")).headOption
-      val dst = new java.io.File(inDir, f"b$i%02d.parquet")
-      part match {
-        case Some(p) =>
-          java.nio.file.Files.move(p.toPath, dst.toPath,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        case None =>
-          val emptyTmp = new java.io.File(tmp, s"_empty_$i")
-          batches(i).limit(0).coalesce(1)
-            .write.mode("overwrite").parquet(emptyTmp.getPath)
-          val p = emptyTmp.listFiles()
-            .filter(f => f.getName.startsWith("part-") &&
-              f.getName.endsWith(".parquet")).head
-          java.nio.file.Files.move(p.toPath, dst.toPath,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      }
-      dst.setLastModified(t0 + i * 2000L)
-    }
-    del(tmp)
+  /** es14/es21's CDC feed over orders: the base snapshot (every order
+    * at version 0) and four ordered micro-batches. Batch 2 supersedes
+    * batch 1's update of the same keys and deletes others, batch 3
+    * resurrects some deleted keys, batch 4 inserts disjoint new keys. */
+  private def upsertFeed(s: SparkSession, d: String): (DataFrame, Seq[DataFrame]) = {
+    val src = orders(s, d)
+    val base = src.select(col("o_orderkey").as("okey"),
+      col("o_orderstatus").as("status"),
+      col("o_totalprice").cast(D2).as("price"),
+      lit(0L).as("version"), lit("U").as("op"))
+    val batches = Seq(
+      src.filter(col("o_orderkey") % 10 === 3)
+        .select(col("o_orderkey").as("okey"), lit("U2").as("status"),
+          (col("o_totalprice").cast(D2) + lit(1).cast(D2)).cast(D2).as("price"),
+          lit(1L).as("version"), lit("U").as("op")),
+      src.filter(col("o_orderkey") % 10 === 7)
+        .select(col("o_orderkey").as("okey"),
+          lit(null).cast("string").as("status"), lit(null).cast(D2).as("price"),
+          lit(2L).as("version"), lit("D").as("op"))
+        .unionByName(src.filter(col("o_orderkey") % 10 === 3)
+          .select(col("o_orderkey").as("okey"), lit("U3").as("status"),
+            (col("o_totalprice").cast(D2) + lit(2).cast(D2)).cast(D2).as("price"),
+            lit(2L).as("version"), lit("U").as("op"))),
+      src.filter(col("o_orderkey") % 100 === 7)
+        .select(col("o_orderkey").as("okey"), lit("R").as("status"),
+          col("o_totalprice").cast(D2).as("price"),
+          lit(3L).as("version"), lit("U").as("op")),
+      src.filter(col("o_orderkey") % 10 === 2)
+        .select((col("o_orderkey") + 20000000L).as("okey"), lit("I").as("status"),
+          col("o_totalprice").cast(D2).as("price"),
+          lit(4L).as("version"), lit("U").as("op")))
+    (base, batches)
   }
 
   private def writeViewOnce(path: String)(write: => Unit): Unit =
@@ -935,71 +919,28 @@ object Lakehouse {
     // hash-match the one-shot windowed oracle over base + all four
     // batches — replay-order-invariant because the merge keys on version.
     "es14_stream_upsert" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
       val root = s"${ioDir(d)}/stream_upsert"
-      def del(p: java.io.File): Unit = {
-        if (p.isDirectory) p.listFiles().foreach(del)
-        p.delete(); ()
-      }
-      del(new java.io.File(root))
-      val src = orders(s, d)
-      val base = src.select(col("o_orderkey").as("okey"),
-        col("o_orderstatus").as("status"),
-        col("o_totalprice").cast(D2).as("price"),
-        lit(0L).as("version"), lit("U").as("op"))
-      val batches = Seq(
-        src.filter(col("o_orderkey") % 10 === 3)
-          .select(col("o_orderkey").as("okey"), lit("U2").as("status"),
-            (col("o_totalprice").cast(D2) + lit(1).cast(D2)).cast(D2).as("price"),
-            lit(1L).as("version"), lit("U").as("op")),
-        src.filter(col("o_orderkey") % 10 === 7)
-          .select(col("o_orderkey").as("okey"),
-            lit(null).cast("string").as("status"), lit(null).cast(D2).as("price"),
-            lit(2L).as("version"), lit("D").as("op"))
-          .unionByName(src.filter(col("o_orderkey") % 10 === 3)
-            .select(col("o_orderkey").as("okey"), lit("U3").as("status"),
-              (col("o_totalprice").cast(D2) + lit(2).cast(D2)).cast(D2).as("price"),
-              lit(2L).as("version"), lit("U").as("op"))),
-        src.filter(col("o_orderkey") % 100 === 7)
-          .select(col("o_orderkey").as("okey"), lit("R").as("status"),
-            col("o_totalprice").cast(D2).as("price"),
-            lit(3L).as("version"), lit("U").as("op")),
-        src.filter(col("o_orderkey") % 10 === 2)
-          .select((col("o_orderkey") + 20000000L).as("okey"), lit("I").as("status"),
-            col("o_totalprice").cast(D2).as("price"),
-            lit(4L).as("version"), lit("U").as("op")))
-      // land the feed as one file per batch with strictly increasing
-      // mtimes — the file source then replays them in CDC order
-      val inDir = new java.io.File(s"$root/changes"); inDir.mkdirs()
-      landBatchFiles(batches, inDir)
+      graft.Scratch.delete(root)
+      val (base, batches) = upsertFeed(s, d)
+      // one file per batch with strictly increasing mtimes — the file
+      // source then replays them in CDC order
+      Replay.land(batches, s"$root/changes")
       val snapDir = s"$root/snap"
       base.write.mode("overwrite").parquet(s"$snapDir/v0")
       val current = new java.util.concurrent.atomic.AtomicReference(s"$snapDir/v0")
-      val sch = s.read.parquet(s"$root/changes").schema
-      val q = s.readStream.schema(sch).option("maxFilesPerTrigger", "1")
-        .parquet(s"$root/changes")
-        .writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          val next = s.read.parquet(current.get()).unionByName(batch)
-            .groupBy("okey")
-            .agg(max(struct(col("version"), col("op"), col("status"),
-              col("price"))).as("w"))
-            .select(col("okey"), col("w.version").as("version"),
-              col("w.op").as("op"), col("w.status").as("status"),
-              col("w.price").as("price"))
-          val dst = s"$snapDir/v${id + 1}"
-          next.write.mode("overwrite").parquet(dst)
-          current.set(dst)
-          ()
-        }
-        .option("checkpointLocation", s"$root/ckpt")
-      // size the per-batch merge like the other bounded replays (the
-      // foreachBatch groupBy + snapshot write inherit the session's
-      // shuffle width; 32 tasks per 4-batch merge of a 15k-row snapshot
-      // is pure per-task overhead — values are partition-independent)
-      Events.withStreamPartitions(s) {
-        val started = q.trigger(Trigger.AvailableNow()).start()
-        started.awaitTermination()
+      // the per-batch merge runs at the replay's state width (its groupBy
+      // and snapshot write inherit it; values are partition-independent)
+      ReplayRunner.commit(ReplayRunner.parquet(s, s"$root/changes")) { (_, batch, id) =>
+        val next = s.read.parquet(current.get()).unionByName(batch)
+          .groupBy("okey")
+          .agg(max(struct(col("version"), col("op"), col("status"),
+            col("price"))).as("w"))
+          .select(col("okey"), col("w.version").as("version"),
+            col("w.op").as("op"), col("w.status").as("status"),
+            col("w.price").as("price"))
+        val dst = s"$snapDir/v${id + 1}"
+        next.write.mode("overwrite").parquet(dst)
+        current.set(dst)
       }
       s.read.parquet(current.get())
         .filter(col("op") =!= "D")
@@ -1025,41 +966,10 @@ object Lakehouse {
     // hash-gated. Scale: the per-commit diff aggregate is keyed on okey
     // exactly like the merge itself; CDC files are delta-sized.
     "es21_stream_cdf" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
       val root = s"${ioDir(d)}/stream_cdf"
-      def del(p: java.io.File): Unit = {
-        if (p.isDirectory) p.listFiles().foreach(del)
-        p.delete(); ()
-      }
-      del(new java.io.File(root))
-      val src = orders(s, d)
-      val base = src.select(col("o_orderkey").as("okey"),
-        col("o_orderstatus").as("status"),
-        col("o_totalprice").cast(D2).as("price"),
-        lit(0L).as("version"), lit("U").as("op"))
-      val batches = Seq(
-        src.filter(col("o_orderkey") % 10 === 3)
-          .select(col("o_orderkey").as("okey"), lit("U2").as("status"),
-            (col("o_totalprice").cast(D2) + lit(1).cast(D2)).cast(D2).as("price"),
-            lit(1L).as("version"), lit("U").as("op")),
-        src.filter(col("o_orderkey") % 10 === 7)
-          .select(col("o_orderkey").as("okey"),
-            lit(null).cast("string").as("status"), lit(null).cast(D2).as("price"),
-            lit(2L).as("version"), lit("D").as("op"))
-          .unionByName(src.filter(col("o_orderkey") % 10 === 3)
-            .select(col("o_orderkey").as("okey"), lit("U3").as("status"),
-              (col("o_totalprice").cast(D2) + lit(2).cast(D2)).cast(D2).as("price"),
-              lit(2L).as("version"), lit("U").as("op"))),
-        src.filter(col("o_orderkey") % 100 === 7)
-          .select(col("o_orderkey").as("okey"), lit("R").as("status"),
-            col("o_totalprice").cast(D2).as("price"),
-            lit(3L).as("version"), lit("U").as("op")),
-        src.filter(col("o_orderkey") % 10 === 2)
-          .select((col("o_orderkey") + 20000000L).as("okey"), lit("I").as("status"),
-            col("o_totalprice").cast(D2).as("price"),
-            lit(4L).as("version"), lit("U").as("op")))
-      val inDir = new java.io.File(s"$root/changes"); inDir.mkdirs()
-      landBatchFiles(batches, inDir)
+      graft.Scratch.delete(root)
+      val (base, batches) = upsertFeed(s, d)
+      Replay.land(batches, s"$root/changes")
       // Delta-sized snapshot advance (VERDICT r10 #6): the snapshot lives
       // as key-RANGE buckets (okey div 2^19) behind a version manifest.
       // Each commit rewrites ONLY the buckets containing changed keys —
@@ -1083,36 +993,26 @@ object Lakehouse {
       // overwrite (ADVICE r11); with the pre-state replay the retry is a
       // pure re-execution (same input manifest -> same verDir content).
       val preMan = new java.util.concurrent.ConcurrentHashMap[Long, Map[Long, String]]()
-      val sch = s.read.parquet(s"$root/changes").schema
-      val q = s.readStream.schema(sch).option("maxFilesPerTrigger", "1")
-        .parquet(s"$root/changes")
-        .writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          val man = preMan.computeIfAbsent(id, _ => manifest.get())
-          val touched = batch.select((col("okey") / BUK_W).cast("long").as("bk"))
-            .distinct().collect().map(_.getLong(0)).toSet
-          // pre-images live only in touched buckets; and only batch KEYS
-          // can yield change rows, so the feed aggregate shuffles
-          // O(|batch|) rows, never O(|snapshot|)
-          val curT = bucketedRead(s, man, touched)
-            .join(broadcast(batch.select("okey")), Seq("okey"), "leftsemi")
-          val lg = curT.select(col("okey"), col("status"), col("price"),
-              lit(0L).as("version"), col("op"))
-            .unionByName(batch.select(col("okey"), col("status"),
-              col("price"), lit(1L).as("version"), col("op")))
-          val cdfDir = s"$root/cdf/b$id"
-          changeFeed(lg, vFrom = 0L)
-            .withColumn("batch_id", lit(id + 1))
-            .write.mode("overwrite").parquet(cdfDir)
-          cdfDirs.put(id, cdfDir)
-          manifest.set(bucketedAdvance(s, man, batch,
-            s"$snapDir/v${id + 1}", touched))
-          ()
-        }
-        .option("checkpointLocation", s"$root/ckpt")
-      Events.withStreamPartitions(s) {
-        val started = q.trigger(Trigger.AvailableNow()).start()
-        started.awaitTermination()
+      ReplayRunner.commit(ReplayRunner.parquet(s, s"$root/changes")) { (_, batch, id) =>
+        val man = preMan.computeIfAbsent(id, _ => manifest.get())
+        val touched = batch.select((col("okey") / BUK_W).cast("long").as("bk"))
+          .distinct().collect().map(_.getLong(0)).toSet
+        // pre-images live only in touched buckets; and only batch KEYS
+        // can yield change rows, so the feed aggregate shuffles
+        // O(|batch|) rows, never O(|snapshot|)
+        val curT = bucketedRead(s, man, touched)
+          .join(broadcast(batch.select("okey")), Seq("okey"), "leftsemi")
+        val lg = curT.select(col("okey"), col("status"), col("price"),
+            lit(0L).as("version"), col("op"))
+          .unionByName(batch.select(col("okey"), col("status"),
+            col("price"), lit(1L).as("version"), col("op")))
+        val cdfDir = s"$root/cdf/b$id"
+        changeFeed(lg, vFrom = 0L)
+          .withColumn("batch_id", lit(id + 1))
+          .write.mode("overwrite").parquet(cdfDir)
+        cdfDirs.put(id, cdfDir)
+        manifest.set(bucketedAdvance(s, man, batch,
+          s"$snapDir/v${id + 1}", touched))
       }
       import scala.jdk.CollectionConverters._
       cdfDirs.values().asScala.toSeq.distinct.sorted.map(s.read.parquet(_))
@@ -1133,56 +1033,28 @@ object Lakehouse {
     // and the latch-held race in both orders. Scale: commits are one link
     // syscall on metadata; staged data files are never rewritten.
     "es22_stream_occ_sink" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
       val root = s"${ioDir(d)}/stream_occ"
-      Events.rmTree(new java.io.File(root))
+      graft.Scratch.delete(root)
       val docs = documents(s, d).select(col("doc_id"), col("lang"), col("n_chars"))
-      val t0 = System.currentTimeMillis()
       // per-writer change-file sequences: batch i of partition p holds p's
       // docs with doc_id % (i+2) == 0, tagged gen=i (batch 3 is final)
-      def seed(p: String): Unit = (0 until 4).foreach { i =>
-        val tmp = s"$root/_tmp_${p}_$i"
+      val langs = Seq("en", "de")
+      langs.foreach(p => Replay.land((0 until 4).map(i =>
         docs.filter(col("lang") === p && col("doc_id") % (i + 2) === 0)
-          .withColumn("gen", lit(i.toLong))
-          .coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .filter(f => f.getName.startsWith("part-") &&
-            f.getName.endsWith(".parquet")).head
-        val inDir = new java.io.File(s"$root/changes_$p"); inDir.mkdirs()
-        val dst = new java.io.File(inDir, f"b$i%02d.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        dst.setLastModified(t0 + i * 2000L)
-        Events.rmTree(new java.io.File(tmp))
-      }
-      seed("en"); seed("de")
+          .withColumn("gen", lit(i.toLong))), s"$root/changes_$p"))
       import graft.sources.OccLog
       def stage(p: String, name: String, df: DataFrame): String = {
         val dir = s"$root/data/$p/$name"
         df.write.mode("overwrite").parquet(dir)
         dir
       }
-      OccLog.init(root, Map(
-        "en" -> stage("en", "v1", docs.filter(col("lang") === "en")
-          .withColumn("gen", lit(-1L))),
-        "de" -> stage("de", "v1", docs.filter(col("lang") === "de")
-          .withColumn("gen", lit(-1L)))))
-      def writer(p: String) = {
-        val sch = s.read.parquet(s"$root/changes_$p").schema
-        s.readStream.schema(sch).option("maxFilesPerTrigger", "1")
-          .parquet(s"$root/changes_$p")
-          .writeStream.option("checkpointLocation", s"$root/ckpt_$p")
-          .foreachBatch { (b: DataFrame, id: Long) =>
-            occCommitBatch(root, p, stage(p, s"b$id", b))
-            ()
-          }
-          .trigger(Trigger.AvailableNow()).start()
+      OccLog.init(root, langs.map(p => p -> stage(p, "v1",
+        docs.filter(col("lang") === p).withColumn("gen", lit(-1L)))).toMap)
+      // the two writers run concurrently and race on the CAS
+      ReplayRunner.commit(langs.map(p => ReplayRunner.parquet(s, s"$root/changes_$p")): _*) {
+        (w, b, id) => occCommitBatch(root, langs(w), stage(langs(w), s"b$id", b))
       }
-      val fin = Events.withStreamPartitions(s) {
-        val qEn = writer("en"); val qDe = writer("de")
-        qEn.awaitTermination(); qDe.awaitTermination()
-        OccLog.readLatest(root)
-      }
+      val fin = OccLog.readLatest(root)
       fin.entries.values.toSeq.sorted.map(s.read.parquet(_))
         .reduce(_ unionByName _)
         .groupBy("lang")
@@ -1207,44 +1079,21 @@ object Lakehouse {
     // Scale: commits are one link syscall on metadata; only quarantine
     // rows (defect-sized, not corpus-sized) are ever staged.
     "es23_stream_quarantine" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
       val root = s"${ioDir(d)}/stream_quar"
-      Events.rmTree(new java.io.File(root))
+      graft.Scratch.delete(root)
       val docs = documents(s, d)
         .select(col("doc_id"), col("source"), col("text"), col("n_chars"))
-      val t0 = System.currentTimeMillis()
-      val inDir = new java.io.File(s"$root/changes"); inDir.mkdirs()
-      (0 until 4).foreach { i =>
-        val tmp = s"$root/_tmp_$i"
-        docs.filter(col("doc_id") % 4 === i)
-          .coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .filter(f => f.getName.startsWith("part-") &&
-            f.getName.endsWith(".parquet")).head
-        val dst = new java.io.File(inDir, f"b$i%02d.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        dst.setLastModified(t0 + i * 2000L)
-        Events.rmTree(new java.io.File(tmp))
-      }
+      Replay.land((0 until 4).map(i => docs.filter(col("doc_id") % 4 === i)),
+        s"$root/changes")
       import graft.sources.OccLog
       OccLog.init(root, Map.empty)
-      val sch = s.read.parquet(s"$root/changes").schema
-      val q = s.readStream.schema(sch).option("maxFilesPerTrigger", "1")
-        .parquet(s"$root/changes")
-        .writeStream.option("checkpointLocation", s"$root/ckpt")
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          val dir = s"$root/data/b$id"
-          quarantineBatch(b).write.mode("overwrite").parquet(dir)
-          OccLog.commitReplacePartition(root, s"b$id", dir,
-            OccLog.readLatest(root).version)
-          ()
-        }
-        .trigger(Trigger.AvailableNow())
-      val fin = Events.withStreamPartitions(s) {
-        q.start().awaitTermination()
-        OccLog.readLatest(root)
+      ReplayRunner.commit(ReplayRunner.parquet(s, s"$root/changes")) { (_, b, id) =>
+        val dir = s"$root/data/b$id"
+        quarantineBatch(b).write.mode("overwrite").parquet(dir)
+        OccLog.commitReplacePartition(root, s"b$id", dir,
+          OccLog.readLatest(root).version)
       }
+      val fin = OccLog.readLatest(root)
       // explicit schema: a defect-free batch commits an EMPTY parquet dir,
       // which schema inference would reject
       s.read.schema(quarSchema).parquet(fin.entries.values.toSeq.sorted: _*)
@@ -1414,11 +1263,7 @@ object Lakehouse {
     "f22_occ_commit" -> ((s, d) => {
       import graft.sources.OccLog
       val root = s"${ioDir(d)}/occ"
-      def del(p: java.io.File): Unit = {
-        if (p.isDirectory) p.listFiles().foreach(del)
-        p.delete(); ()
-      }
-      del(new java.io.File(root)) // fresh race each invocation
+      graft.Scratch.delete(root) // fresh race each invocation
       val docs = documents(s, d).select(col("doc_id"), col("lang"), col("n_chars"))
       def stage(sub: String, f: DataFrame): String = {
         val dir = s"$root/data/$sub"

@@ -24,7 +24,7 @@ import graft.Tables._
   * ASCII contract are retired. m1/m4/m5/m7 keep text-derived payloads
   * (byte-exact DuckDB oracles).
   */
-object Multimodal {
+object Multimodal extends QueryFamily {
 
   /** STUB decoder: stands in for e.g. an audio decode + tag read (the
     * image path below is real). The digest instance is caller-provided so
@@ -183,11 +183,9 @@ object Multimodal {
     * deterministic, no sort-before-repartition, and the unique key
     * spreads evenly. Real media inputs arrive pre-split; this mirrors
     * that. Row contents are untouched, so results are identical.
-    * Delegates to [[graft.Tables.spreadDS]] (r14): the m-family now
-    * honors the same `spark.graft.spread` kill-switch and the
+    * Delegates to [[graft.Tables.spreadDS]]: the m-family takes the same
     * already-split passthrough as every other spread site, so pre-split
-    * production media input pays no unconditional extra shuffle
-    * (ADVICE r13). */
+    * production media input pays no unconditional extra shuffle. */
   private def spreadIds(s: SparkSession, df: org.apache.spark.sql.Dataset[Long]): org.apache.spark.sql.Dataset[Long] =
     graft.Tables.spreadDS(df, col("doc_id"))
 
@@ -466,7 +464,7 @@ object Multimodal {
     r
   }
 
-  def localQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  override def localQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // -- m8: REAL audio decode + integer DSP features -------------------------
     // the audio leg of the modality triad, real end to end: per doc a
     // genuine PCM WAV (deterministic two-tone triangle mix), decoded with

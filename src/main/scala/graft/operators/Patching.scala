@@ -17,7 +17,7 @@ import graft.Tables._
   * bridges them (`ReflexivDSStitching.java:154-211` semantics). The
   * emitted rows are stitched contigs that span >= 2 strict fragments.
   */
-object Patching {
+object Patching extends QueryFamily {
   private val sqlDna32 =
     "translate(md5(CAST(doc_id AS VARCHAR)), '0123456789abcdef', 'ACGTACGTACGTACGT')"
   private val sqlDna64 = sqlDna32 +

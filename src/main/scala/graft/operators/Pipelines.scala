@@ -32,7 +32,7 @@ import graft.sources.StageRunner
   *    reference's k=95 regime); each k assembles in its own key regime
   *    (packed Long for k <= 31, 2-bit blocks above).
   */
-object Pipelines {
+object Pipelines extends QueryFamily {
 
   /** Staged dynamic-k assembly with `_SUCCESS` resume. Returns contigs of
     * the final round. Stages: `count_multik`, then `count_k<k>_reduced`

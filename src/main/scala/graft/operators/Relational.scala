@@ -17,7 +17,7 @@ import graft.Tables._
   *  - every ORDER BY ... LIMIT has a unique tie-break key;
   *  - no AVG (DuckDB returns double for decimal avg) — emit sum+count.
   */
-object Relational {
+object Relational extends QueryFamily {
 
   /** q32's conf scope, shared with PlanAuditSpec's bloom pin so the test
     * can never drift from the shipped query: broadcast off (a broadcast

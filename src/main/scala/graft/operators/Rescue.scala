@@ -12,7 +12,7 @@ import graft.sources.{Fastq, PipeOps}
   * so the per-read logic runs inside codegen and the only shuffles are the
   * solidity join and per-read window.
   */
-object Rescue {
+object Rescue extends QueryFamily {
   private val K = 7
 
   private def posKmers(s: SparkSession, d: String): DataFrame = {

@@ -27,7 +27,7 @@ import graft.Tables._
   * text); the consensus logic needs no external binary, so it is fully
   * testable with synthetic rows.
   */
-object SamConsensus {
+object SamConsensus extends QueryFamily {
 
   /** One aligned read: 1-based mapping position, CIGAR, read sequence. */
   case class SamRow(contig: String, pos: Int, cigar: String, seq: String)

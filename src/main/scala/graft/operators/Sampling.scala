@@ -21,7 +21,7 @@ import graft.Tables._
   * any corpus size. The hash-derived u_i means both engines (and every
   * re-run) draw the identical sample.
   */
-object Sampling {
+object Sampling extends QueryFamily {
 
   /** Uniform 32-bit integer from the md5 hex prefix of the key column —
     * digit-by-digit hex parse using only functions both engines evaluate

@@ -33,7 +33,7 @@ import graft.Tables._
   * `aggregate`/`zip_with` fold it replaced ran interpreted); scores are
   * emitted rounded to 4 decimals.
   */
-object Similarity {
+object Similarity extends QueryFamily {
 
   /** Banded sign-LSH parameters for the s2 query instance. At this corpus
     * size (500-2k vectors) 8 bits/band gives ~n/256 per bucket; at 100×

@@ -25,7 +25,7 @@ import graft.Tables._
   * driver-side arithmetic over 256 ints, and keeping FP out of the query
   * keeps the oracle bit-exact.
   */
-object Sketches {
+object Sketches extends QueryFamily {
 
   private def ws: Column = split(col("text"), " ")
 

@@ -9,7 +9,7 @@ import graft.Tables._
   * all pure Catalyst expressions (no UDFs), so they stay inside
   * whole-stage codegen and push down column pruning to the scan.
   */
-object TextOps {
+object TextOps extends QueryFamily {
 
   private def ws: Column = split(col("text"), " ")
 
@@ -146,7 +146,7 @@ object TextOps {
     * "omit for non-SQL-expressible ops", and a permanently-weak row
     * conveys less than a separate, fully-gated local surface. Bench and
     * ClusterSmoke still cover these. */
-  def localQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  override def localQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // deflate compression ratio (zlib level 6) per document — the
     // classic repetition/quality signal. Python-zlib oracle in
     // tools/oracle_check.py; byte-size parity Deflater-vs-zlib pinned by

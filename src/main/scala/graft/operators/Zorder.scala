@@ -21,7 +21,7 @@ import graft.Tables._
   * smaller than the data, and consulting it is a driver-side planning
   * step — the collect here is bounded by file count, never row count.
   */
-object Zorder {
+object Zorder extends QueryFamily {
 
   /** Per-sf scratch root for layout demos (same convention as
     * [[Lakehouse]]/GenomicsIO). */

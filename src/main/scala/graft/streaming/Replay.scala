@@ -4,11 +4,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import java.nio.file.attribute.FileTime
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /** Ordered replay of testdata tables for proving the Structured Streaming
-  * operators against the SAME DuckDB oracles as their batch twins
-  * (es1–es5).
+  * operators against the SAME DuckDB oracles as their batch twins (the
+  * es* queries, run by [[ReplayRunner]]).
   *
   * The file streaming source delivers files oldest-modification-first, so
   * materializing a table as N range-bucketed parquet files with strictly
@@ -27,78 +27,65 @@ import java.nio.file.{Files, Path, Paths}
   *
   * Bucketed files are written once per (table, sfDir, variant) and cached
   * for the JVM lifetime (bench warm-up + retimes re-invoke the query
-  * several times); a shutdown hook deletes the scratch dirs.
+  * several times); they live under [[graft.Scratch]], whose shutdown hook
+  * deletes them.
   */
 object Replay {
   private val cache = scala.collection.concurrent.TrieMap[String, String]()
-  private val hookInstalled = new java.util.concurrent.atomic.AtomicBoolean(false)
 
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      val walk = Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => { Files.deleteIfExists(f); () })
-      finally walk.close()
+  /** Land `frames` in `dir` as one single-file parquet per frame
+    * (`b00.parquet`, `b01.parquet`, …) with mtimes rising 2 s per file, so
+    * a one-file-per-trigger stream ([[ReplayRunner.parquet]]) replays
+    * frame i as micro-batch i. One task writes each file: a frame's row
+    * order is its file's row order, and an empty frame lands as a valid
+    * zero-row file. */
+  def land(frames: Seq[DataFrame], dir: String): Unit = {
+    val base = System.currentTimeMillis()
+    frames.zipWithIndex.foreach { case (f, i) =>
+      val tmp = s"$dir/_tmp_$i"
+      f.coalesce(1).write.mode("overwrite").parquet(tmp)
+      val part = new java.io.File(tmp).listFiles().filter(p =>
+        p.getName.startsWith("part-") && p.getName.endsWith(".parquet")).head
+      val dst = Paths.get(dir, f"b$i%02d.parquet")
+      Files.move(part.toPath, dst, StandardCopyOption.REPLACE_EXISTING)
+      Files.setLastModifiedTime(dst, FileTime.fromMillis(base + i * 2000L))
+      graft.Scratch.delete(tmp)
     }
+  }
 
-  private def installHook(): Unit =
-    if (hookInstalled.compareAndSet(false, true)) {
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        cache.values.foreach(d =>
-          try deleteRecursively(Paths.get(d)) catch { case _: Throwable => () })))
-    }
-
-  /** Write `df` (already carrying a long ordering column `ord`) as
-    * `buckets` range-partitioned single-file parquets with increasing
-    * mtimes, then optionally a final file built from the max ord by
-    * `tail` (given the bounds so callers don't re-aggregate the table).
-    * One file per range so each microbatch is ONE map task — within-batch
-    * record order is file order, which keeps first-occurrence semantics
-    * deterministic. An empty source yields one empty bucket file (a valid
-    * zero-row replay), not an NPE on the null bounds. */
-  private def materialize(key: String, df: DataFrame, cols: Seq[String],
-                          buckets: Int, tail: Option[Long => DataFrame]): String =
+  /** Build (once per JVM and `key`) the replay of `df`, which carries a
+    * long ordering column `ord`: `buckets` ord ranges, then optionally a
+    * final file built by `tail` from the max ord (given the bounds so
+    * callers don't re-aggregate the table). Each bucket file is sorted by
+    * ord — within-batch record order is replay order, which keeps
+    * first-occurrence semantics deterministic — and carries only `cols`.
+    * An empty source yields one empty bucket file (a valid zero-row
+    * replay), not an NPE on the null bounds. */
+  private def materialize(key: String, buckets: Int)(
+      build: => (DataFrame, Seq[String], Option[Long => DataFrame])): String =
     synchronized {
       cache.get(key) match {
         case Some(d) if Files.exists(Paths.get(d, "_replay_done")) => d
         case _ =>
-          installHook()
+          val (df, cols, tail) = build
           // fast scratch volume (tmpfs when available), not java.io.tmpdir:
           // the bucketed fixture writes + mtime stamps are setup I/O
-          val dir = { val f = graft.Scratch.fresh("replay"); f.mkdirs(); f.toPath }
+          val dir = graft.Scratch.fresh("replay").getPath
           val bounds = df.agg(min("ord"), max("ord")).first()
           val empty = bounds.isNullAt(0)
           val (lo0, hi0) = if (empty) (0L, 0L) else (bounds.getLong(0), bounds.getLong(1))
           val width = (hi0 - lo0) / buckets + 1
-          val base = System.currentTimeMillis()
-          def emit(part: DataFrame, name: String, seq: Int): Unit = {
-            val tmp = dir.resolve(s"_tmp_$name")
-            part.write.mode("overwrite").parquet(tmp.toString)
-            val ls = Files.list(tmp)
-            val f = try ls.filter(p =>
-              p.getFileName.toString.startsWith("part-") &&
-                p.getFileName.toString.endsWith(".parquet")).findFirst().get()
-            finally ls.close()
-            val dst = dir.resolve(s"$name.parquet")
-            Files.move(f, dst)
-            Files.setLastModifiedTime(dst, FileTime.fromMillis(base + seq * 2000L))
-            deleteRecursively(tmp)
-          }
-          val effBuckets = if (empty) 1 else buckets
-          (0 until effBuckets).foreach { i =>
+          val ranges = (0 until (if (empty) 1 else buckets)).map { i =>
             val lo = lo0 + i * width
-            // ONE partition sorted by ord: record order inside the file is
-            // replay order, so within-batch first-occurrence is well-defined
-            emit(df.filter(col("ord") >= lo && col("ord") < lo + width)
+            df.filter(col("ord") >= lo && col("ord") < lo + width)
               .repartition(1).sortWithinPartitions("ord")
-              .select(cols.map(col): _*), f"b$i%02d", i)
+              .select(cols.map(col): _*)
           }
-          if (!empty)
-            tail.foreach(t => emit(t(hi0).coalesce(1).select(cols.map(col): _*),
-              "z_flush", buckets))
-          Files.createFile(dir.resolve("_replay_done"))
-          cache.put(key, dir.toString)
-          dir.toString
+          val flush = if (empty) None else tail.map(t => t(hi0).select(cols.map(col): _*))
+          land(ranges ++ flush, dir)
+          Files.createFile(Paths.get(dir, "_replay_done"))
+          cache.put(key, dir)
+          dir
       }
     }
 
@@ -113,8 +100,9 @@ object Replay {
   /** Materialize (once per JVM) `sfDir`'s events as `buckets` time-ordered
     * parquet files; `sentinelGapMs >= 0` appends a final flush file with
     * one `__flush` event per user at max(ts) + gap + 2 ms. Returns the
-    * directory to `readStream` from (with `maxFilesPerTrigger=1`). */
-  /** `deferOutOfOrder = true` builds the ADVERSARIAL arrival order: the
+    * directory to replay ([[ReplayRunner.parquet]]).
+    *
+    * `deferOutOfOrder = true` builds the ADVERSARIAL arrival order: the
     * deferred set — every event with `event_id % 5 == 2` (volume chaos)
     * PLUS every BRIDGE-shaped event relative to the remaining timeline (a
     * mid-session event whose kept neighbours sit more than one session
@@ -139,51 +127,88 @@ object Replay {
     val key =
       s"events:${new java.io.File(sfDir).getCanonicalPath}:$buckets:" +
         s"$sentinelGapMs:$deferOutOfOrder"
-    cache.get(key) match {
-      case Some(d) if Files.exists(Paths.get(d, "_replay_done")) => d
-      case _ =>
-        // normalized read (handles the NANOS/NTZ testdata generations) —
-        // replay files are Spark-written TimestampType, so the streaming
-        // side never touches the schema-generation seam
-        val base0 = graft.Tables.events(s, sfDir)
-        val ev =
-          if (!deferOutOfOrder) base0.withColumn("ord", unix_micros(col("ts")))
-          else {
-            val gapUs = DeferGapUs
-            val withUs = base0.withColumn("us", unix_micros(col("ts")))
-            val w = org.apache.spark.sql.expressions.Window
-              .partitionBy("user_id").orderBy(col("us"), col("event_id"))
-            val bridges = withUs.filter(col("event_id") % 5 =!= 2)
-              .withColumn("prev", lag(col("us"), 1).over(w))
-              .withColumn("next", lead(col("us"), 1).over(w))
-              .filter(col("prev").isNotNull && col("next").isNotNull &&
-                col("next") - col("prev") > gapUs &&
-                col("us") - col("prev") <= gapUs &&
-                col("next") - col("us") <= gapUs)
-              .select(col("event_id").as("beid"), lit(true).as("bridge"))
-            val span = broadcast(base0.agg(
-              (max(unix_micros(col("ts"))) - min(unix_micros(col("ts"))) +
-                3600L * 1000000L).as("defer_span")))
-            withUs.join(bridges, col("event_id") === col("beid"), "left")
-              .crossJoin(span)
-              .withColumn("ord", col("us") +
-                when(col("event_id") % 5 === 2 ||
-                  coalesce(col("bridge"), lit(false)), col("defer_span"))
-                  .otherwise(lit(0L)))
-              .drop("us", "beid", "bridge", "defer_span")
-          }
-        // the flush file is built from materialize's own max(ord), so the
-        // events table is aggregated exactly once
-        val tail =
-          if (sentinelGapMs < 0) None
-          else Some((hi: Long) => {
-            val flushTs = timestamp_micros(lit(hi / 1000 * 1000 + (sentinelGapMs + 2) * 1000))
-            ev.select("user_id").distinct()
-              .select(lit(-1L).as("event_id"), flushTs.as("ts"), col("user_id"),
-                lit("__flush").as("event_type"), lit(0.0).as("value"),
-                lit(null).cast("string").as("props"))
-          })
-        materialize(key, ev, EventCols, buckets, tail)
+    materialize(key, buckets) {
+      // normalized read (handles the NANOS/NTZ testdata generations) —
+      // replay files are Spark-written TimestampType, so the streaming
+      // side never touches the schema-generation seam
+      val base0 = graft.Tables.events(s, sfDir)
+      val ev =
+        if (!deferOutOfOrder) base0.withColumn("ord", unix_micros(col("ts")))
+        else {
+          val gapUs = DeferGapUs
+          val withUs = base0.withColumn("us", unix_micros(col("ts")))
+          val w = org.apache.spark.sql.expressions.Window
+            .partitionBy("user_id").orderBy(col("us"), col("event_id"))
+          val bridges = withUs.filter(col("event_id") % 5 =!= 2)
+            .withColumn("prev", lag(col("us"), 1).over(w))
+            .withColumn("next", lead(col("us"), 1).over(w))
+            .filter(col("prev").isNotNull && col("next").isNotNull &&
+              col("next") - col("prev") > gapUs &&
+              col("us") - col("prev") <= gapUs &&
+              col("next") - col("us") <= gapUs)
+            .select(col("event_id").as("beid"), lit(true).as("bridge"))
+          val span = broadcast(base0.agg(
+            (max(unix_micros(col("ts"))) - min(unix_micros(col("ts"))) +
+              3600L * 1000000L).as("defer_span")))
+          withUs.join(bridges, col("event_id") === col("beid"), "left")
+            .crossJoin(span)
+            .withColumn("ord", col("us") +
+              when(col("event_id") % 5 === 2 ||
+                coalesce(col("bridge"), lit(false)), col("defer_span"))
+                .otherwise(lit(0L)))
+            .drop("us", "beid", "bridge", "defer_span")
+        }
+      // the flush file is built from materialize's own max(ord), so the
+      // events table is aggregated exactly once
+      val tail =
+        if (sentinelGapMs < 0) None
+        else Some((hi: Long) => {
+          val flushTs = timestamp_micros(lit(hi / 1000 * 1000 + (sentinelGapMs + 2) * 1000))
+          ev.select("user_id").distinct()
+            .select(lit(-1L).as("event_id"), flushTs.as("ts"), col("user_id"),
+              lit("__flush").as("event_type"), lit(0.0).as("value"),
+              lit(null).cast("string").as("props"))
+        })
+      (ev, EventCols, tail)
+    }
+  }
+
+  /** Materialize the INCREMENTAL-ingestion stream for es16: the odd-id
+    * half of the corpus (novel material) plus truncated near-dup copies
+    * of every 10th even-id document — near-dups of the EVEN half, which
+    * the query holds as its static LSH index. Copies are offset past the
+    * live id range (the d-family GREATEST(MAX+1, 100000) convention) and
+    * ordered AFTER all novel docs, so the gate classifies novel and
+    * duplicate traffic in the same replay, with duplicates skewed toward
+    * the tail. (Range bucketing over `ord` guarantees only the global
+    * order — the boundary bucket may mix tail-end novels with early
+    * dups in one microbatch. The gate is an order-independent
+    * complete-mode aggregation, so this is a replay-shape note, not a
+    * correctness condition; an order-sensitive consumer would need to
+    * bucket novels and dups separately.) */
+  def incrementalDocsDir(s: SparkSession, sfDir: String, buckets: Int = 4): String = {
+    val key =
+      s"documents_incr:${new java.io.File(sfDir).getCanonicalPath}:$buckets"
+    materialize(key, buckets) {
+      val docs = graft.Tables.documents(s, sfDir).select("doc_id", "text")
+      val statsRow = docs.agg(max("doc_id"), count(lit(1))).first()
+      val stream =
+        if (statsRow.getLong(1) == 0L) docs.withColumn("ord", col("doc_id"))
+        else {
+          val hi = statsRow.getLong(0)
+          val off = math.max(hi + 1, 100000L)
+          val ws = split(col("text"), " ")
+          val odd = docs.filter(col("doc_id") % 2 === 1)
+            .withColumn("ord", col("doc_id"))
+          val dups = docs
+            .filter(col("doc_id") % 2 === 0 && col("doc_id") % 10 === 0)
+            .select((col("doc_id") + off).as("doc_id"),
+              concat_ws(" ",
+                slice(ws, lit(1), greatest(size(ws) - 3, lit(1)))).as("text"))
+            .withColumn("ord", col("doc_id") - off + hi + 1)
+          odd.unionByName(dups)
+        }
+      (stream, Seq("doc_id", "text"), None)
     }
   }
 
@@ -201,71 +226,27 @@ object Replay {
     * `injectDups = false` replays the corpus verbatim (still ordered and
     * bucketed) — the input for streaming operators whose batch twin runs
     * over the unmodified table (es6's k-mer counter vs g1). */
-  /** Materialize the INCREMENTAL-ingestion stream for es16: the odd-id
-    * half of the corpus (novel material) plus truncated near-dup copies
-    * of every 10th even-id document — near-dups of the EVEN half, which
-    * the query holds as its static LSH index. Copies are offset past the
-    * live id range (the d-family GREATEST(MAX+1, 100000) convention) and
-    * ordered AFTER all novel docs, so the gate classifies novel and
-    * duplicate traffic in the same replay, with duplicates skewed toward
-    * the tail. (Range bucketing over `ord` guarantees only the global
-    * order — the boundary bucket may mix tail-end novels with early
-    * dups in one microbatch. The gate is an order-independent
-    * complete-mode aggregation, so this is a replay-shape note, not a
-    * correctness condition; an order-sensitive consumer would need to
-    * bucket novels and dups separately.) */
-  def incrementalDocsDir(s: SparkSession, sfDir: String, buckets: Int = 4): String = {
-    val key =
-      s"documents_incr:${new java.io.File(sfDir).getCanonicalPath}:$buckets"
-    cache.get(key) match {
-      case Some(d) if Files.exists(Paths.get(d, "_replay_done")) => d
-      case _ =>
-        val docs = graft.Tables.documents(s, sfDir).select("doc_id", "text")
-        val statsRow = docs.agg(max("doc_id"), count(lit(1))).first()
-        val stream =
-          if (statsRow.getLong(1) == 0L) docs.withColumn("ord", col("doc_id"))
-          else {
-            val hi = statsRow.getLong(0)
-            val off = math.max(hi + 1, 100000L)
-            val ws = split(col("text"), " ")
-            val odd = docs.filter(col("doc_id") % 2 === 1)
-              .withColumn("ord", col("doc_id"))
-            val dups = docs
-              .filter(col("doc_id") % 2 === 0 && col("doc_id") % 10 === 0)
-              .select((col("doc_id") + off).as("doc_id"),
-                concat_ws(" ",
-                  slice(ws, lit(1), greatest(size(ws) - 3, lit(1)))).as("text"))
-              .withColumn("ord", col("doc_id") - off + hi + 1)
-            odd.unionByName(dups)
-          }
-        materialize(key, stream, Seq("doc_id", "text"), buckets, None)
-    }
-  }
-
   def documentsDir(s: SparkSession, sfDir: String, buckets: Int = 4,
                    injectDups: Boolean = true): String = {
     val key =
       s"documents:${new java.io.File(sfDir).getCanonicalPath}:$buckets:$injectDups"
-    cache.get(key) match {
-      case Some(d) if Files.exists(Paths.get(d, "_replay_done")) => d
-      case _ =>
-        val docs = graft.Tables.documents(s, sfDir)
-        val base = docs.withColumn("ord", col("doc_id"))
-        val all =
-          if (!injectDups) base
+    materialize(key, buckets) {
+      val docs = graft.Tables.documents(s, sfDir)
+      val base = docs.withColumn("ord", col("doc_id"))
+      val all =
+        if (!injectDups) base
+        else {
+          val hiRow = docs.agg(max("doc_id")).first()
+          if (hiRow.isNullAt(0)) base // empty corpus: nothing to re-ingest
           else {
-            val hiRow = docs.agg(max("doc_id")).first()
-            if (hiRow.isNullAt(0)) base // empty corpus: nothing to re-ingest
-            else {
-              val hi = hiRow.getLong(0)
-              val dups = docs.filter(col("doc_id") % 10 === 0)
-                .withColumn("doc_id", col("doc_id") + 1000000L)
-              base.unionByName(dups.withColumn("ord", col("doc_id") - 1000000L + hi + 1))
-            }
+            val hi = hiRow.getLong(0)
+            val dups = docs.filter(col("doc_id") % 10 === 0)
+              .withColumn("doc_id", col("doc_id") + 1000000L)
+            base.unionByName(dups.withColumn("ord", col("doc_id") - 1000000L + hi + 1))
           }
-        materialize(key,
-          all.withColumn("ts", timestamp_millis(lit(1700000000000L) + col("ord"))),
-          "ts" +: docs.columns.toSeq, buckets, None)
+        }
+      (all.withColumn("ts", timestamp_millis(lit(1700000000000L) + col("ord"))),
+        "ts" +: docs.columns.toSeq, None)
     }
   }
 }

@@ -4,10 +4,11 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The engine's own session-conf keys (`spark.graft.*`) are A/B levers
-  * that fork the plan. Each must be added on purpose: this scan lists
-  * every `spark.graft.*` key the main sources name as a string literal,
-  * whether read directly or through a variable, and pins the set. */
+/** The engine's own session-conf keys (`spark.graft.*`) would be A/B
+  * levers that fork the plan, and there are none. This scan lists every
+  * `spark.graft.*` key the main sources name as a string literal, whether
+  * read directly or through a variable, and pins the set to empty: a new
+  * key must change this spec on purpose. */
 class ConfLeverSpec extends AnyFunSuite {
 
   test("the main sources read exactly the documented spark.graft.* session keys") {
@@ -19,7 +20,6 @@ class ConfLeverSpec extends AnyFunSuite {
       key.findAllMatchIn(new String(Files.readAllBytes(p), "UTF-8"))
         .map(m => m.group(1) -> p.getFileName.toString)
     }
-    // spark.graft.spread: Tables.spread's kill-switch for the scan spread
-    assert(keys.map(_._1).toSet == Set("spark.graft.spread"), keys.mkString("\n"))
+    assert(keys.isEmpty, keys.mkString("\n"))
   }
 }

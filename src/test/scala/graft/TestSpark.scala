@@ -19,20 +19,26 @@ object TestSpark {
     s
   }
 
-  /** Stages that complete while `body` runs. A marker job submitted after
-    * `body` flushes the asynchronous listener bus: its start event is
-    * delivered after every event `body` posted. */
+  /** Stages of the jobs `body` runs. A marker job submitted after `body`
+    * flushes the asynchronous listener bus: its start event is delivered
+    * after every event `body` posted. Only stages of jobs whose start this
+    * call saw count: an earlier call's marker stage can complete on the bus
+    * after this call's listener is added. */
   def stagesOf[T](body: => T): (T, Seq[StageInfo]) = {
     val sc = spark.sparkContext
     val marker = "test-spark-flush"
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[StageInfo]()
+    val ours = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val flushed = new java.util.concurrent.CountDownLatch(1)
     val listener = new SparkListener {
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-        if (flushed.getCount > 0) { seen.add(e.stageInfo); () }
+        if (flushed.getCount > 0 && ours.contains(e.stageInfo.stageId)) {
+          seen.add(e.stageInfo); ()
+        }
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
           flushed.countDown()
+        else e.stageIds.foreach(id => ours.add(id))
     }
     sc.addSparkListener(listener)
     try {

@@ -365,80 +365,55 @@ class EventStreamsSpec extends AnyFunSuite {
     assert(dup == 0, s"$dup sessions re-emitted across batches")
   }
 
+  /** `body`'s result and the state rows its streams evicted, summed by
+    * [[ReplayRunner]] from each run's progress once the run has ended. */
+  private def withRemovedRows[T](body: => T): (T, Long) = {
+    import graft.core.Counters
+    val before = Counters.snapshot
+    val r = body
+    (r, Counters.diff(before, Counters.snapshot).getOrElse("stream.state_rows_removed", 0L))
+  }
+
   test("es9a: join matches emit across batches, exactly once, with state eviction") {
     import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.streaming.StreamingQueryListener
     val sf = "/root/testdata/sf0.001"
     // numRowsRemoved > 0 proves the advancing watermark really discarded
     // buffered join rows MID-REPLAY — the property that bounds
     // stream-stream join state by the in-window rate, not stream length
-    val removed = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new StreamingQueryListener {
-      override def onQueryStarted(
-        e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(
-        e: StreamingQueryListener.QueryProgressEvent): Unit = {
-        removed.addAndGet(e.progress.stateOperators.map(_.numRowsRemoved).sum)
-        ()
-      }
-      override def onQueryTerminated(
-        e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-    }
-    spark.streams.addListener(listener)
-    try {
-      val out = graft.SparkEntry.queries("es9a_ssjoin_batches")(spark, sf)
-      assert(out.count() > 0)
-      val capDir = graft.Scratch.dir("sf0.001") + "/es9a/out"
-      val counts = batchCounts(capDir)
-      assert(counts.length >= 4, s"replay ran < 4 microbatches: $counts")
-      assert(counts.count(_._2 > 0) >= 3,
-        s"matches not emitted incrementally: $counts")
-      val dup = spark.read.parquet(capDir)
-        .groupBy("click_id", "purchase_id")
-        .agg(countDistinct(col("batch_id")).as("nb"))
-        .filter(col("nb") > 1).count()
-      assert(dup == 0, s"$dup matched pairs re-emitted across batches")
-      // listener delivery is async — poll briefly
-      val deadline = System.currentTimeMillis() + 30000
-      while (removed.get() == 0 && System.currentTimeMillis() < deadline)
-        Thread.sleep(200)
-      assert(removed.get() > 0, "watermark never evicted buffered join state")
-    } finally spark.streams.removeListener(listener)
+    val (out, removed) = withRemovedRows(
+      graft.SparkEntry.queries("es9a_ssjoin_batches")(spark, sf))
+    assert(out.count() > 0)
+    val capDir = graft.Scratch.dir("sf0.001") + "/es9a/out"
+    val counts = batchCounts(capDir)
+    assert(counts.length >= 4, s"replay ran < 4 microbatches: $counts")
+    assert(counts.count(_._2 > 0) >= 3,
+      s"matches not emitted incrementally: $counts")
+    val dup = spark.read.parquet(capDir)
+      .groupBy("click_id", "purchase_id")
+      .agg(countDistinct(col("batch_id")).as("nb"))
+      .filter(col("nb") > 1).count()
+    assert(dup == 0, s"$dup matched pairs re-emitted across batches")
+    assert(removed > 0, "watermark never evicted buffered join state")
   }
 
   test("es18: append-mode session_window evicts finalized session state") {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.streaming.StreamingQueryListener
     val sf = "/root/testdata/sf0.001"
     // the eviction half of the es18 claim: the watermark's passage doesn't
     // just EMIT a session exactly once, it REMOVES the session's rows from
     // the state store mid-replay — what bounds the operator's memory by
     // open sessions instead of all sessions ever seen (Complete-mode es17
-    // removes nothing by design)
-    val removed = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new StreamingQueryListener {
-      override def onQueryStarted(
-        e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(
-        e: StreamingQueryListener.QueryProgressEvent): Unit = {
-        removed.addAndGet(e.progress.stateOperators.map(_.numRowsRemoved).sum)
-        ()
-      }
-      override def onQueryTerminated(
-        e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-    }
-    spark.streams.addListener(listener)
-    try {
-      val out = graft.SparkEntry.queries("es18_session_window_append")(spark, sf)
-      val complete = graft.SparkEntry.queries("es17_stream_session_window")(spark, sf)
-      assert(out.collect().map(_.toString).toSet ==
-        complete.collect().map(_.toString).toSet,
-        "append-mode finalized sessions != complete-mode fixpoint")
-      val deadline = System.currentTimeMillis() + 30000
-      while (removed.get() == 0 && System.currentTimeMillis() < deadline)
-        Thread.sleep(200)
-      assert(removed.get() > 0, "watermark never evicted finalized session state")
-    } finally spark.streams.removeListener(listener)
+    // removes nothing by design, so a counter that credits removals it
+    // did not see fails the second check)
+    val (out, removed) = withRemovedRows(
+      graft.SparkEntry.queries("es18_session_window_append")(spark, sf))
+    val (complete, completeRemoved) = withRemovedRows(
+      graft.SparkEntry.queries("es17_stream_session_window")(spark, sf))
+    assert(out.collect().map(_.toString).toSet ==
+      complete.collect().map(_.toString).toSet,
+      "append-mode finalized sessions != complete-mode fixpoint")
+    assert(removed > 0, "watermark never evicted finalized session state")
+    assert(completeRemoved == 0,
+      s"complete-mode es17 reported $completeRemoved evicted state rows")
   }
 
   test("es7a: update-mode emissions supersede across batches, last write wins") {
