@@ -172,12 +172,15 @@ object Bench {
       } + "\""
     val es = errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
     val total = times.map(_._2).sum
-    // Full-precision per-query detail goes to a file; stdout gets ONE
-    // compact JSON line. The driver keeps only the LAST 2000 chars of
-    // stdout and sbt appends a "[success] ..." footer line after us, so
-    // the line must stay well under that budget or its head is truncated
-    // and never parses (BENCH_r03: rc=0 yet parsed:null). 3-decimal
-    // timings; if still too long, keep the slowest queries that fit.
+    val detail = java.nio.file.Paths.get("BENCH_DETAIL.json").toAbsolutePath
+    // Full-precision per-query detail goes to BENCH_DETAIL.json in the
+    // working directory (the line's "detail" field names its absolute
+    // path); stdout gets ONE compact JSON line. The driver keeps only the
+    // LAST 2000 chars of stdout and sbt appends a "[success] ..." footer
+    // line after us, so the line must stay well under that budget or its
+    // head is truncated and never parses (BENCH_r03: rc=0 yet
+    // parsed:null). 3-decimal timings; if still too long, keep the
+    // slowest queries that fit.
     def fmt(v: Double): String = {
       val r = math.rint(v * 1000) / 1000
       if (r == r.toLong.toDouble) s"${r.toLong}.0" else r.toString
@@ -194,7 +197,7 @@ object Bench {
     }
     def render(qs: Seq[(String, Double)]): String = {
       val qj = qs.map { case (k, v) => s"${jstr(k)}:${fmtQ(v)}" }.mkString("{", ",", "}")
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${times.length},"queries":$qj,"errors":$es,"sf":"$sfDir","detail":"/root/repo/BENCH_DETAIL.json"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${times.length},"queries":$qj,"errors":$es,"sf":"$sfDir","detail":${jstr(detail.toString)}}"""
     }
     val fullQs = times.map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
     def median(v: Vector[Double]): Double = {
@@ -218,8 +221,7 @@ object Bench {
     val spilled = times.collect {
       case (k, _) if metrics.spill.getOrElse(k, 0L) > 0 => jstr(k)
     }.mkString("[", ",", "]")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get("/root/repo/BENCH_DETAIL.json"),
+    java.nio.file.Files.write(detail,
       (s"""{"metric":"total","value":$total,"unit":"sec","queries":$fullQs,""" +
         s""""samples":$sampJ,"counters":$ctrJ,""" +
         s""""peak_task_mem":$memJ,"spill_bytes":$spillJ,""" +

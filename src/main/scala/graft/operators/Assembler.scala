@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import scala.reflect.runtime.universe.TypeTag
 import org.apache.spark.sql.expressions.Window
 import graft.Tables._
-import graft.core.{Counters, KmerCodec, KmerIter}
+import graft.core.{Counters, Fixpoint, KmerCodec, KmerIter}
 import graft.sources.StageRunner
 
 /** The assembly core: the reference's "Reflexible Distributed K-mer" loop
@@ -31,8 +31,9 @@ import graft.sources.StageRunner
   *    whether any junction is still both a tail and a head of open
   *    fragments (an `intersect` on the endpoint columns) — no sampled
   *    count-stability heuristic, so termination is never a false stop;
-  *    `localCheckpoint` + unpersist keeps the lineage truncated so the
-  *    loop scales to ~100s of rounds.
+  *    each probe `localCheckpoint`s the fragments, which truncates the
+  *    lineage so the loop scales to ~100s of rounds, and frees the
+  *    previous probe's blocks ([[graft.core.Fixpoint.release]]).
   *  - Single-task gate, checked twice at every k. First on the solid
   *    (`count >= minCov`) k-mer table: n solid k-mers mirror to at most 2n
   *    edges and seed at most 2n·k bases, so when that fits [[RowCap]] (or a
@@ -609,7 +610,7 @@ object Assembler extends QueryFamily {
                 df
               case None =>
                 val c = frags.localCheckpoint()
-                if (lastCkpt != null) lastCkpt.unpersist()
+                if (lastCkpt != null) Fixpoint.release(lastCkpt)
                 lastCkpt = c
                 c
             }

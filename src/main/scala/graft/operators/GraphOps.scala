@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables._
+import graft.core.Fixpoint
 
 /** Graph-shape operators (SURVEY J11/J12): De Bruijn node classification
   * (repeat/branch detection feeding the reference's `-scramble` two-branch
@@ -25,8 +26,8 @@ object GraphOps extends QueryFamily {
     * doubling distances — O(log n) rounds on ANY topology, where plain
     * min-label propagation needs diameter rounds (a 10k-link chain of
     * near-dups would take 10k shuffles). Each round is one hash agg + one
-    * join + a distinct; convergence = edge set stable, checked with a
-    * single count+hash aggregate per round.
+    * join + a distinct; the rounds run in [[graft.core.Fixpoint]], which
+    * stops once the edge set is stable.
     *
     * Input: undirected edges (x, y). Output: (node, component) where
     * component is the minimum node id in the component. For components
@@ -90,32 +91,22 @@ object GraphOps extends QueryFamily {
     val first = local.head(1)
     if (first.isEmpty || first(0).getLong(1) <= first(0).getLong(0)) return local
 
-    var e = edges0.select(col("x"), col("y"))
+    val sym = edges0.select(col("x"), col("y"))
       .union(edges0.select(col("y").as("x"), col("x").as("y")))
       .union(edges0.select(col("x"), col("x").as("y"))) // self loop keeps isolated mins
-      .distinct().localCheckpoint()
-    def fingerprint(df: DataFrame) =
-      df.agg(count(lit(1)), bit_xor(xxhash64(col("x"), col("y")))).first()
-    var fp = fingerprint(e)
-    var round = 0
-    var stable = false
-    while (!stable && round < maxRounds) {
+      .distinct()
+    val e = Fixpoint("cc", sym, maxRounds) { (e, _) =>
       val m = e.groupBy("x").agg(min(col("y")).as("m"))
       val j = e.join(m, "x")
       // hash-to-min round: the min learns x's whole neighborhood
       // (m, y) AND every neighbor learns the min (y, m) — both directions
       // are required; without the back-edges a node whose min-pointer
       // chain was rewired away never hears about the true minimum
-      val next = j.select(col("m").as("x"), col("y"))
+      j.select(col("m").as("x"), col("y"))
         .union(j.select(col("y").as("x"), col("m").as("y")))
         .union(m.select(col("m").as("x"), col("x").as("y")))
         .union(m.select(col("x"), col("m").as("y")))
-        .distinct().localCheckpoint()
-      val nfp = fingerprint(next)
-      stable = nfp == fp
-      fp = nfp
-      e = next
-      round += 1
+        .distinct()
     }
     e.groupBy(col("y").as("node")).agg(min(col("x")).as("component"))
   }
@@ -127,71 +118,56 @@ object GraphOps extends QueryFamily {
     * table — never more state than the current induced subgraph, and the
     * round count is bounded by the peeling depth of the graph (small for
     * the dense near-dup/overlap clusters this runs on), not its size.
-    * Convergence is a single count+hash fingerprint action per round, the
-    * same probe [[connectedComponents]] uses.
+    * The rounds run in [[graft.core.Fixpoint]], the loop every convergent
+    * operator shares (one count+hash fingerprint per round).
     *
     * Input: undirected edges (x, y), one row per edge, either orientation.
     * Output: (rid, deg_core) — every k-core member with its degree inside
     * the core. */
   def kcore(edges0: DataFrame, k: Int, maxRounds: Int = 200): DataFrame = {
-    val pairs = edges0.select(col("x"), col("y")).distinct()
-    var und = pairs.union(pairs.select(col("y"), col("x")))
-      .toDF("u", "v").distinct().localCheckpoint()
-    def fingerprint(df: DataFrame) =
-      df.agg(count(lit(1)), bit_xor(xxhash64(col("u"), col("v")))).first()
-    var fp = fingerprint(und)
-    var stable = fp.getLong(0) == 0L
-    var round = 0
-    while (!stable && round < maxRounds) {
+    val core = Fixpoint("kcore", undirected(edges0), maxRounds) { (und, _) =>
       val keep = und.groupBy("u").agg(count(lit(1)).as("dg"))
         .filter(col("dg") >= k).select(col("u"))
-      val next = und.join(keep, "u")
+      und.join(keep, "u")
         .join(keep.select(col("u").as("v")), "v")
-        .select(col("u"), col("v")).localCheckpoint()
-      val nfp = fingerprint(next)
-      stable = nfp == fp || nfp.getLong(0) == 0L
-      fp = nfp
-      und = next
-      round += 1
+        .select(col("u"), col("v"))
     }
-    und.groupBy(col("u").as("rid")).agg(count(lit(1)).as("deg_core"))
+    core.groupBy(col("u").as("rid")).agg(count(lit(1)).as("deg_core"))
   }
 
   /** Multi-source BFS hop distances — the Pregel-shaped frontier
     * iteration (GraphX/Giraph's canonical example, and the scaffolding
-    * walk an assembler runs from anchor reads). Each round expands ONLY
-    * the current frontier (one equi-join of frontier against the
-    * checkpointed edge table + one distinct + one anti-join against the
-    * settled set), so per-round work is proportional to the frontier's
-    * edge boundary, never the graph — and hop h is final the round it is
-    * first reached (BFS invariant), so nothing is ever revisited.
-    * `maxHops` bounds the rounds; an empty frontier exits early.
+    * walk an assembler runs from anchor reads), as a
+    * [[graft.core.Fixpoint]] over the growing (node, dist) table. Round h
+    * expands ONLY the frontier, the `dist = h - 1` rows (one equi-join
+    * against the checkpointed edge table + one distinct + one anti-join
+    * against the settled set), so the edges a round joins are the
+    * frontier's edge boundary, never the graph — and hop h is final the
+    * round it is first reached (BFS invariant), so nothing is ever
+    * revisited. `maxHops` bounds the rounds; a round that reaches no new
+    * node leaves the table unchanged and ends the loop.
     *
     * Input: undirected edges (x, y), either orientation. Output:
     * (rid, dist) for every node within `maxHops` of a seed — unreached
     * nodes are absent, which is the answer, not a gap. */
   def bfsHops(edges0: DataFrame, seedPred: Column, maxHops: Int): DataFrame = {
-    val pairs = edges0.select(col("x"), col("y")).distinct()
-    val und = pairs.union(pairs.select(col("y"), col("x")))
-      .toDF("u", "v").distinct().localCheckpoint()
-    val nodes = und.select(col("u").as("node")).distinct()
-    var dist = nodes.filter(seedPred)
-      .select(col("node"), lit(0L).as("dist")).localCheckpoint()
-    var frontier = dist
-    var h = 0
-    var live = frontier.limit(1).count() > 0
-    while (live && h < maxHops) {
-      h += 1
-      val next = frontier.join(und, frontier("node") === und("u"))
+    val und = undirected(edges0).localCheckpoint()
+    val seeds = und.select(col("u").as("node")).distinct().filter(seedPred)
+      .select(col("node"), lit(0L).as("dist"))
+    val dist = Fixpoint("bfs_hops", seeds, maxHops) { (dist, h) =>
+      val frontier = dist.filter(col("dist") === h - 1)
+      dist.unionByName(frontier.join(und, frontier("node") === und("u"))
         .select(col("v").as("node")).distinct()
         .join(dist.select("node"), Seq("node"), "left_anti")
-        .select(col("node"), lit(h.toLong).as("dist"))
-        .localCheckpoint()
-      dist = dist.unionByName(next).localCheckpoint()
-      frontier = next
-      live = frontier.limit(1).count() > 0
+        .select(col("node"), lit(h.toLong).as("dist")))
     }
     dist.select(col("node").as("rid"), col("dist"))
+  }
+
+  /** Both orientations of every distinct undirected edge, as (u, v). */
+  private def undirected(edges: DataFrame): DataFrame = {
+    val pairs = edges.select(col("x"), col("y")).distinct()
+    pairs.union(pairs.select(col("y"), col("x"))).toDF("u", "v").distinct()
   }
 
   private val sqlDna32 =
@@ -253,11 +229,6 @@ object GraphOps extends QueryFamily {
     * Input: undirected edges (x, y). Output: (u, v, sup) per surviving
     * edge, u < v, with the final in-truss support. */
   def ktruss(edges0: DataFrame, k: Int, maxRounds: Int = 100): DataFrame = {
-    val pairs = edges0.select(col("x"), col("y")).distinct()
-    var und = pairs.union(pairs.select(col("y"), col("x")))
-      .toDF("u", "v").distinct().localCheckpoint()
-    def fingerprint(df: DataFrame) =
-      df.agg(count(lit(1)), bit_xor(xxhash64(col("u"), col("v")))).first()
     // per-normalized-edge triangle support of the current edge set
     def support(e: DataFrame): DataFrame =
       enumTriangles(e).select(explode(array(
@@ -267,28 +238,20 @@ object GraphOps extends QueryFamily {
         )).as("e"))
         .groupBy(col("e.u").as("u"), col("e.v").as("v"))
         .agg(count(lit(1)).as("sup"))
-    var fp = fingerprint(und)
-    var stable = fp.getLong(0) == 0L
-    var round = 0
     var lastSup: DataFrame = null
-    while (!stable && round < maxRounds) {
+    val truss = Fixpoint("ktruss", undirected(edges0), maxRounds) { (und, _) =>
       val sup = support(und).localCheckpoint()
+      if (lastSup != null) Fixpoint.release(lastSup)
+      lastSup = sup
       val keep = sup.filter(col("sup") >= k - 2)
         .select(col("u"), col("v"))
-      val keep2 = keep.union(keep.select(col("v"), col("u")))
-      val next = und.join(keep2, Seq("u", "v"), "left_semi").localCheckpoint()
-      val nfp = fingerprint(next)
-      stable = nfp == fp || nfp.getLong(0) == 0L
-      fp = nfp
-      und = next
-      lastSup = sup
-      round += 1
+      und.join(keep.union(keep.select(col("v"), col("u"))), Seq("u", "v"), "left_semi")
     }
     // at the fixpoint the last support snapshot WAS computed on the final
     // edge set, so its >= k-2 rows are exactly the surviving edges with
     // their final supports (k >= 3: a zero-support edge never survives,
     // so every survivor appears in the snapshot)
-    if (lastSup == null) support(und) // empty input: empty (u, v, sup)
+    if (lastSup == null) support(truss) // empty input: empty (u, v, sup)
     else lastSup.filter(col("sup") >= k - 2)
   }
 

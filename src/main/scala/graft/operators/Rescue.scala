@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables._
+import graft.core.Fixpoint
 import graft.sources.{Fastq, PipeOps}
 
 /** Rescue/merge operators (SURVEY J6/J8/J10, A2) plus the k-mer CSV and
@@ -89,15 +90,14 @@ object Rescue extends QueryFamily {
     * round (chain A→B→C merges A+B first, then (A+B)+C), so each round's
     * output is well-defined and the loop converges in O(chain length)
     * rounds. Perfect overlap cycles (A→B→A) have no chain head, never
-    * fire, and pass through unchanged. Contigs in no splice pass through. */
+    * fire, and pass through unchanged. Contigs in no splice pass through.
+    * The rounds run in [[graft.core.Fixpoint]]: a round that splices
+    * nothing leaves the contig set unchanged and ends the loop. */
   def overlapMergeContigs(contigs: Dataset[String], overlap: Int,
                           maxRounds: Int = 16): Dataset[String] = {
     val s = contigs.sparkSession
     import s.implicits._
-    var df = contigs.toDF("c").localCheckpoint()
-    var round = 0
-    var changed = true
-    while (changed && round < maxRounds) {
+    Fixpoint("overlap_merge", contigs.toDF("c"), maxRounds) { (df, _) =>
       val a = df.select(col("c").as("ca"),
         expr(s"substring(c, length(c) - ${overlap - 1}, $overlap)").as("key"))
       val b = df.select(col("c").as("cb"),
@@ -117,14 +117,8 @@ object Rescue extends QueryFamily {
         .select(concat(col("ca"), expr(s"substring(cb, ${overlap + 1})")).as("c"))
       val consumed = heads.select(col("ca").as("c"))
         .unionAll(heads.select(col("cb").as("c"))).distinct()
-      val next = merged.unionAll(df.join(consumed, Seq("c"), "left_anti"))
-        .localCheckpoint()
-      changed = next.count() != df.count()
-      df.unpersist()
-      df = next
-      round += 1
-    }
-    df.select(col("c")).as[String]
+      merged.unionAll(df.join(consumed, Seq("c"), "left_anti"))
+    }.select(col("c")).as[String]
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

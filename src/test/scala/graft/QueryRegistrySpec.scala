@@ -23,4 +23,15 @@ class QueryRegistrySpec extends AnyFunSuite {
     val orphans = keys.filterNot(SparkEntry.queries.contains)
     assert(orphans.isEmpty, orphans.mkString(", "))
   }
+
+  test("every query and local query has a gate: a SQL oracle or a Python one") {
+    val src = java.nio.file.Files.readString(java.nio.file.Paths.get("tools/oracle_check.py"))
+    val dict = src.substring(src.indexOf("PY_ORACLES = {"))
+    val py = "\"(\\w+)\":".r.findAllMatchIn(dict.substring(0, dict.indexOf('}')))
+      .map(_.group(1)).toSet
+    assert(py.size >= 9, s"read only ${py.size} Python oracles")
+    val ungated = (SparkEntry.queries.keys ++ SparkEntry.localQueries.keys)
+      .filterNot(n => SparkEntry.oracleSql.contains(n) || py(n))
+    assert(ungated.isEmpty, ungated.mkString(", "))
+  }
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
+import graft.core.Counters
 
 /** Hash-to-min connected components: exactness on adversarial topologies
   * and the logarithmic round bound that motivates it (a diameter-bound
@@ -31,11 +32,19 @@ class GraphOpsSpec extends AnyFunSuite {
     local
   }
 
+  /** `body`'s result and the rounds it adds to `fixpoint.<name>.rounds`. */
+  private def rounds[T](name: String)(body: => T): (T, Long) = {
+    val before = Counters.snapshot
+    val r = body
+    (r, Counters.diff(before, Counters.snapshot).getOrElse(s"fixpoint.$name.rounds", 0L))
+  }
+
   test("300-node chain collapses to one component within the log-round budget") {
     val chain = (0L until 299L).map(i => (i, i + 1))
-    // 2 + ceil(log2(300)) ≈ 11 rounds is ample for hash-to-min; label
+    // hash-to-min needs at most 2 + ceil(log2(300)) = 11 rounds; label
     // propagation would need ~299.
-    val labels = cc(chain, maxRounds = 15)
+    val (labels, n) = rounds("cc")(cc(chain, maxRounds = 15))
+    assert(n >= 1 && n <= 11, s"$n rounds")
     assert(labels.size == 300)
     assert(labels.values.forall(_ == 0L))
   }
@@ -153,10 +162,14 @@ class GraphOpsSpec extends AnyFunSuite {
     // path: endpoints peel, exposing new endpoints — 15 rounds of real
     // iteration until nothing is left (the slow-peeling regime)
     val path = (0L until 30L).map(i => (i, i + 1))
-    assert(core(path, 2).isEmpty)
-    // cycle: every node has degree exactly 2 — fixpoint at round 0
+    val (peeled, pathRounds) = rounds("kcore")(core(path, 2))
+    assert(peeled.isEmpty)
+    assert(pathRounds == 15L)
+    // cycle: every node has degree exactly 2 — stable after one round
     val cyc = (0L until 12L).map(i => (i, (i + 1) % 12))
-    assert(core(cyc, 2) == (0L until 12L).map(_ -> 2L).toMap)
+    val (kept, cycRounds) = rounds("kcore")(core(cyc, 2))
+    assert(kept == (0L until 12L).map(_ -> 2L).toMap)
+    assert(cycRounds == 1L)
   }
 
   test("k-core: triangle glued to K4 peels off at k=3") {
@@ -217,8 +230,10 @@ class GraphOpsSpec extends AnyFunSuite {
   test("bfs: path graph distances from one end, hop cap truncates the tail") {
     // 1-2-3-4-5-6-7, seed 1, cap 4: node 6 is 5 hops -> absent
     val path = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L), (6L, 7L))
-    assert(bfs(path, Set(1L), 4) ==
+    val (capped, hops) = rounds("bfs_hops")(bfs(path, Set(1L), 4))
+    assert(capped ==
       Map(1L -> 0L, 2L -> 1L, 3L -> 2L, 4L -> 3L, 5L -> 4L))
+    assert(hops == 4L)
     // unlimited-enough cap reaches the whole path
     assert(bfs(path, Set(1L), 10)(7L) == 6L)
   }
