@@ -91,18 +91,29 @@ object Main {
     if (args.head == "-version" || args.head == "--version") {
       println("graft 0.3.0 (Spark " + org.apache.spark.SPARK_VERSION + ")"); return
     }
-    val cmd = args.head
     warnUnknown(args)
     // warnUnknown's contract is "no option is silently inert" — extend it
-    // to KNOWN options that don't apply to the selected input/k regime
-    locally {
-      val kOpt = opt(args, "-kmer", "31").toInt
-      // (-mercy and -scramble are implemented in BOTH k regimes)
-      if (args.contains("-mercy") && opt(args, "-kmerc", "").nonEmpty)
-        System.err.println("[graft] WARNING: -mercy needs the read stream; ignored with a pre-counted -kmerc table")
-      if (args.contains("-merge") && opt(args, "-fastq2", "").isEmpty)
-        System.err.println("[graft] WARNING: -merge requires two-file paired input (-fastq2); ignored")
-    }
+    // to KNOWN options that don't apply to the selected input
+    if (args.contains("-mercy") && opt(args, "-kmerc", "").nonEmpty)
+      System.err.println("[graft] WARNING: -mercy needs the read stream; ignored with a pre-counted -kmerc table")
+    if (args.contains("-merge") && opt(args, "-fastq2", "").isEmpty)
+      System.err.println("[graft] WARNING: -merge requires two-file paired input (-fastq2); ignored")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", opt(args, "-partitionredu", cpus))
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    run(spark, args)
+    spark.stop()
+  }
+
+  /** The subcommand `args.head` with its options, on a session the caller
+    * owns (and stops). */
+  def run(spark: SparkSession, args: Array[String]): Unit = {
+    import spark.implicits._
+    val cmd = args.head
     val fastq = opt(args, "-fastq", "/root/reference/example/*.fq.gz")
     val out = opt(args, "-outfile", "/root/repo/target/graft_cli_out")
     val k = opt(args, "-kmer", "31").toInt
@@ -122,15 +133,6 @@ object Main {
     val partitions = opt(args, "-partition", "0").toInt
     val popBubbles = !args.contains("-bubble")
     val gzip = args.contains("-gzip")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val shufflePart = opt(args, "-partitionredu", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePart)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
 
     /** Read stream: paired two-file / FASTA / single FASTQ, then the
       * clip → length-guard → limit → repartition ladder. Built lazily so
@@ -172,23 +174,15 @@ object Main {
       if (partitions > 0) limited.repartition(partitions) else limited
     }
 
-    /** Counting + assembly, honoring `-kmerc` (pre-counted table skips
-      * the counting stage). Counts are packed `(kv, count)` for k <= 31,
-      * 2-bit block `(kb, count)` above. */
+    /** Counting + assembly, honoring `-kmerc` (a pre-counted `(kmer,count)`
+      * table replaces the counting stage; its rows are keyed as the counter
+      * keys them, [[Genomics.kmerKey]]). */
     def assembleReads(kk: Int): Dataset[String] = {
       val kmerc = opt(args, "-kmerc", "")
-      graft.functions.GraftFunctions.register(spark)
       val raw =
-        if (kmerc.nonEmpty) {
-          val csv = spark.read.schema("kmer STRING, count BIGINT").csv(kmerc)
-          if (kk <= 31) csv.selectExpr("kmer_pack(kmer) AS kv", "count")
-          else csv.as[(String, Long)]
-            .map { case (km, c) => (graft.core.KmerCodec.encodeBlocks(km), c) }
-            .toDF("kb", "count")
-        }
-        else if (kk <= 31) Genomics.countCanonical(reads, kk)
-        else reads.flatMap(r => graft.core.KmerIter.canonicalBlocks(r, kk))
-          .toDF("kb").groupBy("kb").count()
+        if (kmerc.isEmpty) Genomics.countCanonical(reads, kk)
+        else spark.read.schema("kmer STRING, count BIGINT").csv(kmerc)
+          .select(Genomics.kmerKey(col("kmer"), kk).as("kv"), col("count"))
       // -mercy (reference's mercy stage): lift gap-bridging kmers over
       // the coverage gate so low-coverage regions assemble through
       val counts =
@@ -434,6 +428,5 @@ object Main {
         sys.error(s"unknown subcommand '$other' " +
           "(counter|run|preprocess|meta|reassemble|mercy|merger|stitch|reduce|extend|curate|stats|dq)")
     }
-    spark.stop()
   }
 }

@@ -8,18 +8,19 @@ package graft.core
   * Scala-first, and shared by every operator — the reference re-inlines this
   * bit algebra across ~20 classes.
   *
-  * Three physical forms:
-  *  - `Long` packed k-mer for k <= 31: base 0 in the most-significant used
-  *    2-bit slot, so numeric order == lexicographic order for equal k.
-  *    No length marker (k is carried alongside).
-  *  - `Array[Long]` "binary blocks" for arbitrary-length sequences: 31 bases
-  *    per long, MSB-first (slot i of a block occupies bits [63-2i-1, 63-2i]),
-  *    terminated by a sentinel `01` bit-pair in the slot after the last base
-  *    ("C marker"). Length is self-encoded and recovered from the trailing
-  *    zero count of the final block; an exactly-full block pushes the
-  *    sentinel into a fresh block (`1L << 62`).
-  *  - word keys: a fixed-k key of any k as a right-aligned integer in
-  *    `wordsFor(k)` longs of a flat store (the packed Long at k <= 31).
+  * Two physical forms:
+  *  - word keys: a fixed-k k-mer of any k as a right-aligned 2k-bit integer
+  *    in `wordsFor(k)` longs, high word first — the one k-mer key from count
+  *    to contig. At k <= 31 (one word) it is the packed `Long`: base 0 in
+  *    the most-significant used 2-bit slot, so numeric order ==
+  *    lexicographic order for equal k. No length marker (k is carried
+  *    alongside).
+  *  - `Array[Long]` "binary blocks" for arbitrary-length sequences (contig
+  *    fragments, not keys): 31 bases per long, MSB-first (slot i of a block
+  *    occupies bits [63-2i-1, 63-2i]), terminated by a sentinel `01` bit-pair
+  *    in the slot after the last base ("C marker"). Length is self-encoded
+  *    and recovered from the trailing zero count of the final block; an
+  *    exactly-full block pushes the sentinel into a fresh block (`1L << 62`).
   */
 object KmerCodec {
 
@@ -144,10 +145,10 @@ object KmerCodec {
   }
 
   /** Encode an ACGT string (invalid bases rejected -> null). */
-  def encodeBlocks(s: CharSequence, from: Int, until: Int): Array[Long] = {
-    val bld = new Builder(until - from)
-    var i = from
-    while (i < until) {
+  def encodeBlocks(s: String): Array[Long] = {
+    val bld = new Builder(s.length)
+    var i = 0
+    while (i < s.length) {
       val c = code(s.charAt(i))
       if (c < 0) return null
       bld.append(c)
@@ -156,35 +157,12 @@ object KmerCodec {
     bld.result()
   }
 
-  def encodeBlocks(s: String): Array[Long] = encodeBlocks(s, 0, s.length)
-
   def decodeBlocks(b: Array[Long]): String = {
     val len = lengthOf(b)
     val out = new Array[Char](len)
     var i = 0
     while (i < len) { out(i) = base(baseAt(b, i)); i += 1 }
     new String(out)
-  }
-
-  /** First k bases of a block array as a packed Long (k <= 31). */
-  def blocksPrefixLong(b: Array[Long], k: Int): Long = {
-    require(k >= 0 && k <= 31 && k <= lengthOf(b),
-      s"blocksPrefixLong: k=$k out of range for length ${lengthOf(b)}")
-    var v = 0L
-    var i = 0
-    while (i < k) { v = (v << 2) | baseAt(b, i); i += 1 }
-    v
-  }
-
-  /** Last k bases of a block array as a packed Long (k <= 31). */
-  def blocksSuffixLong(b: Array[Long], k: Int): Long = {
-    val len = lengthOf(b)
-    require(k >= 0 && k <= 31 && k <= len,
-      s"blocksSuffixLong: k=$k out of range for length $len")
-    var v = 0L
-    var i = len - k
-    while (i < len) { v = (v << 2) | baseAt(b, i); i += 1 }
-    v
   }
 
   def sliceBlocks(b: Array[Long], from: Int, until: Int): Array[Long] = {
@@ -207,24 +185,6 @@ object KmerCodec {
     bld.result()
   }
 
-  /** Lexicographic compare of two block sequences (by bases, then length). */
-  def compareBlocks(a: Array[Long], b: Array[Long]): Int = {
-    val la = lengthOf(a); val lb = lengthOf(b)
-    val n = math.min(la, lb)
-    var i = 0
-    while (i < n) {
-      val d = baseAt(a, i) - baseAt(b, i)
-      if (d != 0) return d
-      i += 1
-    }
-    la - lb
-  }
-
-  def canonicalBlocks(b: Array[Long]): Array[Long] = {
-    val rc = rcBlocks(b)
-    if (compareBlocks(b, rc) <= 0) b else rc
-  }
-
   // -------------------------------------------------------------- word keys
   // A fixed-k key as a right-aligned 2k-bit integer in `wordsFor(k)` longs
   // at an offset of a flat store, high word first: base i of a k-mer sits
@@ -237,13 +197,6 @@ object KmerCodec {
   /** Word index and bit shift of base i of the k-mer at `s[off, off + w)`. */
   @inline private def wordOf(off: Int, k: Int, i: Int): Int = off + k / 32 - ((k - 1 - i) >>> 5)
   @inline private def shiftOf(k: Int, i: Int): Int = 2 * ((k - 1 - i) & 31)
-
-  /** The first k bases of block array `b` into `dst[off, off + w)`. */
-  def blocksToWords(b: Array[Long], k: Int, dst: Array[Long], off: Int): Unit = {
-    java.util.Arrays.fill(dst, off, off + wordsFor(k), 0L)
-    var i = 0
-    while (i < k) { dst(wordOf(off, k, i)) |= baseAt(b, i).toLong << shiftOf(k, i); i += 1 }
-  }
 
   /** The k-mer at `s[off, off + w)` in block form. */
   def wordsToBlocks(s: Array[Long], off: Int, k: Int): Array[Long] = {

@@ -47,89 +47,46 @@ object KmerIter {
     }
   }
 
-  /** Canonical k-mers in block form, naive O(k)-per-position formulation.
-    * Kept as the cross-check reference for [[canonicalBlocks]]. */
-  def canonicalBlocksNaive(s: String, k: Int): Iterator[Array[Long]] = {
-    require(k >= 1, s"canonicalBlocksNaive requires k >= 1, got $k")
-    if (s.length < k) Iterator.empty
-    else (0 to s.length - k).iterator
-      .map(i => KmerCodec.encodeBlocks(s, i, i + k))
-      .filter(_ ne null)
-      .map(KmerCodec.canonicalBlocks)
-  }
-
-  /** Canonical k-mers in block form for arbitrary k (k > 31 scale path):
-    * rolling update of both the forward window and its reverse complement
-    * — O(k/31) word ops per base instead of O(k) re-encodes. Invalid
-    * bases reset the window. Emitted arrays carry the C-marker sentinel
-    * (same physical form as `KmerCodec.encodeBlocks`). */
-  def canonicalBlocks(s: String, k: Int): Iterator[Array[Long]] = {
-    require(k >= 1, s"canonicalBlocks requires k >= 1, got $k")
-    val nb = (k + 30) / 31 // window blocks, no sentinel slot
+  /** Canonical k-mers of `s` as word keys (`KmerCodec`'s word section:
+    * `wordsFor(k)` longs, right-aligned, high word first) for any k >= 1:
+    * the forward window and its reverse complement roll a word at a time,
+    * O(k/32) word ops per base. Invalid bases reset the window. */
+  def canonicalWords(s: CharSequence, k: Int): Iterator[Array[Long]] = {
+    require(k >= 1, s"canonicalWords requires k >= 1, got $k")
+    val w = KmerCodec.wordsFor(k)
+    val top = (1L << (2 * (k & 31))) - 1 // the top word's key bits
+    val (rcWord, rcShift) = (w - 1 - ((k - 1) >>> 5), 2 * ((k - 1) & 31)) // base 0's slot
     new Iterator[Array[Long]] {
-      private val fwd = new Array[Long](nb)
-      private val rc = new Array[Long](nb)
+      private val fwd = new Array[Long](w)
+      private val rc = new Array[Long](w)
       private var i = 0
       private var run = 0
       private var ready = false
-      private var next0: Array[Long] = _
-
-      private def appendFwd(c: Long): Unit = {
-        var b = 0
-        while (b < nb - 1) {
-          fwd(b) = (fwd(b) << 2) | (((fwd(b + 1) >>> 62) & 3L) << 2)
-          b += 1
-        }
-        fwd(nb - 1) <<= 2
-        // place the new base at window slot k-1
-        fwd((k - 1) / 31) |= c << (62 - 2 * ((k - 1) % 31))
-      }
-
-      private def prependRc(c: Long): Unit = {
-        var b = nb - 1
-        while (b > 0) {
-          rc(b) = ((rc(b) >>> 2) & ~3L) | (((rc(b - 1) >>> 2) & 3L) << 62)
-          b -= 1
-        }
-        rc(0) = ((rc(0) >>> 2) & ~3L) | (c << 62)
-        // clear the base that slid past window slot k-1
-        if (k % 31 != 0) rc(k / 31) &= ~(3L << (62 - 2 * (k % 31)))
-      }
-
-      private def emitCanonical(): Array[Long] = {
-        var cmp = 0
-        var b = 0
-        while (cmp == 0 && b < nb) {
-          cmp = java.lang.Long.compareUnsigned(fwd(b), rc(b))
-          b += 1
-        }
-        val src = if (cmp <= 0) fwd else rc
-        val out = new Array[Long](k / 31 + 1)
-        System.arraycopy(src, 0, out, 0, nb)
-        out(k / 31) |= 1L << (62 - 2 * (k % 31)) // sentinel
-        out
-      }
-
       private def advance(): Unit = {
         while (!ready && i < s.length) {
           val c = KmerCodec.code(s.charAt(i))
           i += 1
           if (c < 0) run = 0
           else {
-            appendFwd(c.toLong)
-            prependRc(c.toLong ^ 3L)
+            var j = 0
+            while (j < w - 1) { fwd(j) = (fwd(j) << 2) | (fwd(j + 1) >>> 62); j += 1 }
+            fwd(w - 1) = (fwd(w - 1) << 2) | c
+            fwd(0) &= top
+            j = w - 1
+            while (j > 0) { rc(j) = (rc(j) >>> 2) | (rc(j - 1) << 62); j -= 1 }
+            rc(0) >>>= 2
+            rc(rcWord) |= (c ^ 3L) << rcShift
             run += 1
-            if (run >= k) { next0 = emitCanonical(); ready = true }
+            ready = run >= k
           }
         }
       }
-
       def hasNext: Boolean = { advance(); ready }
       def next(): Array[Long] = {
         advance()
         if (!ready) throw new NoSuchElementException
         ready = false
-        next0
+        (if (KmerCodec.compareWords(fwd, 0, rc, 0, w) <= 0) fwd else rc).clone()
       }
     }
   }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import scala.reflect.runtime.universe.TypeTag
 import org.apache.spark.sql.expressions.Window
 import graft.Tables._
-import graft.core.{Counters, Fixpoint, KmerCodec, KmerIter}
+import graft.core.{Counters, Fixpoint, KmerCodec}
 import graft.sources.StageRunner
 
 /** The assembly core: the reference's "Reflexible Distributed K-mer" loop
@@ -16,7 +16,7 @@ import graft.sources.StageRunner
   * Design (fresh, not a translation):
   *  - The De Bruijn graph is an edge table of oriented k-mers. The fork
   *    filter (J2) is one per-node rule ([[ForkRule]]) judged per
-  *    (k-1)-prefix, then per (k-1)-suffix — after which every node has
+  *    (k-1)-prefix and per (k-1)-suffix — after which every node has
   *    in/out degree <= 1, so the graph is disjoint paths/cycles. Both
   *    drivers apply it: the single task over its edge store, the
   *    distributed seed after a sort-based `groupByKey` on packed node keys.
@@ -49,10 +49,11 @@ import graft.sources.StageRunner
   * right-aligned 2k-bit integer in w = ceil((2k+2)/64) longs, high word
   * first, at offset i·w of one flat `Array[Long]` store. The top two bits
   * of the top word carry the scramble salt ([[endKey]]); at w = 1 (k <= 31)
-  * a key is the packed `Long`. The distributed path ([[drive]]) runs over
-  * [[LongKeys]] (`Long` keys, `kv` counts) or [[BlockKeys]] (w-word keys,
-  * `kb` block counts converted to words at the mirror); its fork filter
-  * and merge rounds shuffle word keys in both.
+  * a key is the packed `Long`. The count table carries the same key
+  * ([[Genomics.countCanonical]]), and [[assemble]] picks the regime from
+  * its key column's type: a `bigint` key runs [[LongKeys]] (k <= 31), an
+  * `array<bigint>` key [[WordKeys]] at any w. No key is converted on the
+  * way; the fork filter and merge rounds shuffle word keys in both.
   *
   * Scale notes: up to ~2M solid canonical k-mers at any k (the default
   * gate) — bacterial-size genomes, `reassemble`, `stitch`, each rung of a
@@ -94,13 +95,14 @@ object Assembler extends QueryFamily {
     * drivers. A node's arms are its oriented out-edges (prefix side) or
     * in-edges (suffix side): at most four, one per base.
     *
-    * The winner is the arm first in `(count desc, k-mer asc)`, k-mers
-    * compared unsigned, top word first (base order); equal (count, k-mer)
-    * arms are identical rows, so which copy wins changes no result. A
-    * losing arm is a sequencing ERROR (the reference's `-error`
-    * minErrorCoverage rule, J3 — same classification as `g8_fork_classify`)
-    * iff its coverage is <= `minError` AND the winner has >= 2x it; a
-    * loser above that bar marks a genuine REPEAT. Per node:
+    * The winner is the arm first in `(count desc, canonical k-mer asc)`,
+    * k-mers compared unsigned, top word first (base order). Two distinct
+    * arms of one node never share a canonical k-mer, so equal (count,
+    * canonical k-mer) arms are identical rows and which copy wins changes
+    * no result. A losing arm is a sequencing ERROR (the reference's
+    * `-error` minErrorCoverage rule, J3 — same classification as
+    * `g8_fork_classify`) iff its coverage is <= `minError` AND the winner
+    * has >= 2x it; a loser above that bar marks a genuine REPEAT. Per node:
     *  - default: keep the winner — bubbles and tips merge into the heavier
     *    path — unless `minError > 0` and a repeat arm survives; then the
     *    node stays contested, all its arms go, and contraction breaks
@@ -114,24 +116,31 @@ object Assembler extends QueryFamily {
     *  - `-bubble` (`popBubbles = false`, "set to NOT remove bubbles"): keep
     *    a lone arm only, so both bubble arms surface as separate contigs.
     *
-    * The prefix side is judged over all edges, the suffix side over the
-    * prefix survivors, or over all edges when [[suffixOverAll]]; an edge
-    * survives iff both sides keep it. */
+    * Both sides are judged over all mirrored edges, and an edge survives
+    * iff both keep it. The suffix group of an edge is the prefix group of
+    * its reverse complement, arm for arm with equal counts, and the
+    * canonical tie-break is the same on both strands: so an edge and its
+    * reverse complement share one fate, and both strands of a unitig
+    * assemble alike. */
   private[operators] final case class ForkRule(popBubbles: Boolean, minError: Int,
                                                scramble: Boolean) {
-    def suffixOverAll: Boolean = !popBubbles && !scramble
-
     /** The rule at the node whose arms are the edges `arms[from, from + n)`
       * of a store (k-mer words at e·w of `km`, counts `cn`): sets `keep(e)`
       * for each kept arm and returns the barrier flag. */
     def node(arms: Array[Int], from: Int, n: Int, km: Array[Long], cn: Array[Long],
-             w: Int, keep: Array[Boolean]): Boolean = {
+             k: Int, keep: Array[Boolean]): Boolean = {
+      val w = KmerCodec.wordsFor(k)
+      def canonical(e: Int): Array[Long] = {
+        val rc = new Array[Long](w)
+        KmerCodec.rcWords(km, e * w, k, rc, 0)
+        if (KmerCodec.compareWords(km, e * w, rc, 0, w) <= 0) km.slice(e * w, e * w + w) else rc
+      }
       var x = arms(from)
       var i = from + 1
       while (i < from + n) {
         val e = arms(i)
         if (cn(e) > cn(x) ||
-          (cn(e) == cn(x) && KmerCodec.compareWords(km, e * w, km, x * w, w) < 0)) x = e
+          (cn(e) == cn(x) && KmerCodec.compareWords(canonical(e), 0, canonical(x), 0, w) < 0)) x = e
         i += 1
       }
       var survivors = 0
@@ -150,9 +159,9 @@ object Assembler extends QueryFamily {
     }
   }
 
-  /** What differs between the two key widths: the endpoint key `K` of the
+  /** What differs between the two key types: the endpoint key `K` of the
     * fragment row (also the key column of the canonical counts) and its
-    * conversion to and from word keys. */
+    * copy to and from a word store. */
   private[operators] sealed abstract class KeyRegime[K : TypeTag] extends Serializable {
     @transient lazy val fragEnc: Encoder[Frag[K]] = ExpressionEncoder[Frag[K]]()
     @transient lazy val keyEnc: Encoder[K] = ExpressionEncoder[K]()
@@ -167,8 +176,6 @@ object Assembler extends QueryFamily {
     /** The endpoint key at `s[off, off + w)`, and back. */
     def key(s: Array[Long], off: Int, w: Int): K
     def put(key: K, dst: Array[Long], off: Int): Unit
-    /** A canonical count's k-mer as a word key in `dst[0, w)`. */
-    def load(kmer: K, dst: Array[Long], k: Int): Unit = put(kmer, dst, 0)
     /** The unsalted head or tail endpoint ([[endKey]]) of a word-key k-mer. */
     def node(kmer: K, k: Int, head: Boolean): K = {
       val w = KmerCodec.wordsFor(k)
@@ -196,18 +203,16 @@ object Assembler extends QueryFamily {
     def put(key: Long, dst: Array[Long], off: Int): Unit = dst(off) = key
   }
 
-  /** Word-array keys, k > 31 (w >= 2; counts in 2-bit block `kb` form).
-    * Arrays have reference equality on the JVM, so endpoints compare
-    * through `KmerCodec.compareWords`; as an `array<bigint>` group or join
-    * key they compare by content. */
-  private[operators] object BlockKeys extends KeyRegime[Array[Long]] {
+  /** Word-array keys (`array<bigint>` counts), any w. Arrays have
+    * reference equality on the JVM, so endpoints compare through
+    * `KmerCodec.compareWords`; as an `array<bigint>` group or join key they
+    * compare by content. */
+  private[operators] object WordKeys extends KeyRegime[Array[Long]] {
     def hash(key: Array[Long]): Long = java.util.Arrays.hashCode(key)
     val keyOrder: Ordering[Array[Long]] = (a, b) => KmerCodec.compareWords(a, 0, b, 0, a.length)
     def key(s: Array[Long], off: Int, w: Int): Array[Long] = java.util.Arrays.copyOfRange(s, off, off + w)
     def put(key: Array[Long], dst: Array[Long], off: Int): Unit =
       System.arraycopy(key, 0, dst, off, key.length)
-    override def load(kmer: Array[Long], dst: Array[Long], k: Int): Unit =
-      KmerCodec.blocksToWords(kmer, k, dst, 0)
   }
 
   /** Endpoint of the seed fragment of the k-mer at `km[off, off + w)` into
@@ -348,7 +353,7 @@ object Assembler extends QueryFamily {
     val cn = Array.newBuilder[Long]
     val (fw, rc) = (new Array[Long](w), new Array[Long](w))
     canon.foreach { case (kmer, c) =>
-      r.load(kmer, fw, k)
+      r.put(kmer, fw, 0)
       KmerCodec.rcWords(fw, 0, k, rc, 0)
       km ++= fw; cn += c
       if (KmerCodec.compareWords(fw, 0, rc, 0, w) != 0) { km ++= rc; cn += c }
@@ -356,33 +361,34 @@ object Assembler extends QueryFamily {
     (km.result(), cn.result())
   }
 
-  /** One fork side over the store's edges `es`, grouped by head (prefix) or
+  /** One fork side over all the store's edges, grouped by head (prefix) or
     * tail (suffix) node key: [[ForkRule.node]] per group marks the kept arms
     * in `keep` and adds barrier node keys to `barriers`. A counting sort
     * lines each group's arms up in one array, so no group allocates. */
-  private def forkSideLocal(es: Array[Int], km: Array[Long], cn: Array[Long], k: Int,
+  private def forkSideLocal(km: Array[Long], cn: Array[Long], k: Int,
                             head: Boolean, rule: ForkRule, keep: Array[Boolean],
                             barriers: scala.collection.mutable.ArrayBuilder[Long]): Unit = {
     val w = KmerCodec.wordsFor(k)
-    val ids = new WordMap(w, es.length)
+    val n = cn.length
+    val ids = new WordMap(w, n)
     val key = new Array[Long](w)
-    val group = new Array[Int](es.length)
-    val start = new Array[Int](es.length + 1) // group g's arms: [start(g), start(g + 1))
+    val group = new Array[Int](n)
+    val start = new Array[Int](n + 1) // group g's arms: [start(g), start(g + 1))
     var ng = 0
-    var p = 0
-    while (p < es.length) {
-      endKey(km, es(p) * w, k, head, salted = false, key, 0)
-      group(p) = ids.getOrPut(key, 0, ng)
-      if (group(p) == ng) ng += 1
-      start(group(p) + 1) += 1
-      p += 1
+    var e = 0
+    while (e < n) {
+      endKey(km, e * w, k, head, salted = false, key, 0)
+      group(e) = ids.getOrPut(key, 0, ng)
+      if (group(e) == ng) ng += 1
+      start(group(e) + 1) += 1
+      e += 1
     }
     (1 to ng).foreach(g => start(g) += start(g - 1))
-    val arms = new Array[Int](es.length)
+    val arms = new Array[Int](n)
     val next = java.util.Arrays.copyOf(start, ng)
-    es.indices.foreach { p => arms(next(group(p))) = es(p); next(group(p)) += 1 }
+    (0 until n).foreach { e => arms(next(group(e))) = e; next(group(e)) += 1 }
     (0 until ng).foreach { g =>
-      if (rule.node(arms, start(g), start(g + 1) - start(g), km, cn, w, keep)) {
+      if (rule.node(arms, start(g), start(g + 1) - start(g), km, cn, k, keep)) {
         endKey(km, arms(start(g)) * w, k, head, salted = false, key, 0)
         barriers ++= key
       }
@@ -393,13 +399,11 @@ object Assembler extends QueryFamily {
     * barrier node keys as a stride-w store — possibly repeated). */
   private[operators] def forkLocal(km: Array[Long], cn: Array[Long], k: Int,
                                    rule: ForkRule): (Array[Int], Array[Long]) = {
-    val all = Array.range(0, cn.length)
     val (byHead, byTail) = (new Array[Boolean](cn.length), new Array[Boolean](cn.length))
     val barriers = Array.newBuilder[Long]
-    forkSideLocal(all, km, cn, k, head = true, rule, byHead, barriers)
-    forkSideLocal(if (rule.suffixOverAll) all else all.filter(byHead),
-      km, cn, k, head = false, rule, byTail, barriers)
-    (all.filter(e => byHead(e) && byTail(e)), barriers.result())
+    forkSideLocal(km, cn, k, head = true, rule, byHead, barriers)
+    forkSideLocal(km, cn, k, head = false, rule, byTail, barriers)
+    (Array.range(0, cn.length).filter(e => byHead(e) && byTail(e)), barriers.result())
   }
 
   /** The whole assembly below the k-mer gate, in one task: mirror the solid
@@ -465,7 +469,7 @@ object Assembler extends QueryFamily {
     val w = KmerCodec.wordsFor(k)
     counts.as[(K, Long)](r.countEnc).flatMap { case (kmer, c) =>
       val (fw, rc) = (new Array[Long](w), new Array[Long](w))
-      r.load(kmer, fw, k)
+      r.put(kmer, fw, 0)
       KmerCodec.rcWords(fw, 0, k, rc, 0)
       if (KmerCodec.compareWords(fw, 0, rc, 0, w) == 0) Iterator((r.key(fw, 0, w), c))
       else Iterator((r.key(fw, 0, w), c), (r.key(rc, 0, w), c))
@@ -487,7 +491,7 @@ object Assembler extends QueryFamily {
       val km = new Array[Long](as.length * w)
       as.indices.foreach(i => r.put(as(i).kmer, km, i * w))
       val keep = new Array[Boolean](as.length)
-      val barrier = rule.node(as.indices.toArray, 0, as.length, km, as.map(_.count), w, keep)
+      val barrier = rule.node(as.indices.toArray, 0, as.length, km, as.map(_.count), k, keep)
       as.indices.iterator.map(i => as(i).copy(kept = as(i).kept && keep(i), barrier = barrier))
     }(r.armEnc)
   }
@@ -499,8 +503,7 @@ object Assembler extends QueryFamily {
                                       rule: ForkRule): Dataset[(K, Boolean, Boolean)] = {
     val byHead = forkSide(r, edges.map { case (km, c) => Arm(km, c, kept = true, barrier = false) }(r.armEnc),
       k, head = true, rule)
-    val byTail = forkSide(r, if (rule.suffixOverAll) byHead else byHead.filter(_.kept),
-      k, head = false, rule)
+    val byTail = forkSide(r, byHead, k, head = false, rule)
     val kept = byTail.filter(_.kept)
     if (!rule.scramble) kept.map(a => (a.kmer, false, false))(r.edgeEnc)
     else {
@@ -531,10 +534,11 @@ object Assembler extends QueryFamily {
     }(r.fragEnc)
   }
 
-  /** Full single-k assembly from canonical k-mer counts: `(kv: Long, count)`
-    * for k <= 31, `(kb: Array[Long], count)` in 2-bit blocks above (see Key
-    * regimes). Returns canonical contig strings (each unitig assembles on
-    * both strands; keep min(contig, rc) once).
+  /** Full single-k assembly from canonical k-mer counts `(key, count)` keyed
+    * as [[Genomics.countCanonical]] keys them: a `bigint` key (k <= 31) or
+    * an `array<bigint>` word key at any k (see Key regimes). Returns
+    * canonical contig strings (each unitig assembles on both strands; keep
+    * min(contig, rc) once).
     *
     * `ckptDir`: when set, probe-point fragment snapshots are written to
     * reliable storage (round-tagged Parquet via [[graft.sources.StageRunner]])
@@ -560,12 +564,18 @@ object Assembler extends QueryFamily {
                popBubbles: Boolean = true,
                localThreshold: Long = Long.MaxValue,
                minError: Int = 0,
-               scramble: Boolean = false): Dataset[String] =
-    drive((if (k <= 31) LongKeys else BlockKeys): KeyRegime[_], counts, k, minCov, maxIter,
-      probeEvery, minContig, ckptDir, popBubbles, localThreshold, minError, scramble)
+               scramble: Boolean = false): Dataset[String] = {
+    val r: KeyRegime[_] = counts.schema.head.dataType match {
+      case org.apache.spark.sql.types.LongType =>
+        require(k <= 31, s"assemble: a bigint k-mer key holds k <= 31, got k = $k"); LongKeys
+      case _ => WordKeys
+    }
+    drive(r, counts, k, minCov, maxIter, probeEvery, minContig, ckptDir, popBubbles,
+      localThreshold, minError, scramble)
+  }
 
   /** [[assemble]] in an explicit key regime. */
-  private[operators] def drive[K](
+  private def drive[K](
       r: KeyRegime[K], counts: DataFrame, k: Int, minCov: Int, maxIter: Int,
       probeEvery: Int, minContig: Int, ckptDir: Option[String], popBubbles: Boolean,
       localThreshold: Long, minError: Int, scramble: Boolean): Dataset[String] = {
@@ -728,17 +738,15 @@ object Assembler extends QueryFamily {
       assemble(counts, 21, minCov = 1, maxIter = 120).toDF("contig")
     }),
 
-    // a2: the a1 pipeline in the block key regime (k=40 over 64-base docs,
-    // reads = sliding windows len 48 step 8). Same closed-form oracle.
+    // a2: the a1 pipeline in the word key regime (k=40, w=2, over 64-base
+    // docs, reads = sliding windows len 48 step 8). Same closed-form oracle.
     "a2_assembly_wide" -> ((s, d) => {
       import s.implicits._
       val reads = documents(s, d)
         .select(Genomics.dna64(col("doc_id")).as("g"))
         .select(explode(expr("transform(sequence(1, 17, 8), i -> substring(g, i, 48))")).as("read"))
         .as[String]
-      val counts = reads.flatMap(r => KmerIter.canonicalBlocks(r, 40))
-        .toDF("kb").groupBy("kb").count()
-      assemble(counts, 40, minCov = 1, maxIter = 120).toDF("contig")
+      assemble(Genomics.countCanonical(reads, 40), 40, minCov = 1, maxIter = 120).toDF("contig")
     }),
 
     // -- assembly report: contig count, total/max bp, N50 ------------------

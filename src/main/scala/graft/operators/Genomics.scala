@@ -18,9 +18,10 @@ import graft.core.{KmerCodec, KmerIter}
   * the packed key, decode after the agg), while the oracle recomputes the
   * same semantics with substr/least/reverse/translate SQL.
   *
-  * Scale design: aggregation keys are packed Longs (k<=31) or long[] blocks
-  * (k>31), never strings — grouping shuffles 8-16 bytes/kmer instead of a
-  * k-byte string, and decode runs only on the post-agg (much smaller) side.
+  * Scale design: aggregation keys are word keys — a packed Long (k<=31) or
+  * a `wordsFor(k)`-long array (k>31), the assembler's own key — never
+  * strings: grouping shuffles 8-24 bytes/kmer instead of a k-byte string,
+  * and decode runs only on the post-agg (much smaller) side.
   * This mirrors `ReflexivDataFrameCounter.java:198-209` (count then decode).
   */
 object Genomics extends QueryFamily {
@@ -49,19 +50,35 @@ object Genomics extends QueryFamily {
        |km AS (SELECT least(substr(s, i, $k), ${sqlRc(s"substr(s, i, $k)")}) AS kmer FROM pos),
        |cnt AS (SELECT kmer, COUNT(*) AS c FROM km GROUP BY kmer)""".stripMargin
 
-  /** The counter pipeline core: sequences -> canonical packed Longs ->
-    * hash count. Decode happens in the caller, after the agg. */
+  /** The counter pipeline core: sequences -> canonical word keys -> hash
+    * count, as `(kv, count)`; `kv` is a `bigint` at k <= 31 and an
+    * `array<bigint>` above ([[graft.core.KmerIter.canonicalWords]]). Decode
+    * happens in the caller, after the agg. */
   def countCanonical(seqs: Dataset[String], k: Int): DataFrame = {
     import seqs.sparkSession.implicits._
-    seqs.flatMap(s => KmerIter.canonicalLong(s, k))
-      .toDF("kv")
+    (if (k <= 31) seqs.flatMap(s => KmerIter.canonicalLong(s, k)).toDF("kv")
+    else seqs.flatMap(s => KmerIter.canonicalWords(s, k)).toDF("kv"))
       .groupBy("kv").count()
   }
 
+  /** The count key of a string k-mer column given in either orientation —
+    * the key [[countCanonical]] gives the same k-mer. A row that is not
+    * exactly k ACGT bases fails the job, naming the row. */
+  def kmerKey(kmer: Column, k: Int): Column = {
+    val key = udf { (s: String) =>
+      val it = if (s != null && s.length == k) KmerIter.canonicalWords(s, k) else Iterator.empty
+      require(it.hasNext, s"k-mer row '$s' is not $k ACGT bases")
+      it.next()
+    }
+    if (k <= 31) key(kmer)(0) else key(kmer)
+  }
+
+  /** `(kv, count)` counts of either key type as `(kmer, count)` strings. */
   def decodeCounts(df: DataFrame, k: Int): DataFrame = {
     import df.sparkSession.implicits._
-    df.as[(Long, Long)]
-      .map { case (kv, c) => (KmerCodec.decodeLong(kv, k), c) }
+    (if (k <= 31) df.as[(Long, Long)].map { case (kv, c) => (KmerCodec.decodeLong(kv, k), c) }
+    else df.as[(Array[Long], Long)]
+      .map { case (kv, c) => (KmerCodec.decodeBlocks(KmerCodec.wordsToBlocks(kv, 0, k)), c) })
       .toDF("kmer", "count")
   }
 
@@ -76,17 +93,9 @@ object Genomics extends QueryFamily {
     "g1_kmer_count" -> ((s, d) =>
       decodeCounts(countCanonical(docSeqs(s, d, col64 = false), 15), 15)),
 
-    // -- k>31 path: block-encoded kmers, grouped on long[] (A1 64-bit) -----
-    "g2_kmer_count_blocks" -> ((s, d) => {
-      import s.implicits._
-      docSeqs(s, d, col64 = true)
-        .flatMap(q => KmerIter.canonicalBlocks(q, 40))
-        .toDF("kb")
-        .groupBy("kb").count()
-        .as[(Array[Long], Long)]
-        .map { case (kb, c) => (KmerCodec.decodeBlocks(kb), c) }
-        .toDF("kmer", "count")
-    }),
+    // -- k>31 path: 2-word keys, grouped on array<bigint> (A1 64-bit) ------
+    "g2_kmer_count_blocks" -> ((s, d) =>
+      decodeCounts(countCanonical(docSeqs(s, d, col64 = true), 40), 40)),
 
     // -- P13: coverage-range filter after the count (k=7 so repeats exist) -
     "g3_coverage_filter" -> ((s, d) =>

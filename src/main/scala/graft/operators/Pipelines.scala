@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables.documents
-import graft.core.{KmerCodec, KmerIter}
+import graft.core.KmerIter
 import graft.sources.StageRunner
 
 /** Driver-orchestrated multi-stage pipelines (SURVEY §3.3): the dynamic-k
@@ -28,9 +28,10 @@ import graft.sources.StageRunner
   *    (an anti-join — J4 semantics). Contigs are tiny next to the reads,
   *    so the per-round work after the first scan is proportional to the
   *    assembly, not the corpus.
-  *  - The interchange is block-form so the ladder can cross 31 (the
-  *    reference's k=95 regime); each k assembles in its own key regime
-  *    (packed Long for k <= 31, 2-bit blocks above).
+  *  - The interchange is the assembler's word key (`array<bigint>`,
+  *    `wordsFor(k)` longs) at every k, so one column holds the whole ladder
+  *    and it can cross 31 (the reference's k=95 regime); each rung hands its
+  *    counts to `Assembler.assemble` as they are.
   */
 object Pipelines extends QueryFamily {
 
@@ -49,23 +50,23 @@ object Pipelines extends QueryFamily {
     val multik = runner.stage("count_multik") {
       val kArr = ks.toArray
       reads.flatMap { r =>
-        kArr.iterator.flatMap(k => KmerIter.canonicalBlocks(r, k).map(kb => (k, kb)))
-      }.toDF("k", "kb").groupBy("k", "kb").count()
+        kArr.iterator.flatMap(k => KmerIter.canonicalWords(r, k).map(kv => (k, kv)))
+      }.toDF("k", "kv").groupBy("k", "kv").count()
     }
     var contigs: Dataset[String] = spark.emptyDataset[String]
     ks.foreach { k =>
       val reduced = runner.stage(s"count_k${k}_reduced") {
         val fromReads = multik.filter(col("k") === k)
-          .select("kb", "count").filter(col("count") >= minCov)
+          .select("kv", "count").filter(col("count") >= minCov)
         // bridge k-mers carry the same trust boost reassemble() uses: the
         // previous round's contigs already passed their coverage gate, so
         // at a fork between a contig path and a recurrent read error the
         // fork filter must keep the contig path (at large k the raw
         // bridge occurrence is 1 and would otherwise lose the fork).
-        val bridge = contigs.flatMap(c => KmerIter.canonicalBlocks(c, k))
-          .toDF("kb").groupBy("kb").count()
-          .select(col("kb"), (col("count") + lit(1L << 40)).as("count"))
-          .join(fromReads.select("kb"), Seq("kb"), "left_anti")
+        val bridge = contigs.flatMap(c => KmerIter.canonicalWords(c, k))
+          .toDF("kv").groupBy("kv").count()
+          .select(col("kv"), (col("count") + lit(1L << 40)).as("count"))
+          .join(fromReads.select("kv"), Seq("kv"), "left_anti")
         fromReads.unionAll(bridge)
       }
       // the in-round contraction checkpoints durably under the work dir
@@ -73,26 +74,11 @@ object Pipelines extends QueryFamily {
       // round's contigs stage has landed
       val ckpt = Some(s"$workDir/assemble_k$k")
       contigs = runner.stage(s"contigs_k$k") {
-        assembleBlocks(reduced, k, ckpt, minError).toDF("contig")
+        Assembler.assemble(reduced, k, ckptDir = ckpt, minError = minError).toDF("contig")
       }.select(col("contig")).as[String]
       runner.clean(s"assemble_k$k")
     }
     contigs.filter((c: String) => c.length >= minContig)
-  }
-
-  /** Assemble block-form canonical counts `(kb: Array[Long], count)`,
-    * packed to `(kv, count)` first when k <= 31 (the packed key regime). */
-  private def assembleBlocks(counts: DataFrame, k: Int,
-                             ckptDir: Option[String],
-                             minError: Int = 0): Dataset[String] = {
-    val s = counts.sparkSession
-    import s.implicits._
-    val keyed =
-      if (k > 31) counts
-      else counts.as[(Array[Long], Long)]
-        .map { case (kb, c) => (KmerCodec.blocksPrefixLong(kb, k), c) }
-        .toDF("kv", "count")
-    Assembler.assemble(keyed, k, minCov = 1, ckptDir = ckptDir, minError = minError)
   }
 
   /** Reassembler (the reference's `ReflexivDSReAssembler.java:112,350`
@@ -107,21 +93,18 @@ object Pipelines extends QueryFamily {
                  reads: Dataset[String], k: Int, minCov: Int = 1,
                  minContig: Int = 0, ckptDir: Option[String] = None,
                  minError: Int = 0): Dataset[String] = {
-    import spark.implicits._
     // Trust boost: seed k-mers carry a count far above any physical read
     // coverage, so at a fork between the existing contig path and a novel
     // read-derived k-mer (e.g. a recurrent sequencing error with coverage
     // >= minCov) the fork filter always keeps the contig path — reads can
     // only EXTEND contigs, never shatter them mid-body.
     val trust = 1L << 40
-    val seed = contigs.flatMap(c => KmerIter.canonicalBlocks(c, k))
-      .toDF("kb").groupBy("kb").count()
-      .select(col("kb"), (col("count") + lit(trust)).as("count"))
-    val novel = reads.flatMap(r => KmerIter.canonicalBlocks(r, k))
-      .toDF("kb").groupBy("kb").count()
+    val seed = Genomics.countCanonical(contigs, k)
+      .select(col("kv"), (col("count") + lit(trust)).as("count"))
+    val novel = Genomics.countCanonical(reads, k)
       .filter(col("count") >= minCov)
-      .join(seed.select("kb"), Seq("kb"), "left_anti")
-    assembleBlocks(seed.unionAll(novel), k, ckptDir, minError)
+      .join(seed.select("kv"), Seq("kv"), "left_anti")
+    Assembler.assemble(seed.unionAll(novel), k, ckptDir = ckptDir, minError = minError)
       .filter((c: String) => c.length >= minContig)
   }
 

@@ -58,21 +58,15 @@ object Rescue extends QueryFamily {
     * get their count lifted to `minCov`, so the downstream coverage gate
     * keeps them and low-coverage gaps assemble through. One anti-join-free
     * left join against the (small) rescued set, keyed like the count
-    * table: packed `kv` for k <= 31, 2-bit block `kb` above. The rescue
-    * scan itself is string-domain (any k); string-canonical ==
-    * block-canonical, because 2-bit codes order A<C<G<T exactly as ASCII
-    * does, so `encodeBlocks(canonical str)` IS the block counter's key. */
+    * table ([[Genomics.countCanonical]]'s `kv` at any k): the rescue scan
+    * itself is string-domain, and [[Genomics.kmerKey]] turns its canonical
+    * strings into that key. */
   def applyMercy(counts: DataFrame, reads: Dataset[String], k: Int,
                  minCov: Int): DataFrame = {
-    val s = counts.sparkSession
-    import s.implicits._
-    graft.functions.GraftFunctions.register(s)
-    val found = mercyKmers(reads, k, solidCov = minCov)
-    val (key, rescued) =
-      if (k <= 31) ("kv", found.selectExpr("kmer_pack(kmer) AS kv"))
-      else ("kb", found.as[String].map(graft.core.KmerCodec.encodeBlocks(_)).toDF("kb"))
-    counts.join(rescued.withColumn("mercy", lit(1)), Seq(key), "left")
-      .select(col(key),
+    val rescued = mercyKmers(reads, k, solidCov = minCov)
+      .select(Genomics.kmerKey(col("kmer"), k).as("kv"), lit(1).as("mercy"))
+    counts.join(rescued, Seq("kv"), "left")
+      .select(col("kv"),
         when(col("mercy") === 1, greatest(col("count"), lit(minCov.toLong)))
           .otherwise(col("count")).as("count"))
   }

@@ -1,10 +1,9 @@
 package graft.core
 
-import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
-import graft.TestSpark
+import graft.{SourceScan, TestSpark}
 import graft.operators.{Assembler, Dna, Genomics, GraphOps}
 
 /** The convergent operators share [[Fixpoint]]'s loop, and the loops that
@@ -13,15 +12,8 @@ class FixpointSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   test("no operator source writes its own round loop or fingerprint") {
-    val files = Files.walk(Paths.get("src/main/scala/graft/operators")).iterator().asScala
-      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala")).toSeq
-    assert(files.size > 20, s"scan found only ${files.size} sources")
-    val hits = files.flatMap { p =>
-      Files.readAllLines(p).asScala.zipWithIndex.collect {
-        case (line, i) if line.contains("bit_xor(") || line.contains("var round") =>
-          s"${p.getFileName}:${i + 1}: ${line.trim}"
-      }
-    }
+    val hits = SourceScan.hits("src/main/scala/graft/operators", 20)(line =>
+      line.contains("bit_xor(") || line.contains("var round"))
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 

@@ -83,10 +83,15 @@ class KmerCodecSpec extends AnyFunSuite with ScalaCheckRunner {
   }
 
   test("blocks RC involution + canonical symmetry") {
+    // the canonical form of a whole sequence is its word key's: one
+    // canonical window of length |s|, equal for s and rc(s)
+    def canon(s: String) = KmerIter.canonicalWords(s, s.length).toList.map(_.toSeq)
     check(Prop.forAll(dnaGen) { s =>
       val b = encodeBlocks(s)
-      decodeBlocks(rcBlocks(b)) == rcStr(s) &&
-        decodeBlocks(canonicalBlocks(b)) == decodeBlocks(canonicalBlocks(encodeBlocks(rcStr(s))))
+      decodeBlocks(rcBlocks(b)) == rcStr(s) && decodeBlocks(rcBlocks(rcBlocks(b))) == s &&
+        canon(s) == canon(rcStr(s)) &&
+        canon(s).map(c => decodeBlocks(wordsToBlocks(c.toArray, 0, s.length))) ==
+          List(Seq(s, rcStr(s)).min)
     })
   }
 
@@ -98,15 +103,19 @@ class KmerCodecSpec extends AnyFunSuite with ScalaCheckRunner {
       val b = encodeBlocks(s)
       val k = math.min(s.length, 31)
       val mid = s.length / 2
-      decodeLong(blocksPrefixLong(b, k), k) == s.take(k) &&
-        decodeLong(blocksSuffixLong(b, k), k) == s.takeRight(k) &&
+      decodeBlocks(sliceBlocks(b, 0, k)) == s.take(k) &&
+        decodeBlocks(sliceBlocks(b, s.length - k, s.length)) == s.takeRight(k) &&
         (mid == 0 || decodeBlocks(sliceBlocks(b, 0, mid)) == s.take(mid))
     })
   }
 
-  test("compareBlocks is lexicographic then by length") {
-    check(Prop.forAll(dnaGen, dnaGen) { (a, b) =>
-      compareBlocks(encodeBlocks(a), encodeBlocks(b)).sign == a.compareTo(b).sign
+  test("word key order is lexicographic order at equal k") {
+    import graft.operators.Dna.wordKey
+    check(Prop.forAll(dnaGen, dnaGen) { (x, y) =>
+      val k = math.min(x.length, y.length)
+      val (a, b) = (x.take(k), y.take(k))
+      decodeBlocks(wordsToBlocks(wordKey(a), 0, k)) == a &&
+        compareWords(wordKey(a), 0, wordKey(b), 0, wordsFor(k)).sign == a.compareTo(b).sign
     })
   }
 
@@ -127,8 +136,6 @@ class KmerCodecSpec extends AnyFunSuite with ScalaCheckRunner {
 
   test("contract violations fail fast") {
     intercept[IllegalArgumentException](encodeLong("A" * 32))
-    intercept[IllegalArgumentException](blocksSuffixLong(encodeBlocks("ACG"), 5))
-    intercept[IllegalArgumentException](blocksPrefixLong(encodeBlocks("ACG"), 5))
     intercept[IllegalArgumentException](sliceBlocks(encodeBlocks("ACG"), 1, 9))
     val bld = new Builder(4)
     bld.append(0).append(1)

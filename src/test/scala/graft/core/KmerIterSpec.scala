@@ -23,12 +23,18 @@ class KmerIterSpec extends AnyFunSuite with ScalaCheckRunner {
     })
   }
 
-  test("rolling canonicalBlocks == naive re-encode for k spanning block boundaries") {
-    for (k <- Seq(5, 31, 32, 40, 62, 63, 93)) {
-      check(Prop.forAll(dnaWithN) { s =>
-        val rolled = KmerIter.canonicalBlocks(s, k).map(KmerCodec.decodeBlocks).toList
-        val naive = KmerIter.canonicalBlocksNaive(s, k).map(KmerCodec.decodeBlocks).toList
-        rolled == naive
+  test("canonicalWords == a BigInt reference, k = 1 to 95") {
+    // each window of ACGT bases (either case), the smaller strand as a
+    // BigInt split into words (`Dna.wordKey`)
+    def reference(s: String, k: Int): List[List[Long]] =
+      (0 to s.length - k).map(i => s.substring(i, i + k).toUpperCase)
+        .filter(_.forall("ACGT".contains(_)))
+        .map(f => graft.operators.Dna.wordKey(Seq(f, rcStr(f)).min).toList).toList
+    val mixedCase = dnaWithN.flatMap(s => Gen.listOfN(s.length, Gen.oneOf(true, false))
+      .map(up => s.zip(up).map { case (c, u) => if (u) c else c.toLower }.mkString))
+    for (k <- Seq(1, 2, 31, 32, 33, 63, 64, 65, 95)) {
+      check(Prop.forAll(mixedCase) { s =>
+        KmerIter.canonicalWords(s, k).map(_.toList).toList == reference(s, k)
       }, minTests = 60)
     }
   }

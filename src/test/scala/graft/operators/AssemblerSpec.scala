@@ -46,8 +46,7 @@ class AssemblerSpec extends AnyFunSuite {
           if (st) "T" + sub.takeRight(k) else sub.takeRight(k - 1), sub)
       }
       def words(head: Boolean) = parted.flatMap { case (sub, sh, st) =>
-        val (km, dst) = (new Array[Long](w), new Array[Long](w))
-        KmerCodec.blocksToWords(KmerCodec.encodeBlocks(if (head) sub else sub.takeRight(k)), k, km, 0)
+        val (km, dst) = (wordKey((if (head) sub else sub.takeRight(k)).take(k)), new Array[Long](w))
         Assembler.endKey(km, 0, k, head, if (head) sh else st, dst, 0)
         dst
       }.toArray
@@ -161,24 +160,13 @@ class AssemblerSpec extends AnyFunSuite {
   }
 
   test("wide-k assembler survives short-period cycles too") {
-    import spark.implicits._
-    val rds = Seq("ACGT" * 16) // period 4, read len 64, k = 40
-    val counts = rds.toDS().flatMap(r => graft.core.KmerIter.canonicalBlocks(r, 40))
-      .toDF("kb").groupBy("kb").count()
-    val contigs = Assembler.assemble(counts, 40, minCov = 1, maxIter = 60)
-      .collect().toSeq
-    assert(contigs == Seq(expectedCycle("ACGT", 40)))
+    // period 4, read len 64, k = 40
+    assert(assembleFrom(Seq("ACGT" * 16), 40) == Seq(expectedCycle("ACGT", 40)))
   }
 
   test("wide-k (k=45) assembly reconstructs via the block-key path") {
-    import spark.implicits._
     val genome = randGenome(500, seed = 47)
-    val rds = reads(genome, 100, 9)
-    val counts = rds.toDS().flatMap(r => graft.core.KmerIter.canonicalBlocks(r, 45))
-      .toDF("kb").groupBy("kb").count()
-    val contigs = Assembler.assemble(counts, 45, minCov = 1, maxIter = 60)
-      .collect().toSeq
-    assert(contigs == Seq(canonStr(genome)))
+    assert(assembleFrom(reads(genome, 100, 9), 45) == Seq(canonStr(genome)))
   }
 
   test("coverage filter drops error kmers before assembly") {
@@ -195,14 +183,16 @@ class AssemblerSpec extends AnyFunSuite {
   }
 
   /** The fork rule by brute force in the string domain, over mirrored
-    * `(k-mer, count)` rows (a k-mer may occur twice): per prefix, then per
-    * suffix group, sorted by `(-count, k-mer)`. Returns the kept rows as
-    * `(k-mer, head node is a barrier, tail node is a barrier)`, sorted. */
+    * `(k-mer, count)` rows (a k-mer may occur twice): per prefix and per
+    * suffix group, each over all rows, sorted by `(-count, canonical
+    * k-mer)`; a row is kept iff both its groups keep it. Returns the kept
+    * rows as `(k-mer, head node is a barrier, tail node is a barrier)`,
+    * sorted. */
   private def bruteFork(edges: Seq[(String, Long)], rule: Assembler.ForkRule): Seq[(String, Boolean, Boolean)] = {
     val rows = edges.zipWithIndex
     def side(rs: Seq[((String, Long), Int)], node: String => String): (Set[Int], Set[String]) = {
       val judged = rs.groupBy(r => node(r._1._1)).toSeq.map { case (nd, g) =>
-        val sorted = g.sortBy { case ((km, c), _) => (-c, km) }
+        val sorted = g.sortBy { case ((km, c), _) => (-c, canonStr(km)) }
         val ((_, top), win) = sorted.head
         val surv = sorted.filter { case ((_, c), i) => i == win || !(c <= rule.minError && top >= 2 * c) }
         val kept =
@@ -214,8 +204,7 @@ class AssemblerSpec extends AnyFunSuite {
       (judged.flatMap(_._1).toSet, judged.flatMap(_._2).toSet)
     }
     val (byHead, bh) = side(rows, _.dropRight(1))
-    val (byTail, bt) = side(
-      if (!rule.popBubbles && !rule.scramble) rows else rows.filter(r => byHead(r._2)), _.drop(1))
+    val (byTail, bt) = side(rows, _.drop(1))
     val barriers = bh ++ bt
     rows.collect { case ((km, _), i) if byHead(i) && byTail(i) =>
       (km, barriers(km.dropRight(1)), barriers(km.drop(1)))
@@ -233,7 +222,7 @@ class AssemblerSpec extends AnyFunSuite {
     def keyStr(km: K) = { val a = new Array[Long](w); r.put(km, a, 0); str(a, 0) }
     val edges = counts.flatMap { case (kmer, c) =>
       val a = new Array[Long](w)
-      r.load(kmer, a, k)
+      r.put(kmer, a, 0)
       Seq(str(a, 0), rcStr(str(a, 0))).distinct.map(_ -> c)
     }.sorted
     val (km, cn) = Assembler.mirrorLocal(r, counts.iterator, k)
@@ -283,7 +272,7 @@ class AssemblerSpec extends AnyFunSuite {
       assert(tops.exists(c => c(0) == 2 * c(1)), s"$ctx 2x")
       assert(tops.exists(c => Set(2L, 4L, 8L)(c(1))), s"$ctx count == minError")
     }
-    // w = 2 word keys in the block regime: arms around random (k-1)-mer
+    // w = 2 word keys in the word regime: arms around random (k-1)-mer
     // nodes, plus four-way ties (A/C/G/T + node) at the top count. At k = 32
     // the first base fills a lower word's bits 62-63, so A and G arms differ
     // only in that word's bit 63: a signed word compare would crown G
@@ -294,8 +283,49 @@ class AssemblerSpec extends AnyFunSuite {
       val arms = nodes.flatMap(nd => "ACGT".filter(_ => rnd.nextBoolean()).flatMap(b => Seq(s"$nd$b", s"$b$nd")))
       val counts = (arms.map(_ -> ladder(rnd.nextInt(ladder.length))).toMap ++
         nodes.take(6).flatMap(nd => "ACGT".map(b => s"$b$nd" -> 32L))).toSeq
-        .map { case (km, c) => (KmerCodec.encodeBlocks(km), c) }
-      forkDriversAgree(Assembler.BlockKeys, counts, k, Seq(0, 2, 8), s"seed=$seed k=$k")
+        .map { case (km, c) => (wordKey(km), c) }
+      forkDriversAgree(Assembler.WordKeys, counts, k, Seq(0, 2, 8), s"seed=$seed k=$k")
+    }
+  }
+
+  test("fork filter is strand-symmetric: the kept edges are closed under reverse complement") {
+    // random canonical count tables on few (k-1)-mer nodes, arms on both
+    // sides of each: planted error arms (coverage 1 or 2 next to 16) and
+    // exact ties at the top count; odd, even (palindromes) and w = 2 k
+    val rules = Seq(0, 2, 8).flatMap(me => Seq(false, true).map(Assembler.ForkRule(popBubbles = true, me, _))) :+
+      Assembler.ForkRule(popBubbles = false, 0, scramble = false)
+    def check[K](r: Assembler.KeyRegime[K], key: String => K, k: Int, seed: Int): Unit = {
+      val rnd = new scala.util.Random(seed * 131L + k)
+      val w = KmerCodec.wordsFor(k)
+      def str(a: Array[Long], off: Int) = KmerCodec.decodeBlocks(KmerCodec.wordsToBlocks(a, off, k))
+      val strs = Seq.fill(12)(randGenome(k - 1, rnd.nextLong())).flatMap { nd =>
+        "ACGT".filter(_ => rnd.nextInt(3) > 0).flatMap(b => Seq(s"$nd$b", s"$b$nd"))
+      }.map(canonStr).distinct.map(_ -> Seq(1L, 2L, 16L, 16L)(rnd.nextInt(4)))
+      val counts = strs.map { case (km, c) => (key(km), c) }
+      val (km, cn) = Assembler.mirrorLocal(r, counts.iterator, k)
+      val mirrored = Assembler.mirror(r, spark.createDataset(counts)(r.countEnc).toDF(), k).cache()
+      // the fixture plants what breaks symmetry: a tied top pair and an
+      // error arm on one node
+      val groups = cn.indices.groupBy(e => str(km, e * w).dropRight(1)).values.map(_.map(cn(_)).sorted.reverse)
+      assert(groups.exists(g => g.length > 1 && g(0) == g(1)), s"k=$k seed=$seed: no tie")
+      assert(groups.exists(g => g.length > 1 && g(0) >= 2 * g.last && g.last <= 2), s"k=$k seed=$seed: no error arm")
+      for (rule <- rules) {
+        def closed(kept: Seq[(String, Boolean, Boolean)], path: String): Unit =
+          assert(kept.toSet == kept.map { case (m, sh, st) => (rcStr(m), st, sh) }.toSet,
+            s"k=$k seed=$seed $rule $path")
+        val (kept, barriers) = Assembler.forkLocal(km, cn, k, rule)
+        val bs = (0 until barriers.length by w).map(o => str(barriers, o).tail).toSet
+        closed(kept.toSeq.map(e => str(km, e * w)).map(m => (m, bs(m.dropRight(1)), bs(m.drop(1)))), "single task")
+        closed(Assembler.forkEdges(r, mirrored, k, rule).collect().toSeq.map { case (m, sh, st) =>
+          val a = new Array[Long](w); r.put(m, a, 0); (str(a, 0), sh, st)
+        }, "distributed")
+      }
+      mirrored.unpersist()
+    }
+    for (seed <- 1 to 4) {
+      check(Assembler.LongKeys, KmerCodec.encodeLong(_: String), 7, seed)
+      check(Assembler.LongKeys, KmerCodec.encodeLong(_: String), 8, seed)
+      check(Assembler.WordKeys, wordKey, 33, seed)
     }
   }
 
@@ -306,8 +336,7 @@ class AssemblerSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     import org.apache.spark.sql.util.QueryExecutionListener
     val genome = randGenome(2000, seed = 67)
-    val counts = reads(genome, 80, 9).toDS().flatMap(r => KmerIter.canonicalBlocks(r, 41))
-      .toDF("kb").groupBy("kb").count().localCheckpoint()
+    val counts = Genomics.countCanonical(reads(genome, 80, 9).toDS(), 41).localCheckpoint()
     // the output types of every exchange the eager part of assemble() runs:
     // the seed's fork filter and the contraction rounds
     val exchanged = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -332,9 +361,7 @@ class AssemblerSpec extends AnyFunSuite {
     val rds = reads(genome, 80, 9).toDS()
     def shuffled(st: Seq[StageInfo]) = st.map(_.taskMetrics.shuffleWriteMetrics.recordsWritten).sum
     for (k <- Seq(31, 41)) {
-      val counts = (if (k <= 31) Genomics.countCanonical(rds, k)
-        else rds.flatMap(r => KmerIter.canonicalBlocks(r, k)).toDF("kb").groupBy("kb").count())
-        .localCheckpoint()
+      val counts = Genomics.countCanonical(rds, k).localCheckpoint()
       val nKmers = counts.count()
       val before = Counters.snapshot
       val (ds, eager) = stagesOf(Assembler.assemble(counts, k))

@@ -27,44 +27,29 @@ class GenericOpsSpec extends AnyFunSuite {
     assert(rescued == expected)
   }
 
-  test("applyMercy lifts gap-bridging kmers over the coverage gate") {
+  /** Halves of `g` split at `at` are double-covered; the junction is
+    * crossed by ONE read only, `bridge`, so its bridging k-mers have count
+    * 1 and a minCov = 2 gate splits g. The bridge reaches >= k bases into
+    * both halves, so it holds solid anchors on each side of its non-solid
+    * middle (the rescue precondition): mercy assembles g whole. */
+  private def mercyBridges(k: Int, g: String, at: Int, bridge: (Int, Int)): Unit = {
     import spark.implicits._
-    val k = 21
-    val g = randGenome(120, seed = 139)
-    // halves double-covered; the junction crossed by ONE read only -> its
-    // bridging kmers have count 1 and a minCov=2 gate would split g. The
-    // bridge read reaches >= k bases into both halves, so it contains
-    // solid anchors on each side of its non-solid middle (the rescue
-    // precondition).
-    val rds = Seq(g.substring(0, 60), g.substring(0, 60),
-      g.substring(60), g.substring(60),
-      g.substring(30, 95)).toDS()
+    val rds = Seq(g.take(at), g.take(at), g.drop(at), g.drop(at),
+      g.substring(bridge._1, bridge._2)).toDS()
     val counts = Genomics.countCanonical(rds, k)
     val without = Assembler.assemble(counts.filter(col("count") >= 2), k,
       minCov = 2, maxIter = 60).collect().toSeq
     assert(!without.contains(canonStr(g)))
     val mercied = Rescue.applyMercy(counts, rds, k, minCov = 2)
-    val withM = Assembler.assemble(mercied, k, minCov = 2, maxIter = 60)
-      .collect().toSeq
-    assert(withM == Seq(canonStr(g)))
+    assert(Assembler.assemble(mercied, k, minCov = 2, maxIter = 60).collect().toSeq == Seq(canonStr(g)))
+  }
+
+  test("applyMercy lifts gap-bridging kmers over the coverage gate") {
+    mercyBridges(21, randGenome(120, seed = 139), 60, (30, 95))
   }
 
   test("applyMercy lifts gap-bridging kmers over the gate in the block regime (k=40)") {
-    import spark.implicits._
-    val k = 40
-    val g = randGenome(160, seed = 149)
-    val rds = Seq(g.substring(0, 80), g.substring(0, 80),
-      g.substring(80), g.substring(80),
-      g.substring(35, 125)).toDS()
-    val counts = rds.flatMap(r => graft.core.KmerIter.canonicalBlocks(r, k))
-      .toDF("kb").groupBy("kb").count()
-    val without = Assembler.assemble(counts.filter(col("count") >= 2), k,
-      minCov = 2, maxIter = 60).collect().toSeq
-    assert(!without.contains(canonStr(g)))
-    val mercied = Rescue.applyMercy(counts, rds, k, minCov = 2)
-    val withM = Assembler.assemble(mercied, k, minCov = 2, maxIter = 60)
-      .collect().toSeq
-    assert(withM == Seq(canonStr(g)))
+    mercyBridges(40, randGenome(160, seed = 149), 80, (35, 125))
   }
 
   test("overlapMergeContigs splices on exact suffix/prefix overlap, passes others through") {
@@ -180,8 +165,7 @@ class GenericOpsSpec extends AnyFunSuite {
     val g = randGenome(300, seed = 83)
     val rds = ((0 to g.length - 80 by 7) :+ (g.length - 80)).distinct
       .map(i => g.substring(i, i + 80))
-    val counts = rds.toDS().flatMap(r => KmerIter.canonicalBlocks(r, k))
-      .toDF("kb").groupBy("kb").count().localCheckpoint()
+    val counts = Genomics.countCanonical(rds.toDS(), k).localCheckpoint()
     val local = Assembler.assemble(counts, k, minCov = 1, maxIter = 80)
       .collect().toSet
     val dist = Assembler.assemble(counts, k, minCov = 1, maxIter = 80,
@@ -260,10 +244,7 @@ class GenericOpsSpec extends AnyFunSuite {
           val w = g.substring(i, i + 70); if (rnd.nextBoolean()) w else rcStr(w)
         }
       }
-      val counts = (
-        if (k <= 31) Genomics.countCanonical(rds.toDS(), k)
-        else rds.toDS().flatMap(r => KmerIter.canonicalBlocks(r, k))
-          .toDF("kb").groupBy("kb").count()).localCheckpoint()
+      val counts = Genomics.countCanonical(rds.toDS(), k).localCheckpoint()
       val local = Assembler.assemble(counts, k, minCov = 1, maxIter = 80).collect().toSet
       val dist = Assembler.assemble(counts, k, minCov = 1, maxIter = 80,
         localThreshold = 0).collect().toSet

@@ -1,15 +1,16 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.TestSpark
+import graft.{SourceScan, TestSpark}
 import graft.core.KmerIter
 import Dna._
 
 /** The two key regimes of [[Assembler]] are one algorithm: at a k both can
-  * hold (k <= 31), the same reads give the same contigs whether the k-mers
-  * are packed Longs (`assemble`) or 2-bit blocks (`drive` over
-  * `BlockKeys`) — fork winners, tie-breaks, scramble barriers, cycles and
-  * the endgame walk included. Above k = 31 (w = 2 and 3 word keys), the
+  * hold (k <= 31), the same reads give the same contigs whether the counts
+  * are keyed by packed Longs (`bigint`) or by one-word arrays
+  * (`array<bigint>`, the `WordKeys` regime `assemble` picks from the key
+  * type) — fork winners, tie-breaks, scramble barriers, cycles and the
+  * endgame walk included. Above k = 31 (w = 2 and 3 word keys), the
   * single-task kernel gives what the distributed path does. */
 class KeyRegimeSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -18,7 +19,7 @@ class KeyRegimeSpec extends AnyFunSuite {
   private def repeatGenome(seed: Long, unique: Int, repeat: Int): String =
     (1 to 4).map(i => randGenome(unique, seed * 10 + i)).mkString(randGenome(repeat, seed * 10))
 
-  /** Asserts both regimes give the same contigs (k <= 31; block keys only
+  /** Asserts both regimes give the same contigs (k <= 31; word keys only
     * above), with the default gates and with the fully distributed path;
     * returns the contigs. */
   private def sameInBoth(rds: Seq[String], k: Int, ctx: String, minCov: Int = 1,
@@ -26,11 +27,10 @@ class KeyRegimeSpec extends AnyFunSuite {
                          scramble: Boolean = false): Set[String] = {
     import spark.implicits._
     lazy val packed = Genomics.countCanonical(rds.toDS(), k).localCheckpoint()
-    val blocks = rds.toDS().flatMap(r => KmerIter.canonicalBlocks(r, k))
-      .toDF("kb").groupBy("kb").count().localCheckpoint()
+    val words = rds.toDS().flatMap(r => KmerIter.canonicalWords(r, k))
+      .toDF("kv").groupBy("kv").count().localCheckpoint()
     val out = Seq(Long.MaxValue, 0L).map { gate =>
-      val b = Assembler.drive(Assembler.BlockKeys, blocks, k, minCov = minCov,
-        maxIter = 150, probeEvery = 3, minContig = 0, ckptDir = None,
+      val b = Assembler.assemble(words, k, minCov = minCov, maxIter = 150,
         popBubbles = popBubbles, localThreshold = gate, minError = minError,
         scramble = scramble).collect().toSet
       if (k <= 31)
@@ -42,6 +42,12 @@ class KeyRegimeSpec extends AnyFunSuite {
     assert(out.distinct.size == 1, s"$ctx k=$k: gates disagree")
     assert(out.head.size > 1, s"$ctx k=$k: no fork was exercised")
     out.head
+  }
+
+  test("one k-mer key: no main source names a block-form key or its converters") {
+    val banned = Seq("\"kb\"", "blocksToWords", "blocksPrefixLong", "canonicalBlocks")
+    val hits = SourceScan.hits("src/main/scala", 40)(line => banned.exists(line.contains))
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 
   /** k = 41, 63 and 64 straddle the w = 2 -> 3 word boundary. */

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
-import graft.core.KmerIter
 import graft.sources.StageRunner
 import java.nio.file.Files
 import Dna._
@@ -94,13 +93,10 @@ class PipelinesSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.{col, udf}
     val genome = randGenome(600, seed = 7)
     val reads = ((0 to 540 by 6) :+ 540).distinct.map(i => genome.substring(i, i + 60))
-    // both key regimes: k=21 packed, k=41 2-bit blocks; the block run is
+    // both key regimes: k=21 packed, k=41 2-word keys; the word run is
     // kept off the endgame walk so that it crashes between rounds
     for ((k, crashGate) <- Seq((21, Long.MaxValue), (41, 0L))) {
-      val counts =
-        if (k <= 31) Genomics.countCanonical(reads.toDS(), k)
-        else reads.toDS().flatMap(r => KmerIter.canonicalBlocks(r, k))
-          .toDF("kb").groupBy("kb").count()
+      val counts = Genomics.countCanonical(reads.toDS(), k)
       val full = Assembler.assemble(counts, k, maxIter = 120).collect().toSet
       assert(full.contains(canonStr(genome)), s"k=$k")
 

@@ -33,15 +33,14 @@ class ScrambleSpec extends AnyFunSuite {
     (a, b, c)
   }
 
-  test("2-copy repeat: scramble emits the exact 4-unitig set with k-1 overlaps") {
-    val k = 31
+  /** A 2-copy repeat of `repLen` bases read at `readLen`: scramble emits
+    * the maximal non-branching paths, unitig convention — each incident
+    * unitig carries the junction's k-1 bases. */
+  private def fourUnitigs(k: Int, repLen: Int, readLen: Int): Unit = {
     val (a, b, c) = flanks()
-    val rep = randGenome(60, seed = 73)
+    val rep = randGenome(repLen, seed = 73)
     val genome = a + rep + b + rep + c
-    val rds = reads(genome, 80, 5)
-    val contigs = assembleFrom(rds, k, scramble = true, minError = 2)
-    // the maximal non-branching paths of this graph, unitig convention:
-    // each incident unitig carries the junction's k-1 bases
+    val contigs = assembleFrom(reads(genome, readLen, 5), k, scramble = true, minError = 2)
     val expected = Set(
       canonStr(a + rep.take(k - 1)),                       // left flank into the repeat
       canonStr(rep),                                       // the repeat itself
@@ -53,6 +52,10 @@ class ScrambleSpec extends AnyFunSuite {
     // and each unitig is a real genome substring (no chimeric joins)
     contigs.foreach(u =>
       assert(genome.contains(u) || genome.contains(rcStr(u)), s"chimeric unitig: $u"))
+  }
+
+  test("2-copy repeat: scramble emits the exact 4-unitig set with k-1 overlaps") {
+    fourUnitigs(31, repLen = 60, readLen = 80)
   }
 
   test("default mode over-fragments the same genome (junction k-mers lost)") {
@@ -75,39 +78,15 @@ class ScrambleSpec extends AnyFunSuite {
     assert(d == s)
   }
 
-  private def assembleWide(rds: Seq[String], k: Int, scramble: Boolean,
-                           minError: Int): Seq[String] = {
-    import spark.implicits._
-    val counts = rds.toDS()
-      .flatMap(r => graft.core.KmerIter.canonicalBlocks(r, k))
-      .toDF("kb").groupBy("kb").count()
-    Assembler.assemble(counts, k, minCov = 1, maxIter = 60,
-      minError = minError, scramble = scramble).collect().toSeq
-  }
-
   test("wide-k (k=40) 2-copy repeat: scramble emits the 4-unitig overlap set") {
-    val k = 40
-    val (a, b, c) = flanks()
-    val rep = randGenome(70, seed = 73)
-    val genome = a + rep + b + rep + c
-    val contigs = assembleWide(reads(genome, 90, 5), k,
-      scramble = true, minError = 2)
-    val expected = Set(
-      canonStr(a + rep.take(k - 1)),
-      canonStr(rep),
-      canonStr(rep.takeRight(k - 1) + b + rep.take(k - 1)),
-      canonStr(rep.takeRight(k - 1) + c))
-    assert(contigs.toSet == expected)
-    assert(contigs.flatMap(kmersOf(_, k)).toSet == kmersOf(genome, k))
-    contigs.foreach(u =>
-      assert(genome.contains(u) || genome.contains(rcStr(u)), s"chimeric unitig: $u"))
+    fourUnitigs(40, repLen = 70, readLen = 90)
   }
 
   test("wide-k repeat-free genome: scramble and default agree") {
     val genome = randGenome(500, seed = 89)
     val rds = reads(genome, 90, 7)
-    val s = assembleWide(rds, 40, scramble = true, minError = 2)
-    val d = assembleWide(rds, 40, scramble = false, minError = 2)
+    val s = assembleFrom(rds, 40, scramble = true, minError = 2)
+    val d = assembleFrom(rds, 40, scramble = false, minError = 2)
     assert(s == Seq(canonStr(genome)))
     assert(d == s)
   }
