@@ -21,16 +21,19 @@ import graft.sources.Fastq
   * runMain graft.Main extend     -contig <fasta> -sam <sam> -outfile <dir>
   * }}}
   *
-  * Input options: `-fastq <glob>` reads (heuristic line filter by default;
-  * `-exact-fastq` forces the 4-line parser); `-fastq2 <glob>` mate-2 file
-  * (two-file paired mode); `-merge` overlap-merges mate pairs in-engine
-  * (the reference's external `flash` step, `ReflexivDataFrameDecompresser
-  * .java:255-302`) before counting; `-inter` marks the input as interleaved paired
+  * Input options: `-fastq <glob>` reads (whole FASTQ records through the
+  * `fastq` source, plain, `.gz`/`.bz2` or `.gb4z`); `-fastq2 <glob>` mate-2
+  * files (two-file paired mode); `-inputformat <class>` reads `-fastq`
+  * lines through a Hadoop input format instead (splittable codecs);
+  * `-merge` overlap-merges mate pairs in-engine (the reference's external
+  * `flash` step, `ReflexivDataFrameDecompresser.java:255-302`) before
+  * counting; `-inter` marks the input as interleaved paired
   * (consumed as a single stream — pairing carries no extra signal for
   * k-mer counting); `-fasta <glob>` FASTA reads; `-contig <fasta>`
   * existing contigs (reassemble/merger); `-kmerc <csv>` a pre-counted
   * `(kmer,count)` table replacing the counting stage of `run`;
-  * `-reads N` caps the number of input reads.
+  * `-reads N` caps the number of input reads (for `-fastq`, the first N
+  * records in file-name order).
   *
   * Tuning options (reference defaults): `-kmer 31`, `-klist
   * 23,31,41,53,67,81,95`, `-cover 2` (min k-mer coverage), `-maxcov
@@ -53,7 +56,7 @@ object Main {
     "-outfile", "-kmer", "-klist", "-cover", "-maxcov", "-error",
     "-mincontig", "-maxiter", "-clipf", "-clipe", "-minlength", "-reads",
     "-partition", "-partitionredu", "-overlap", "-rounds",
-    "-bubble", "-gzip", "-single", "-inter", "-paired", "-exact-fastq", "-mercy",
+    "-bubble", "-gzip", "-single", "-inter", "-paired", "-mercy",
     "-merge", "-scramble", "-inputformat", "-dsir", "-split", "-sf")
 
   /** Typo guard: an unrecognized -option is silently inert with positional
@@ -61,7 +64,7 @@ object Main {
     * surface it loudly (warn, not fail: option values may start with '-'). */
   private def warnUnknown(args: Array[String]): Unit = {
     val taking = knownOpts -- Set("-bubble", "-gzip", "-single", "-inter",
-      "-paired", "-exact-fastq", "-mercy", "-merge", "-scramble",
+      "-paired", "-mercy", "-merge", "-scramble",
       "-split") // flags take no value
     val skipIdx = args.zipWithIndex.collect {
       case (a, i) if taking(a) => i + 1
@@ -75,14 +78,14 @@ object Main {
   def main(args: Array[String]): Unit = {
     val usage =
       """usage: graft.Main <counter|run|preprocess|meta|reassemble|mercy|merger|stitch|reduce|extend|curate|stats> [options]
-        |  inputs : -fastq <glob> [-fastq2 <glob>] | -fasta <glob> | -contig <fasta> | -kmerc <csv> | -sam <sam>
+        |  inputs : -fastq <glob> [-fastq2 <glob> | -inputformat <class>] | -fasta <glob> | -contig <fasta> | -kmerc <csv> | -sam <sam>
         |           extend: -aligner '<cmd>' pipes -fastq reads through an external aligner ({ref} = contig fasta)
         |           curate: -docs <parquet> [-testdocs <parquet>] [-embeddings <parquet with doc_id,v>] [-split]
         |                   [-classifier <minScore>] [-dsir <targetLang>]
         |  tuning : -kmer N -klist a,b,c -cover N -maxcov N -error N -mincontig N -maxiter N
         |           -clipf N -clipe N -minlength N -reads N -partition N -partitionredu N -overlap N
         |  flags  : -bubble (keep bubbles) -mercy (rescue gap kmers) -scramble (repeat-aware unitigs)
-        |           -gzip -exact-fastq -single -inter -paired -merge (overlap-merge mate pairs)
+        |           -gzip -single -inter -paired -merge (overlap-merge mate pairs)
         |  output : -outfile <dir>""".stripMargin
     require(args.nonEmpty, usage)
     if (args.head == "-h" || args.head == "--help" || args.head == "-help") {
@@ -115,7 +118,7 @@ object Main {
     import spark.implicits._
     val cmd = args.head
     val fastq = opt(args, "-fastq", "/root/reference/example/*.fq.gz")
-    val out = opt(args, "-outfile", "/root/repo/target/graft_cli_out")
+    val out = opt(args, "-outfile", "graft_cli_out")
     val k = opt(args, "-kmer", "31").toInt
     val minCov = opt(args, "-cover", "2").toInt
     val maxCov = opt(args, "-maxcov", "10000000").toLong
@@ -158,8 +161,7 @@ object Main {
           // through the named FileInputFormat, then the heuristic filter
           Fastq.filterSequenceLines(
             Fastq.readLinesWithFormat(spark, fastq, opt(args, "-inputformat", "")))
-        else if (args.contains("-exact-fastq")) Fastq.fastqSequences(spark, fastq)
-        else Fastq.fastqSequencesHeuristic(spark, fastq)
+        else Fastq.fastqSequences(spark, fastq)
       val clipped =
         if (clipF > 0 || clipE > 0)
           raw.map(r => r.substring(clipF.min(r.length), (r.length - clipE).max(clipF.min(r.length))))

@@ -546,9 +546,7 @@ object Assembler extends QueryFamily {
     * round 50 recomputes from the last durable round, and a restarted
     * driver RESUMES the contraction at the latest completed round (the
     * per-round coins are hashes of (endpoints, round), so a resumed run is
-    * bit-identical to an uninterrupted one). A run below the k-mer gate
-    * stores its walked fragments as round 0; resuming from them re-walks
-    * finished chains, which changes nothing. `None` keeps the cheap
+    * bit-identical to an uninterrupted one). `None` keeps the cheap
     * memory-local truncation for short interactive runs.
     *
     * `localThreshold`: the single-task gate on rows (see the object doc),
@@ -658,9 +656,8 @@ object Assembler extends QueryFamily {
         if (n >= 0 && 2 * n <= rows && 2 * n * k <= MaxLocalBases) {
           Counters.add("assembler.local_kmers", n)
           // coalesce, not repartition: narrow read of the cached partitions
-          val walked = table.as[(K, Long)](r.countEnc).coalesce(1)
+          table.as[(K, Long)](r.countEnc).coalesce(1)
             .mapPartitions(it => assembleLocal(r, it, k, rule))
-          if (runner.isEmpty) walked else durable("frags_i0", walked)
         } else {
           def seeded = seed(r, table, k, rule)
           // checkpoint the seed fragments: without this, every round

@@ -7,7 +7,7 @@ import graft.sources.Fastq
 import graft.streaming.{EventStreams, ReplayRunner}
 
 /** End-to-end IO round-trips, oracle-checked: the FASTQ fabricate -> write
-  * -> read -> parse -> count path (P12+S1+P1+P14+A1) and the FASTA
+  * -> read -> parse -> count path (P12+P1+P14+A1) and the FASTA
   * sink -> source path (P11+S6+S4). Files land under the repo's target dir
   * (deterministic per scale factor, overwritten each run).
   */
@@ -26,7 +26,9 @@ object GenomicsIO extends QueryFamily {
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // -- P12 -> S1 -> P1 -> P14 -> A1: counts must equal the direct path ---
+    // -- P12 -> P1 -> P14 -> A1: counts must equal the direct path ---------
+    // `Fastq.fastqSequences` is the CLI's `-fastq` read: whole records
+    // through the `fastq` source at its default split size
     "f1_fastq_roundtrip" -> ((s, d) => {
       val tmp = s"${ioDir(d)}/fastq"
       val seqs = documents(s, d).select(Genomics.dna32(col("doc_id")).as("read"))

@@ -5,9 +5,12 @@ import org.apache.spark.sql.functions._
 
 /** Sequence-file sources and sinks (SURVEY §2.1):
   *  - S1 raw text FASTQ/FASTA lines via `spark.read.text`
-  *  - P1 exact FASTQ 4-line parser (zipWithIndex framing)
-  *  - P2 heuristic sequence-line filter (no indexing job — the scale path
-  *    for splittable inputs, semantics per `ReflexivDataFrameCounter.java:238-332`)
+  *  - P1 FASTQ records through the `fastq` source ([[FastqDataSource]]:
+  *    exact 4-line records, split-safe, any file/split layout) — the one
+  *    record parser; the CLI's `-fastq`/`-fastq2` inputs read through it
+  *  - P2 line-shape sequence filter, kept only for line streams that come
+  *    without record framing (the `-inputformat` codec seam), semantics per
+  *    `ReflexivDataFrameCounter.java:238-332`
   *  - P14 read guards (length / charset)
   *  - S4 multi-line FASTA source
   *  - S6 FASTA sink with `>Contig-<i>-<len>` headers and 100-col wrap
@@ -33,12 +36,15 @@ object Fastq {
     * any `FileInputFormat[LongWritable, Text]` on the classpath works
     * (hadoop-4mc's `FourMcTextInputFormat`, a BGZF reader, ...).
     *
-    * The 100 TB story for compressed FASTQ, in preference order:
-    *  1. splittable container via this hook (4mc / BGZF / zstd-seekable) —
-    *     one task per block, the only shape that scales;
-    *  2. many moderate `.gz` shards (the usual lane-split layout): each
-    *     file is one task, but thousands of files still parallelize;
-    *  3. a single giant `.gz` is a single task — re-shard it first.
+    * Compressed FASTQ at scale, in preference order:
+    *  1. a splittable container: `.gb4z` through the `fastq` source (one
+    *     task per block range), or a third-party codec (4mc / BGZF /
+    *     bzip2) through this hook — one task per block;
+    *  2. many moderate `.gz`/`.bz2` shards (the usual lane-split layout)
+    *     through the `fastq` source: each file is one task, but thousands
+    *     of files still parallelize;
+    *  3. a single giant `.gz`/`.bz2` given to `-fastq` is a single task —
+    *     re-shard it, or read a `.bz2` through this hook.
     */
   def readLinesWithFormat(spark: SparkSession, path: String,
                           inputFormatClass: String): Dataset[String] = {
@@ -55,41 +61,41 @@ object Fastq {
       .toDS()
   }
 
-  /** P1: exact FASTQ parser — keep line 2 of every 4-line record. Uses a
-    * zipWithIndex pass for exact framing (one extra narrow job; order is
-    * file order for text sources). */
+  /** P1: the sequence of every FASTQ record, read by the `fastq` source
+    * with only `seq` projected. Records come in input order: file name,
+    * then byte offset. */
   def fastqSequences(spark: SparkSession, path: String): Dataset[String] = {
     import spark.implicits._
-    spark.read.text(path).as[String].rdd
-      .zipWithIndex()
-      .flatMap { case (line, idx) => if (idx % 4 == 1) Some(line) else None }
-      .toDS()
+    spark.read.format("fastq").load(path).select("seq").as[String]
   }
 
-  /** P2: heuristic sequence-line filter — no indexing pass; drops header
-    * (`@`/`+`) and quality lines by shape. Scale path for huge inputs
-    * where the zipWithIndex job is undesirable. */
+  /** P2 over a plain-text path: [[filterSequenceLines]] on its raw lines.
+    * No CLI input reads through it; perfbench's traced read probe
+    * (`Harness.readReads`) still does. */
   def fastqSequencesHeuristic(spark: SparkSession, path: String): Dataset[String] =
     filterSequenceLines(readLines(spark, path))
 
-  /** The P2 shape filter on an arbitrary line stream (shared by the plain
-    * text path and the `-inputformat` splittable-codec path). */
+  /** The P2 shape filter on a line stream without record framing (the
+    * `-inputformat` codec seam and f24). A line is kept when it is longer
+    * than 20 and its characters at 0, 4, 9, 14 and 19 are all ACGTN — so a
+    * quality line of only such letters (MiSeq's `CCCCCGGGGG...`) passes as
+    * a read. Use [[fastqSequences]] wherever the input is a FASTQ file. */
   def filterSequenceLines(lines: Dataset[String]): Dataset[String] =
     lines.filter { l =>
       l.length > 20 && !l.startsWith("@") && !l.startsWith("+") &&
         Seq(0, 4, 9, 14, 19).forall(i => "ACGTN".indexOf(l.charAt(i)) >= 0)
     }
 
-  /** P1-paired: two-file paired FASTQ -> (pair_id, mate1, mate2). Mates
-    * pair positionally — record i of file 1 with record i of file 2 — via
-    * an equality join on the record index, which is the same contract as
-    * the reference's ID-sort pairing
-    * (`ReflexivDataFrameDecompresser.java:287`) but stays a distributed
-    * hash join instead of a total sort. */
+  /** P1-paired: two file sets of paired FASTQ -> (pair_id, mate1, mate2).
+    * Mates pair positionally — record i of set 1 with record i of set 2,
+    * `i` counted over [[fastqSequences]]' partitions, which run in file-name
+    * then offset order — via an equality join on the record index: the
+    * same contract as the reference's ID-sort pairing
+    * (`ReflexivDataFrameDecompresser.java:287`), but a distributed hash join
+    * instead of a total sort. */
   def readPairedFastq(spark: SparkSession, path1: String, path2: String): DataFrame = {
     import spark.implicits._
-    def mates(p: String) = spark.read.text(p).as[String].rdd.zipWithIndex()
-      .flatMap { case (l, i) => if (i % 4 == 1) Some((i / 4, l)) else None }
+    def mates(p: String) = fastqSequences(spark, p).rdd.zipWithIndex().map(_.swap)
     mates(path1).toDF("pair_id", "mate1")
       .join(mates(path2).toDF("pair_id", "mate2"), "pair_id")
   }

@@ -9,14 +9,17 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.hadoop.io.Text
 import org.apache.hadoop.io.compress.CompressionCodecFactory
 import org.apache.hadoop.util.LineReader
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{Expression => V2Expression}
 import org.apache.spark.sql.connector.expressions.{GeneralScalarExpression, Literal, NamedReference, Transform}
 import org.apache.spark.sql.connector.expressions.filter.{Predicate => V2Predicate}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, SupportsAdmissionControl, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionDirectory}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -37,21 +40,31 @@ import org.apache.spark.util.SerializableConfiguration
   * columnar inputs.
   *
   * Split-safety (the part a naive 4-line reader gets wrong): plain-text
-  * files split into `maxSplitBytes` byte ranges, one task each, and a
-  * reader landing mid-file must SYNC to a true record start. '@' alone is
-  * ambiguous — quality lines can begin with '@' — so a line is accepted as
-  * a header only when the line two ahead begins with '+' (the separator).
-  * A quality line can never be followed at +2 by a separator (that slot is
-  * the next record's sequence line, and nucleotide alphabets exclude '+'),
-  * so the 3-line lookahead disambiguates deterministically. Records belong
-  * to the split containing their first byte: each reader skips one partial
-  * line, syncs, then reads records whose header starts strictly before its
-  * end offset — every record is read exactly once, any split grid.
+  * files split into byte ranges, one task each, and a reader landing
+  * mid-file must SYNC to a true record start. '@' alone is ambiguous —
+  * quality lines can begin with '@' — so a line is accepted as a header
+  * only when the line two ahead begins with '+' (the separator). A quality
+  * line can never be followed at +2 by a separator (that slot is the next
+  * record's sequence line, and nucleotide alphabets exclude '+'), so the
+  * 3-line lookahead disambiguates deterministically. Records belong to the
+  * split containing their first byte: each reader skips one partial line,
+  * syncs, then reads records whose header starts strictly before its end
+  * offset — every record is read exactly once, any split grid. Partitions
+  * are planned in file-name order, then offset order, so a record's
+  * position in the scan is its position in the input (paired reads pair
+  * on it, [[Fastq.readPairedFastq]]).
   *
-  * Compressed members (.gz, ...) are detected via the Hadoop codec factory
-  * and read as one unsplit partition each through the codec stream — the
-  * many-moderate-shards layout; splittable containers keep the
-  * `readLinesWithFormat` seam (see [[Fastq]]'s 100 TB story).
+  * Split size: the `maxSplitBytes` option, else the rule Spark's own file
+  * sources use (`FilePartition.maxSplitBytes`: `min(maxPartitionBytes,
+  * max(openCostInBytes, bytes per core))`), so a 5 MB file on 4 cores
+  * plans the same 2 tasks a text scan does.
+  *
+  * Compressed members (.gz, .bz2, ...) are detected via the Hadoop codec
+  * factory and read as one unsplit partition each through the codec
+  * stream — the many-moderate-shards layout. A single large `.bz2` is
+  * therefore one task here; splitting it needs the line-level
+  * `readLinesWithFormat` seam with a splittable input format (see
+  * [[Fastq]]). The `.gb4z` container splits on its block index.
   */
 class FastqDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "fastq"
@@ -204,11 +217,14 @@ private[sources] object FastqPredicates {
   }
 
   /** Conjunction of all pushed predicates, compiled once on the driver
-    * into one serializable closure. */
-  def evaluator(pushed: Array[V2Predicate]): Rec => Boolean = {
-    val fns = pushed.flatMap(compile)
-    rec => fns.forall(_(rec))
-  }
+    * into one serializable closure; `None` when nothing was pushed, so the
+    * reader builds no per-record tuple. */
+  def evaluator(pushed: Array[V2Predicate]): Option[Rec => Boolean] =
+    if (pushed.isEmpty) None
+    else {
+      val fns = pushed.flatMap(compile)
+      Some(rec => fns.forall(_(rec)))
+    }
 }
 
 private[sources] class FastqScan(options: CaseInsensitiveStringMap,
@@ -224,10 +240,12 @@ private[sources] class FastqScan(options: CaseInsensitiveStringMap,
   override def planInputPartitions(): Array[InputPartition] = {
     val spark = SparkSession.active
     val conf = spark.sessionState.newHadoopConf()
+    val files = FastqScan.listFiles(conf, options, mustMatch = true)
     val maxSplit = Option(options.get("maxSplitBytes")).map(_.toLong)
-      .getOrElse(spark.sessionState.conf.filesMaxPartitionBytes)
+      .getOrElse(FilePartition.maxSplitBytes(spark,
+        Seq(PartitionDirectory(InternalRow.empty, files.toArray))))
     val codecs = new CompressionCodecFactory(conf)
-    FastqScan.listFiles(conf, options).flatMap { f =>
+    files.flatMap { f =>
       val p = f.getPath.toString
       if (p.endsWith(BlockLz4.Extension)) {
         // block-indexed container: the footer names every block's byte
@@ -264,27 +282,36 @@ private[sources] class FastqScan(options: CaseInsensitiveStringMap,
     }.toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val conf = new SerializableConfiguration(
-      SparkSession.active.sessionState.newHadoopConf())
-    new FastqReaderFactory(conf, required, FastqPredicates.evaluator(pushed))
-  }
+  override def createReaderFactory(): PartitionReaderFactory =
+    new FastqReaderFactory(FastqScan.broadcastConf(), required, FastqPredicates.evaluator(pushed))
 
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
     new FastqMicroBatchStream(options, required, pushed)
 }
 
 private[sources] object FastqScan {
+  /** The session's Hadoop configuration, broadcast once per scan as
+    * Spark's file sources do: a task then reads it from the block manager
+    * instead of deserializing it from its own task binary. */
+  def broadcastConf(): Broadcast[SerializableConfiguration] = {
+    val spark = SparkSession.active
+    spark.sparkContext.broadcast(new SerializableConfiguration(spark.sessionState.newHadoopConf()))
+  }
+
   /** Deterministic (name-sorted) visible-file listing for a path/glob —
     * shared by the batch planner and the streaming offset log, which
-    * needs a stable order for its file-index offsets. */
-  def listFiles(conf: Configuration,
-                options: CaseInsensitiveStringMap): Seq[FileStatus] = {
+    * needs a stable order for its file-index offsets. `mustMatch` (batch)
+    * fails a path that names nothing, as Spark's file sources do; a
+    * stream may tail a directory that is still empty. */
+  def listFiles(conf: Configuration, options: CaseInsensitiveStringMap,
+                mustMatch: Boolean = false): Seq[FileStatus] = {
     val path = Option(options.get("path")).getOrElse(
       throw new IllegalArgumentException("fastq source requires a path"))
     val fs = new Path(path).getFileSystem(conf)
     val matched = Option(fs.globStatus(new Path(path)))
       .getOrElse(Array.empty[FileStatus]).toSeq
+    if (mustMatch && matched.isEmpty)
+      throw new java.io.FileNotFoundException(s"fastq source: path does not exist: $path")
     matched.flatMap {
       case d if d.isDirectory => fs.listStatus(d.getPath).toSeq
       case f => Seq(f)
@@ -317,10 +344,9 @@ private[sources] class FastqMicroBatchStream(options: CaseInsensitiveStringMap,
                                              pushed: Array[V2Predicate] = Array.empty)
     extends MicroBatchStream with SupportsAdmissionControl
     with SupportsTriggerAvailableNow {
-  private val conf = new SerializableConfiguration(
-    SparkSession.active.sessionState.newHadoopConf())
+  private val conf = FastqScan.broadcastConf()
   private def currentFiles(): Seq[String] =
-    FastqScan.listFiles(conf.value, options).map(_.getPath.toString)
+    FastqScan.listFiles(conf.value.value, options).map(_.getPath.toString)
   // The offset log indexes into this snapshot. AvailableNow pins it at
   // query start (prepareForTriggerAvailableNow). A CONTINUOUS stream
   // instead tails the directory: each admission-control call may refresh
@@ -381,20 +407,19 @@ private[sources] case class FastqStreamOffset(filesConsumed: Long) extends Offse
 private[sources] case class FastqInputPartition(path: String, start: Long,
                                                 end: Long) extends InputPartition
 
-private[sources] class FastqReaderFactory(conf: SerializableConfiguration,
+private[sources] class FastqReaderFactory(conf: Broadcast[SerializableConfiguration],
                                           required: StructType,
-                                          accept: ((String, String, String)) => Boolean =
-                                            _ => true)
+                                          accept: Option[((String, String, String)) => Boolean])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new FastqPartitionReader(partition.asInstanceOf[FastqInputPartition],
-      conf.value, required, accept)
+      conf.value.value, required, accept)
 }
 
 private[sources] class FastqPartitionReader(part: FastqInputPartition,
                                             conf: Configuration,
                                             required: StructType,
-                                            accept: ((String, String, String)) => Boolean)
+                                            accept: Option[((String, String, String)) => Boolean])
     extends PartitionReader[InternalRow] {
   private val fs = new Path(part.path).getFileSystem(conf)
   private val raw = fs.open(new Path(part.path))
@@ -425,27 +450,45 @@ private[sources] class FastqPartitionReader(part: FastqInputPartition,
   private val plainSplit = codec == null && !isBlz4
   private var pos = if (plainSplit) part.start else 0L
   private val posBound = if (plainSplit) part.end else Long.MaxValue
-  private val text = new Text()
 
-  private def readLine(): String = {
-    val n = reader.readLine(text)
-    if (n == 0) null else { pos += n; text.toString }
+  /** Read the next line's bytes into `t`; false at end of input. */
+  private def readInto(t: Text): Boolean = {
+    val n = reader.readLine(t)
+    pos += n
+    n > 0
   }
 
-  // sync: skip the partial line a mid-file start lands in, then slide a
-  // 3-line window until (buf0 @..., buf2 +...) marks a true header
-  private var window: List[(Long, String)] = Nil
+  // the 3-line window as a ring of reused line buffers, each with the
+  // byte offset its line starts at, plus the record's quality line
+  private val win = Array.fill(3)(new Text())
+  private val winStart = new Array[Long](3)
+  private var head = 0
+  private var held = 0
+  private val qual = new Text()
   private var eof = false
-  if (part.start > 0 && plainSplit && readLine() == null) eof = true
-  while (!eof && window.length < 3) {
-    val p = pos
-    val l = readLine()
-    if (l == null) eof = true else window = window :+ (p, l)
+  private def line(i: Int): Text = win((head + i) % 3)
+  private def startsWith(t: Text, c: Char): Boolean = t.getLength > 0 && t.getBytes()(0) == c
+
+  /** Append the next line to the window, dropping its first line when full. */
+  private def push(): Unit = {
+    if (held == 3) { head = (head + 1) % 3; held = 2 }
+    val slot = (head + held) % 3
+    winStart(slot) = pos
+    if (readInto(win(slot))) held += 1 else eof = true
   }
-  while (!eof && !(window.head._2.startsWith("@") && window(2)._2.startsWith("+"))) {
-    val p = pos
-    val l = readLine()
-    if (l == null) eof = true else window = window.tail :+ (p, l)
+
+  // sync: skip the partial line a mid-file start lands in, then slide the
+  // window until (line 0 @..., line 2 +...) marks a true header
+  if (part.start > 0 && plainSplit && !readInto(qual)) eof = true
+  while (!eof && held < 3) push()
+  while (!eof && !(startsWith(line(0), '@') && startsWith(line(2), '+'))) push()
+
+  // each output column's field in the (id, seq, qual) schema, resolved once
+  private val fields = required.fieldNames.map(FastqDataSource.schema.fieldIndex)
+  private def field(i: Int): UTF8String = {
+    // the id drops the header's '@'
+    val (t, from) = i match { case 0 => (line(0), 1) case 1 => (line(1), 0) case _ => (qual, 0) }
+    UTF8String.fromBytes(util.Arrays.copyOfRange(t.getBytes, from.min(t.getLength), t.getLength))
   }
 
   private var row: InternalRow = _
@@ -457,26 +500,14 @@ private[sources] class FastqPartitionReader(part: FastqInputPartition,
     // on `<= end` here reads the boundary record exactly once. Records
     // failing a pushed predicate are skipped HERE — three line reads and
     // no InternalRow, nothing reaches Spark.
-    while (!(eof || window.length < 3 || window.head._1 > posBound)) {
-      val qual = readLine()
-      if (qual == null) return false // truncated trailing record: drop
-      val id = window.head._2.drop(1)
-      val seq = window(1)._2
+    while (held == 3 && winStart(head) <= posBound) {
+      if (!readInto(qual)) return false // truncated trailing record: drop
+      val keep = accept.forall(_((field(0).toString, field(1).toString, field(2).toString)))
+      if (keep) row = new GenericInternalRow(fields.map(i => field(i): Any))
       // refill the window with the next record's first three lines
-      window = Nil
-      while (!eof && window.length < 3) {
-        val p = pos
-        val l = readLine()
-        if (l == null) eof = true else window = window :+ (p, l)
-      }
-      if (accept((id, seq, qual))) {
-        row = InternalRow.fromSeq(required.fieldNames.toSeq.map {
-          case "id" => UTF8String.fromString(id)
-          case "seq" => UTF8String.fromString(seq)
-          case "qual" => UTF8String.fromString(qual)
-        })
-        return true
-      }
+      held = 0
+      while (!eof && held < 3) push()
+      if (keep) return true
     }
     false
   }

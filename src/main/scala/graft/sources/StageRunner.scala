@@ -46,10 +46,4 @@ final class StageRunner(spark: SparkSession, rootDir: String) {
     val p = stagePath(name)
     if (fs.exists(p)) { fs.delete(p, true); () }
   }
-
-  /** Drop every stage output under the root. */
-  def cleanAll(): Unit = {
-    val root = new Path(rootDir)
-    if (fs.exists(root)) { fs.delete(root, true); () }
-  }
 }

@@ -5,11 +5,12 @@ import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Dna._
 import graft.operators.Genomics
-import graft.sources.Fastq
+import graft.sources.{BlockLz4, Fastq}
 
 /** The CLI's k-mer table round trip at both key widths: `counter` writes
   * `(kmer, count)` rows at any k, and `run -kmerc` assembles from them what
-  * `run` assembles from the reads. */
+  * `run` assembles from the reads; `-fastq` counts whole FASTQ records,
+  * plain or packed. */
 class MainSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -48,6 +49,40 @@ class MainSpec extends AnyFunSuite {
       .map { case (km, occ) => (km, occ.size.toLong) }.filter(_._2 >= 2).toSet
     assert(want.nonEmpty)
     assert(csvRows(s"$out/Count_$k") == want)
+  }
+
+  /** The spec's reads as FASTQ whose quality lines are MiSeq-style runs of
+    * `C` and `G` — every one of them shaped like a read. */
+  private lazy val cgQualLines: Seq[String] =
+    new String(Files.readAllBytes(fastq)).split("\n").grouped(4).toSeq.flatMap { rec =>
+      Seq(rec(0), rec(1), "+", (("C" * 5 + "G" * 5) * (rec(1).length / 10 + 1)).take(rec(1).length))
+    }
+
+  test("counter counts only the sequences of reads whose quality lines look like reads") {
+    val k = 31
+    val dir = Files.createTempDirectory("graft_main_cg")
+    Files.write(dir.resolve("reads.fq"), cgQualLines.map(_ + "\n").mkString.getBytes)
+    val out = tmp()
+    run("counter", "-fastq", dir.resolve("reads.fq").toString, "-kmer", k.toString, "-outfile", out)
+    val rds = cgQualLines.grouped(4).map(_(1)).toSeq
+    val want = rds.flatMap(r => r.sliding(k).map(canonStr)).groupBy(identity)
+      .map { case (km, occ) => (km, occ.size.toLong) }.filter(_._2 >= 2).toSet
+    assert(want.nonEmpty)
+    assert(csvRows(s"$out/Count_$k") == want)
+  }
+
+  test("counter over one .gb4z container equals the plain-text count") {
+    val k = 31
+    val dir = Files.createTempDirectory("graft_main_gb4z")
+    Files.write(dir.resolve("reads.fq"), cgQualLines.map(_ + "\n").mkString.getBytes)
+    val packed = dir.resolve("reads" + BlockLz4.Extension).toString
+    BlockLz4.writeFile(spark.sparkContext.hadoopConfiguration, packed,
+      cgQualLines.iterator, blockBytes = 4096)
+    val (plain, viaGb4z) = (tmp(), tmp())
+    run("counter", "-fastq", dir.resolve("reads.fq").toString, "-kmer", k.toString, "-outfile", plain)
+    run("counter", "-fastq", packed, "-kmer", k.toString, "-outfile", viaGb4z)
+    assert(csvRows(s"$plain/Count_$k").nonEmpty)
+    assert(csvRows(s"$viaGb4z/Count_$k") == csvRows(s"$plain/Count_$k"))
   }
 
   test("counter then run -kmerc gives run's contigs, rows in either orientation (k = 31, 41)") {

@@ -88,6 +88,14 @@ class FastqDataSourceSpec extends AnyFunSuite {
     assert(df.count() == 5)
   }
 
+  test("a batch path that names no file fails the read, as the text source does") {
+    val missing = Paths.get(writeCorpus(1), "absent", "*.fq").toString
+    val e = intercept[java.io.FileNotFoundException] {
+      spark.read.format("fastq").load(missing).count()
+    }
+    assert(e.getMessage.contains(missing))
+  }
+
   test("fuzz: random record widths x random split grids stay exactly-once") {
     // variable-length records (the realistic shape — reads are NOT fixed
     // width) under ten random split sizes, including ones smaller than a

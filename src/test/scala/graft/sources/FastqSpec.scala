@@ -3,7 +3,7 @@ package graft.sources
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.TestSpark
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 class FastqSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -21,6 +21,51 @@ class FastqSpec extends AnyFunSuite {
     val heur = Fastq.fastqSequencesHeuristic(spark, dir).collect().sorted.toSeq
     assert(exact == reads.sorted)
     assert(heur == reads.sorted)
+  }
+
+  /** Two plain FASTQ files of 60 and 25 records (file names `a`, `b`) with
+    * distinct sequences, and a session split size that cuts them into many
+    * byte ranges, most of them mid-record. */
+  private def multiSplit[T](seqs: Seq[String], tag: String)(body: String => T): T = {
+    val dir = tmpDir() + "/" + tag
+    Files.createDirectories(Paths.get(dir))
+    for ((name, part) <- Seq("a" -> seqs.take(60), "b" -> seqs.drop(60)))
+      Files.write(Paths.get(s"$dir/$name.fq"), part.zipWithIndex.map {
+        case (r, i) => s"@$tag$name$i\n$r\n+\n${"I" * r.length}\n" }.mkString.getBytes)
+    val key = "spark.sql.files.maxPartitionBytes"
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, "3000")
+    try body(dir)
+    finally old match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  private def distinctReads(n: Int, seed: Int): Seq[String] = {
+    val rnd = new scala.util.Random(seed)
+    Seq.fill(n)(Array.fill(40 + rnd.nextInt(30))("ACGT"(rnd.nextInt(4))).mkString)
+  }
+
+  test("fastqSequences reads exactly the records of several files cut into many splits") {
+    val reads = distinctReads(85, seed = 3)
+    multiSplit(reads, "m") { dir =>
+      assert(spark.read.format("fastq").load(dir).rdd.getNumPartitions > 2)
+      assert(Fastq.fastqSequences(spark, dir).collect().sorted.toSeq == reads.sorted)
+    }
+  }
+
+  test("readPairedFastq pairs every mate of several files cut into many splits") {
+    import spark.implicits._
+    val m1 = distinctReads(85, seed = 4)
+    val m2 = distinctReads(85, seed = 5)
+    multiSplit(m1, "p") { d1 =>
+      multiSplit(m2, "q") { d2 =>
+        val pairs = Fastq.readPairedFastq(spark, d1, d2)
+          .orderBy("pair_id").select("mate1", "mate2").as[(String, String)].collect().toSeq
+        assert(pairs == m1.zip(m2))
+      }
+    }
   }
 
   test("-inputformat hook: named FileInputFormat class reads the same lines") {
